@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -206,41 +207,13 @@ object Bench {
     // host's weather. Default stays 1 (one honest cold pass).
     val reps = sys.env.get("SPARK_GRAFT_REPS")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
-    var sinceGc = 0
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      // boundary-aware match: "q16" selects q16_string_funcs, not
-      // q160-q169 (a bare startsWith matched ten extra queries)
-      .filter { case (n, _) =>
-        only.forall(_.exists(o => n == o || n.startsWith(o + "_"))) }
-      .map {
-      case (name, fn) =>
-        // in-sweep cleaner drain (guide §5, r18): each query drops its
-        // localCheckpoint/broadcast refs at return, but ContextCleaner
-        // only retires the blocks after a GC notices the weak refs —
-        // under the 1-min periodic GC the debt of ~20 queries lands on
-        // whichever query runs when the heap fills (q134 10.8 s
-        // in-registry vs 1.1 solo, r14; q235 15.6 vs 4.2, r17). Drain
-        // every 8 queries, BETWEEN timings, so no measured query pays
-        // a predecessor's debt. Not counted in any per-query time.
-        sinceGc += 1
-        if (sinceGc >= 8) { sinceGc = 0; System.gc() }
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          // noop sink, not count(): count() lets Catalyst PRUNE every
-          // aggregate/projection column the row count doesn't need, so
-          // it times the grouping but not the work (a percentile sketch
-          // benched as 0 s). The noop write evaluates every output
-          // column and discards the rows — the honest throughput action.
-          try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          catch { case _: Throwable => () }
-          (System.nanoTime() - t0) / 1e9
-        }
-        // (min, first-rep): min excludes session-memoized-artifact and
-        // JIT warmth that reps>=2 inherit; the first-rep COLD time is
-        // kept alongside so cross-round comparisons against reps=1
-        // sweeps can normalize (ADVICE r14)
-        name -> (times.min, times.head)
-    }
+    val (results, failed) = timeQueries(spark, sfDir,
+      SparkEntry.queries.toSeq.sortBy(_._1)
+        // boundary-aware match: "q16" selects q16_string_funcs, not
+        // q160-q169 (a bare startsWith matched ten extra queries)
+        .filter { case (n, _) =>
+          only.forall(_.exists(o => n == o || n.startsWith(o + "_"))) },
+      reps)
     // The driver stores and parses only the LAST 2000 chars of this
     // process's output; with 120+ full query names the JSON line was
     // ~4.5k chars and its head was always truncated (BENCH_r01..r08
@@ -252,7 +225,7 @@ object Bench {
       .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
     // short ids must stay unique — a collision would silently
     // overwrite a timing at JSON-parse time
-    val ids = results.map { case (k, _) => shortId(k) }
+    val ids = (results.map(_._1) ++ failed).map(shortId)
     require(ids.distinct.size == ids.size,
       s"duplicate bench short ids: ${ids.diff(ids.distinct).distinct.mkString(",")}")
     val qs = results.map { case (k, (v, _)) => s"\"" + shortId(k) + "\":" + fmt(v) }
@@ -265,6 +238,8 @@ object Bench {
       else results.map { case (k, (_, c)) => s"\"" + shortId(k) + "\":" + fmt(c) }
         .mkString(""","cold":{""", ",", "}")
     val total = results.map(_._2._1).sum
+    val failedIds = failed.map(n => "\"" + shortId(n) + "\"")
+      .mkString("[", ",", "]")
     // fixture_sec: one-time stream-replica build cost (excluded from
     // per-query timings by the warmup — reported so the amortization
     // is auditable, per ADVICE r9)
@@ -296,9 +271,9 @@ object Bench {
     val purgedChunkIdxSec =
       graft.queries.SimilarityQueries.purgedChunkIndexNanos.get() / 1e9
     val line =
-      s"""{"metric":"total_detail","value":${fmt(total)},"unit":"sec","reps":$reps,"queries":$qs$coldQs,"fixture_sec":${fmt(fixtureSec)},"ann_index_sec":${fmt(idxSec)},"retrain_index_sec":${fmt(retrainIdxSec)},"chunk_index_sec":${fmt(chunkIdxSec)},"doc_index_sec":${fmt(docIdxSec)},"release_build_sec":${fmt(relSec)},"release_v2_sec":${fmt(relV2Sec)},"release_v3_sec":${fmt(relV3Sec)},"purge_artifacts_sec":${fmt(purgeArtSec)},"manifest_build_sec":${fmt(manifestSec)},"cdc_feed_sec":${fmt(cdcFeedSec)},"purged_doc_index_sec":${fmt(purgedDocIdxSec)},"purged_chunk_index_sec":${fmt(purgedChunkIdxSec)},"sf":"$sfDir"}"""
+      s"""{"metric":"total_detail","value":${fmt(total)},"unit":"sec","reps":$reps,"queries":$qs$coldQs,"failed":$failedIds,"fixture_sec":${fmt(fixtureSec)},"ann_index_sec":${fmt(idxSec)},"retrain_index_sec":${fmt(retrainIdxSec)},"chunk_index_sec":${fmt(chunkIdxSec)},"doc_index_sec":${fmt(docIdxSec)},"release_build_sec":${fmt(relSec)},"release_v2_sec":${fmt(relV2Sec)},"release_v3_sec":${fmt(relV3Sec)},"purge_artifacts_sec":${fmt(purgeArtSec)},"manifest_build_sec":${fmt(manifestSec)},"cdc_feed_sec":${fmt(cdcFeedSec)},"purged_doc_index_sec":${fmt(purgedDocIdxSec)},"purged_chunk_index_sec":${fmt(purgedChunkIdxSec)},"sf":"$sfDir"}"""
     val compact =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"n_queries":${results.size},"queries_file":"tmp/bench_self.json","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"n_queries":${results.size},"failed":$failedIds,"queries_file":"tmp/bench_self.json","sf":"$sfDir"}"""
     // compact line FIRST as well as last: whatever window a consumer
     // reads (head or tail of the post-measurement output), one copy of
     // the short parseable line lands inside it; stderr carries a third
@@ -331,5 +306,52 @@ object Bench {
     // one summing "metric":"total" lines over the whole stdout counts
     // exactly this one.
     println(compact)
+  }
+
+  /** Time each query `reps` times with the noop sink; a query is
+    * (name, (min, first-rep)) seconds. A query that throws in any rep
+    * is reported by name in the second list, with its exception on
+    * stderr, and has no time: timing a failure as a fast run would
+    * hide it in the total. */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      reps: Int): (Seq[(String, (Double, Double))], Seq[String]) = {
+    var sinceGc = 0
+    val timed = queries.map { case (name, fn) =>
+      // in-sweep cleaner drain (guide §5, r18): each query drops its
+      // localCheckpoint/broadcast refs at return, but ContextCleaner
+      // only retires the blocks after a GC notices the weak refs —
+      // under the 1-min periodic GC the debt of ~20 queries lands on
+      // whichever query runs when the heap fills (q134 10.8 s
+      // in-registry vs 1.1 solo, r14; q235 15.6 vs 4.2, r17). Drain
+      // every 8 queries, BETWEEN timings, so no measured query pays
+      // a predecessor's debt. Not counted in any per-query time.
+      sinceGc += 1
+      if (sinceGc >= 8) { sinceGc = 0; System.gc() }
+      val times = (1 to reps).map { _ =>
+        val t0 = System.nanoTime()
+        // noop sink, not count(): count() lets Catalyst PRUNE every
+        // aggregate/projection column the row count doesn't need, so
+        // it times the grouping but not the work (a percentile sketch
+        // benched as 0 s). The noop write evaluates every output
+        // column and discards the rows — the honest throughput action.
+        try {
+          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+          Some((System.nanoTime() - t0) / 1e9)
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name FAILED: $e")
+          e.printStackTrace()
+          None
+        }
+      }
+      // (min, first-rep): min excludes session-memoized-artifact and
+      // JIT warmth that reps>=2 inherit; the first-rep COLD time is
+      // kept alongside so cross-round comparisons against reps=1
+      // sweeps can normalize (ADVICE r14)
+      name -> (if (times.forall(_.isDefined))
+        Some((times.flatten.min, times.head.get)) else None)
+    }
+    (timed.collect { case (n, Some(t)) => n -> t },
+      timed.collect { case (n, None) => n })
   }
 }

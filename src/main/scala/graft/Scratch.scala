@@ -48,26 +48,48 @@ object Scratch {
     * elements are provably independent (separate artifacts, settings,
     * key spaces) — never across an ordered fold's steps. Width stays
     * small (fill the tail, don't fight for executors — guide §2.6). */
-  private[graft] def parMap[A, B](xs: Seq[A], width: Int)(
-      f: A => B): Seq[B] = {
+  private[graft] def parMap[A, B](xs: Seq[A], width: Int,
+      stopSecs: Long = 60)(f: A => B): Seq[B] = {
     if (xs.sizeIs <= 1 || width <= 1) xs.map(f)
     else {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
+      import java.util.concurrent.TimeUnit.SECONDS
+      val sc = org.apache.spark.sql.SparkSession.getActiveSession
+        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+        .map(_.sparkContext)
+      val run = java.util.UUID.randomUUID().toString.take(8)
+      val groups = xs.indices.map(i => s"graft-parmap-$run-$i")
       val pool = java.util.concurrent.Executors
         .newFixedThreadPool(math.min(width, xs.size))
       implicit val ec: ExecutionContext =
         ExecutionContext.fromExecutorService(pool)
-      try Await.result(Future.sequence(xs.map(x => Future(f(x)))),
-        Duration.Inf)
+      def sibling(i: Int): B = sc match {
+        case None => f(xs(i))
+        case Some(c) =>
+          c.setJobGroup(groups(i), s"parMap sibling $i",
+            interruptOnCancel = true)
+          try f(xs(i)) finally c.clearJobGroup()
+      }
+      try Await.result(Future.sequence(xs.indices.map(i =>
+        Future(sibling(i)))), Duration.Inf)
       catch { case t: Throwable =>
         // first failure propagates, but NOT before the siblings are
         // interrupted and drained (ADVICE r17): a withScratchDir gate
         // unwinding past this frame deletes the scratch dir, and a
         // still-running sibling stream would hit it mid-write and
-        // surface a confusing secondary failure instead of `t`
+        // surface a confusing secondary failure instead of `t`. Each
+        // sibling's jobs run in its own job group, so siblings still
+        // alive `stopSecs` after the interrupt get them cancelled.
         pool.shutdownNow()
-        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+        if (!pool.awaitTermination(stopSecs, SECONDS)) {
+          sc.foreach(c => groups.foreach(c.cancelJobGroup))
+          val stopped = pool.awaitTermination(stopSecs, SECONDS)
+          System.err.println(s"[graft] parMap: siblings still running " +
+            s"${stopSecs} s after ${t.getClass.getName}; cancelled " +
+            s"their Spark jobs (${groups.mkString(",")}): " +
+            (if (stopped) "they stopped" else "some are STILL running"))
+        }
         throw t
       }
       finally pool.shutdown()

@@ -534,8 +534,8 @@ object MlQueries {
   // loss-per-epoch training curve (`unsupervised.py:247-263` logs
   // exactly this shape): iter × (weights, train/test BCE).
   // ---------------------------------------------------------------
-  private val GD_ITER = 5
-  private val GD_LR = 2.0
+  private[graft] val GD_ITER = 5
+  private[graft] val GD_LR = 2.0
   private val GD_NF = 4 // leading embedding components; bias appended
 
   /** features [10·x1 .. 10·x4, 1.0] and binary label, split like q63.
@@ -544,7 +544,7 @@ object MlQueries {
     * every coordinate (lr=50 without scaling sends the bias into a
     * divergent oscillation — the standard conditioning argument;
     * ×10 is an exact float op, so cross-engine safe). */
-  private def gdData(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def gdData(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     embeddings(s, dir).select($"vec_id",
       array((1 to GD_NF).map(j =>
@@ -563,29 +563,23 @@ object MlQueries {
       yc: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     greatest(zc, lit(0.0)) - zc * yc + log(lit(1.0) + exp(-abs(zc)))
 
-  /** ONE full-batch GD epoch (shared by q100's loss curve and q106's
-    * trained trajectory): per-dim gradient as a keyed partial
-    * aggregation, 6 dp quantized weight rebuild. The quantization grid
-    * is 6 dp, not 9, because the gradient is a full-corpus avg whose
-    * cross-engine summation-order noise (~1e-14) sits only ~4 orders
-    * below a 5e-10 half-step — the q133 rank-grid rationale; 1e-6 is
-    * still ~3 orders below the ~1e-3 update scale, so the trajectory
-    * is unaffected. Row-local fixed-order sums (kmAssign, dist2,
-    * graft_pq_adc) keep the 9 dp convention — their fold order is
-    * pinned, so their noise is 0-to-1e-15. */
-  private def gdStep(train: DataFrame): (DataFrame, Int) => DataFrame = {
-    import train.sparkSession.implicits._
-    (w, _) => {
-      val g = train.crossJoin(broadcast(w))
-        .withColumn("err",
-          lit(1.0) / (lit(1.0) + exp(-gdZ(train.sparkSession))) - $"y")
-        .select($"err", posexplode($"x").as(Seq("dim", "xj")))
-        .groupBy($"dim").agg(avg($"err" * $"xj").as("g"))
-      g.crossJoin(broadcast(w))
-        .select($"dim",
-          round(element_at($"w", $"dim" + 1) - lit(GD_LR) * $"g", 6).as("wj"))
-        .agg(IterativeState.gather($"dim", $"wj").as("w"))
-    }
+  /** GD_ITER full-batch GD epochs (shared by q100's loss curve and
+    * q106's trained trajectory), one Spark job each: per-dim gradients
+    * reduced on the driver, 6 dp quantized weights. The quantization
+    * grid is 6 dp, not 9, because the gradient is a full-corpus avg
+    * whose cross-engine summation-order noise (~1e-14) sits only ~4
+    * orders below a 5e-10 half-step — the q133 rank-grid rationale;
+    * 1e-6 is still ~3 orders below the ~1e-3 update scale, so the
+    * trajectory is unaffected. Row-local fixed-order sums (kmAssign,
+    * dist2, graft_pq_adc) keep the 9 dp convention — their fold order
+    * is pinned, so their noise is 0-to-1e-15. `onEpoch` sees each
+    * epoch's one-row weight frame. */
+  private def gdTrain(s: SparkSession, train: DataFrame)(
+      onEpoch: (DataFrame, Int) => Unit): Unit = {
+    import s.implicits._
+    val w0 = Seq(Tuple1(Seq.fill(GD_NF + 1)(0.0))).toDF("w")
+    onEpoch(w0, 0)
+    IterativeState.logisticGd(train, w0, GD_LR, GD_ITER, onEpoch): Unit
   }
 
   private def q100(s: SparkSession, dir: String): DataFrame = {
@@ -609,15 +603,11 @@ object MlQueries {
         round(element_at($"w", 5), 6).as("bias"),
         $"train_bce", $"test_bce")
     }
-    val w0: DataFrame = Seq(Tuple1(Seq.fill(GD_NF + 1)(0.0))).toDF("w")
-    var out = lossRow(0, w0)
-    // quantize-then-cut epoch loop (graft.ops.IterativeState); the
-    // trace callback reads the CHECKPOINTED weights, so each loss row
-    // hits a materialized state, not the gradient lineage
-    IterativeState.epochsTraced(w0, GD_ITER)(gdStep(train)) {
-      (w, t) => out = out.unionAll(lossRow(t, w))
-    }
-    out.orderBy($"iter")
+    // each epoch's weights come back as a local one-row frame, so each
+    // loss row reads a literal state, not the gradient lineage
+    val rows = Seq.newBuilder[DataFrame]
+    gdTrain(s, train)((w, t) => rows += lossRow(t, w))
+    rows.result().reduce(_ unionAll _).orderBy($"iter")
   }
 
   private lazy val gdDotSql =
@@ -686,11 +676,9 @@ object MlQueries {
     def scoredAt(t: Int, w: DataFrame): DataFrame =
       test.crossJoin(broadcast(w)).select(lit(t).as("n_Epochs"),
         round(gdZ(s), 6).as("score"), $"y", gdBce(gdZ(s), $"y").as("b"))
-    val w0: DataFrame = Seq(Tuple1(Seq.fill(GD_NF + 1)(0.0))).toDF("w")
-    var scored = scoredAt(0, w0)
-    IterativeState.epochsTraced(w0, GD_ITER)(gdStep(train)) {
-      (w, t) => scored = scored.unionAll(scoredAt(t, w))
-    }
+    val epochs = Seq.newBuilder[DataFrame]
+    gdTrain(s, train)((w, t) => epochs += scoredAt(t, w))
+    val scored = epochs.result().reduce(_ unionAll _)
     val bce = scored.groupBy($"n_Epochs")
       .agg(round(avg($"b"), 6).as("bce_loss"))
     Metrics.rocAuc(scored, $"score", $"y", Seq($"n_Epochs"))
@@ -754,7 +742,7 @@ object MlQueries {
     import s.implicits._
     val e = embeddings(s, dir)
       .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
-    // per-dim mean (6 dp — full-corpus avg, so the gdStep coarse-grid
+    // per-dim mean (6 dp — full-corpus avg, so the gdTrain coarse-grid
     // rationale applies) as a one-row broadcast array — the centering
     // vector; same (dim)-keyed partial-agg shape as the update step
     val c = e.select(posexplode($"v").as(Seq("dim", "x")))

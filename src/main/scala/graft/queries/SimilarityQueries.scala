@@ -590,9 +590,6 @@ object SimilarityQueries {
       .select($"vec_id", $"codes")
   }
 
-  private[graft] def profUnitVecs(s: SparkSession, dir: String): DataFrame =
-    unitVecs(s, dir)
-
   /** the interpreted-HOF spelling of the encode — kept as the
     * equivalence yardstick for the native expression (PqRecallSpec). */
   private[graft] def pqEncodeHof(s: SparkSession, dir: String): DataFrame = {

@@ -2313,9 +2313,6 @@ object StreamingQueries {
         : org.apache.spark.sql.Column =
       when(substring(md5(concat(lit("append:"), key.cast("string"))),
         1, 1) < "8", 1).otherwise(2)
-    def appendWaveSql(key: String): String =
-      s"CASE WHEN substr(md5('append:' || CAST($key AS VARCHAR)), " +
-        "1, 1) < '8' THEN 1 ELSE 2 END"
   }
 
   /** the three delta artifacts q206 purges, built ONCE per corpus

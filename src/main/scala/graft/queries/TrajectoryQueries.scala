@@ -366,15 +366,21 @@ object TrajectoryQueries {
   // trajectory goes under the DuckDB hash gate.
   //
   // The grid does NOT train nine separate loops: the weight state is
-  // a 9-row (n_Epochs, Model, w) table and each GD step is ONE
-  // distributed aggregation keyed by (n_Epochs, Model, dim) — cell
-  // count multiplies the key space, never the number of passes over
-  // the data. That is the shape that survives 100 TB: adding grid
-  // cells adds shuffle KEYS (tiny), not scans. Features are
-  // zero-padded to a uniform 7 dims (3- and 6-channel models share
-  // one table); a padded dim's gradient is avg(err · 0) = 0 and its
-  // zero-initialized weight survives round(0 − lr·0, 6) = 0 exactly,
-  // in both engines, so padding is bit-inert.
+  // nine (n_Epochs, Model) → w[7] vectors on the driver, and each GD
+  // epoch is ONE Spark job over the checkpointed training table
+  // (IterativeState.logisticGd): its tasks return per-(cell, dim)
+  // partial gradients and the driver reduces them and rounds the new
+  // weights. Cell count multiplies the keys of those partials, never
+  // the number of passes over the data. That is the shape that
+  // survives 100 TB: adding grid cells adds O(keys × dim) of driver
+  // state, not scans, and no training row leaves its task. (An epoch
+  // spelled in SQL — broadcast join, keyed avg, localCheckpoint — is
+  // four jobs, mostly driver gap.)
+  //
+  // Features are zero-padded to a uniform 7 dims (3- and 6-channel
+  // models share one table); a padded dim's gradient is avg(err · 0) =
+  // 0 and its zero-initialized weight survives round(0 − lr·0, 6) = 0
+  // exactly, in both engines, so padding is bit-inert.
   //
   // Features are z-scored per cell with TRAIN-split stats before GD
   // (what Spark ML's LR does internally via standardization=true):
@@ -383,18 +389,18 @@ object TrajectoryQueries {
   // after convergence-budget steps — measured: AUC trajectories that
   // FALL with rep epoch while the probe-free threshold rises. With
   // standardization the converged GD grid (GridIter steps) reproduces
-  // q88's Spark ML LR cells to ~0.01 AUC. Zero-variance dims (bias, padding) pass
-  // through unscaled; stats round to 6 dp (full-corpus avgs — the
-  // gdStep coarse-grid rationale).
+  // q88's Spark ML LR cells to ~0.01 AUC. Zero-variance dims (bias,
+  // padding) pass through unscaled; stats round to 6 dp (full-corpus
+  // avgs — the q100 coarse-grid rationale).
   // ---------------------------------------------------------------
-  private val GridIter = 12  // GD steps per probe — converged: the
-                             // sweep's 12-step AUCs match Spark ML's
-                             // q88 LR cells in 7 of 9 grid cells
-                             // exactly (the other two differ by one
-                             // swapped test pair); 20/30/60 steps move
-                             // nothing by more than 0.01
-  private val GridLr = 2.0   // q100's conditioning argument, valid
-                             // again AFTER z-scoring; 5.0 diverges
+  // GD steps per probe — converged: the sweep's 12-step AUCs match
+  // Spark ML's q88 LR cells in 7 of 9 grid cells exactly (the other
+  // two differ by one swapped test pair); 20/30/60 steps move nothing
+  // by more than 0.01
+  private[graft] val GridIter = 12
+  // q100's conditioning argument, valid again AFTER z-scoring; 5.0
+  // diverges
+  private[graft] val GridLr = 2.0
   private val GridDim = 7    // 6 channels + bias, zero-padded per model
 
   /** (n_Epochs, Model, user_id, y, x[7]): the unified probe training
@@ -413,15 +419,19 @@ object TrajectoryQueries {
           .as("x"))
   }
 
-  private def q137(s: SparkSession, dir: String): DataFrame = {
+  /** q137's probe inputs: the standardized TRAIN rows as (n_Epochs,
+    * Model, x, y) for the trainer, the standardized TEST rows (raw `x`
+    * and standardized `xz`), and the 9-cell zero weight state. */
+  private[graft] def gridProbeInputs(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) = {
     import s.implicits._
     // materialize the blended reps once — 12 GD epochs + scoring all
     // read this table; without the barrier the DFT/assembly chain
     // re-executes per epoch (the q88 checkpoint rationale). Fan out
     // to the session's shuffle width, NOT checkpointPartitions: every
-    // epoch is a full-table aggregation whose map parallelism is the
-    // checkpoint's partition count (4 partitions at sf1 throttled the
-    // 12 gradient passes; q88's tiny-fit rationale doesn't apply)
+    // epoch is a full-table scan whose parallelism is the checkpoint's
+    // partition count (4 partitions at sf1 throttled the 12 gradient
+    // passes; q88's tiny-fit rationale doesn't apply)
     val u = gridData(s, dir)
       .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
       .localCheckpoint(true)
@@ -445,31 +455,23 @@ object TrajectoryQueries {
         .select($"n_Epochs", $"Model", $"user_id", $"y",
           $"x", $"xs".as("xz"))
     val train = zscore(rawTrain)
+      .select($"n_Epochs", $"Model", $"xz".as("x"), $"y")
     val test = zscore(u.filter($"user_id" % 5 === 0))
-    def dot = graft.expr.GraftFunctions.dot(s, $"xz", $"w")
     val w0: DataFrame = Seq("T_CPC", "TS_CPC", "S_CPC")
       .flatMap(m => (0 to Epochs by 2).map(e => (e, m)))
       .toDF("n_Epochs", "Model")
       .withColumn("w", array(Seq.fill(GridDim)(lit(0.0)): _*))
-    // one epoch = ONE aggregation: the 7 per-dim gradients are seven
-    // avg() columns of a single groupBy (partial-aggregable, one
-    // shuffle) — the posexplode→per-dim-groupBy→gather spelling costs
-    // a second shuffle per epoch and measured 22.5 s for the grid at
-    // sf0.1; this form re-measures at a third of that. The
-    // state array rides the group key (constant per cell, so grouping
-    // by it is free and keeps both engines' spelling identical).
-    val wN = IterativeState.epochs(w0, GridIter) { (w, _) =>
-      val gs = (0 until GridDim).map(i =>
-        avg($"err" * element_at($"xz", i + 1)).as(s"g$i"))
-      train.join(broadcast(w), Seq("n_Epochs", "Model"))
-        .withColumn("err", lit(1.0) / (lit(1.0) + exp(-dot)) - $"y")
-        .groupBy($"n_Epochs", $"Model", $"w")
-        .agg(gs.head, gs.tail: _*)
-        .select($"n_Epochs", $"Model",
-          array((0 until GridDim).map(i =>
-            round(element_at($"w", i + 1) - lit(GridLr) * col(s"g$i"), 6)): _*)
-            .as("w"))
-    }
+    (train, test, w0)
+  }
+
+  private def q137(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val (train, test, w0) = gridProbeInputs(s, dir)
+    def dot = graft.expr.GraftFunctions.dot(s, $"xz", $"w")
+    // all nine cells train together: one job per epoch scans the
+    // training table once and returns per-(cell, dim) partial
+    // gradients; the 9×7 weights come back to the driver
+    val wN = IterativeState.logisticGd(train, w0, GridLr, GridIter)
     // probe-free ScoreThreshold floor rides the same table: x[1] is
     // the variant slice's first channel for every model (r1 / r4)
     val scored = test.join(broadcast(wN), Seq("n_Epochs", "Model"))

@@ -276,8 +276,9 @@ class PlanShapeSpec extends SparkSpec {
     // the 9-row weight state and z-stats ride BROADCAST joins into
     // the scoring pass — the corpus never shuffles for model state
     assert(p.contains("BroadcastHashJoin"), p.take(2000))
-    // grid table + per-epoch states are checkpointed: the final plan
-    // reads materialized RDDs, no parquet re-scan of the rep chain
+    // the grid table is checkpointed and the trained weights come
+    // back from the driver as a local table: the final plan reads
+    // materialized data, no parquet re-scan of the rep chain
     assert(p.contains("Scan ExistingRDD") && !p.contains("Scan parquet"),
       p.take(1500))
   }
