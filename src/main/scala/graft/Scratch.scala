@@ -37,6 +37,10 @@ object Scratch {
     dir.toString
   }
 
+  /** seconds parMap waits for interrupted siblings to stop, first
+    * before cancelling their Spark jobs and again after. */
+  private val StopSecs = 60L
+
   /** Bounded driver-side overlap of INDEPENDENT Spark actions
     * (optimization guide §2.6): the scheduler happily runs several
     * jobs at once inside one application; actions are only sequential
@@ -48,8 +52,8 @@ object Scratch {
     * elements are provably independent (separate artifacts, settings,
     * key spaces) — never across an ordered fold's steps. Width stays
     * small (fill the tail, don't fight for executors — guide §2.6). */
-  private[graft] def parMap[A, B](xs: Seq[A], width: Int,
-      stopSecs: Long = 60)(f: A => B): Seq[B] = {
+  private[graft] def parMap[A, B](xs: Seq[A], width: Int)(
+      f: A => B): Seq[B] = {
     if (xs.sizeIs <= 1 || width <= 1) xs.map(f)
     else {
       import scala.concurrent.{Await, ExecutionContext, Future}
@@ -71,22 +75,27 @@ object Scratch {
             interruptOnCancel = true)
           try f(xs(i)) finally c.clearJobGroup()
       }
+      // the sequence's callbacks run on the completing sibling's thread:
+      // a sibling that ends after shutdownNow must not submit to the pool
       try Await.result(Future.sequence(xs.indices.map(i =>
-        Future(sibling(i)))), Duration.Inf)
+        Future(sibling(i))))(implicitly, ExecutionContext.parasitic),
+        Duration.Inf)
       catch { case t: Throwable =>
         // first failure propagates, but NOT before the siblings are
         // interrupted and drained (ADVICE r17): a withScratchDir gate
         // unwinding past this frame deletes the scratch dir, and a
         // still-running sibling stream would hit it mid-write and
-        // surface a confusing secondary failure instead of `t`. Each
-        // sibling's jobs run in its own job group, so siblings still
-        // alive `stopSecs` after the interrupt get them cancelled.
+        // surface a confusing secondary failure instead of `t`. A
+        // sibling running a stream stops it before its thread ends
+        // (StreamingQueries.awaitOrStop). Each sibling's batch jobs run
+        // in its own job group, so siblings still alive `StopSecs`
+        // after the interrupt get them cancelled.
         pool.shutdownNow()
-        if (!pool.awaitTermination(stopSecs, SECONDS)) {
+        if (!pool.awaitTermination(StopSecs, SECONDS)) {
           sc.foreach(c => groups.foreach(c.cancelJobGroup))
-          val stopped = pool.awaitTermination(stopSecs, SECONDS)
+          val stopped = pool.awaitTermination(StopSecs, SECONDS)
           System.err.println(s"[graft] parMap: siblings still running " +
-            s"${stopSecs} s after ${t.getClass.getName}; cancelled " +
+            s"${StopSecs} s after ${t.getClass.getName}; cancelled " +
             s"their Spark jobs (${groups.mkString(",")}): " +
             (if (stopped) "they stopped" else "some are STILL running"))
         }

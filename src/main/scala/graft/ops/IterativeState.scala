@@ -3,8 +3,8 @@ package graft.ops
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference,
-  UnsafeArrayData, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal,
+  Round, UnsafeArrayData, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -67,10 +67,10 @@ object IterativeState {
     * order and sets w_i ← round(w_i − lr·g_i, 6) with g = Σ/n. The
     * per-row math is the SQL epoch's, bit for bit: graft_dot's in-order
     * fold from 0.0, StrictMath.exp (what Spark's `exp` runs),
-    * err = 1/(1+exp(−z)) − y, and Spark's `round` (HALF_UP on the
-    * double's decimal form). A key with no training rows keeps its
-    * weights. `onEpoch` sees each epoch's state as a local frame shaped
-    * like `init`; the result is the last one. */
+    * err = 1/(1+exp(−z)) − y; the rounding is Spark's own `round`
+    * expression, evaluated on the driver. A key with no training rows
+    * keeps its weights. `onEpoch` sees each epoch's state as a local
+    * frame shaped like `init`; the result is the last one. */
   def logisticGd(train: DataFrame, init: DataFrame, lr: Double, iters: Int,
       onEpoch: (DataFrame, Int) => Unit = (_, _) => ()): DataFrame = {
     val s = init.sparkSession
@@ -98,7 +98,8 @@ object IterativeState {
       state = state.map { case (k, w) =>
         Option(sums.get(k)).fold(k -> w) { case (acc, cnt) =>
           k -> Array.tabulate(w.length)(i =>
-            sparkRound6(w(i) - lr * (acc(i) / cnt(0).toDouble)))
+            Round(Literal(w(i) - lr * (acc(i) / cnt(0).toDouble)),
+              Literal(6)).eval().asInstanceOf[Double])
         }
       }
       out = s.createDataFrame(state.map { case (k, w) =>
@@ -151,10 +152,4 @@ object IterativeState {
   private[graft] def logisticErr(x: ArrayData, w: ArrayData, y: Double)
       : Double =
     1.0 / (1.0 + StrictMath.exp(-graft.expr.DotExpr.compute(x, w))) - y
-
-  /** Spark's `round(c, 6)` on a double (RoundBase, HALF_UP): rounds the
-    * double's shortest decimal form, not its exact binary value. */
-  private[graft] def sparkRound6(d: Double): Double =
-    if (d.isNaN || d.isInfinite) d
-    else BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 }

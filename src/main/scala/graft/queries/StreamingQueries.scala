@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.streaming.Streaming
 
@@ -167,6 +167,13 @@ object StreamingQueries {
     graft.Tables.normalizeTs(tableStream(s, dir, "events"))
   }
 
+  /** wait for `q` to finish; if the wait ends early (a parMap sibling
+    * interrupted after another sibling failed), stop the stream before
+    * returning, so it cannot keep writing under a scratch dir that
+    * withScratchDir is about to delete. */
+  private[graft] def awaitOrStop(q: StreamingQuery): Unit =
+    try q.awaitTermination() finally if (q.isActive) q.stop()
+
   /** run `agg` as an AvailableNow streaming job into a parquet sink
     * under `scratch`, wait for completion, re-read the sink. */
   private def runToSink(s: SparkSession, agg: DataFrame,
@@ -179,7 +186,7 @@ object StreamingQueries {
         .outputMode("append")
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+      awaitOrStop(q)
     }
     s.read.parquet(out)
   }
@@ -200,7 +207,7 @@ object StreamingQueries {
         .outputMode("append")
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+      awaitOrStop(q)
     }
     s.read.parquet(out)
   }
@@ -456,7 +463,7 @@ object StreamingQueries {
           .option("checkpointLocation", scratch + "/ckpt")
           .trigger(Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
+        awaitOrStop(q)
       }
       val sunk = s.read.parquet(out)
       val w = Window.partitionBy($"user_id").orderBy($"total_events".desc)
@@ -850,7 +857,7 @@ object StreamingQueries {
             .outputMode("append")
             .trigger(Trigger.AvailableNow())
             .start()
-          q.awaitTermination()
+          awaitOrStop(q)
           // q.explain prints the LAST micro-batch's physical plan
           val baos = new java.io.ByteArrayOutputStream
           Console.withOut(new java.io.PrintStream(baos, true, "UTF-8")) {
@@ -1186,7 +1193,7 @@ object StreamingQueries {
           .option("checkpointLocation", scratch + "/ckpt")
           .trigger(Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
+        awaitOrStop(q)
       }
       val sunk = s.read.parquet(out)
       val w = Window.partitionBy($"event_type").orderBy($"n".desc)
@@ -1323,7 +1330,7 @@ object StreamingQueries {
           .option("checkpointLocation", scratch + "/ckpt")
           .trigger(Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
+        awaitOrStop(q)
       }
       val sunk = s.read.parquet(out)
       val w = Window.partitionBy($"user_id").orderBy($"n_ops".desc)
@@ -6370,7 +6377,7 @@ object StreamingQueries {
           ()
         }
         .start()
-      q.awaitTermination()
+      awaitOrStop(q)
       val ingested = entries.result().map(e => ManRow(e._1, e._2,
         e._3, e._4, e._5, e._6, e._7, e._8, e._9, e._10))
       val packExt = packCommits(s, ingested, a, out, Seq.empty)

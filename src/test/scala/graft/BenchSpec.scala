@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The Bench sweep's failure accounting and parMap's stop path. */
@@ -15,37 +16,45 @@ class BenchSpec extends SparkSpec {
     assert(timed.map(_._1) == Seq("q01_ok"))
   }
 
-  test("parMap cancels a sibling's Spark jobs when it outlives the stop timeout") {
+  test("parMap runs each sibling's Spark jobs in its own job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(l)
+    try {
+      Scratch.parMap(Seq(0, 1), 2)(i => spark.range(10 + i).collect().length)
+      Scratch.drainListenerBus(sc)
+    } finally sc.removeSparkListener(l)
+    // the groups parMap cancels when a sibling outlives its interrupt
+    assert(groups.size == 2, groups)
+    assert(groups.asScala.forall(_.startsWith("graft-parmap-")), groups)
+  }
+
+  test("a parMap sibling running a stream stops it when another sibling fails") {
+    import org.apache.spark.sql.streaming.StreamingQuery
     val started = new java.util.concurrent.CountDownLatch(1)
-    @volatile var groupCancelled = false
-    val t0 = System.nanoTime()
+    val stream = new java.util.concurrent.atomic.AtomicReference[StreamingQuery]()
     val e = intercept[IllegalStateException] {
-      Scratch.parMap(Seq(0, 1), 2, stopSecs = 1) {
+      Scratch.parMap(Seq(0, 1), 2) {
         case 0 =>
           started.await()
-          Thread.sleep(300)
           throw new IllegalStateException("first failure")
         case _ =>
-          // a sibling that outlives the interrupt: it resubmits its slow
-          // job until the job's group is cancelled
-          while (!groupCancelled) {
-            started.countDown()
-            try spark.sparkContext.parallelize(Seq(1), 1)
-              .map { x => Thread.sleep(30000); x }.collect()
-            catch {
-              case _: InterruptedException => ()
-              case se: org.apache.spark.SparkException =>
-                groupCancelled = String.valueOf(se.getMessage)
-                  .contains("graft-parmap-")
-            }
-          }
-          1
+          // a stream that never ends on its own
+          val q = spark.readStream.format("rate").load()
+            .writeStream.format("noop")
+            .option("checkpointLocation", tmpDir("graft_parmap_ckpt"))
+            .start()
+          stream.set(q)
+          started.countDown()
+          graft.queries.StreamingQueries.awaitOrStop(q)
       }
     }
     assert(e.getMessage == "first failure")
-    val deadline = System.nanoTime() + 10000000000L
-    while (!groupCancelled && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(groupCancelled, "the sibling's job group was never cancelled")
-    assert((System.nanoTime() - t0) / 1e9 < 20.0)
+    assert(!stream.get.isActive, "the sibling's stream outlived parMap")
   }
 }

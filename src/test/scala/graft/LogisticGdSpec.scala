@@ -105,7 +105,7 @@ class LogisticGdSpec extends SparkSpec {
   }
 
   // 6 dp rounding absorbs a 1-ulp slip in one epoch's gradient, so the
-  // weight checks above cannot see one; these pin the row math itself
+  // weight checks above cannot see one; this pins the row math itself
   test("trainer row math equals Spark's err expression, bit for bit") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -122,23 +122,6 @@ class LogisticGdSpec extends SparkSpec {
     val off = rows.count(r => IterativeState.logisticErr(arr(r, 0), arr(r, 1),
       r.getDouble(2)) != r.getDouble(3))
     assert(off == 0, s"$off of ${rows.length} rows differ from Spark's err")
-  }
-
-  test("trainer rounding equals Spark's round(_, 6), halves included") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val vs = Seq(0.0000005, -0.0000005, 1.2345675, 2.5e-7, -2.5e-7,
-      0.1234565, 1e-7, 123.4567895, Double.NaN) ++
-      Seq.fill(2000)((rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(6) - 3))
-    // repartition keeps the optimizer from folding round() over the
-    // local rows, so the generated (not interpreted) round runs
-    val got = vs.toDF("v").repartition(2).select($"v", round($"v", 6))
-      .collect()
-    got.foreach { r =>
-      val (v, want) = (r.getDouble(0), r.getDouble(1))
-      val mine = IterativeState.sparkRound6(v)
-      assert(mine == want || (mine.isNaN && want.isNaN), s"round($v): $mine vs $want")
-    }
   }
 
   test("trainer weights do not depend on the training table's partitioning") {
