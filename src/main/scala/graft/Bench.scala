@@ -19,6 +19,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // warmup: exercise parquet scan, shuffle, window, HOF and codegen
     // paths once so the first measured query doesn't absorb JIT cost
+    var untimedSec = 0.0
     try {
       SparkEntry.entry(spark).count()
       graft.Tables.lineitem(spark, sfDir)
@@ -36,140 +37,16 @@ object Bench {
       new org.apache.spark.ml.classification.MultilayerPerceptronClassifier()
         .setLayers(Array(2, 3, 2)).setMaxIter(2).setSeed(1L)
         .fit(tiny).transform(tiny).count()
-      // Structured Streaming first-use (micro-batch planner, state
-      // store provider, source/sink commit logs) is ~1-2 s of the
-      // first streaming query's cold time — absorb it with tiny
-      // sf0.001 runs of the untyped and the typed stateful paths.
-      SparkEntry.queries("q103_stream_tumbling")(
-        spark, "/root/testdata/sf0.001").count()
-      SparkEntry.queries("q105_stream_stateful")(
-        spark, "/root/testdata/sf0.001").count()
-      // the stream-stream symmetric hash join is a third cold path
-      // (its own state-store format + join planner) — warm it too so
-      // the first join gate measured isn't carrying the JIT
-      SparkEntry.queries("q116_stream_join")(
-        spark, "/root/testdata/sf0.001").count()
-      // the bloom screen path (native agg build + any-shingle probe)
-      // JITs separately from everything above — warm it so q128's
-      // measured time is the screen, not first-use compilation
-      SparkEntry.queries("q128_bloom_decontaminate")(
-        spark, "/root/testdata/sf0.001").count()
-      // pre-build the measured sfDir's decontamination blob so neither
-      // q128 nor q130 carries the one-time build in its measured time
-      // (the production amortization: one build per benchmark snapshot)
-      graft.queries.DedupQueries.warmBenchBlob(spark, sfDir)
-      // likewise pre-build q130's multi-file stream-source replica
-      // (ingest layout, not screen cost — see streamFixtureDir)
-      graft.queries.StreamingQueries.warmStreamFixture(spark, sfDir)
-      // and the cell-partitioned IVFADC index, so q181 measures the
-      // MARGINAL serve cost (one build per corpus snapshot — the
-      // amortization the persisted-index path exists for; build time
-      // reported as ann_index_sec)
-      graft.queries.SimilarityQueries.warmAnnIndex(spark, sfDir)
-      // and the RETRAINED v2 index q219 swaps onto (one build per
-      // retrain decision — the same amortization; retrain_index_sec)
-      graft.queries.SimilarityQueries.warmRetrainedIndex(spark, sfDir)
-      // and the chunk postings index q186 serves from (same
-      // one-build-per-snapshot amortization; chunk_index_sec)
-      graft.queries.SimilarityQueries.warmChunkIndex(spark, sfDir)
-      // and the doc postings index q181's served lexical branch reads
-      // (doc_index_sec)
-      graft.queries.SimilarityQueries.warmDocIndex(spark, sfDir)
-      // and q199's frozen-release sidecars (one release build per
-      // corpus snapshot; release_build_sec) so the gate measures the
-      // marginal ingest cost
-      graft.queries.StreamingQueries.warmFrozenRelease(spark, sfDir)
-      // and release v2 (the materialized roll-forward q201/q204 read;
-      // one re-release build per corpus snapshot, release_v2_sec)
-      graft.queries.StreamingQueries.warmReleaseV2(spark, sfDir)
-      // and release v3 (the purged CURRENT release q218's SLA audit
-      // scans — same amortization; release_v3_sec). Unwarmed, the
-      // one-time build landed inside q218's measured cold time.
-      graft.queries.StreamingQueries.warmReleaseV3(spark, sfDir)
-      // and q206's purge-target delta artifacts (a deployment purges
-      // artifacts that already exist; purge_artifacts_sec)
-      graft.queries.StreamingQueries.warmPurgeArtifacts(spark, sfDir)
-      // and the manifest-logged timeline q221/q222 read (one commit
-      // log per corpus snapshot — the table-format amortization;
-      // manifest_build_sec)
-      graft.queries.StreamingQueries.warmManifestLog(spark, sfDir)
-      // and the compacted purged doc index q213's lexical branch
-      // serves from (the once-per-takedown-batch compaction job;
-      // purged_doc_index_sec)
-      graft.queries.SimilarityQueries.warmPurgedDocIndex(spark, sfDir)
-      // and the compacted purged chunk index + manifest q214's RAG
-      // stages serve from (purged_chunk_index_sec)
-      graft.queries.SimilarityQueries.warmPurgedChunkIndex(spark, sfDir)
-      // the DFT-blend trajectory family and the curation DAG carry
-      // ~8 s of first-plan codegen (q89 measured 10.4 s cold vs 2.1 s
-      // warm at sf0.1) — warm both plan families at sf0.001 so the
-      // measured entries time the work, not Janino
-      SparkEntry.queries("q89_sup_trajectory")(
-        spark, "/root/testdata/sf0.001").count()
-      SparkEntry.queries("q138_curation_dag")(
-        spark, "/root/testdata/sf0.001").count()
-      // the GD-grid plan family (16 epoch plans + the native-kernel
-      // scoring pass) carries its own first-plan codegen — a cold
-      // q160 epoch 1 measured 13 s at sf3 vs 0.6 s warm
-      SparkEntry.queries("q160_gd_mlp_grid")(
-        spark, "/root/testdata/sf0.001").count()
-      // the quantizer-aging composition (4 variant plans × the
-      // 1024-literal cell-scores trees + two PQ-encode families)
-      // measured 143 s cold vs 19 s warm at sf3 — same class
-      SparkEntry.queries("q217_quantizer_aging")(
-        spark, "/root/testdata/sf0.001").count()
-      // q219 shares q217's 4-variant plan family and adds the swapped
-      // pruned-serve plan — same cold-codegen class
-      SparkEntry.queries("q219_retrain_swap")(
-        spark, "/root/testdata/sf0.001").count()
-      // q220's fused-feed stream plans + 12-event fold carry their
-      // own first-plan cost (measured ~66 s cold in-registry vs
-      // 12.4 s warm solo at sf0.1) — warm the family at sf0.001
-      SparkEntry.queries("q220_append_purge_interleave")(
-        spark, "/root/testdata/sf0.001").count()
-      // the CDC signed-delta feed q225 consumes (one materialization
-      // per corpus snapshot — cdc_feed_sec), plus the consumer's
-      // stream plan family at sf0.001
-      graft.queries.StreamingQueries.warmCdcFeed(spark, sfDir)
-      SparkEntry.queries("q225_stream_cdc_consume")(
-        spark, "/root/testdata/sf0.001").count()
-      // the COW merge extension q227 reads and the MoR merge
-      // extension q235 compares it against (one merge commit each
-      // per corpus snapshot)
-      graft.queries.StreamingQueries.mergeExtensionDir(spark, sfDir)
-      graft.queries.StreamingQueries.morExtensionDir(spark, sfDir)
-      graft.queries.StreamingQueries.morCompactDir(spark, sfDir)
-      // the manifest-capstone families added this round — the
-      // txn-log membership pass (q231), the pack extension (q233),
-      // and the streaming shard ingest (q234) — each carry first-plan
-      // codegen; warm the FAMILIES at sf0.001 (the measured sfDir
-      // builders stay cold: their build IS the verb being measured)
-      SparkEntry.queries("q231_atomic_txn_read")(
-        spark, "/root/testdata/sf0.001").count()
-      SparkEntry.queries("q233_partial_compaction")(
-        spark, "/root/testdata/sf0.001").count()
-      SparkEntry.queries("q234_stream_manifest_ingest")(
-        spark, "/root/testdata/sf0.001").count()
-      SparkEntry.queries("q235_mor_vs_cow_merge")(
-        spark, "/root/testdata/sf0.001").count()
-      SparkEntry.queries("q236_mor_compaction")(
-        spark, "/root/testdata/sf0.001").count()
-      // …and then EVERY registered plan family once at sf0.001, under
-      // the same noop action the measurement uses: the sweep times
-      // steady-state plan cost at the measured SF, not first-plan
-      // Janino codegen. The explicit list above grew one entry per
-      // round as each new family's first-plan cost was measured
-      // (q89 ~8 s, q160 ~13 s, q217 ~124 s at sf3); the r17 baseline
-      // still carried ~97 s of one-time first-plan cost across the
-      // 226-query reps=1 sweep (cold − warm, tmp/bench_self.json), so
-      // the per-family list generalizes to the whole registry. Data
-      // work stays at sf0.001 (three decades below the measured SF);
-      // per-measured-dir artifact builds remain ONLY the explicit
-      // warm* calls above, which report their *_sec amortization.
-      // Each family is guarded individually so one failure costs only
-      // its own family's warmth — but only NON-fatal failures (ADVICE
-      // r17): swallowing an OOM/InterruptedException here would leave
-      // a degraded JVM proceeding silently to measurement.
+      // EVERY registered plan family once at sf0.001, under the same
+      // noop action the measurement uses: the sweep times steady-state
+      // plan cost at the measured SF, not first-plan Janino codegen
+      // (q89 ~8 s, q160 ~13 s, q217 ~124 s at sf3; the r17 baseline
+      // carried ~97 s of one-time first-plan cost across the sweep).
+      // Data work stays at sf0.001 (three decades below the measured
+      // SF). Each family is guarded individually so one failure costs
+      // only its own family's warmth — but only NON-fatal failures:
+      // swallowing an OOM/InterruptedException here would leave a
+      // degraded JVM proceeding silently to measurement.
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         try fn(spark, "/root/testdata/sf0.001")
           .write.mode("overwrite").format("noop").save()
@@ -178,6 +55,12 @@ object Bench {
             s"(${t.getClass.getName}) — its family stays cold")
         }
       }
+      // …then build the measured sfDir's stored artifacts, the ones
+      // whose gates assume they already exist (one build per corpus
+      // snapshot, reported per artifact as its *_sec field)
+      val t0 = System.nanoTime()
+      Artifacts.warmList.foreach { case (_, warm) => warm(spark, sfDir) }
+      untimedSec = (System.nanoTime() - t0) / 1e9
       // …then drain the warmup's own debt BEFORE measuring: the
       // warm-all pass drops hundreds of sf0.001 checkpoint/broadcast
       // refs, and ContextCleaner only retires them after a GC notices
@@ -221,8 +104,6 @@ object Bench {
     // "q01_pricing_summary") and 2-decimal seconds so the whole line
     // fits the tail window with room for sbt's trailing status line.
     def shortId(name: String): String = name.takeWhile(_ != '_')
-    def fmt(v: Double): String = BigDecimal(v)
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
     // short ids must stay unique — a collision would silently
     // overwrite a timing at JSON-parse time
     val ids = (results.map(_._1) ++ failed).map(shortId)
@@ -240,38 +121,8 @@ object Bench {
     val total = results.map(_._2._1).sum
     val failedIds = failed.map(n => "\"" + shortId(n) + "\"")
       .mkString("[", ",", "]")
-    // fixture_sec: one-time stream-replica build cost (excluded from
-    // per-query timings by the warmup — reported so the amortization
-    // is auditable, per ADVICE r9)
-    val fixtureSec =
-      graft.queries.StreamingQueries.fixtureBuildNanos.get() / 1e9
-    // one-time index builds (amortized out of q181/q186's timings)
-    val idxSec =
-      graft.queries.SimilarityQueries.indexBuildNanos.get() / 1e9
-    val retrainIdxSec =
-      graft.queries.SimilarityQueries.retrainIndexNanos.get() / 1e9
-    val chunkIdxSec =
-      graft.queries.SimilarityQueries.chunkIndexBuildNanos.get() / 1e9
-    val docIdxSec =
-      graft.queries.SimilarityQueries.docIndexBuildNanos.get() / 1e9
-    val relSec =
-      graft.queries.StreamingQueries.releaseBuildNanos.get() / 1e9
-    val relV2Sec =
-      graft.queries.StreamingQueries.releaseV2Nanos.get() / 1e9
-    val relV3Sec =
-      graft.queries.StreamingQueries.releaseV3Nanos.get() / 1e9
-    val purgeArtSec =
-      graft.queries.StreamingQueries.purgeArtifactNanos.get() / 1e9
-    val manifestSec =
-      graft.queries.StreamingQueries.manifestBuildNanos.get() / 1e9
-    val cdcFeedSec =
-      graft.queries.StreamingQueries.cdcFeedBuildNanos.get() / 1e9
-    val purgedDocIdxSec =
-      graft.queries.SimilarityQueries.purgedDocIndexNanos.get() / 1e9
-    val purgedChunkIdxSec =
-      graft.queries.SimilarityQueries.purgedChunkIndexNanos.get() / 1e9
     val line =
-      s"""{"metric":"total_detail","value":${fmt(total)},"unit":"sec","reps":$reps,"queries":$qs$coldQs,"failed":$failedIds,"fixture_sec":${fmt(fixtureSec)},"ann_index_sec":${fmt(idxSec)},"retrain_index_sec":${fmt(retrainIdxSec)},"chunk_index_sec":${fmt(chunkIdxSec)},"doc_index_sec":${fmt(docIdxSec)},"release_build_sec":${fmt(relSec)},"release_v2_sec":${fmt(relV2Sec)},"release_v3_sec":${fmt(relV3Sec)},"purge_artifacts_sec":${fmt(purgeArtSec)},"manifest_build_sec":${fmt(manifestSec)},"cdc_feed_sec":${fmt(cdcFeedSec)},"purged_doc_index_sec":${fmt(purgedDocIdxSec)},"purged_chunk_index_sec":${fmt(purgedChunkIdxSec)},"sf":"$sfDir"}"""
+      s"""{"metric":"total_detail","value":${fmt(total)},"unit":"sec","reps":$reps,"queries":$qs$coldQs,"failed":$failedIds,${untimedFields(sfDir, untimedSec)},"sf":"$sfDir"}"""
     val compact =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"n_queries":${results.size},"failed":$failedIds,"queries_file":"tmp/bench_self.json","sf":"$sfDir"}"""
     // compact line FIRST as well as last: whatever window a consumer
@@ -307,6 +158,17 @@ object Bench {
     // exactly this one.
     println(compact)
   }
+
+  /** one `<name>_sec` JSON field per warmed artifact: its build seconds
+    * for `dir`, plus `untimed_total_sec`, the wall time of all of them,
+    * where a nested build counts once. */
+  private[graft] def untimedFields(dir: String, untimedSec: Double): String =
+    (Artifacts.warmList.map { case (e, _) => e.name -> e.seconds(dir) } :+
+      ("untimed_total" -> untimedSec))
+      .map { case (n, v) => s""""${n}_sec":${fmt(v)}""" }.mkString(",")
+
+  private def fmt(v: Double): String = BigDecimal(v)
+    .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
 
   /** Time each query `reps` times with the noop sink; a query is
     * (name, (min, first-rep)) seconds. A query that throws in any rep

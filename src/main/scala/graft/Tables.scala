@@ -13,36 +13,21 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     parquetCached(spark, s"$dir/$name.parquet")
 
-  private val schemaCache = new java.util.concurrent
-    .ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schema = Artifacts[org.apache.spark.sql.types.StructType](
+    "parquet_schema")
 
   /** schema-cached parquet read: static tables and persisted indexes
     * are read MANY times per session (every warm serve re-opens
     * dict/stats/postings/manifest), and each bare spark.read.parquet
     * pays a 1-task schema-inference job per call — measured 16 of
     * q187's 64 warm-serve jobs. Caching the inferred schema per
-    * (path, mtime, size) makes warm reads job-free at the reader
-    * while a regenerated fixture still re-infers. Columnar pruning
-    * and pushdown are unaffected — only inference is skipped. */
+    * fingerprint makes warm reads job-free at the reader while a
+    * regenerated fixture still re-infers. Columnar pruning and
+    * pushdown are unaffected — only inference is skipped. */
   def parquetCached(spark: SparkSession, path: String): DataFrame = {
-    val sch = memoFresh(schemaCache, s"$path:", fingerprint(path))(
-      _ => spark.read.parquet(path).schema)
+    val sch = schema(spark, path, fingerprint(path))(
+      spark.read.parquet(path).schema)
     spark.read.schema(sch).parquet(path)
-  }
-
-  /** memoize under a freshness key, evicting superseded keys sharing
-    * the same `prefix` before inserting: a stale fingerprint of a
-    * regenerated fixture can never be read again, so keeping it only
-    * grows the map (and, for caches holding checkpointed DataFrames,
-    * pins dead RDD blocks) without bound in a long-lived session that
-    * regenerates fixtures (ADVICE r16). ONE spelling for every
-    * fingerprint-keyed memo in the engine. */
-  private[graft] def memoFresh[V](
-      m: java.util.concurrent.ConcurrentHashMap[String, V],
-      prefix: String, key: String)(f: String => V): V = {
-    if (m.get(key) == null)
-      m.keySet.removeIf(k => k.startsWith(prefix) && k != key)
-    m.computeIfAbsent(key, f(_))
   }
 
   private def md5Hex(b: Array[Byte]): String =
@@ -110,29 +95,28 @@ object Tables {
     }
   }
 
-  private val eventRowCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val eventRows = Artifacts[java.lang.Long]("event_rows")
 
   /** Partition count for materialized (localCheckpoint) per-user rep
     * tables that feed probe-grid fits: one partition per ~250k source
     * event rows, capped at the session's parallelism. The rowcount is
     * ONE count job over the raw parquet (column-pruned to zero columns,
     * so the scan serves it from row-group metadata rather than data
-    * pages), memoized per sf dir so repeated q76/q88/q91 invocations
+    * pages), kept per events file so repeated q76/q88/q91 invocations
     * don't re-run it. At sf0.1 this stays 1 (the rep table is a few
     * thousand rows — more partitions would only add scheduling overhead
     * to tiny fits); at 100× the checkpoint fans out so grid fits read a
     * parallel input instead of one task. */
   def checkpointPartitions(s: SparkSession, d: String): Int = {
-    val eventRows: Long = eventRowCache.computeIfAbsent(d,
-      _ => {
-        // same nanosAsLong guard as `events` — without it a FRESH
-        // session whose first events touch is this count would throw on
-        // the INT64 TIMESTAMP(NANOS) column during schema conversion
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        s.read.parquet(s"$d/events.parquet").count()
-      })
-    val target = math.max(1L, eventRows / 250000L)
+    val path = s"$d/events.parquet"
+    val rows: Long = eventRows(s, d, fingerprint(path)) {
+      // same nanosAsLong guard as `events` — without it a FRESH
+      // session whose first events touch is this count would throw on
+      // the INT64 TIMESTAMP(NANOS) column during schema conversion
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      s.read.parquet(path).count()
+    }
+    val target = math.max(1L, rows / 250000L)
     math.min(target, s.sparkContext.defaultParallelism.toLong).toInt
   }
 

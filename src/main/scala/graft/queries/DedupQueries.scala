@@ -832,34 +832,21 @@ object DedupQueries {
       * partitions × blob size — right-size the build parallelism to
       * the (small) benchmark side, not the corpus. */
     def benchBlob(s: SparkSession, dir: String): Array[Byte] =
-      blobCache.computeIfAbsent(dir, _ =>
+      blob(s, dir, graft.Tables.fingerprint(s"$dir/documents.parquet")) {
         withShingles(withBenchSplit(documents(s, dir))
           .filter(col("hx") < BenchMax))
           .select(explode(col("shs")).as("sh"))
           .coalesce(8)
           .agg(graft.expr.GraftFunctions
             .bloomAgg(s, col("sh"), NBits, K).as("bloom"))
-          .head().getAs[Array[Byte]](0))
+          .head().getAs[Array[Byte]](0)
+      }
 
-    /** built-filter memo keyed by table dir — the production shape: a
-      * decontamination filter is built once per benchmark snapshot and
-      * reused by every screen that cites it (q128's batch audit and
-      * q130's streaming ingest share one build). Safe because the
-      * build is a pure deterministic function of the (read-only)
-      * benchmark split under fixed geometry; a refreshed benchmark is
-      * a different dir → different key. */
-    private val blobCache =
-      new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-  }
-
-  /** Bench warmup hook: pre-build (and memoize) the measured sfDir's
-    * benchmark bloom blob so NEITHER q128 nor q130's measured time
-    * includes the one-time build — the amortization a production
-    * deployment has (the filter is built once per benchmark snapshot
-    * and cited by every screen), applied symmetrically so the
-    * q128/q130 split is interpretable. */
-  def warmBenchBlob(s: SparkSession, dir: String): Unit = {
-    BloomScreen.benchBlob(s, dir); ()
+    /** the production shape: a decontamination filter is built once
+      * per benchmark snapshot and reused by every screen that cites it
+      * (q128's batch audit and q130's streaming ingest share one
+      * build). */
+    private[graft] val blob = graft.Artifacts[Array[Byte]]("bench_blob")
   }
 
   private def q128(s: SparkSession, dir: String): DataFrame = {

@@ -102,37 +102,24 @@ object StreamingQueries {
     * (measured: q130 35.2 s solo at sf1 vs ~9 s for its batch twin —
     * a test-topology artifact, not operator cost). A production
     * ingest directory is many files/buckets; model that topology with
-    * a one-time repartitioned replica of the table, memoized per
-    * (sfDir, table) for the session. The replica build is the ingest
-    * LAYOUT, not part of the screen's cost — the warmBenchBlob
-    * amortization argument — and rides a tempDirDeletedOnExit. */
+    * a one-time repartitioned replica of the table, stored per
+    * (sfDir, table). The replica build is the ingest LAYOUT, not part
+    * of the screen's cost — the bench-blob amortization argument —
+    * and rides a tempDirDeletedOnExit. */
   private[graft] val StreamFiles = 16
-  private val fixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** cumulative wall-clock spent building stream-source replicas this
-    * JVM — Bench reports it as its own JSON field so the one-time
-    * ingest-layout cost is auditable, not silently amortized away. */
-  private[graft] val fixtureBuildNanos =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+  private[graft] val fixture = graft.Artifacts[String]("fixture")
 
   /** path of the multi-file replica of `dir`'s `name` table (built on
-    * first use; package-visible so specs can count its files). The
-    * memo key includes the source file's (mtime, length): testdata is
-    * regenerated between rounds, so a long-lived session must rebuild
-    * rather than silently stream a stale copy. */
+    * first use; package-visible so specs can count its files). */
   private[graft] def streamFixtureDir(s: SparkSession, dir: String,
       name: String): String = {
-    val src = new java.io.File(s"$dir/$name.parquet")
-    val key = s"$dir/$name:${src.lastModified}:${src.length}"
-    graft.Tables.memoFresh(fixtureCache, s"$dir/$name:", key)(_ => {
-      val t0 = System.nanoTime()
+    val src = s"$dir/$name.parquet"
+    fixture.part(s, dir, name, graft.Tables.fingerprint(src)) {
       val out = graft.Scratch.tempDirDeletedOnExit(s"graft_mf_$name")
-      s.read.parquet(s"$dir/$name.parquet").repartition(StreamFiles)
+      s.read.parquet(src).repartition(StreamFiles)
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
-      fixtureBuildNanos.addAndGet(System.nanoTime() - t0)
       s"$out/$name.parquet"
-    })
+    }
   }
 
   /** stream a table through the multi-file replica, so the stateless
@@ -149,14 +136,6 @@ object StreamingQueries {
     (if (filesPerTrigger > 0)
        r.option("maxFilesPerTrigger", filesPerTrigger)
      else r).parquet(tableDir)
-  }
-
-  /** Bench warmup hook: pre-build the measured sfDir's replica so
-    * q130's measured time is the screen, not the one-time layout. */
-  private[graft] def warmStreamFixture(s: SparkSession, dir: String): Unit = {
-    streamFixtureDir(s, dir, "documents")
-    streamFixtureDir(s, dir, "embeddings") // q183's ingest layout
-    ()
   }
 
   /** events through the file stream source — same ts-layout handling
@@ -1687,128 +1666,65 @@ object StreamingQueries {
       .orderBy($"lang", $"shard")
   }
 
-  /** memoized frozen-release sidecar state per (dir, table version) —
-    * the production amortization: the release build runs ONCE per
+  /** frozen-release sidecar state per corpus snapshot — the
+    * production amortization: the release build runs ONCE per
     * release, every ingest micro-batch reuses its sidecars (blob,
-    * fingerprints, totals). Same discipline as benchBlob /
-    * streamFixtureDir; build wall-clock is reported by Bench as
-    * release_build_sec so the amortization stays auditable. */
-  private val releaseStateCache = new java.util.concurrent
-    .ConcurrentHashMap[String,
-      (Array[Byte], DataFrame, DataFrame, DataFrame, DataFrame)]()
-  private[graft] val releaseBuildNanos =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+    * fingerprints, totals). */
+  private[graft] val release = graft.Artifacts.sessionBound[
+    (Array[Byte], DataFrame, DataFrame, DataFrame, DataFrame)]("release_build")
 
   private[graft] def frozenReleaseFor(s: SparkSession, dir: String)
-      : (Array[Byte], DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    // key includes the SparkContext's applicationId (ADVICE r13): the
-    // cached tuple holds localCheckpoint'ed DataFrames whose RDDs are
-    // bound to the building session — a SECOND SparkSession in the
-    // same JVM must rebuild, not inherit another (possibly stopped)
-    // session's checkpointed blocks. (The annIndexDir/chunkIndexDir/
-    // streamFixture caches are exempt by construction: they memoize
-    // only on-disk parquet PATHS, which any session can re-read.)
-    val app = s.sparkContext.applicationId
-    val key = s"$app:$dir:${src.lastModified}:${src.length}"
-    // evict entries whose owning context is STOPPED (ADVICE r14/r15):
-    // a JVM that cycles SparkSessions doesn't accumulate dead
-    // checkpointed-DataFrame references without bound, while two LIVE
-    // contexts coexisting in one JVM keep their entries (the r14
-    // evict-other-appIds spelling made them evict each other on every
-    // lookup and rebuild the release state per query).
-    releaseStateCache.entrySet.removeIf(e =>
-      e.getValue._2.sparkSession.sparkContext.isStopped)
-    // superseded same-path fingerprints additionally evict on insert
-    // (ADVICE r16): a LIVE session that regenerates fixtures would
-    // otherwise pin one checkpointed release state per generation
-    graft.Tables.memoFresh(releaseStateCache, s"$app:$dir:", key)(_ => {
-      val t0 = System.nanoTime()
+      : (Array[Byte], DataFrame, DataFrame, DataFrame, DataFrame) =
+    release(s, dir, graft.Tables.fingerprint(s"$dir/documents.parquet")) {
       val split = DedupQueries.IngestSplit
       val base = split.withIx(graft.Tables.documents(s, dir))
         .filter(col("ix") >= split.NewMax)
         .select(col("doc_id"), col("lang"), col("text"))
-      val st = releaseFrozenState(base)
-      releaseBuildNanos.addAndGet(System.nanoTime() - t0)
-      st
-    })
-  }
+      releaseFrozenState(base)
+    }
 
-  /** Bench warmup hook: pre-build (and memoize) the measured sfDir's
-    * frozen-release sidecars so q199 measures the MARGINAL ingest
-    * cost — the screens + sink + compaction, not the once-per-release
-    * batch build. */
+  /** pre-build the frozen-release sidecars so q199 measures the
+    * MARGINAL ingest cost — the screens + sink + compaction, not the
+    * once-per-release batch build. */
   private[graft] def warmFrozenRelease(s: SparkSession, dir: String): Unit = {
     frozenReleaseFor(s, dir); ()
   }
 
-  /** memoized release v2 (the batch re-release over base + crawl) —
+  /** release v2 (the batch re-release over base + crawl) —
     * materializing it ONCE is what q201's roll-forward MEANS, and
-    * q204's retention rollup reads the same artifact; build wall-clock
-    * reported as release_v2_sec. q200 deliberately does NOT use this:
-    * its documented cost is the drift audit INCLUDING a live
-    * re-release (the number that tells a deployment what the
-    * staleness fix costs end to end). */
-  private val releaseV2Cache = new java.util.concurrent
-    .ConcurrentHashMap[String, DataFrame]()
-  private[graft] val releaseV2Nanos =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+    * q204's retention rollup reads the same artifact. q200
+    * deliberately does NOT use this: its documented cost is the drift
+    * audit INCLUDING a live re-release (the number that tells a
+    * deployment what the staleness fix costs end to end). */
+  private[graft] val releaseV2 =
+    graft.Artifacts.sessionBound[DataFrame]("release_v2")
 
-  private[graft] def releaseV2For(s: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val app = s.sparkContext.applicationId
-    val key = s"$app:$dir:${src.lastModified}:${src.length}"
-    // stopped-owner eviction, same rationale as releaseStateCache
-    releaseV2Cache.entrySet.removeIf(e =>
-      e.getValue.sparkSession.sparkContext.isStopped)
-    graft.Tables.memoFresh(releaseV2Cache, s"$app:$dir:", key)(_ => {
-      val t0 = System.nanoTime()
-      val v2 = TextQueries.releaseDocs(graft.Tables.documents(s, dir)
+  private[graft] def releaseV2For(s: SparkSession, dir: String): DataFrame =
+    releaseV2(s, dir, graft.Tables.fingerprint(s"$dir/documents.parquet")) {
+      TextQueries.releaseDocs(graft.Tables.documents(s, dir)
           .select(col("doc_id"), col("lang"), col("text")))
         .localCheckpoint(true)
-      releaseV2Nanos.addAndGet(System.nanoTime() - t0)
-      v2
-    })
-  }
+    }
 
   private[graft] def warmReleaseV2(s: SparkSession, dir: String): Unit = {
     releaseV2For(s, dir); ()
   }
 
-  /** memoized PURGED release (the q207 roll-forward's v3 artifact,
+  /** the PURGED release (the q207 roll-forward's v3 artifact,
     * materialized once per corpus snapshot): q218's SLA audit reads
     * the CURRENT release a deployment has on disk — q207 itself
     * deliberately keeps its chain live (its documented price is the
-    * roll-forward). Same stopped-owner eviction as releaseV2Cache.
-    * Bench-warmed like releaseV2 (same one-release-build-per-corpus-
-    * snapshot amortization; build wall-clock reported as
-    * release_v3_sec) — unwarmed, the build landed inside the FIRST
-    * consumer's (q218's) measured time in every reps=1 sweep. */
-  private val releaseV3Cache = new java.util.concurrent
-    .ConcurrentHashMap[String, DataFrame]()
-  private[graft] val releaseV3Nanos =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+    * roll-forward). */
+  private[graft] val releaseV3 =
+    graft.Artifacts.sessionBound[DataFrame]("release_v3")
 
-  private[graft] def releaseV3For(s: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val app = s.sparkContext.applicationId
-    val key = s"$app:$dir:${src.lastModified}:${src.length}"
-    releaseV3Cache.entrySet.removeIf(e =>
-      e.getValue.sparkSession.sparkContext.isStopped)
-    graft.Tables.memoFresh(releaseV3Cache, s"$app:$dir:", key)(_ => {
-      val t0 = System.nanoTime()
-      val v3 = TextQueries.releaseDocs(graft.Tables.documents(s, dir)
+  private[graft] def releaseV3For(s: SparkSession, dir: String): DataFrame =
+    releaseV3(s, dir, graft.Tables.fingerprint(s"$dir/documents.parquet")) {
+      TextQueries.releaseDocs(graft.Tables.documents(s, dir)
           .filter(!Takedown.purged(col("doc_id")))
           .select(col("doc_id"), col("lang"), col("text")))
         .localCheckpoint(true)
-      releaseV3Nanos.addAndGet(System.nanoTime() - t0)
-      v3
-    })
-  }
-
-  private[graft] def warmReleaseV3(s: SparkSession, dir: String): Unit = {
-    releaseV3For(s, dir); ()
-  }
+    }
 
   private def q199(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -2325,23 +2241,19 @@ object StreamingQueries {
   /** the three delta artifacts q206 purges, built ONCE per corpus
     * snapshot (batch, the same row-local extractors the q177/q183/
     * q188 streams run — stream ≡ batch is those gates' own theorem)
-    * and memoized on DISK PATH like annIndexDir/chunkIndexDir: a
-    * production deployment purges artifacts that already exist, so
-    * the gate's measured time is the PURGE (tombstone stream +
-    * anti-join compaction + rollups), not three artifact builds.
-    * Build wall-clock reported by Bench as purge_artifacts_sec. */
-  private val purgeArtifactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] val purgeArtifactNanos =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+    * and stored as on-disk paths: a production deployment purges
+    * artifacts that already exist, so the gate's measured time is the
+    * PURGE (tombstone stream + anti-join compaction + rollups), not
+    * three artifact builds. */
+  private[graft] val purgeArtifacts =
+    graft.Artifacts[String]("purge_artifacts")
 
   private[graft] def purgeArtifactDir(s: SparkSession, dir: String)
       : String = {
     import s.implicits._
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val key = s"$dir:${src.lastModified}:${src.length}"
-    graft.Tables.memoFresh(purgeArtifactCache, s"$dir:", key)(_ => {
-      val t0 = System.nanoTime()
+    purgeArtifacts(s, dir,
+        graft.Tables.fingerprint(s"$dir/documents.parquet"),
+        graft.Tables.fingerprint(s"$dir/embeddings.parquet")) {
       val out = graft.Scratch.tempDirDeletedOnExit("graft_purgeart")
       val docs = graft.Tables.documents(s, dir).select($"doc_id", $"text")
       val embs = s.read.parquet(s"$dir/embeddings.parquet")
@@ -2351,14 +2263,8 @@ object StreamingQueries {
         .parquet(s"$out/chunk_postings")
       annIndexDeltasOf(s, dir, embs).write.mode("overwrite")
         .parquet(s"$out/ann_codes")
-      purgeArtifactNanos.addAndGet(System.nanoTime() - t0)
       out
-    })
-  }
-
-  private[graft] def warmPurgeArtifacts(s: SparkSession, dir: String)
-      : Unit = {
-    purgeArtifactDir(s, dir); ()
+    }
   }
 
   /** merge-on-read compaction + per-bucket funnel: `rows` is a delta
@@ -3959,14 +3865,10 @@ object StreamingQueries {
     path: String, nRows: Long, minKey: Option[Long] = None,
     maxKey: Option[Long] = None)
 
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] val manifestBuildNanos =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+  private[graft] val manifest = graft.Artifacts[String]("manifest_build")
 
-  /** build (once per corpus snapshot — Bench-warmed, reported as
-    * manifest_build_sec) the manifest-logged timeline for all three
-    * served artifact families over the interleave feeds: v0 base,
+  /** build (once per corpus snapshot) the manifest-logged timeline for
+    * all three served artifact families over the interleave feeds: v0 base,
     * v1 append A1, v2 takedown D1, v3 append A2, v4 OPTIMIZE,
     * v5 takedown D2. Appends are ingest-screened against the full
     * takedown HISTORY (q199 discipline — the compliance list outlives
@@ -3977,12 +3879,8 @@ object StreamingQueries {
   private[graft] def manifestLogDir(s: SparkSession, dir: String)
       : String = {
     import s.implicits._
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val esrc = new java.io.File(s"$dir/embeddings.parquet")
-    val key = s"$dir:${src.lastModified}:${src.length}:" +
-      s"${esrc.lastModified}:${esrc.length}"
-    graft.Tables.memoFresh(manifestCache, s"$dir:", key)(_ => {
-      val t0 = System.nanoTime()
+    manifest(s, dir, graft.Tables.fingerprint(s"$dir/documents.parquet"),
+        graft.Tables.fingerprint(s"$dir/embeddings.parquet")) {
       val out = graft.Scratch.tempDirDeletedOnExit("graft_manifest")
       val feedScratch =
         java.nio.file.Files.createTempDirectory("graft_manfeed").toString
@@ -4017,14 +3915,8 @@ object StreamingQueries {
           .parquet(s"$out/manifest")
       } finally graft.Scratch.deleteRecursively(
         new java.io.File(feedScratch))
-      manifestBuildNanos.addAndGet(System.nanoTime() - t0)
       out
-    })
-  }
-
-  private[graft] def warmManifestLog(s: SparkSession, dir: String)
-      : Unit = {
-    manifestLogDir(s, dir); ()
+    }
   }
 
   private type ManEntry =
@@ -4729,8 +4621,7 @@ object StreamingQueries {
   // serialized-equivalent event prefix. No vacuum executes here — the
   // storage verbs are q215/q220/q221's gates; q226 gates the PROTOCOL.
 
-  private val occCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val occ = graft.Artifacts[String]("occ")
 
   /** one OCC transaction's bookkeeping row. */
   private[graft] type OccRow = (String, Long, String, String, Long,
@@ -4824,8 +4715,7 @@ object StreamingQueries {
     val mdir = manifestLogDir(s, dir)
     val man = manifestRowsOf(s, mdir)
     val arts = man.map(_.artifact).distinct.sorted
-    val out = graft.Tables.memoFresh(occCache, s"$dir:",
-      s"$dir:$mdir")(_ =>
+    val out = occ(s, dir, mdir)(
       graft.Scratch.tempDirDeletedOnExit("graft_occ"))
     // the per-artifact OCC protocols write disjoint rebase paths and
     // share nothing — overlap the three (guide §2.6), and overlap the
@@ -4959,8 +4849,7 @@ object StreamingQueries {
     substring(md5(concat(lit("upsert:"), c.cast("string"))), 1, 1) ===
       "0"
 
-  private val mergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val mergeExt = graft.Artifacts[String]("merge_ext")
 
   /** apply one COW merge commit for `artifact` at head+1: returns the
     * new manifest entries. `pick` selects the updated keys among the
@@ -5023,13 +4912,9 @@ object StreamingQueries {
     * identical). */
   private[graft] def mergeExtensionDir(s: SparkSession, dir: String)
       : String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val esrc = new java.io.File(s"$dir/embeddings.parquet")
-    val key = s"$dir:${src.lastModified}:${src.length}:" +
-      s"${esrc.lastModified}:${esrc.length}"
-    graft.Tables.memoFresh(mergeCache, s"$dir:", key)(_ => {
+    val mdir = manifestLogDir(s, dir)
+    mergeExt(s, dir, mdir) {
       import s.implicits._
-      val mdir = manifestLogDir(s, dir)
       val man = manifestRowsOf(s, mdir)
       val out = graft.Scratch.tempDirDeletedOnExit("graft_mergeext")
       val arts = man.map(_.artifact).distinct.sorted
@@ -5042,7 +4927,7 @@ object StreamingQueries {
         .repartition(1).write.mode("overwrite")
         .parquet(s"$out/manifest")
       out
-    })
+    }
   }
 
   private def q227(s: SparkSession, dir: String): DataFrame = {
@@ -5194,8 +5079,7 @@ object StreamingQueries {
   // supersede file is version-scoped, which is exactly why MoR
   // updates need sequence numbers where deletes do not.
 
-  private val morCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val morExt = graft.Artifacts[String]("mor_ext")
 
   /** one MoR merge commit: the post-image delta (data) and the
     * supersede key file (file_kind 'morsup') — base files untouched. */
@@ -5236,13 +5120,9 @@ object StreamingQueries {
     * supersede key file (file_kind 'morsup') — base files untouched. */
   private[graft] def morExtensionDir(s: SparkSession, dir: String)
       : String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val esrc = new java.io.File(s"$dir/embeddings.parquet")
-    val key = s"$dir:${src.lastModified}:${src.length}:" +
-      s"${esrc.lastModified}:${esrc.length}"
-    graft.Tables.memoFresh(morCache, s"$dir:", key)(_ => {
+    val mdir = manifestLogDir(s, dir)
+    morExt(s, dir, mdir) {
       import s.implicits._
-      val mdir = manifestLogDir(s, dir)
       val man = manifestRowsOf(s, mdir)
       val out = graft.Scratch.tempDirDeletedOnExit("graft_morext")
       val ext = man.map(_.artifact).distinct.sorted
@@ -5256,7 +5136,7 @@ object StreamingQueries {
         .repartition(1).write.mode("overwrite")
         .parquet(s"$out/manifest")
       out
-    })
+    }
   }
 
   /** the MoR head read: pre-merge visible rows minus the broadcast
@@ -5385,8 +5265,7 @@ object StreamingQueries {
   // COW, amortized across the reads in between: the lifecycle a real
   // Iceberg table runs.
 
-  private val morCompactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val morCompact = graft.Artifacts[String]("mor_compact")
 
   /** compact one artifact's MoR merge: v7 rewrites every pre-merge
     * data file holding a superseded key (rows minus the supersede
@@ -5437,13 +5316,10 @@ object StreamingQueries {
     * extension plus one minor-compaction commit per artifact. */
   private[graft] def morCompactDir(s: SparkSession, dir: String)
       : String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val esrc = new java.io.File(s"$dir/embeddings.parquet")
-    val key = s"$dir:${src.lastModified}:${src.length}:" +
-      s"${esrc.lastModified}:${esrc.length}"
-    graft.Tables.memoFresh(morCompactCache, s"$dir:", key)(_ => {
+    val mor = morExtensionDir(s, dir)
+    morCompact(s, dir, mor) {
       import s.implicits._
-      val morMan = manifestRowsOf(s, morExtensionDir(s, dir))
+      val morMan = manifestRowsOf(s, mor)
       val out = graft.Scratch.tempDirDeletedOnExit("graft_morcmp")
       val ext = morMan.map(_.artifact).distinct.sorted
         .flatMap(a => morCompact(s, morMan, a, out))
@@ -5456,7 +5332,7 @@ object StreamingQueries {
         .repartition(1).write.mode("overwrite")
         .parquet(s"$out/manifest")
       out
-    })
+    }
   }
 
   private def q236(s: SparkSession, dir: String): DataFrame = {
@@ -5855,10 +5731,9 @@ object StreamingQueries {
   // mirrors the same shape: FULL OUTER membership join + one grouped
   // CASE aggregation over the cell table.
 
-  private val txnLogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val txnCellCache = new java.util.concurrent
-    .ConcurrentHashMap[String, Map[(Long, Long), (Long, Long)]]()
+  private val txnLog = graft.Artifacts[String]("txn_log")
+  private val txnCell =
+    graft.Artifacts[Map[(Long, Long), (Long, Long)]]("txn_cells")
 
   /** seal the cross-artifact txn log as a real parquet artifact: one
     * row per (txn, member artifact, version); member_seal = the
@@ -5866,7 +5741,7 @@ object StreamingQueries {
     * step the txn row itself became visible (the LAST member's). */
   private def txnLogDir(s: SparkSession, dir: String, mdir: String)
       : String =
-    graft.Tables.memoFresh(txnLogCache, s"$dir:", s"$dir:$mdir")(_ => {
+    txnLog(s, dir, mdir) {
       import s.implicits._
       val out = graft.Scratch.tempDirDeletedOnExit("graft_txnlog")
       (0L to 5L).flatMap(t => Seq(
@@ -5877,12 +5752,12 @@ object StreamingQueries {
         .toDF("txn", "artifact", "version", "member_seal", "seal_seq")
         .repartition(1).write.mode("overwrite").parquet(s"$out/txns")
       out
-    })
+    }
 
   /** every tear cell in one aggregation pass (see q231 header). */
   private def txnCells(s: SparkSession, dir: String, mdir: String,
       man: Seq[ManRow]): Map[(Long, Long), (Long, Long)] =
-    graft.Tables.memoFresh(txnCellCache, s"$dir:", s"$dir:$mdir")(_ => {
+    txnCell(s, dir, mdir) {
       import s.implicits._
       val tagged = (for {
         (a, t) <- Seq("doc_postings" -> "d", "chunk_postings" -> "c")
@@ -5906,7 +5781,7 @@ object StreamingQueries {
         else r.getLong(r.fieldIndex(n))
       pairs.map { case (vd, vc) => (vd, vc) ->
         ((cellOf(s"tdo_${vd}_$vc"), cellOf(s"tco_${vd}_$vc"))) }.toMap
-    })
+    }
 
   private def q231(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -6095,8 +5970,7 @@ object StreamingQueries {
   // PHYSICAL (rows copied verbatim, outstanding merge-on-read
   // tombstones still apply at read), so snapshot identity is exact.
 
-  private val packCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val packExt = graft.Artifacts[String]("pack_ext")
   /** fresh-key offset for the planted shard waves: far beyond any
     * corpus key, so the ingest screen has nothing to drop and no
     * tombstone can hit them. */
@@ -6168,13 +6042,9 @@ object StreamingQueries {
     * the pack commit (v8) in a separate manifest dir. */
   private[graft] def packExtensionDir(s: SparkSession, dir: String)
       : String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val esrc = new java.io.File(s"$dir/embeddings.parquet")
-    val key = s"$dir:${src.lastModified}:${src.length}:" +
-      s"${esrc.lastModified}:${esrc.length}"
-    graft.Tables.memoFresh(packCache, s"$dir:", key)(_ => {
+    val mdir = manifestLogDir(s, dir)
+    packExt(s, dir, mdir) {
       import s.implicits._
-      val mdir = manifestLogDir(s, dir)
       val man = manifestRowsOf(s, mdir)
       val out = graft.Scratch.tempDirDeletedOnExit("graft_packext")
       val arts = man.map(_.artifact).distinct.sorted
@@ -6189,7 +6059,7 @@ object StreamingQueries {
         .repartition(1).write.mode("overwrite")
         .parquet(s"$out/manifest")
       out
-    })
+    }
   }
 
   private def q233(s: SparkSession, dir: String): DataFrame = {
@@ -6300,10 +6170,7 @@ object StreamingQueries {
   // the nondeterministic listing order), and the oracle derives the
   // commit count from the nonempty-shard count of the same hash.
 
-  private val streamIngestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] val streamIngestNanos =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+  private val streamIngest = graft.Artifacts[String]("stream_ingest")
 
   private def shardHex(c: Column): Column =
     substring(md5(concat(lit("shard:"), c.cast("string"))), 1, 1)
@@ -6312,12 +6179,10 @@ object StreamingQueries {
     * write, AvailableNow drain with per-shard commits, pack commit,
     * manifest + batch log parquet under the returned dir. */
   private[graft] def streamIngestLogDir(s: SparkSession, dir: String)
-      : String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val key = s"$dir:${src.lastModified}:${src.length}"
-    graft.Tables.memoFresh(streamIngestCache, s"$dir:", key)(_ => {
+      : String =
+    streamIngest(s, dir,
+        graft.Tables.fingerprint(s"$dir/documents.parquet")) {
       import s.implicits._
-      val t0 = System.nanoTime()
       val out = graft.Scratch.tempDirDeletedOnExit("graft_sing")
       val (dpAll, _, _) = purgeArtifactRows(s, dir)
       val rows = dpAll.select($"doc_id".cast("long").as("key"),
@@ -6390,10 +6255,8 @@ object StreamingQueries {
         .parquet(s"$out/manifest")
       batchLog.toSeq.toDF("batch", "shard").repartition(1)
         .write.mode("overwrite").parquet(s"$out/batchlog")
-      streamIngestNanos.addAndGet(System.nanoTime() - t0)
       out
-    })
-  }
+    }
 
   private def q234(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -6461,24 +6324,16 @@ object StreamingQueries {
     .StructType.fromDDL("artifact STRING, version BIGINT, k STRING, " +
       "c1 BIGINT, c2 BIGINT, sgn BIGINT")
 
-  private val cdcFeedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] val cdcFeedBuildNanos =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+  private[graft] val cdcFeed = graft.Artifacts[String]("cdc_feed")
 
-  /** materialize the CDC feed (once per corpus snapshot — Bench-
-    * warmed): one signed delta file per (artifact, commit), derived
+  /** materialize the CDC feed (once per corpus snapshot): one signed
+    * delta file per (artifact, commit), derived
     * from the manifest log via the SAME cdcDeltasAt spelling q222/q223
     * use. One file per commit is the production shape: a bus partition
     * per table, one message batch per transaction. */
   private[graft] def cdcFeedDir(s: SparkSession, dir: String): String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val esrc = new java.io.File(s"$dir/embeddings.parquet")
-    val key = s"$dir:${src.lastModified}:${src.length}:" +
-      s"${esrc.lastModified}:${esrc.length}"
-    graft.Tables.memoFresh(cdcFeedCache, s"$dir:", key)(_ => {
-      val t0 = System.nanoTime()
-      val mdir = manifestLogDir(s, dir)
+    val mdir = manifestLogDir(s, dir)
+    cdcFeed(s, dir, mdir) {
       val man = manifestRowsOf(s, mdir)
       val out = graft.Scratch.tempDirDeletedOnExit("graft_cdcfeed")
       val arts = man.map(_.artifact).distinct.sorted
@@ -6501,13 +6356,8 @@ object StreamingQueries {
               .parquet(s"$out/${a}_v$v"))
         }
       }
-      cdcFeedBuildNanos.addAndGet(System.nanoTime() - t0)
       out
-    })
-  }
-
-  private[graft] def warmCdcFeed(s: SparkSession, dir: String): Unit = {
-    cdcFeedDir(s, dir); ()
+    }
   }
 
   /** the consumer's sink: the feed drained by a throttled AvailableNow

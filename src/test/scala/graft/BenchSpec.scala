@@ -3,7 +3,8 @@ package graft
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The Bench sweep's failure accounting and parMap's stop path. */
+/** The Bench sweep's failure accounting and JSON fields, and parMap's
+  * stop path. */
 class BenchSpec extends SparkSpec {
 
   test("a query that throws is listed as failed, not timed") {
@@ -14,6 +15,20 @@ class BenchSpec extends SparkSpec {
       Seq("q01_ok" -> ok, "q02_bad" -> bad), reps = 2)
     assert(failed == Seq("q02_bad"))
     assert(timed.map(_._1) == Seq("q01_ok"))
+  }
+
+  test("the JSON keeps every existing *_sec field and adds only the new ones") {
+    val existing = Seq("fixture", "ann_index", "retrain_index",
+      "chunk_index", "doc_index", "release_build", "release_v2",
+      "release_v3", "purge_artifacts", "manifest_build", "cdc_feed",
+      "purged_doc_index", "purged_chunk_index")
+    val added = Seq("bench_blob", "merge_ext", "mor_ext", "mor_compact",
+      "untimed_total")
+    val fields = Bench.untimedFields(sf, 1.5)
+    val names = "\"([a-z0-9_]+)\":".r.findAllMatchIn(fields)
+      .map(_.group(1)).toSeq
+    assert(names.sorted == (existing ++ added).map(_ + "_sec").sorted, fields)
+    assert(fields.endsWith("\"untimed_total_sec\":1.50"), fields)
   }
 
   test("parMap runs each sibling's Spark jobs in its own job group") {

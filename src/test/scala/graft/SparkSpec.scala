@@ -3,19 +3,25 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared SparkSession for all suites (one JVM-wide session). */
+/** Shared SparkSession for all suites (one JVM-wide session). A suite
+  * that stops it (ArtifactsSpec's session turnover) leaves the next
+  * caller a new one with the same settings. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Scratch.tempDirDeletedOnExit("graft_wh"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  private var current: SparkSession = _
+
+  def spark: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped) {
+      current = SparkSession.builder()
+        .master("local[4]")
+        .appName("graft-test")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.warehouse.dir", Scratch.tempDirDeletedOnExit("graft_wh"))
+        .getOrCreate()
+      current.sparkContext.setLogLevel("WARN")
+    }
+    current
   }
 }
 
