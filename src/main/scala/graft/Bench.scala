@@ -17,40 +17,23 @@ object Bench {
       .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // warmup: exercise parquet scan, shuffle, window, HOF and codegen
-    // paths once so the first measured query doesn't absorb JIT cost
+    // warm-up, untimed: EVERY registered query once at sf0.001 under
+    // the noop action the measurement uses. It warms class loading
+    // (Spark ML's too), the JIT and each family's driver-side paths.
+    // It does NOT take first-plan codegen out of the timed sweep: at
+    // the default 100-entry codegen cache it compiled 10,697 classes
+    // and the timed pass after it 10,784 (sf0.01, 4 cores), and sf0.001
+    // plans generate other classes than the measured SF's. The sweep
+    // pays codegen; the JSON's per-query `codegen` field shows how
+    // much. Each query is guarded on its own, against NON-fatal
+    // failures only: an OOM or an interrupt must not leave a degraded
+    // JVM going on to measure.
     var untimedSec = 0.0
     try {
-      SparkEntry.entry(spark).count()
-      graft.Tables.lineitem(spark, sfDir)
-        .groupBy("l_returnflag").count().count()
-      // Spark ML first-use is dominated by one-time class loading +
-      // JIT (LBFGS, vector UDTs, prediction codegen) — ~8 s of q76's
-      // cold time on this host. Absorb it with throwaway 8-row fits.
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.ml.functions.array_to_vector
-      val tiny = spark.range(8).select(
-        (col("id") % 2).cast("int").as("label"),
-        array_to_vector(array(rand(1), rand(2))).as("features"))
-      new org.apache.spark.ml.classification.LogisticRegression()
-        .setMaxIter(2).fit(tiny).transform(tiny).count()
-      new org.apache.spark.ml.classification.MultilayerPerceptronClassifier()
-        .setLayers(Array(2, 3, 2)).setMaxIter(2).setSeed(1L)
-        .fit(tiny).transform(tiny).count()
-      // EVERY registered plan family once at sf0.001, under the same
-      // noop action the measurement uses: the sweep times steady-state
-      // plan cost at the measured SF, not first-plan Janino codegen
-      // (q89 ~8 s, q160 ~13 s, q217 ~124 s at sf3; the r17 baseline
-      // carried ~97 s of one-time first-plan cost across the sweep).
-      // Data work stays at sf0.001 (three decades below the measured
-      // SF). Each family is guarded individually so one failure costs
-      // only its own family's warmth — but only NON-fatal failures:
-      // swallowing an OOM/InterruptedException here would leave a
-      // degraded JVM proceeding silently to measurement.
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         try fn(spark, "/root/testdata/sf0.001")
           .write.mode("overwrite").format("noop").save()
-        catch { case scala.util.control.NonFatal(t) =>
+        catch { case NonFatal(t) =>
           System.err.println(s"[bench] warm-all: $name failed " +
             s"(${t.getClass.getName}) — its family stays cold")
         }
@@ -71,10 +54,9 @@ object Bench {
       // chance to fully drain.
       System.gc(); Thread.sleep(2000)
       System.gc(); Thread.sleep(1000)
-    } catch { case t: Throwable =>
-      // a silent warmup failure would put ~8 s of one-time JIT back
-      // into the first measured entries with no signal — make
-      // anomalous bench rounds attributable (stderr, outside the
+    } catch { case NonFatal(t) =>
+      // a silent warm-up failure would put one-time JIT back into the
+      // first measured entries with no signal (stderr, outside the
       // parsed JSON tail)
       System.err.println("[bench] WARMUP FAILED — cold-codegen timings " +
         s"likely: ${t.getClass.getName}: ${t.getMessage}")
@@ -97,32 +79,10 @@ object Bench {
         .filter { case (n, _) =>
           only.forall(_.exists(o => n == o || n.startsWith(o + "_"))) },
       reps)
-    // The driver stores and parses only the LAST 2000 chars of this
-    // process's output; with 120+ full query names the JSON line was
-    // ~4.5k chars and its head was always truncated (BENCH_r01..r08
-    // all have parsed:null). Emit short ids ("q01" for
-    // "q01_pricing_summary") and 2-decimal seconds so the whole line
-    // fits the tail window with room for sbt's trailing status line.
-    def shortId(name: String): String = name.takeWhile(_ != '_')
-    // short ids must stay unique — a collision would silently
-    // overwrite a timing at JSON-parse time
-    val ids = (results.map(_._1) ++ failed).map(shortId)
-    require(ids.distinct.size == ids.size,
-      s"duplicate bench short ids: ${ids.diff(ids.distinct).distinct.mkString(",")}")
-    val qs = results.map { case (k, (v, _)) => s"\"" + shortId(k) + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    // cold (first-rep) per-query times, only meaningful when reps>=2;
-    // kept in the persisted artifact so min-of-N rounds stay
-    // comparable to one-cold-pass rounds (ADVICE r14)
-    val coldQs =
-      if (reps <= 1) ""
-      else results.map { case (k, (_, c)) => s"\"" + shortId(k) + "\":" + fmt(c) }
-        .mkString(""","cold":{""", ",", "}")
-    val total = results.map(_._2._1).sum
-    val failedIds = failed.map(n => "\"" + shortId(n) + "\"")
-      .mkString("[", ",", "]")
-    val line =
-      s"""{"metric":"total_detail","value":${fmt(total)},"unit":"sec","reps":$reps,"queries":$qs$coldQs,"failed":$failedIds,${untimedFields(sfDir, untimedSec)},"sf":"$sfDir"}"""
+    val total = results.map(_._2.min).sum
+    val failedIds = idList(failed)
+    val line = detailLine(results, failed, reps,
+      untimedFields(sfDir, untimedSec), sfDir)
     val compact =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"n_queries":${results.size},"failed":$failedIds,"queries_file":"tmp/bench_self.json","sf":"$sfDir"}"""
     // compact line FIRST as well as last: whatever window a consumer
@@ -142,22 +102,41 @@ object Bench {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get("tmp"))
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("tmp/bench_self.json"), line + "\n")
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     spark.stop()
-    // The driver parses only the last ~2000 chars of stdout, and the
-    // FULL line (200+ queries × ~14 chars) always overflows that
-    // window, so its head — "metric" and the total — is cut
-    // (BENCH_r01..r13 all parsed:null). The full line above is
-    // printed ONCE tagged "total_detail" (plus tmp/bench_self.json);
-    // the true last stdout act is this COMPACT line — short enough to
-    // survive any tail window, carrying the total + where the
-    // per-query numbers live. A same-payload copy opened the
-    // post-measurement output tagged "total_head" (ADVICE r15) — a
-    // consumer reading the head window still finds the numbers, while
-    // one summing "metric":"total" lines over the whole stdout counts
-    // exactly this one.
+    // the last stdout line is the compact one: the full line overflows
+    // the ~2000-char tail a consumer parses (BENCH_r01..r13 all
+    // parsed:null), and this one says where the per-query numbers live
     println(compact)
   }
+
+  /** The full JSON line: per query (by short id, "q01" for
+    * "q01_pricing_summary", to keep the line short) its min seconds,
+    * its first rep's when reps ≥ 2 (`cold`), and the generated classes
+    * compiled in its first rep (`codegen`); then the failed queries and
+    * the untimed build fields. */
+  private[graft] def detailLine(results: Seq[(String, Timing)],
+      failed: Seq[String], reps: Int, untimed: String,
+      sfDir: String): String = {
+    // short ids must stay unique — a collision would silently
+    // overwrite a timing at JSON-parse time
+    val ids = (results.map(_._1) ++ failed).map(shortId)
+    require(ids.distinct.size == ids.size,
+      s"duplicate bench short ids: ${ids.diff(ids.distinct).distinct.mkString(",")}")
+    def perQuery(v: Timing => String): String = results
+      .map { case (k, t) => "\"" + shortId(k) + "\":" + v(t) }
+      .mkString("{", ",", "}")
+    // cold (first-rep) per-query times, only meaningful when reps>=2;
+    // kept in the persisted artifact so min-of-N rounds stay
+    // comparable to one-cold-pass rounds (ADVICE r14)
+    val coldQs = if (reps <= 1) "" else s""","cold":${perQuery(t => fmt(t.first))}"""
+    s"""{"metric":"total_detail","value":${fmt(results.map(_._2.min).sum)},"unit":"sec","reps":$reps,"queries":${perQuery(t => fmt(t.min))}$coldQs,"codegen":${perQuery(_.codegen.toString)},"failed":${idList(failed)},$untimed,"sf":"$sfDir"}"""
+  }
+
+  private def shortId(name: String): String = name.takeWhile(_ != '_')
+
+  private def idList(names: Seq[String]): String =
+    names.map("\"" + shortId(_) + "\"").mkString("[", ",", "]")
 
   /** one `<name>_sec` JSON field per warmed artifact: its build seconds
     * for `dir`, plus `untimed_total_sec`, the wall time of all of them,
@@ -170,14 +149,17 @@ object Bench {
   private def fmt(v: Double): String = BigDecimal(v)
     .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
 
-  /** Time each query `reps` times with the noop sink; a query is
-    * (name, (min, first-rep)) seconds. A query that throws in any rep
-    * is reported by name in the second list, with its exception on
-    * stderr, and has no time: timing a failure as a fast run would
-    * hide it in the total. */
+  /** A query's timed reps: the fastest rep's seconds, the first rep's,
+    * and the generated classes compiled during the first rep. */
+  private[graft] case class Timing(min: Double, first: Double, codegen: Long)
+
+  /** Time each query `reps` times with the noop sink. A query that
+    * throws in any rep is reported by name in the second list, with its
+    * exception on stderr, and has no time: timing a failure as a fast
+    * run would hide it in the total. */
   private[graft] def timeQueries(spark: SparkSession, sfDir: String,
       queries: Seq[(String, (SparkSession, String) => DataFrame)],
-      reps: Int): (Seq[(String, (Double, Double))], Seq[String]) = {
+      reps: Int): (Seq[(String, Timing)], Seq[String]) = {
     var sinceGc = 0
     val timed = queries.map { case (name, fn) =>
       // in-sweep cleaner drain (guide §5, r18): each query drops its
@@ -190,7 +172,11 @@ object Bench {
       // a predecessor's debt. Not counted in any per-query time.
       sinceGc += 1
       if (sinceGc >= 8) { sinceGc = 0; System.gc() }
-      val times = (1 to reps).map { _ =>
+      val compiles = org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME
+      val c0 = compiles.getCount
+      var firstCompiles = 0L
+      val times = (1 to reps).map { rep =>
         val t0 = System.nanoTime()
         // noop sink, not count(): count() lets Catalyst PRUNE every
         // aggregate/projection column the row count doesn't need, so
@@ -199,7 +185,9 @@ object Bench {
         // column and discards the rows — the honest throughput action.
         try {
           fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          Some((System.nanoTime() - t0) / 1e9)
+          val sec = (System.nanoTime() - t0) / 1e9
+          if (rep == 1) firstCompiles = compiles.getCount - c0
+          Some(sec)
         } catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name FAILED: $e")
           e.printStackTrace()
@@ -211,7 +199,8 @@ object Bench {
       // kept alongside so cross-round comparisons against reps=1
       // sweeps can normalize (ADVICE r14)
       name -> (if (times.forall(_.isDefined))
-        Some((times.flatten.min, times.head.get)) else None)
+        Some(Timing(times.flatten.min, times.head.get, firstCompiles))
+        else None)
     }
     (timed.collect { case (n, Some(t)) => n -> t },
       timed.collect { case (n, None) => n })

@@ -120,7 +120,7 @@ object Scratch {
     try {
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus): Unit
-    } catch { case t: Throwable =>
+    } catch { case scala.util.control.NonFatal(t) =>
       // warn ONCE when the reflective path breaks (ADVICE r16): a
       // Spark upgrade renaming listenerBus/waitUntilEmpty would
       // otherwise silently revert to the nondeterministic settle the

@@ -5,9 +5,10 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal,
   Round, UnsafeArrayData, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DoubleType, FloatType, StructType}
 
 /** The iterative-training pattern shared by the oracle-grade ML
   * dataflows (q98 Lloyd KMeans, q100/q106 GD logistic, q101
@@ -31,6 +32,9 @@ import org.apache.spark.sql.types.StructType
   * epoch's aggregation and localCheckpointed after it (four jobs an
   * epoch); q98, q101 and q160 still use it and are the next users of
   * the one-job form.
+  *
+  * `Metrics.rocAuc` is the second user of the partition-ordered
+  * driver merge: per-group rank partials, keyed through `TaskKeys`.
   *
   * Either way the loop survives 100 TB: per-epoch work is one scan of
   * the data plus O(keys × dim) of state, and the data is only ever
@@ -109,15 +113,27 @@ object IterativeState {
     out
   }
 
+  /** A task's grouping key, the leading `keySchema` columns of a row:
+    * `project` gives it as a reused UnsafeRow, equal as Spark groups
+    * (−0.0 is 0.0, NaNs are one); `toRow` the Row the driver merges on. */
+  private[ops] final class TaskKeys(keySchema: StructType) {
+    val project: UnsafeProjection = UnsafeProjection.create(
+      keySchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        val k = BoundReference(i, f.dataType, f.nullable)
+        if (f.dataType == FloatType || f.dataType == DoubleType)
+          NormalizeNaNAndZero(k) else k })
+    private val toScala =
+      CatalystTypeConverters.createToScalaConverter(keySchema)
+    def toRow(k: InternalRow): Row = toScala(k).asInstanceOf[Row]
+  }
+
   /** one task's share of an epoch: (key, Σ err·x_i, n) per key seen in
     * the partition, in row order. Rows are (keys…, x, y). */
   private def partialGradients(w: Map[Row, Array[Double]],
       keySchema: StructType)(it: Iterator[InternalRow])
       : Array[(Row, Array[Double], Long)] = {
     val nk = keySchema.size
-    val keyOf = UnsafeProjection.create(keySchema.fields.toSeq.zipWithIndex
-      .map { case (f, i) => BoundReference(i, f.dataType, f.nullable) })
-    val toRow = CatalystTypeConverters.createToScalaConverter(keySchema)
+    val keys = new TaskKeys(keySchema)
     final class Acc(val key: Row, wv: Array[Double]) {
       val wd: ArrayData = UnsafeArrayData.fromPrimitiveArray(wv)
       val g = new Array[Double](wv.length)
@@ -126,10 +142,10 @@ object IterativeState {
     val accs = new java.util.HashMap[UnsafeRow, Option[Acc]]()
     it.foreach { r =>
       if (!r.isNullAt(nk) && !r.isNullAt(nk + 1)) {
-        val k = keyOf(r)
+        val k = keys.project(r)
         var a = accs.get(k)
         if (a == null) {
-          val key = toRow(k).asInstanceOf[Row]
+          val key = keys.toRow(k)
           a = w.get(key).map(new Acc(key, _))
           accs.put(k.copy(), a)
         }

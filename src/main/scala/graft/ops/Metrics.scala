@@ -1,104 +1,132 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
-/** Evaluation metrics as single-pass distributed aggregations
-  * (SURVEY.md §2.5 A9-A11, §2.9).
+/** Evaluation metrics (SURVEY.md §2.5 A9-A11, §2.9).
   *
-  * ROC-AUC uses the rank-sum (Mann-Whitney U) identity so it is both
+  * ROC-AUC uses the rank-sum (Mann-Whitney U) identity, so it is
   * oracle-checkable in ANSI SQL and computable without collecting scores:
   *   AUC = (Σ_{i: y=1} rank(s_i) − n⁺(n⁺+1)/2) / (n⁺ · n⁻)
-  * with average ranks for ties. Scale note: ranks are computed on the
-  * DISTINCT-score table (usually ≪ rows), and the UNGROUPED path
-  * computes them with a two-phase bucketed cumsum (uniform score
-  * buckets → per-bucket totals → exclusive bucket offsets via a tiny
-  * triangular join, broadcast back → within-bucket window) — NO
-  * unpartitioned window anywhere (PlanShapeSpec locks this), so a
-  * global AUC over a high-cardinality score column never serializes
-  * onto one task. The decomposition is the q131 prefix-sum trick
-  * applied to ranks: bucket offsets are exact integer sums, so the
-  * ranks — and the gated q60/q62 hashes — are bit-identical to the
-  * one-window form.
+  * with average ranks for ties. Scale: one range exchange on
+  * (groups…, s), then Spark's spillable sort within each partition. A
+  * tie group (one (groups…, s) key) lands in one partition, but a group
+  * may span many, so no task holds a whole group (the window form this
+  * replaced put each group in one task). One job folds each sorted
+  * partition into per-group partials; the driver merges them in
+  * partition-index order, IterativeState's rule: O(groups) partials
+  * ride the driver, rows never do. Every count and rank-sum is an
+  * integer or half-integer below 2^53, so the sums are exact, layout-
+  * independent and bit-identical to the oracle's window form.
   */
 object Metrics {
 
-  /** buckets of the ungrouped two-phase rank — offsets table is 1024
-    * rows (broadcast), per-bucket sort is |distinct scores|/~1024. */
-  private val RankBuckets = 1024
-
-  /** ROC-AUC of `score` against binary `label` (0/1), optionally grouped
-    * by `groupCols`. Returns groupCols + (auc, n_pos, n_neg). */
+  /** ROC-AUC of `score` against binary `label` (0/1; a null label
+    * counts as negative), optionally grouped by `groupCols`. Returns
+    * groupCols + (auc, n_pos, n_neg) as a local frame: the Spark jobs
+    * run when this is called. `auc` is null unless the group has both
+    * classes. An empty input gives one all-null row ungrouped, and no
+    * rows grouped. */
   def rocAuc(df: DataFrame, score: Column, label: Column,
              groupCols: Seq[Column] = Seq.empty): DataFrame = {
-    val base = df.select((groupCols :+ score.as("s") :+
+    val sorted = rankInput(df, score, label, groupCols)
+    val keySchema = StructType(sorted.schema.dropRight(2))
+    val parts = df.sparkSession.sparkContext.runJob(
+      sorted.queryExecution.toRdd, rankPartials(keySchema) _)
+    // a group's rows in earlier partitions all rank below this one's
+    val totals = new java.util.LinkedHashMap[Row, RankPartial]()
+    for (p <- parts; (k, q) <- p)
+      totals.merge(k, q, (a, b) => RankPartial(a.rows + b.rows,
+        a.pos + b.pos, a.rankSum + b.rankSum + b.pos * a.rows))
+    val rows = totals.asScala.toSeq.map { case (k, t) =>
+      val neg = t.rows - t.pos
+      val auc = if (t.pos > 0 && neg > 0)
+        (t.rankSum - t.pos * (t.pos + 1) / 2.0) / (t.pos * neg) else null
+      Row.fromSeq(k.toSeq ++ Seq(auc, t.pos.toLong, neg.toLong))
+    }
+    val out = df.sparkSession.createDataFrame(
+      (if (rows.isEmpty && keySchema.isEmpty) Seq(Row(null, null, null))
+       else rows).asJava,
+      keySchema.add("auc", DoubleType).add("n_pos", LongType)
+        .add("n_neg", LongType))
+    // one partition: a caller's sort of a multi-row local frame would
+    // otherwise range-partition it (a sample, a shuffle and a result
+    // job for a few rows); a one-row frame sorts without an exchange
+    if (rows.size > 1) out.coalesce(1) else out
+  }
+
+  /** The rows rocAuc folds: (groups…, s, y) with s and y as doubles,
+    * range-partitioned on (groups…, s) and sorted within partitions. */
+  private[graft] def rankInput(df: DataFrame, score: Column, label: Column,
+      groupCols: Seq[Column]): DataFrame = {
+    val base = df.select((groupCols :+ score.cast("double").as("s") :+
       label.cast("double").as("y")): _*)
-    val gNames = base.columns.dropRight(2).toIndexedSeq
-    val gCols = gNames.map(col)
-    // per distinct score: row count and positive count
-    val grouped = base.groupBy((gCols :+ col("s")): _*)
-      .agg(count(lit(1)).as("c"), sum(col("y")).as("pos_c"))
-    val withCum =
-      if (gNames.nonEmpty) {
-        val w = Window.partitionBy(gCols: _*)
-          .orderBy(col("s")).rowsBetween(Window.unboundedPreceding, -1)
-        grouped.withColumn("cum_before",
-          coalesce(sum(col("c")).over(w), lit(0L)))
-      } else {
-        // ungrouped: bucket distinct scores into uniform [lo, hi]
-        // ranges (width_bucket is monotone, and a tie group — one
-        // distinct s — can never straddle buckets), so the global
-        // cumsum decomposes into broadcast bucket offsets + a
-        // PARTITIONED within-bucket window
-        // bounds over REAL scores only: max() returns NaN when any is
-        // present (NaN sorts above all doubles), and a NaN hi would
-        // null every width_bucket below
-        val mm = grouped.filter(!col("s").cast("double").isNaN)
-          .agg(min(col("s")).as("lo"), max(col("s")).as("hi"))
-        val withB = grouped.crossJoin(broadcast(mm))
-          .withColumn("b",
-            when(col("s").isNull, lit(0L)) // nulls sort first
-              // NaN sorts after every double in Spark ordering — pin
-              // it past the last real bucket, never a null bucket
-              // (which would silently DROP the row at the offsets join)
-              .when(col("s").cast("double").isNaN,
-                lit((RankBuckets + 2).toLong))
-              .when(col("lo") < col("hi"), expr(
-                s"width_bucket(CAST(s AS DOUBLE), CAST(lo AS DOUBLE), " +
-                  s"CAST(hi AS DOUBLE), $RankBuckets)"))
-              .otherwise(lit(1L)))
-          .drop("lo", "hi")
-        // exclusive prefix offsets over ≤ RankBuckets+2 bucket totals:
-        // a triangular self-join, not a window — nothing in this plan
-        // runs unpartitioned
-        val bTotals = withB.groupBy(col("b")).agg(sum(col("c")).as("bc"))
-        val bOffs = bTotals.as("x")
-          .join(bTotals.as("y"), col("y.b") < col("x.b"), "left")
-          .groupBy(col("x.b"))
-          .agg(coalesce(sum(col("y.bc")), lit(0L)).as("b_off"))
-        val wb = Window.partitionBy(col("b")).orderBy(col("s"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        withB.join(broadcast(bOffs), "b")
-          .withColumn("cum_before",
-            col("b_off") + coalesce(sum(col("c")).over(wb), lit(0L)))
+    base.orderBy(base.columns.dropRight(1).toIndexedSeq.map(col): _*)
+  }
+
+  /** The same rank-sum in DuckDB SQL, the oracles' spelling: CTEs over
+    * `src`(groups…, `score`, y) ending in t`sfx`(groups…, rank_sum, np,
+    * nn), with AUC = (rank_sum − np(np+1)/2) / (np·nn). `sfx` suffixes
+    * the CTE names so the block can appear twice in one WITH. */
+  def rankSumSql(src: String, groups: Seq[String], score: String = "score",
+      sfx: String = ""): String = {
+    val g = groups.map(_ + ", ").mkString
+    val (part, by) = if (groups.isEmpty) ("", "") else
+      (groups.mkString("PARTITION BY ", ", ", " "),
+        groups.mkString(" GROUP BY ", ", ", ""))
+    s"""g$sfx AS (SELECT $g$score, count(*) AS c, sum(y) AS pos_c
+       |      FROM $src GROUP BY $g$score),
+       |r$sfx AS (SELECT *, coalesce(sum(c) OVER (${part}ORDER BY $score
+       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |        AS cum_before FROM g$sfx),
+       |t$sfx AS (SELECT ${g}sum(pos_c * (cum_before + (c + 1) / 2.0))
+       |        AS rank_sum, sum(pos_c) AS np, sum(c - pos_c) AS nn
+       |      FROM r$sfx$by)""".stripMargin
+  }
+
+  /** a group's rows, positives (Σ y) and Σ y × average rank. */
+  private case class RankPartial(rows: Long, pos: Double, rankSum: Double)
+
+  /** one task's partials, one per group key in sort order, with ranks
+    * counted from this partition's first row of the group. */
+  private def rankPartials(keySchema: StructType)(it: Iterator[InternalRow])
+      : Array[(Row, RankPartial)] = {
+    val groups = new IterativeState.TaskKeys(keySchema)
+    // a tie is one (groups…, s) key, equal as the sort orders it
+    val ties = new IterativeState.TaskKeys(keySchema.add("s", DoubleType))
+    val y = keySchema.size + 1
+    val out = Array.newBuilder[(Row, RankPartial)]
+    var key, tie: UnsafeRow = null
+    var rows, tieRows = 0L
+    var pos, rankSum, tiePos = 0.0
+    def closeTie(): Unit = {
+      // average rank of the tie group = rows before + (size + 1) / 2
+      rankSum += tiePos * (rows + (tieRows + 1) / 2.0)
+      rows += tieRows; pos += tiePos
+      tieRows = 0L; tiePos = 0.0
+    }
+    def closeGroup(): Unit = if (key != null) {
+      out += groups.toRow(key) -> RankPartial(rows, pos, rankSum)
+      rows = 0L; pos = 0.0; rankSum = 0.0
+    }
+    it.foreach { r =>
+      val t = ties.project(r)
+      if (tie == null || t != tie) {
+        closeTie()
+        tie = t.copy()
+        val k = groups.project(r)
+        if (key == null || k != key) { closeGroup(); key = k.copy() }
       }
-    val ranked = withCum
-      // average rank of the tie group = rows before + (size+1)/2
-      .withColumn("avg_rank", col("cum_before") + (col("c") + 1) / 2.0)
-    val aggCols = Seq(
-      sum(col("pos_c") * col("avg_rank")).as("rank_sum"),
-      sum(col("pos_c")).as("n_pos_d"),
-      sum(col("c") - col("pos_c")).as("n_neg_d"))
-    val totals =
-      if (gNames.isEmpty) ranked.agg(aggCols.head, aggCols.tail: _*)
-      else ranked.groupBy(gCols: _*).agg(aggCols.head, aggCols.tail: _*)
-    totals.select((gCols ++ Seq(
-      when(col("n_pos_d") > 0 && col("n_neg_d") > 0,
-        (col("rank_sum") - col("n_pos_d") * (col("n_pos_d") + 1) / 2.0)
-          / (col("n_pos_d") * col("n_neg_d"))).as("auc"),
-      col("n_pos_d").cast("long").as("n_pos"),
-      col("n_neg_d").cast("long").as("n_neg"))): _*)
+      tieRows += 1
+      if (!r.isNullAt(y)) tiePos += r.getDouble(y)
+    }
+    closeTie()
+    closeGroup()
+    out.result()
   }
 
   /** A9: plain accuracy plus the row count, from ONE aggregation —
@@ -111,7 +139,6 @@ object Metrics {
     * one confusion-count aggregation, then pure column arithmetic. */
   def classificationReport(df: DataFrame, pred: Column, label: Column): DataFrame = {
     val conf = df.select(label.cast("long").as("y"), pred.cast("long").as("p"))
-    val tp = sum(when(col("y") === col("p"), 1L).otherwise(0L))
     val byClass = conf.groupBy(col("y").as("cls"))
       .agg(count(lit(1)).as("support"),
         sum(when(col("p") === col("y"), 1L).otherwise(0L)).as("tp"))

@@ -287,8 +287,8 @@ object CpcQueries {
     // scheduler on a shared host (r02: 32.8 s) for zero data
     // parallelism, since each iteration is a one-task job. Scoring and
     // AUC are NOT per-cell collects: all nine scored frames union into
-    // ONE grouped rank-sum AUC job (Metrics.rocAuc groupCols), so the
-    // query stays a single declarative result regardless of grid size.
+    // ONE grouped rank-sum AUC (Metrics.rocAuc groupCols), whose jobs
+    // do not multiply with the grid size.
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)

@@ -16,16 +16,16 @@ import graft.ops.{IterativeState, Metrics}
   * SQL-expressible, so they carry no oracle (rows-only check per the
   * driver contract) and their correctness rides on ScalaTest specs.
   *
-  * Scale notes: rank-sum AUC aggregates on the distinct-score table
-  * (Metrics.rocAuc); Spark ML LR/KMeans/PCA are the distributed
-  * implementations (tree-aggregated gradients / Gramian), designed for
-  * exactly the 1000-executor case.
+  * Scale notes: rank-sum AUC is a range-sorted fold (Metrics.rocAuc);
+  * Spark ML LR/KMeans/PCA are the distributed implementations
+  * (tree-aggregated gradients / Gramian), designed for exactly the
+  * 1000-executor case.
   */
 object MlQueries {
 
   /** binary task shared by the metric queries: y = label < 5, score =
     * raw first embedding component (float-exact across engines). */
-  private def scored(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def scored(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     embeddings(s, dir).select(
       element_at($"embedding", 1).cast("double").as("score"),
@@ -40,15 +40,10 @@ object MlQueries {
   }
 
   private val q60Sql =
-    """WITH s AS (SELECT CAST(embedding[1] AS DOUBLE) AS sc,
+    s"""WITH s AS (SELECT CAST(embedding[1] AS DOUBLE) AS sc,
       |            CASE WHEN label < 5 THEN 1.0 ELSE 0.0 END AS y
       |           FROM embeddings),
-      |g AS (SELECT sc, count(*) AS c, sum(y) AS pos_c FROM s GROUP BY sc),
-      |r AS (SELECT *, coalesce(sum(c) OVER (ORDER BY sc
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |        AS cum_before FROM g),
-      |t AS (SELECT sum(pos_c * (cum_before + (c + 1) / 2.0)) AS rank_sum,
-      |       sum(pos_c) AS np, sum(c - pos_c) AS nn FROM r)
+      |${Metrics.rankSumSql("s", Nil, "sc")}
       |SELECT round((rank_sum - np * (np + 1) / 2.0) / (np * nn), 6) AS auc,
       | CAST(np AS BIGINT) AS n_pos, CAST(nn AS BIGINT) AS n_neg
       |FROM t""".stripMargin
@@ -105,17 +100,11 @@ object MlQueries {
   }
 
   private val q62Sql =
-    """WITH s AS (
+    s"""WITH s AS (
       | SELECT l, CAST(embedding[1] AS DOUBLE) AS sc,
       |  CASE WHEN label = l THEN 1.0 ELSE 0.0 END AS y
       | FROM embeddings, (SELECT unnest(generate_series(0, 9)) AS l)),
-      |g AS (SELECT l, sc, count(*) AS c, sum(y) AS pos_c
-      |      FROM s GROUP BY l, sc),
-      |r AS (SELECT *, coalesce(sum(c) OVER (PARTITION BY l ORDER BY sc
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |        AS cum_before FROM g),
-      |t AS (SELECT l, sum(pos_c * (cum_before + (c + 1) / 2.0)) AS rank_sum,
-      |       sum(pos_c) AS np, sum(c - pos_c) AS nn FROM r GROUP BY l)
+      |${Metrics.rankSumSql("s", Seq("l"), "sc")}
       |SELECT l, round((rank_sum - np * (np + 1) / 2.0) / (np * nn), 6) AS auc,
       | CAST(np AS BIGINT) AS n_pos, CAST(nn AS BIGINT) AS n_neg
       |FROM t ORDER BY l""".stripMargin
@@ -665,10 +654,24 @@ object MlQueries {
     * declarative GD steps (q100's machinery; `supervised.py:83-85`
     * trains exactly this logistic head per epoch) and reports the
     * held-out ROC-AUC + BCE per epoch in the SUPERVISED.csv shape.
-    * ONE grouped rank-sum AUC job scores the whole trajectory (the
-    * A13 accumulation pattern — no per-epoch collects); ranks are on
+    * ONE grouped rank-sum AUC scores the whole trajectory (the A13
+    * accumulation pattern — no per-epoch collects); ranks are on
     * the 6 dp-rounded score so both engines order identically. */
   private def q106(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val scored = q106Scored(s, dir)
+    val bce = scored.groupBy($"n_Epochs")
+      .agg(round(avg($"b"), 6).as("bce_loss"))
+    Metrics.rocAuc(scored, $"score", $"y", Seq($"n_Epochs"))
+      .join(bce, "n_Epochs")
+      .select($"n_Epochs", lit("GD_LR").as("Model"),
+        round($"auc", 4).as("ROC_AUC"), $"bce_loss")
+      .orderBy($"n_Epochs")
+  }
+
+  /** q106's held-out rows scored by every epoch's head:
+    * (n_Epochs, score, y, b), b the row's BCE. */
+  private[graft] def q106Scored(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d = gdData(s, dir)
     val train = d.filter($"vec_id" % 5 =!= 0)
@@ -678,14 +681,7 @@ object MlQueries {
         round(gdZ(s), 6).as("score"), $"y", gdBce(gdZ(s), $"y").as("b"))
     val epochs = Seq.newBuilder[DataFrame]
     gdTrain(s, train)((w, t) => epochs += scoredAt(t, w))
-    val scored = epochs.result().reduce(_ unionAll _)
-    val bce = scored.groupBy($"n_Epochs")
-      .agg(round(avg($"b"), 6).as("bce_loss"))
-    Metrics.rocAuc(scored, $"score", $"y", Seq($"n_Epochs"))
-      .join(bce, "n_Epochs")
-      .select($"n_Epochs", lit("GD_LR").as("Model"),
-        round($"auc", 4).as("ROC_AUC"), $"bce_loss")
-      .orderBy($"n_Epochs")
+    epochs.result().reduce(_ unionAll _)
   }
 
   private lazy val q106Sql = {
@@ -698,16 +694,7 @@ object MlQueries {
     s"""WITH $gdBaseSql,
        |$gdStepsSql,
        |sc AS ($scoredRows),
-       |g AS (SELECT n_Epochs, score, count(*) AS c, sum(y) AS pos_c
-       |      FROM sc GROUP BY n_Epochs, score),
-       |r AS (SELECT *, coalesce(sum(c) OVER (PARTITION BY n_Epochs
-       |        ORDER BY score
-       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-       |        AS cum_before FROM g),
-       |t AS (SELECT n_Epochs,
-       |       sum(pos_c * (cum_before + (c + 1) / 2.0)) AS rank_sum,
-       |       sum(pos_c) AS np, sum(c - pos_c) AS nn
-       |      FROM r GROUP BY n_Epochs),
+       |${Metrics.rankSumSql("sc", Seq("n_Epochs"))},
        |bce AS (SELECT n_Epochs, round(avg(b), 6) AS bce_loss
        |        FROM sc GROUP BY n_Epochs)
        |SELECT t.n_Epochs AS n_Epochs, 'GD_LR' AS Model,
@@ -822,7 +809,7 @@ object MlQueries {
     * sum argument). Only the final z division/sqrt touches inexact
     * floats, on identical inputs. Plan: one distinct-value rollup
     * (partial-aggregable), one type-partitioned cumulative window,
-    * one reduce — the q60 bucketed discipline would apply unchanged
+    * one reduce — Metrics.rocAuc's range-sorted fold would apply
     * if a single metric's value universe ever outgrew a partition. */
   private def q167(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

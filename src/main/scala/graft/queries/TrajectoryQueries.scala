@@ -145,9 +145,10 @@ object TrajectoryQueries {
       .agg(avg($"xbar").as("mu"), stddev_pop($"xbar").as("sd"))
     sup.join(st, Seq("Model", "n_Epochs"))
       .withColumn("score", headScore(($"xbar" - $"mu") / $"sd"))
-    // no checkpoint here: q89/q90 consume this in ONE action whose two
-    // aggregation branches share the subtree via ReusedExchange — an
-    // eager materialization measured ~1.5 s SLOWER than the reuse
+    // no checkpoint here: when q89/q90 consumed this in ONE action, an
+    // eager materialization measured ~1.5 s SLOWER than the shared
+    // subtree. rocAuc now computes it in two passes of its own (range
+    // sample, then sort), and q89 once more for its BCE
   }
 
   /** oracle CTEs for `supScored` (appended after blendSqlCte). */
@@ -250,11 +251,18 @@ object TrajectoryQueries {
       cells.map(f => Await.result(f, Duration.Inf))
         .reduce(_ unionAll _)
     } finally pool.shutdown() // non-daemon threads would hang the JVM
-    Metrics.rocAuc(allScored, $"score", $"label",
-        Seq($"n_Epochs", $"Model", $"Classification"))
-      .select($"n_Epochs", $"Model", $"Classification",
-        lit(1024).as("Batch Size"), round($"auc", 4).as("ROC_AUC"))
-      .orderBy($"Model", $"Classification", $"n_Epochs")
+    gridAuc(allScored, "label")
+  }
+
+  /** a probe grid's table in the `UNSUPERVISED.csv` shape: the held-out
+    * ROC-AUC of `score` against `label` per (n_Epochs, Model,
+    * Classification) cell. */
+  private def gridAuc(scored: DataFrame, label: String): DataFrame = {
+    val cell = Seq("n_Epochs", "Model", "Classification").map(col)
+    Metrics.rocAuc(scored, col("score"), col(label), cell)
+      .select(cell ++ Seq(lit(1024).as("Batch Size"),
+        round(col("auc"), 4).as("ROC_AUC")): _*)
+      .orderBy("Model", "Classification", "n_Epochs")
   }
 
   // rep-table checkpoint sizing shared with q76: Tables.checkpointPartitions
@@ -279,20 +287,9 @@ object TrajectoryQueries {
   }
 
   /** grouped rank-sum AUC oracle fragment over src(Model, n_Epochs, y,
-    * score) — the q62 pattern with a two-column group. `sfx` suffixes
-    * the CTE names so the block can appear twice in one WITH (q90). */
+    * score); `sfx` lets the block appear twice in one WITH (q90). */
   private def aucSql(src: String, sfx: String = ""): String =
-    s"""g$sfx AS (SELECT Model, n_Epochs, score, count(*) AS c,
-       |       sum(y) AS pos_c
-       |      FROM $src GROUP BY Model, n_Epochs, score),
-       |r$sfx AS (SELECT *, coalesce(sum(c) OVER (PARTITION BY Model, n_Epochs
-       |        ORDER BY score
-       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-       |        AS cum_before FROM g$sfx),
-       |t$sfx AS (SELECT Model, n_Epochs,
-       |       sum(pos_c * (cum_before + (c + 1) / 2.0)) AS rank_sum,
-       |       sum(pos_c) AS np, sum(c - pos_c) AS nn
-       |      FROM r$sfx GROUP BY Model, n_Epochs)""".stripMargin
+    Metrics.rankSumSql(src, Seq("Model", "n_Epochs"), sfx = sfx)
 
   private lazy val q89Sql =
     s"""WITH $blendSqlCte,
@@ -320,13 +317,16 @@ object TrajectoryQueries {
     val base = supScored(s, dir)
       .withColumn("uscore",
         when($"Model" === "S_CPC", $"r4").otherwise($"r1"))
-    val unsup = Metrics.rocAuc(base.withColumn("score", $"uscore"),
-      $"score", $"label", Seq($"Model", $"n_Epochs"))
-      .select($"Model", $"n_Epochs", round($"auc", 4).as("unsup_auc"))
-    val sup = Metrics.rocAuc(base,
-      $"score", $"label", Seq($"Model", $"n_Epochs"))
-      .select($"Model", $"n_Epochs", round($"auc", 4).as("sup_auc"))
-    unsup.join(sup, Seq("Model", "n_Epochs"))
+    // both heads through ONE grouped AUC, so its passes compute the
+    // scored table once, not once per head
+    val aucs = Metrics.rocAuc(base.select($"Model", $"n_Epochs", $"label",
+        inline_outer(array(
+          struct(lit("unsup").as("head"), $"uscore".as("score")),
+          struct(lit("sup").as("head"), $"score")))),
+      $"score", $"label", Seq($"Model", $"n_Epochs", $"head"))
+    def head(h: String): DataFrame = aucs.filter($"head" === h)
+      .select($"Model", $"n_Epochs", round($"auc", 4).as(s"${h}_auc"))
+    head("unsup").join(head("sup"), Seq("Model", "n_Epochs"))
       .select($"n_Epochs", $"Model", $"unsup_auc", $"sup_auc",
         round($"sup_auc" - $"unsup_auc", 4).as("auc_gap"))
       .orderBy($"Model", $"n_Epochs")
@@ -464,7 +464,12 @@ object TrajectoryQueries {
     (train, test, w0)
   }
 
-  private def q137(s: SparkSession, dir: String): DataFrame = {
+  private def q137(s: SparkSession, dir: String): DataFrame =
+    gridAuc(q137Scored(s, dir), "y")
+
+  /** the held-out rows q137 scores: each cell's trained head and the
+    * ScoreThreshold floor, (n_Epochs, Model, Classification, score, y). */
+  private[graft] def q137Scored(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (train, test, w0) = gridProbeInputs(s, dir)
     def dot = graft.expr.GraftFunctions.dot(s, $"xz", $"w")
@@ -472,19 +477,17 @@ object TrajectoryQueries {
     // training table once and returns per-(cell, dim) partial
     // gradients; the 9×7 weights come back to the driver
     val wN = IterativeState.logisticGd(train, w0, GridLr, GridIter)
-    // probe-free ScoreThreshold floor rides the same table: x[1] is
-    // the variant slice's first channel for every model (r1 / r4)
-    val scored = test.join(broadcast(wN), Seq("n_Epochs", "Model"))
-      .select($"n_Epochs", $"Model", lit("GD_LogReg").as("Classification"),
-        round(dot, 6).as("score"), $"y")
-      .unionAll(test.select($"n_Epochs", $"Model",
-        lit("ScoreThreshold").as("Classification"),
-        round(element_at($"x", 1), 6).as("score"), $"y"))
-    Metrics.rocAuc(scored, $"score", $"y",
-        Seq($"n_Epochs", $"Model", $"Classification"))
-      .select($"n_Epochs", $"Model", $"Classification",
-        lit(1024).as("Batch Size"), round($"auc", 4).as("ROC_AUC"))
-      .orderBy($"Model", $"Classification", $"n_Epochs")
+    // probe-free ScoreThreshold floor rides the same rows: x[1] is
+    // the variant slice's first channel for every model (r1 / r4).
+    // Every test cell has weights, so one join scores both heads;
+    // inline_outer, not inline: the plain generator's inferred filter
+    // would re-evaluate the dot
+    test.join(broadcast(wN), Seq("n_Epochs", "Model"))
+      .select($"n_Epochs", $"Model", inline_outer(array(
+        struct(lit("GD_LogReg").as("Classification"),
+          round(dot, 6).as("score")),
+        struct(lit("ScoreThreshold").as("Classification"),
+          round(element_at($"x", 1), 6).as("score")))), $"y")
   }
 
   /** shared oracle CTE chain for the probe-grid GD queries (q137/q160):
@@ -568,18 +571,7 @@ object TrajectoryQueries {
        | SELECT n_Epochs, Model, 'ScoreThreshold' AS Classification,
        |  round(x[1], 6) AS score, y
        | FROM te),
-       |g AS (SELECT n_Epochs, Model, Classification, score,
-       |       count(*) AS c, sum(y) AS pos_c
-       |      FROM sc GROUP BY n_Epochs, Model, Classification, score),
-       |r AS (SELECT *, coalesce(sum(c) OVER (
-       |        PARTITION BY n_Epochs, Model, Classification
-       |        ORDER BY score
-       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-       |        AS cum_before FROM g),
-       |t AS (SELECT n_Epochs, Model, Classification,
-       |       sum(pos_c * (cum_before + (c + 1) / 2.0)) AS rank_sum,
-       |       sum(pos_c) AS np, sum(c - pos_c) AS nn
-       |      FROM r GROUP BY n_Epochs, Model, Classification)
+       |${Metrics.rankSumSql("sc", Seq("n_Epochs", "Model", "Classification"))}
        |SELECT n_Epochs, Model, Classification, 1024 AS "Batch Size",
        | round((rank_sum - np * (np + 1) / 2.0) / (np * nn), 4) AS ROC_AUC
        |FROM t
@@ -786,11 +778,7 @@ object TrajectoryQueries {
         s, $"xz", $"w", MlpH))
       .select($"n_Epochs", $"Model", lit("GD_MLP").as("Classification"),
         round($"u", 6).as("score"), $"y")
-    Metrics.rocAuc(scored, $"score", $"y",
-        Seq($"n_Epochs", $"Model", $"Classification"))
-      .select($"n_Epochs", $"Model", $"Classification",
-        lit(1024).as("Batch Size"), round($"auc", 4).as("ROC_AUC"))
-      .orderBy($"Model", $"Classification", $"n_Epochs")
+    gridAuc(scored, "y")
   }
 
   private lazy val q160Sql = {
@@ -883,18 +871,7 @@ object TrajectoryQueries {
        | FROM (${fwdTo(s"(SELECT t.n_Epochs, t.Model, t.y, t.xz, w.w " +
           s"FROM tes t JOIN w$MlpIter w ON t.n_Epochs = w.n_Epochs " +
           s"AND t.Model = w.Model) src")})),
-       |g AS (SELECT n_Epochs, Model, Classification, score,
-       |       count(*) AS c, sum(y) AS pos_c
-       |      FROM sc GROUP BY n_Epochs, Model, Classification, score),
-       |r AS (SELECT *, coalesce(sum(c) OVER (
-       |        PARTITION BY n_Epochs, Model, Classification
-       |        ORDER BY score
-       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-       |        AS cum_before FROM g),
-       |t AS (SELECT n_Epochs, Model, Classification,
-       |       sum(pos_c * (cum_before + (c + 1) / 2.0)) AS rank_sum,
-       |       sum(pos_c) AS np, sum(c - pos_c) AS nn
-       |      FROM r GROUP BY n_Epochs, Model, Classification)
+       |${Metrics.rankSumSql("sc", Seq("n_Epochs", "Model", "Classification"))}
        |SELECT n_Epochs, Model, Classification, 1024 AS "Batch Size",
        | round((rank_sum - np * (np + 1) / 2.0) / (np * nn), 4) AS ROC_AUC
        |FROM t

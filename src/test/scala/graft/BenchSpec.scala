@@ -29,6 +29,16 @@ class BenchSpec extends SparkSpec {
       .map(_.group(1)).toSeq
     assert(names.sorted == (existing ++ added).map(_ + "_sec").sorted, fields)
     assert(fields.endsWith("\"untimed_total_sec\":1.50"), fields)
+    // the full line: the same top-level fields as before plus the
+    // per-query `codegen` counts
+    val line = Bench.detailLine(Seq("q01_ok" -> Bench.Timing(1.0, 2.0, 7L)),
+      Seq("q02_bad"), reps = 2, fields, sf)
+    val top = "\"([a-z0-9_]+)\":".r
+      .findAllMatchIn(line.drop(1).replaceAll("\\{[^{}]*\\}", "{}"))
+      .map(_.group(1)).toSeq
+    assert(top.filterNot(_.endsWith("_sec")) == Seq("metric", "value",
+      "unit", "reps", "queries", "cold", "codegen", "failed", "sf"), line)
+    assert(line.contains("\"codegen\":{\"q01\":7}"), line)
   }
 
   test("parMap runs each sibling's Spark jobs in its own job group") {

@@ -133,22 +133,11 @@ class LogisticGdSpec extends SparkSpec {
   }
 
   test("trainer schedules exactly one Spark job per epoch") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val (train, w0) = gridInputs
     val iters = 5
     // warm: the materialized table and codegen exist before counting
     IterativeState.logisticGd(train, w0, 1.0, 1)
-    Scratch.drainListenerBus(spark.sparkContext)
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      IterativeState.logisticGd(train, w0, 1.0, iters)
-      Scratch.drainListenerBus(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(n.get() == iters, s"$iters epochs scheduled ${n.get()} jobs")
+    val n = jobsDuring(IterativeState.logisticGd(train, w0, 1.0, iters))
+    assert(n == iters, s"$iters epochs scheduled $n jobs")
   }
 }

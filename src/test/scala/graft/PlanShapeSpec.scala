@@ -1,6 +1,7 @@
 package graft
 
-import graft.queries.Registry
+import graft.ops.Metrics
+import graft.queries.{MlQueries, Registry, TrajectoryQueries}
 
 /** Plan-shape contracts (PERF.md audits, locked in as regressions):
   * the physical plans that make these queries scale must keep their
@@ -15,6 +16,13 @@ class PlanShapeSpec extends SparkSpec {
     spark.conf.set("spark.sql.maxMetadataStringLength", "20000")
     Registry.byName(name).run(spark, sf)
       .queryExecution.executedPlan.toString
+  }
+
+  private def flatten(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      flatten(a.inputPlan)
+    case _ => p +: p.children.flatMap(flatten)
   }
 
   test("q125: heavy-hitter summary aggregates map-side before the shuffle") {
@@ -84,12 +92,6 @@ class PlanShapeSpec extends SparkSpec {
     val exec = Registry.byName("q42_lsh_neardup").run(spark, sf)
       .queryExecution.executedPlan
     // collect() doesn't descend into the AQE wrapper's inputPlan
-    def flatten(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        flatten(a.inputPlan)
-      case _ => p +: p.children.flatMap(flatten)
-    }
     val bandJoins = flatten(exec).collect {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec
         if j.leftKeys.exists(_.toString.contains("band_key")) => j
@@ -106,12 +108,6 @@ class PlanShapeSpec extends SparkSpec {
   test("q53: pair join is keyed on the LSH bucket, not label alone") {
     val exec = Registry.byName("q53_embed_neardup").run(spark, sf)
       .queryExecution.executedPlan
-    def flatten(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        flatten(a.inputPlan)
-      case _ => p +: p.children.flatMap(flatten)
-    }
     val pairJoins = flatten(exec).collect {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
     }
@@ -162,34 +158,57 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("WindowGroupLimit"), p.take(1200))
   }
 
-  test("q60: global AUC rank has NO unpartitioned window (bucketed two-phase)") {
-    // the 100 TB contract of the ungrouped rank-sum path: distinct
-    // scores bucket into uniform ranges, offsets broadcast back, and
-    // the only window left partitions by bucket — a global AUC can
-    // never serialize the rank onto one task
-    val exec = Registry.byName("q60_roc_auc").run(spark, sf)
+  test("q60: global AUC ranks through a range exchange on the score, no window") {
+    // the 100 TB contract of the ungrouped rank-sum path: rows range-
+    // partition on the score and each partition folds its sorted run,
+    // so a global AUC never serializes its ranks onto one task.
+    // rocAuc runs its jobs when called: the plan to inspect is the
+    // sorted input it folds, built over q60's scored frame
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // the plan after EnsureRequirements, which adds the sort's exchange
+    val exec = Metrics.rankInput(MlQueries.scored(spark, sf), $"score",
+      $"y", Seq.empty).queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan
+        case p => p
+      }
+    val ranges = flatten(exec).collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }
+    assert(ranges.size == 1, exec.toString.take(1200))
+    ranges.head match {
+      case r: RangePartitioning =>
+        assert(r.ordering.map(_.child).collect {
+          case a: AttributeReference => a.name } == Seq("s"), r)
+        assert(r.numPartitions > 1, r)
+      case p => fail(s"expected a range exchange, got $p")
+    }
+    val q60 = Registry.byName("q60_roc_auc").run(spark, sf)
       .queryExecution.executedPlan
-    def flatten(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        flatten(a.inputPlan)
-      case _ => p +: p.children.flatMap(flatten)
-    }
-    val wins = flatten(exec).collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec => w
-    }
-    assert(wins.nonEmpty, "expected the within-bucket window:\n" +
-      exec.toString.take(1200))
-    wins.foreach(w => assert(w.partitionSpec.nonEmpty,
-      "unpartitioned window in the global AUC plan"))
+    for (p <- Seq(exec, q60)) assert(!flatten(p).exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]),
+      p.toString.take(1200))
   }
 
-  test("q106: the whole GD trajectory is scored by ONE grouped AUC job") {
-    // one Window node in the entire plan — the rank-sum AUC over the
-    // scored UNION; a per-epoch collect/rank would multiply this
-    val p = plan("q106_gd_trajectory")
-    assert("(?m)^\\W*Window ".r.findAllIn(p).size == 1, p.take(1500))
-    assert(!p.contains("CartesianProduct"), p.take(1200))
+  test("q106: the whole GD trajectory is scored by one fixed-size set of AUC jobs") {
+    // the rank-sum AUC over the scored UNION of every epoch runs the
+    // same jobs as over one epoch; a per-epoch collect/rank would
+    // multiply them. Checkpointed: each epoch's head is broadcast into
+    // the scoring pass, and those jobs are the scored frame's, not the
+    // AUC's
+    import spark.implicits._
+    val lazyScored = MlQueries.q106Scored(spark, sf)
+    assert(!lazyScored.queryExecution.executedPlan.toString
+      .contains("CartesianProduct"))
+    val scored = lazyScored.localCheckpoint(true)
+    val all = jobsDuring(
+      Metrics.rocAuc(scored, $"score", $"y", Seq($"n_Epochs")))
+    val one = jobsDuring(Metrics.rocAuc(scored.filter($"n_Epochs" === 1),
+      $"score", $"y", Seq($"n_Epochs")))
+    assert(all == one && all <= 3, s"all epochs: $all jobs, one epoch: $one")
   }
 
   test("q111: range join is hash-keyed on the bin, never a nested loop") {
@@ -271,13 +290,16 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q137: keyed GD grid — broadcast state joins, no cartesian") {
-    val p = plan("q137_gd_probe_grid")
+    // rocAuc runs its jobs when called, so the scoring pass is
+    // inspected on the scored frame q137 hands to it
+    val p = TrajectoryQueries.q137Scored(spark, sf)
+      .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), p.take(1500))
     // the 9-row weight state and z-stats ride BROADCAST joins into
     // the scoring pass — the corpus never shuffles for model state
     assert(p.contains("BroadcastHashJoin"), p.take(2000))
     // the grid table is checkpointed and the trained weights come
-    // back from the driver as a local table: the final plan reads
+    // back from the driver as a local table: the scoring pass reads
     // materialized data, no parquet re-scan of the rep chain
     assert(p.contains("Scan ExistingRDD") && !p.contains("Scan parquet"),
       p.take(1500))
@@ -342,12 +364,6 @@ class PlanShapeSpec extends SparkSpec {
     for (name <- Seq("q163_rrf_hybrid", "q165_mmr_diversify")) {
       val exec = Registry.byName(name).run(spark, sf)
         .queryExecution.executedPlan
-      def flatten(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          flatten(a.inputPlan)
-        case _ => p +: p.children.flatMap(flatten)
-      }
       val wins = flatten(exec).collect {
         case w: org.apache.spark.sql.execution.window.WindowExec => w
       }
@@ -484,22 +500,11 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q187 serve path: the fused serving collects keep the job count bounded") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // warm the memoized artifacts + JIT so the counted run is the
     // marginal serve, not index builds
     Registry.byName("q187_fully_served_rag").run(spark, sf).collect()
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      Registry.byName("q187_fully_served_rag").run(spark, sf).collect()
-      // drain the async listener bus DETERMINISTICALLY (ADVICE r15:
-      // a fixed sleep could flake the count low on a loaded host)
-      Scratch.drainListenerBus(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val n = jobsDuring(
+      Registry.byName("q187_fully_served_rag").run(spark, sf).collect())
     // measured on this harness: 78 jobs per warm serve before round
     // 15 (each localCheckpoint + literal-collect pair two jobs, the
     // lexical branch re-tokenizing the corpus), 64 after localized()
@@ -515,10 +520,10 @@ class PlanShapeSpec extends SparkSpec {
     // is advisory; the relative locks in the sibling tests (no corpus
     // tokenize, no re-encode, pruned index scans) carry the
     // version-independent regression teeth.
-    info(s"warm q187 serve scheduled ${n.get()} jobs (bound 48, " +
+    info(s"warm q187 serve scheduled ${n} jobs (bound 48, " +
       s"pinned to Spark 4.1.x; running ${spark.version})")
     if (spark.version.startsWith("4.1."))
-      assert(n.get() <= 48, s"serve path scheduled ${n.get()} jobs")
+      assert(n <= 48, s"serve path scheduled ${n} jobs")
   }
 
   test("q180: context assembly broadcasts the fused top-5; no doc_id shuffle ships text") {

@@ -36,4 +36,23 @@ abstract class SparkSpec extends AnyFunSuite {
     * runs must not accumulate orphans under /tmp (same discipline as
     * graft.Scratch on the query side). */
   def tmpDir(prefix: String): String = Scratch.tempDirDeletedOnExit(prefix)
+
+  /** the Spark jobs started while `body` runs, counted after a
+    * deterministic drain of the listener bus (a fixed sleep could
+    * flake the count low on a loaded host). */
+  def jobsDuring(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    // earlier jobs' events must not reach the new listener
+    Scratch.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try { body; Scratch.drainListenerBus(sc) }
+    finally sc.removeSparkListener(l)
+    n.get()
+  }
 }
