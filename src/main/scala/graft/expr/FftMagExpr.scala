@@ -68,8 +68,6 @@ object FftMagExpr {
   }
 }
 
-/** Runtime registration of the graft custom-function surface (idempotent;
-  * call once per SparkSession before using the SQL names). */
 /** Config-time registration: start a session with
   * `.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.expr.GraftExtensions` and the graft
@@ -78,455 +76,93 @@ object FftMagExpr {
   * `GraftFunctions.register` remains for library embedding). */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("graft_fft_mag"),
-      new ExpressionInfo(classOf[FftMagExpr].getName, "graft_fft_mag"),
-      GraftFunctions.fftMagBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotExpr].getName, "graft_dot"),
-      GraftFunctions.dotBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_bottomk"),
-      new ExpressionInfo(classOf[BottomKAgg].getName, "graft_bottomk"),
-      GraftFunctions.bottomKBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[PqEncodeExpr].getName, "graft_pq_encode"),
-      GraftFunctions.pqEncodeBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_pq_adc"),
-      new ExpressionInfo(classOf[PqAdcExpr].getName, "graft_pq_adc"),
-      GraftFunctions.pqAdcBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_simhash32"),
-      new ExpressionInfo(classOf[SimHashExpr].getName, "graft_simhash32"),
-      GraftFunctions.simHashBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_byte_hist"),
-      new ExpressionInfo(classOf[ByteHistExpr].getName, "graft_byte_hist"),
-      GraftFunctions.byteHistBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_topk_freq"),
-      new ExpressionInfo(classOf[TopKFreqAgg].getName, "graft_topk_freq"),
-      GraftFunctions.topKFreqBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_cpc_encode"),
-      new ExpressionInfo(classOf[CpcEncodeExpr].getName, "graft_cpc_encode"),
-      GraftFunctions.cpcEncodeBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_gru_scan"),
-      new ExpressionInfo(classOf[GruScanExpr].getName, "graft_gru_scan"),
-      GraftFunctions.gruScanBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(classOf[BloomAgg].getName, "graft_bloom_agg"),
-      GraftFunctions.bloomAggBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(classOf[BloomContainsExpr].getName, "graft_bloom_contains"),
-      GraftFunctions.bloomContainsBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_bloom_any"),
-      new ExpressionInfo(classOf[BloomAnyExpr].getName, "graft_bloom_any"),
-      GraftFunctions.bloomAnyBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_hll_agg"),
-      new ExpressionInfo(classOf[HllAgg].getName, "graft_hll_agg"),
-      GraftFunctions.hllAggBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_hll_sketch"),
-      new ExpressionInfo(classOf[HllSketchAgg].getName, "graft_hll_sketch"),
-      GraftFunctions.hllSketchBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_hll_merge"),
-      new ExpressionInfo(classOf[HllMergeAgg].getName, "graft_hll_merge"),
-      GraftFunctions.hllMergeBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_hll_estimate"),
-      new ExpressionInfo(classOf[HllEstimateExpr].getName, "graft_hll_estimate"),
-      GraftFunctions.hllEstimateBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_kmv_sketch"),
-      new ExpressionInfo(classOf[KmvSketchAgg].getName, "graft_kmv_sketch"),
-      GraftFunctions.kmvSketchBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_kmv_merge"),
-      new ExpressionInfo(classOf[KmvMergeAgg].getName, "graft_kmv_merge"),
-      GraftFunctions.kmvMergeBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_kmv_estimate"),
-      new ExpressionInfo(classOf[KmvEstimateExpr].getName, "graft_kmv_estimate"),
-      GraftFunctions.kmvEstimateBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_kmv_intersect"),
-      new ExpressionInfo(classOf[KmvIntersectExpr].getName, "graft_kmv_intersect"),
-      GraftFunctions.kmvIntersectBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_kmv_union_est"),
-      new ExpressionInfo(classOf[KmvUnionEstExpr].getName, "graft_kmv_union_est"),
-      GraftFunctions.kmvUnionEstBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_zorder"),
-      new ExpressionInfo(classOf[ZorderExpr].getName, "graft_zorder"),
-      GraftFunctions.zorderBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_kll_sketch"),
-      new ExpressionInfo(classOf[KllSketchAgg].getName, "graft_kll_sketch"),
-      GraftFunctions.kllSketchBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_kll_merge"),
-      new ExpressionInfo(classOf[KllMergeAgg].getName, "graft_kll_merge"),
-      GraftFunctions.kllMergeBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_kll_quantiles"),
-      new ExpressionInfo(classOf[KllQuantilesExpr].getName, "graft_kll_quantiles"),
-      GraftFunctions.kllQuantilesBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_kll_quantiles_cont"),
-      new ExpressionInfo(classOf[KllQuantilesContExpr].getName,
-        "graft_kll_quantiles_cont"),
-      GraftFunctions.kllQuantilesContBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_vec_sum"),
-      new ExpressionInfo(classOf[VecSumAgg].getName, "graft_vec_sum"),
-      GraftFunctions.vecSumBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_mlp_grad"),
-      new ExpressionInfo(classOf[MlpGradExpr].getName, "graft_mlp_grad"),
-      GraftFunctions.mlpGradBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_mlp_logit"),
-      new ExpressionInfo(classOf[MlpLogitExpr].getName, "graft_mlp_logit"),
-      GraftFunctions.mlpLogitBuilder))
+    GraftFunctions.functions.foreach(e.injectFunction)
     e.injectOptimizerRule(_ => DotRewrite)
   }
 }
 
+/** Runtime registration of the graft custom-function surface (idempotent;
+  * call once per SparkSession before using the SQL names), and the
+  * Column forms of the functions. */
 object GraftFunctions {
-  private val fftMagId = FunctionIdentifier("graft_fft_mag")
-  private val dotId = FunctionIdentifier("graft_dot")
-  private val bottomKId = FunctionIdentifier("graft_bottomk")
-  private val pqEncodeId = FunctionIdentifier("graft_pq_encode")
-  private val pqAdcId = FunctionIdentifier("graft_pq_adc")
-  private val simHashId = FunctionIdentifier("graft_simhash32")
-  private val byteHistId = FunctionIdentifier("graft_byte_hist")
-  private val topKFreqId = FunctionIdentifier("graft_topk_freq")
-  private val cpcEncodeId = FunctionIdentifier("graft_cpc_encode")
-  private val gruScanId = FunctionIdentifier("graft_gru_scan")
-  private val bloomAggId = FunctionIdentifier("graft_bloom_agg")
-  private val bloomContainsId = FunctionIdentifier("graft_bloom_contains")
-  private val bloomAnyId = FunctionIdentifier("graft_bloom_any")
-  private val hllAggId = FunctionIdentifier("graft_hll_agg")
-  private val hllSketchId = FunctionIdentifier("graft_hll_sketch")
-  private val hllMergeId = FunctionIdentifier("graft_hll_merge")
-  private val hllEstimateId = FunctionIdentifier("graft_hll_estimate")
-  private val kmvSketchId = FunctionIdentifier("graft_kmv_sketch")
-  private val kmvMergeId = FunctionIdentifier("graft_kmv_merge")
-  private val kmvEstimateId = FunctionIdentifier("graft_kmv_estimate")
-  private val kmvIntersectId = FunctionIdentifier("graft_kmv_intersect")
-  private val kmvUnionEstId = FunctionIdentifier("graft_kmv_union_est")
-  private val zorderId = FunctionIdentifier("graft_zorder")
-  private val kllSketchId = FunctionIdentifier("graft_kll_sketch")
-  private val kllMergeId = FunctionIdentifier("graft_kll_merge")
-  private val kllQuantilesId = FunctionIdentifier("graft_kll_quantiles")
-  private val kllQuantilesContId = FunctionIdentifier("graft_kll_quantiles_cont")
-  private val vecSumId = FunctionIdentifier("graft_vec_sum")
-  private val mlpGradId = FunctionIdentifier("graft_mlp_grad")
-  private val mlpLogitId = FunctionIdentifier("graft_mlp_logit")
-
-  // shared builders (runtime registry + GraftExtensions) with arity
-  // checks — a one-arg graft_bottomk call must fail analysis with a
+  // every graft SQL function with its arity: the one list both the
+  // runtime registry (`register`) and GraftExtensions install. The
+  // arity check makes a one-arg graft_bottomk call fail analysis with a
   // clear message, not IndexOutOfBounds
   private def arity(name: String, n: Int, children: Seq[Expression]): Unit =
     if (children.length != n)
       throw new IllegalArgumentException(
         s"$name takes exactly $n argument(s), got ${children.length}")
 
-  private[expr] val fftMagBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_fft_mag", 1, ch); FftMagExpr(ch.head)
-  }
-  private[expr] val dotBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_dot", 2, ch); DotExpr(ch(0), ch(1))
-  }
-  private[expr] val bottomKBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_bottomk", 2, ch)
-    BottomKAgg(ch(0), ch(1)).toAggregateExpression()
-  }
-  private[expr] val pqEncodeBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_pq_encode", 2, ch); PqEncodeExpr(ch(0), ch(1))
-  }
-  private[expr] val pqAdcBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_pq_adc", 2, ch); PqAdcExpr(ch(0), ch(1))
-  }
-  private[expr] val simHashBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_simhash32", 1, ch); SimHashExpr(ch.head)
-  }
-  private[expr] val byteHistBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_byte_hist", 2, ch); ByteHistExpr(ch(0), ch(1))
-  }
-  private[expr] val topKFreqBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_topk_freq", 2, ch)
-    TopKFreqAgg(ch(0), ch(1)).toAggregateExpression()
-  }
-  private[expr] val cpcEncodeBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_cpc_encode", 5, ch); CpcEncodeExpr(ch)
-  }
-  private[expr] val gruScanBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_gru_scan", 2, ch); GruScanExpr(ch(0), ch(1))
-  }
-  private[expr] val bloomAggBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_bloom_agg", 3, ch)
-    BloomAgg(ch(0), ch(1), ch(2)).toAggregateExpression()
-  }
-  private[expr] val bloomContainsBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_bloom_contains", 2, ch); BloomContainsExpr(ch(0), ch(1))
-  }
-  private[expr] val bloomAnyBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_bloom_any", 2, ch); BloomAnyExpr(ch(0), ch(1))
-  }
-  private[expr] val hllAggBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_hll_agg", 2, ch)
-    HllAgg(ch(0), ch(1)).toAggregateExpression()
-  }
-  private[expr] val hllSketchBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_hll_sketch", 2, ch)
-    HllSketchAgg(ch(0), ch(1)).toAggregateExpression()
-  }
-  private[expr] val hllMergeBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_hll_merge", 1, ch)
-    HllMergeAgg(ch(0)).toAggregateExpression()
-  }
-  private[expr] val hllEstimateBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_hll_estimate", 1, ch); HllEstimateExpr(ch(0))
-  }
-  private[expr] val kmvSketchBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_kmv_sketch", 2, ch)
-    KmvSketchAgg(ch(0), ch(1)).toAggregateExpression()
-  }
-  private[expr] val kmvMergeBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_kmv_merge", 1, ch)
-    KmvMergeAgg(ch(0)).toAggregateExpression()
-  }
-  private[expr] val kmvEstimateBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_kmv_estimate", 1, ch); KmvEstimateExpr(ch(0))
-  }
-  private[expr] val kmvIntersectBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_kmv_intersect", 2, ch); KmvIntersectExpr(ch(0), ch(1))
-  }
-  private[expr] val kmvUnionEstBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_kmv_union_est", 2, ch); KmvUnionEstExpr(ch(0), ch(1))
-  }
-  private[expr] val zorderBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_zorder", 2, ch); ZorderExpr(ch(0), ch(1))
-  }
-  private[expr] val kllSketchBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_kll_sketch", 2, ch)
-    KllSketchAgg(ch(0), ch(1)).toAggregateExpression()
-  }
-  private[expr] val kllMergeBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_kll_merge", 1, ch)
-    KllMergeAgg(ch(0)).toAggregateExpression()
-  }
-  private[expr] val kllQuantilesBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_kll_quantiles", 2, ch); KllQuantilesExpr(ch(0), ch(1))
-  }
-  private[expr] val kllQuantilesContBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_kll_quantiles_cont", 2, ch); KllQuantilesContExpr(ch(0), ch(1))
-  }
-  private[expr] val vecSumBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_vec_sum", 1, ch)
-    VecSumAgg(ch(0)).toAggregateExpression()
-  }
-  private[expr] val mlpGradBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_mlp_grad", 4, ch); MlpGradExpr(ch)
-  }
-  private[expr] val mlpLogitBuilder: Seq[Expression] => Expression = { ch =>
-    arity("graft_mlp_logit", 3, ch); MlpLogitExpr(ch)
-  }
+  private def fn(name: String, cls: Class[_], n: Int)(
+      build: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      { ch => arity(name, n, ch); build(ch) })
+
+  private[expr] val functions
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(
+      fn("graft_fft_mag", classOf[FftMagExpr], 1)(ch => FftMagExpr(ch(0))),
+      fn("graft_dot", classOf[DotExpr], 2)(ch => DotExpr(ch(0), ch(1))),
+      fn("graft_bottomk", classOf[BottomKAgg], 2)(ch =>
+        BottomKAgg(ch(0), ch(1)).toAggregateExpression()),
+      fn("graft_pq_encode", classOf[PqEncodeExpr], 2)(ch =>
+        PqEncodeExpr(ch(0), ch(1))),
+      fn("graft_pq_adc", classOf[PqAdcExpr], 2)(ch => PqAdcExpr(ch(0), ch(1))),
+      fn("graft_simhash32", classOf[SimHashExpr], 1)(ch => SimHashExpr(ch(0))),
+      fn("graft_byte_hist", classOf[ByteHistExpr], 2)(ch =>
+        ByteHistExpr(ch(0), ch(1))),
+      fn("graft_topk_freq", classOf[TopKFreqAgg], 2)(ch =>
+        TopKFreqAgg(ch(0), ch(1)).toAggregateExpression()),
+      fn("graft_cpc_encode", classOf[CpcEncodeExpr], 5)(ch => CpcEncodeExpr(ch)),
+      fn("graft_gru_scan", classOf[GruScanExpr], 2)(ch =>
+        GruScanExpr(ch(0), ch(1))),
+      fn("graft_bloom_agg", classOf[BloomAgg], 3)(ch =>
+        BloomAgg(ch(0), ch(1), ch(2)).toAggregateExpression()),
+      fn("graft_bloom_contains", classOf[BloomContainsExpr], 2)(ch =>
+        BloomContainsExpr(ch(0), ch(1))),
+      fn("graft_bloom_any", classOf[BloomAnyExpr], 2)(ch =>
+        BloomAnyExpr(ch(0), ch(1))),
+      fn("graft_hll_agg", classOf[HllAgg], 2)(ch =>
+        HllAgg(ch(0), ch(1)).toAggregateExpression()),
+      fn("graft_hll_sketch", classOf[HllSketchAgg], 2)(ch =>
+        HllSketchAgg(ch(0), ch(1)).toAggregateExpression()),
+      fn("graft_hll_merge", classOf[HllMergeAgg], 1)(ch =>
+        HllMergeAgg(ch(0)).toAggregateExpression()),
+      fn("graft_hll_estimate", classOf[HllEstimateExpr], 1)(ch =>
+        HllEstimateExpr(ch(0))),
+      fn("graft_kmv_sketch", classOf[KmvSketchAgg], 2)(ch =>
+        KmvSketchAgg(ch(0), ch(1)).toAggregateExpression()),
+      fn("graft_kmv_merge", classOf[KmvMergeAgg], 1)(ch =>
+        KmvMergeAgg(ch(0)).toAggregateExpression()),
+      fn("graft_kmv_estimate", classOf[KmvEstimateExpr], 1)(ch =>
+        KmvEstimateExpr(ch(0))),
+      fn("graft_kmv_intersect", classOf[KmvIntersectExpr], 2)(ch =>
+        KmvIntersectExpr(ch(0), ch(1))),
+      fn("graft_kmv_union_est", classOf[KmvUnionEstExpr], 2)(ch =>
+        KmvUnionEstExpr(ch(0), ch(1))),
+      fn("graft_zorder", classOf[ZorderExpr], 2)(ch => ZorderExpr(ch(0), ch(1))),
+      fn("graft_kll_sketch", classOf[KllSketchAgg], 2)(ch =>
+        KllSketchAgg(ch(0), ch(1)).toAggregateExpression()),
+      fn("graft_kll_merge", classOf[KllMergeAgg], 1)(ch =>
+        KllMergeAgg(ch(0)).toAggregateExpression()),
+      fn("graft_kll_quantiles", classOf[KllQuantilesExpr], 2)(ch =>
+        KllQuantilesExpr(ch(0), ch(1))),
+      fn("graft_kll_quantiles_cont", classOf[KllQuantilesContExpr], 2)(ch =>
+        KllQuantilesContExpr(ch(0), ch(1))),
+      fn("graft_vec_sum", classOf[VecSumAgg], 1)(ch =>
+        VecSumAgg(ch(0)).toAggregateExpression()),
+      fn("graft_info_nce", classOf[InfoNceAgg], 3)(ch =>
+        InfoNceAgg(ch(0), ch(1), ch(2)).toAggregateExpression()),
+      fn("graft_mlp_grad", classOf[MlpGradExpr], 4)(ch => MlpGradExpr(ch)),
+      fn("graft_mlp_logit", classOf[MlpLogitExpr], 3)(ch => MlpLogitExpr(ch))
+    )
 
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(fftMagId)) {
-      registry.registerFunction(
-        fftMagId,
-        new ExpressionInfo(classOf[FftMagExpr].getName, "graft_fft_mag"),
-        fftMagBuilder)
-    }
-    if (!registry.functionExists(dotId)) {
-      registry.registerFunction(
-        dotId,
-        new ExpressionInfo(classOf[DotExpr].getName, "graft_dot"),
-        dotBuilder)
-    }
-    if (!registry.functionExists(bottomKId)) {
-      registry.registerFunction(
-        bottomKId,
-        new ExpressionInfo(classOf[BottomKAgg].getName, "graft_bottomk"),
-        bottomKBuilder)
-    }
-    if (!registry.functionExists(pqEncodeId)) {
-      registry.registerFunction(
-        pqEncodeId,
-        new ExpressionInfo(classOf[PqEncodeExpr].getName, "graft_pq_encode"),
-        pqEncodeBuilder)
-    }
-    if (!registry.functionExists(pqAdcId)) {
-      registry.registerFunction(
-        pqAdcId,
-        new ExpressionInfo(classOf[PqAdcExpr].getName, "graft_pq_adc"),
-        pqAdcBuilder)
-    }
-    if (!registry.functionExists(simHashId)) {
-      registry.registerFunction(
-        simHashId,
-        new ExpressionInfo(classOf[SimHashExpr].getName, "graft_simhash32"),
-        simHashBuilder)
-    }
-    if (!registry.functionExists(byteHistId)) {
-      registry.registerFunction(
-        byteHistId,
-        new ExpressionInfo(classOf[ByteHistExpr].getName, "graft_byte_hist"),
-        byteHistBuilder)
-    }
-    if (!registry.functionExists(topKFreqId)) {
-      registry.registerFunction(
-        topKFreqId,
-        new ExpressionInfo(classOf[TopKFreqAgg].getName, "graft_topk_freq"),
-        topKFreqBuilder)
-    }
-    if (!registry.functionExists(cpcEncodeId)) {
-      registry.registerFunction(
-        cpcEncodeId,
-        new ExpressionInfo(classOf[CpcEncodeExpr].getName, "graft_cpc_encode"),
-        cpcEncodeBuilder)
-    }
-    if (!registry.functionExists(gruScanId)) {
-      registry.registerFunction(
-        gruScanId,
-        new ExpressionInfo(classOf[GruScanExpr].getName, "graft_gru_scan"),
-        gruScanBuilder)
-    }
-    if (!registry.functionExists(bloomAggId)) {
-      registry.registerFunction(
-        bloomAggId,
-        new ExpressionInfo(classOf[BloomAgg].getName, "graft_bloom_agg"),
-        bloomAggBuilder)
-    }
-    if (!registry.functionExists(bloomContainsId)) {
-      registry.registerFunction(
-        bloomContainsId,
-        new ExpressionInfo(classOf[BloomContainsExpr].getName, "graft_bloom_contains"),
-        bloomContainsBuilder)
-    }
-    if (!registry.functionExists(bloomAnyId)) {
-      registry.registerFunction(
-        bloomAnyId,
-        new ExpressionInfo(classOf[BloomAnyExpr].getName, "graft_bloom_any"),
-        bloomAnyBuilder)
-    }
-    if (!registry.functionExists(hllAggId)) {
-      registry.registerFunction(
-        hllAggId,
-        new ExpressionInfo(classOf[HllAgg].getName, "graft_hll_agg"),
-        hllAggBuilder)
-    }
-    if (!registry.functionExists(hllSketchId)) {
-      registry.registerFunction(
-        hllSketchId,
-        new ExpressionInfo(classOf[HllSketchAgg].getName, "graft_hll_sketch"),
-        hllSketchBuilder)
-    }
-    if (!registry.functionExists(hllMergeId)) {
-      registry.registerFunction(
-        hllMergeId,
-        new ExpressionInfo(classOf[HllMergeAgg].getName, "graft_hll_merge"),
-        hllMergeBuilder)
-    }
-    if (!registry.functionExists(hllEstimateId)) {
-      registry.registerFunction(
-        hllEstimateId,
-        new ExpressionInfo(classOf[HllEstimateExpr].getName, "graft_hll_estimate"),
-        hllEstimateBuilder)
-    }
-    if (!registry.functionExists(kmvSketchId)) {
-      registry.registerFunction(
-        kmvSketchId,
-        new ExpressionInfo(classOf[KmvSketchAgg].getName, "graft_kmv_sketch"),
-        kmvSketchBuilder)
-    }
-    if (!registry.functionExists(kmvMergeId)) {
-      registry.registerFunction(
-        kmvMergeId,
-        new ExpressionInfo(classOf[KmvMergeAgg].getName, "graft_kmv_merge"),
-        kmvMergeBuilder)
-    }
-    if (!registry.functionExists(kmvEstimateId)) {
-      registry.registerFunction(
-        kmvEstimateId,
-        new ExpressionInfo(classOf[KmvEstimateExpr].getName, "graft_kmv_estimate"),
-        kmvEstimateBuilder)
-    }
-    if (!registry.functionExists(kmvIntersectId)) {
-      registry.registerFunction(
-        kmvIntersectId,
-        new ExpressionInfo(classOf[KmvIntersectExpr].getName, "graft_kmv_intersect"),
-        kmvIntersectBuilder)
-    }
-    if (!registry.functionExists(kmvUnionEstId)) {
-      registry.registerFunction(
-        kmvUnionEstId,
-        new ExpressionInfo(classOf[KmvUnionEstExpr].getName, "graft_kmv_union_est"),
-        kmvUnionEstBuilder)
-    }
-    if (!registry.functionExists(zorderId)) {
-      registry.registerFunction(
-        zorderId,
-        new ExpressionInfo(classOf[ZorderExpr].getName, "graft_zorder"),
-        zorderBuilder)
-    }
-    if (!registry.functionExists(kllSketchId)) {
-      registry.registerFunction(
-        kllSketchId,
-        new ExpressionInfo(classOf[KllSketchAgg].getName, "graft_kll_sketch"),
-        kllSketchBuilder)
-    }
-    if (!registry.functionExists(kllMergeId)) {
-      registry.registerFunction(
-        kllMergeId,
-        new ExpressionInfo(classOf[KllMergeAgg].getName, "graft_kll_merge"),
-        kllMergeBuilder)
-    }
-    if (!registry.functionExists(kllQuantilesId)) {
-      registry.registerFunction(
-        kllQuantilesId,
-        new ExpressionInfo(classOf[KllQuantilesExpr].getName, "graft_kll_quantiles"),
-        kllQuantilesBuilder)
-    }
-    if (!registry.functionExists(kllQuantilesContId)) {
-      registry.registerFunction(
-        kllQuantilesContId,
-        new ExpressionInfo(classOf[KllQuantilesContExpr].getName,
-          "graft_kll_quantiles_cont"),
-        kllQuantilesContBuilder)
-    }
-    if (!registry.functionExists(vecSumId)) {
-      registry.registerFunction(
-        vecSumId,
-        new ExpressionInfo(classOf[VecSumAgg].getName, "graft_vec_sum"),
-        vecSumBuilder)
-    }
-    if (!registry.functionExists(mlpGradId)) {
-      registry.registerFunction(
-        mlpGradId,
-        new ExpressionInfo(classOf[MlpGradExpr].getName, "graft_mlp_grad"),
-        mlpGradBuilder)
-    }
-    if (!registry.functionExists(mlpLogitId)) {
-      registry.registerFunction(
-        mlpLogitId,
-        new ExpressionInfo(classOf[MlpLogitExpr].getName, "graft_mlp_logit"),
-        mlpLogitBuilder)
+    functions.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
     }
     // library-embedding path for the optimizer rule (the extensions
     // path injects it at session build); extraOptimizations runs as
@@ -711,6 +347,14 @@ object GraftFunctions {
   def vecSum(spark: SparkSession, v: Column): Column = {
     register(spark)
     call_function("graft_vec_sum", v)
+  }
+
+  /** batch-local InfoNCE over one group → STRUCT<n, loss, hit>
+    * (native aggregate; InfoNceAgg). */
+  def infoNce(spark: SparkSession, id: Column, proj: Column,
+      tgt: Column): Column = {
+    register(spark)
+    call_function("graft_info_nce", id.cast("long"), proj, tgt)
   }
 
   /** per-row BCE gradient of the two-hidden-layer ReLU MLP head

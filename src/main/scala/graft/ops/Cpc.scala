@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** CPC forward-pass building blocks (SURVEY.md §2.6 W2 GRU recurrence,
@@ -12,6 +12,11 @@ import org.apache.spark.sql.functions._
   * is row-local: one series = one row, so the recurrence never crosses
   * a partition. Same step shape as a streaming
   * flatMapGroupsWithState update (§2.10).
+  *
+  * The loss is batch-local InfoNCE (`infoNce`, `T_CPC.py:73`): one
+  * grouped aggregate per batch, the native `graft_info_nce`, whose
+  * O(|batch|²) scores never leave the group — no all-pairs join, no
+  * window, one shuffle of the batch's rows.
   */
 object Cpc {
 
@@ -100,6 +105,22 @@ object Cpc {
     array((0 until w.h).map(i =>
       (lit(1.0) - z(i)) * n(i) + z(i) * hAt(i)): _*)
   }
+
+  /** A4/J2/A3 batch-local InfoNCE (`T_CPC.py:73`): `df` grouped by
+    * `batch`, each group scored by `graft_info_nce` over its rows'
+    * (`id`, `proj`, `tgt`) — ARRAY<DOUBLE> of one entry per prediction
+    * step. One row per batch: (batch_id, batch_n, info_nce = mean loss
+    * at 6 dp, self_match_pct = mean self-match accuracy × 100 at 4 dp),
+    * ordered by batch_id. */
+  def infoNce(df: DataFrame, batch: Column, id: Column, proj: Column,
+      tgt: Column): DataFrame =
+    df.groupBy(batch.as("batch_id"))
+      .agg(graft.expr.GraftFunctions.infoNce(df.sparkSession, id, proj, tgt)
+        .as("r"))
+      .select(col("batch_id"), col("r.n").as("batch_n"),
+        round(col("r.loss"), 6).as("info_nce"),
+        round(col("r.hit") * 100, 4).as("self_match_pct"))
+      .orderBy("batch_id")
 
   /** torch-convention GRU scan (zero initial state → final state). */
   def gruScanTorch(w: GruWeights, bhn: Seq[Double], xs: Column): Column =

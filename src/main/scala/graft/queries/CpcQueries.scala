@@ -42,6 +42,13 @@ object CpcQueries {
     * The ORACLE reproduces the whole pass in DuckDB (q75Sql below). */
   private def q75(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    Cpc.infoNce(q75Rows(s, dir), $"batch_id", $"user_id", $"proj", $"tgt")
+  }
+
+  /** q75's InfoNCE input, one row per series: (user_id, batch_id,
+    * proj, tgt), proj/tgt holding the k = 1, 2 projections and targets. */
+  private[graft] def q75Rows(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
     val e = events(s, dir)
       .withColumn("quality", pmod($"event_id", lit(16)).cast("int"))
     val series = SeriesOps.assemble(e, $"user_id", $"ts",
@@ -61,7 +68,7 @@ object CpcQueries {
         s, $"v", $"q", encW, encBias, conv2Kernel))
     // W4: deterministic anchor in [0.4L, L-K-1) via md5(user_id) —
     // seeded-random analogue that both engines could recompute
-    val anchored = encoded
+    encoded
       .withColumn("anchor", (lit(0.4) * $"series_len").cast("int") +
         pmod(conv(substring(md5($"series_key".cast("string")), 1, 8), 16, 10)
           .cast("long"),
@@ -71,58 +78,19 @@ object CpcQueries {
       // lambda interpreter per step × gate; CpcSpec pins bit-equality)
       .withColumn("ctx", graft.expr.GraftFunctions.gruScan(s,
         ArrayOps.prefix($"z", $"anchor" + 1), gru))
-      // W10: scalar projection of the 2-d context per step k (literal W_k)
-      .withColumn("proj1",
-        element_at($"ctx", 1) * 0.9 + element_at($"ctx", 2) * -0.4)
-      .withColumn("proj2",
-        element_at($"ctx", 1) * -0.3 + element_at($"ctx", 2) * 1.1)
-      // W6: future latent targets at anchor+k (guarded: len >= 12 and
-      // anchor < 0.4L + 0.6L - K - 1 + 1 keeps anchor+K in range)
-      .withColumn("tgt1", element_at($"z", $"anchor" + 1))
-      .withColumn("tgt2", element_at($"z", $"anchor" + 2))
-      .withColumn("batch_id", expr("series_key div 32"))
-      .select($"series_key".as("user_id"), $"batch_id",
-        $"proj1", $"proj2", $"tgt1", $"tgt2")
-      // materialize ONCE: this 6-column table feeds both sides of the
-      // all-pairs join AND the scores frame is consumed twice (perI,
-      // lse) — without the barrier the conv+GRU encoder chain above
-      // re-executes per consumer (noop-bench: 10.1 s → 7.0 s at sf0.1;
-      // the remaining cost is the single genuine encoder pass)
-      .localCheckpoint(true)
-    // J2: all-pairs scores within batch for each k; A4 stable
-    // log-softmax diagonal; A3 self-match accuracy
-    val a = anchored.select($"batch_id", $"user_id".as("i"),
-      $"proj1", $"proj2")
-    val b = anchored.select($"batch_id", $"user_id".as("j"),
-      $"tgt1", $"tgt2")
-    val scores = a.join(b, "batch_id")
-      .select($"batch_id", $"i", $"j",
-        explode(array(
-          struct(lit(1).as("k"), ($"proj1" * $"tgt1").as("sc")),
-          struct(lit(2).as("k"), ($"proj2" * $"tgt2").as("sc")))).as("ks"))
-      .select($"batch_id", $"i", $"j", $"ks.k", $"ks.sc")
-    val wArg = org.apache.spark.sql.expressions.Window
-      .partitionBy($"k", $"i").orderBy($"sc".desc, $"j")
-    val perI = scores
-      .withColumn("rn", row_number().over(wArg))
-      .groupBy($"batch_id", $"k", $"i")
-      .agg(max($"sc").as("m"),
-        sum(when($"j" === $"i", $"sc")).as("s_pos"),
-        max(when($"rn" === 1, $"j")).as("argmax_j"))
-    val lse = scores.join(
-        perI.select($"k".as("k2"), $"i".as("i2"), $"m"),
-        $"k" === $"k2" && $"i" === $"i2")
-      .groupBy($"k", $"i")
-      .agg((log(sum(exp($"sc" - $"m"))) + first($"m")).as("lse"))
-      .select($"k".as("k3"), $"i".as("i3"), $"lse")
-    perI.join(lse, $"k" === $"k3" && $"i" === $"i3")
-      .withColumn("loss", $"lse" - $"s_pos")
-      .withColumn("hit", when($"argmax_j" === $"i", 1.0).otherwise(0.0))
-      .groupBy($"batch_id")
-      .agg(countDistinct($"i").as("batch_n"),
-        round(avg($"loss"), 6).as("info_nce"),
-        round(avg($"hit") * 100, 4).as("self_match_pct"))
-      .orderBy($"batch_id")
+      // W10: scalar projection of the 2-d context per step k (literal
+      // W_k); W6: future latent targets at anchor+k (guarded: len >= 12
+      // and anchor < 0.4L + 0.6L - K - 1 + 1 keeps anchor+K in range).
+      // No checkpoint: the batch aggregate is the only consumer, so the
+      // encoder chain runs once
+      .select($"series_key".as("user_id"),
+        expr("series_key div 32").as("batch_id"),
+        array(
+          element_at($"ctx", 1) * 0.9 + element_at($"ctx", 2) * -0.4,
+          element_at($"ctx", 1) * -0.3 + element_at($"ctx", 2) * 1.1)
+          .as("proj"),
+        array(element_at($"z", $"anchor" + 1), element_at($"z", $"anchor" + 2))
+          .as("tgt"))
   }
 
   /** DuckDB oracle for the ENTIRE forward pass. The one-hot fuse makes

@@ -907,7 +907,7 @@ object DedupQueries {
     *
     * Scale: the corpus is tokenized/hashed ONCE — the segment stream
     * (digest + ints, no text) is materialized behind a localCheckpoint
-    * barrier (q75's double-consumption pattern; without it both the
+    * barrier (one producer, two consumers; without it both the
     * survivor aggregate and the join probe re-scan and re-md5 the
     * parquet), then consumed twice: one md5-key groupBy with map-side
     * partial min (the survivor table is |distinct segments|, not

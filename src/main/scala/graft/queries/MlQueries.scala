@@ -670,18 +670,20 @@ object MlQueries {
   }
 
   /** q106's held-out rows scored by every epoch's head:
-    * (n_Epochs, score, y, b), b the row's BCE. */
+    * (n_Epochs, score, y, b), b the row's BCE. The epochs' weights are
+    * stacked into one local frame keyed by n_Epochs, so the test rows
+    * meet every head through ONE broadcast join. */
   private[graft] def q106Scored(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d = gdData(s, dir)
     val train = d.filter($"vec_id" % 5 =!= 0)
     val test = d.filter($"vec_id" % 5 === 0)
-    def scoredAt(t: Int, w: DataFrame): DataFrame =
-      test.crossJoin(broadcast(w)).select(lit(t).as("n_Epochs"),
-        round(gdZ(s), 6).as("score"), $"y", gdBce(gdZ(s), $"y").as("b"))
-    val epochs = Seq.newBuilder[DataFrame]
-    gdTrain(s, train)((w, t) => epochs += scoredAt(t, w))
-    epochs.result().reduce(_ unionAll _)
+    // each epoch's state is a local frame: collecting it runs no job
+    val heads = Seq.newBuilder[(Int, Seq[Double])]
+    gdTrain(s, train)((w, t) => heads += t -> w.collect()(0).getSeq[Double](0))
+    test.crossJoin(broadcast(heads.result().toDF("n_Epochs", "w")))
+      .select($"n_Epochs", round(gdZ(s), 6).as("score"), $"y",
+        gdBce(gdZ(s), $"y").as("b"))
   }
 
   private lazy val q106Sql = {

@@ -17,8 +17,9 @@ import graft.ops.{ArrayOps, Cpc, Fft, SeriesOps}
   *
   * Scale notes: all per-series ops are row-local HOFs after ONE assembly
   * shuffle; InfoNCE's all-pairs is bounded by the batch group (J2 —
-  * batch-local semantics, `T_CPC.py:73`), so the join explodes at most
-  * |batch|² per group, never N².
+  * batch-local semantics, `T_CPC.py:73`): one grouped aggregate per
+  * batch (`Cpc.infoNce`) does |batch|² work in memory per group, never
+  * N², and shuffles each row once.
   */
 object SeqQueries {
 
@@ -181,35 +182,17 @@ object SeqQueries {
     * stable log-softmax diagonal loss + self-match accuracy. */
   private def q73(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val reps = events(s, dir)
+    Cpc.infoNce(q73Rows(s, dir), $"batch_id", $"user_id", $"rep", $"rep")
+  }
+
+  /** q73's InfoNCE input: (user_id, batch_id, rep), rep a one-step
+    * ARRAY<DOUBLE> that is both the projection and the target. */
+  private[graft] def q73Rows(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    events(s, dir)
       .groupBy($"user_id")
-      .agg((avg($"value") / 100.0).as("rep"))
+      .agg(array(avg($"value") / 100.0).as("rep"))
       .withColumn("batch_id", expr("user_id div 32"))
-    val a = reps.select($"batch_id", $"user_id".as("i"), $"rep".as("ri"))
-    val b = reps.select($"batch_id", $"user_id".as("j"), $"rep".as("rj"))
-    val scores = a.join(b, "batch_id").withColumn("sc", $"ri" * $"rj")
-    // deterministic argmax: rank within i on (sc desc, j asc) — the same
-    // window spec the oracle uses, so ties (if any) break identically
-    val wArg = Window.partitionBy($"i").orderBy($"sc".desc, $"j")
-    val perI = scores
-      .withColumn("rn", row_number().over(wArg))
-      .groupBy($"batch_id", $"i")
-      .agg(
-        max($"sc").as("m"),
-        sum(when($"j" === $"i", $"sc")).as("s_pos"),
-        max(when($"rn" === 1, $"j")).as("argmax_j"))
-    val lse = scores.join(perI.select($"i".as("i2"), $"m"), $"i" === $"i2")
-      .groupBy($"i")
-      .agg((log(sum(exp($"sc" - $"m"))) + first($"m")).as("lse"))
-      .select($"i".as("i3"), $"lse")
-    perI.join(lse, $"i" === $"i3")
-      .withColumn("loss", $"lse" - $"s_pos")
-      .withColumn("hit", when($"argmax_j" === $"i", 1.0).otherwise(0.0))
-      .groupBy($"batch_id")
-      .agg(count(lit(1)).as("batch_n"),
-        round(avg($"loss"), 6).as("info_nce"),
-        round(avg($"hit") * 100, 4).as("self_match_pct"))
-      .orderBy($"batch_id")
   }
 
   private val q73Sql =

@@ -145,10 +145,11 @@ object TrajectoryQueries {
       .agg(avg($"xbar").as("mu"), stddev_pop($"xbar").as("sd"))
     sup.join(st, Seq("Model", "n_Epochs"))
       .withColumn("score", headScore(($"xbar" - $"mu") / $"sd"))
-    // no checkpoint here: when q89/q90 consumed this in ONE action, an
-    // eager materialization measured ~1.5 s SLOWER than the shared
-    // subtree. rocAuc now computes it in two passes of its own (range
-    // sample, then sort), and q89 once more for its BCE
+    // no checkpoint: rocAuc computes this twice (range sample, then the
+    // sorted pass) and q89 once more for its BCE, yet an eager
+    // localCheckpoint did not pay (sf0.1, 4 cores, min of 3 reps, four
+    // runs a side: q89 1.18-1.53 s with it vs 1.29-1.71 s without, q90
+    // 0.92-1.06 s vs 0.80-0.85 s)
   }
 
   /** oracle CTEs for `supScored` (appended after blendSqlCte). */

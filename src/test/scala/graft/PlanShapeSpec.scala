@@ -203,12 +203,26 @@ class PlanShapeSpec extends SparkSpec {
     val lazyScored = MlQueries.q106Scored(spark, sf)
     assert(!lazyScored.queryExecution.executedPlan.toString
       .contains("CartesianProduct"))
-    val scored = lazyScored.localCheckpoint(true)
-    val all = jobsDuring(
-      Metrics.rocAuc(scored, $"score", $"y", Seq($"n_Epochs")))
-    val one = jobsDuring(Metrics.rocAuc(scored.filter($"n_Epochs" === 1),
-      $"score", $"y", Seq($"n_Epochs")))
+    def aucJobs(f: org.apache.spark.sql.DataFrame): (Int, Int) = (
+      jobsDuring(Metrics.rocAuc(f, $"score", $"y", Seq($"n_Epochs"))),
+      jobsDuring(Metrics.rocAuc(f.filter($"n_Epochs" === 1),
+        $"score", $"y", Seq($"n_Epochs"))))
+    val (all, one) = aucJobs(lazyScored.localCheckpoint(true))
     assert(all == one && all <= 3, s"all epochs: $all jobs, one epoch: $one")
+    // unmaterialized: every epoch's head arrives in ONE broadcast of the
+    // stacked weights, so scoring all epochs costs what one epoch does
+    val (lazyAll, lazyOne) = aucJobs(lazyScored)
+    assert(lazyAll == lazyOne,
+      s"unmaterialized: all epochs $lazyAll jobs, one epoch $lazyOne")
+  }
+
+  test("q73/q75: batch InfoNCE is one native aggregate, no window, no join") {
+    for (q <- Seq("q73_infonce", "q75_cpc_forward")) {
+      val p = plan(q)
+      assert(p.contains("graft_info_nce"), p.take(1500))
+      assert(!p.contains("Window"), p.take(1500))
+      assert(!p.contains("Join"), p.take(1500))
+    }
   }
 
   test("q111: range join is hash-keyed on the bin, never a nested loop") {

@@ -13,15 +13,21 @@
 # tmp/bench_pairs under the current directory), and its stderr to a
 # .log beside it.
 #
+# Each run's record, .bench_runs/WORKLOAD-seedSEED-trace0.json in its
+# checkout, is copied beside its JSON line.
+#
 # Then, for each end-to-end metric of BENCHMARK.json, it prints each
 # side's median and quartiles, the parent's quartile spread as a share
 # of its median, and in how many pairs the change was better. A gain
 # holds when the change is better in at least 9 of 10 pairs and the
-# median gap exceeds the parent's quartile spread.
+# median gap exceeds the parent's quartile spread. Last, for each query
+# of the workload, it prints each side's median warm execution (build
+# + plan + exec, every warm pass of every run), the gap, and in how
+# many pairs the change's own median was lower.
 set -euo pipefail
 
 if [ $# -lt 4 ]; then
-  sed -n '2,20p' "$0" >&2
+  sed -n '2,27p' "$0" >&2
   exit 2
 fi
 parent=$(cd "$1" && pwd)
@@ -39,6 +45,7 @@ run() { # side dir seed
   echo "[bench_pairs] $workload seed $3: $1" >&2
   (cd "$2" && python3 perfbench/run.py --workload "$workload" --seed "$3" \
     --seconds "$seconds" --trace 0) 2>"$f.log" | tail -n 1 >"$f.json"
+  cp "$2/.bench_runs/$workload-seed$3-trace0.json" "$f.record.json"
 }
 
 for seed in "$@"; do
@@ -81,4 +88,32 @@ for m in metrics:
     fmt = lambda q: "/".join(f"{v:.4g}" for v in q)
     print(f"{name:<18}{fmt(pq):>30}{fmt(cq):>30}{gap:>+9.1%}{iqr:>12.1%}"
           f"{wins:>4}/{len(p)}")
+
+def warm(side, seed):
+    """query -> its warm execution times in one run (failed ones left out)"""
+    with open(f"{out}/{side}-{workload}-{seed}.record.json") as f:
+        execs = json.load(f)["execs"]
+    by = {}
+    for e in execs:
+        if e["pass"] > 0 and e["error"] is None:
+            by.setdefault(e["query"], []).append(
+                e["build_s"] + e["plan_s"] + e["exec_s"])
+    return by
+
+recs = {side: [warm(side, s) for s in seeds] for side in ("parent", "change")}
+queries = sorted(set().union(*recs["parent"], *recs["change"]))
+print(f"\n{'query':<18}{'parent warm med':>16}{'change warm med':>16}"
+      f"{'gap':>9}{'wins':>7}")
+for q in queries:
+    pooled = {side: [t for r in recs[side] for t in r.get(q, [])]
+              for side in recs}
+    if not pooled["parent"] or not pooled["change"]:
+        print(f"{q:<18}  no warm executions on one side")
+        continue
+    pm, cm = (statistics.median(pooled[side]) for side in ("parent", "change"))
+    wins = sum(statistics.median(c[q]) < statistics.median(p[q])
+               for p, c in zip(recs["parent"], recs["change"])
+               if q in p and q in c)
+    print(f"{q:<18}{pm:>16.4f}{cm:>16.4f}{(cm - pm) / pm:>+9.1%}"
+          f"{wins:>4}/{len(seeds)}")
 EOF
