@@ -4,19 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // 200+ queries in one JVM leave dropped localCheckpoint RDD
-      // blocks awaiting weak-ref cleanup; the default 30 min periodic
-      // GC lets them pile into storage memory and inflate mid-registry
-      // timings (q134 measured 10.8 in-registry vs 1.1 solo-in-bench).
-      // One minute keeps the ContextCleaner draining between queries.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // warm-up, untimed: EVERY registered query once at sf0.001 under
     // the noop action the measurement uses. It warms class loading
     // (Spark ML's too), the JIT and each family's driver-side paths.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** temp perf scratch: count + describe jobs of one warm serve. */
@@ -8,13 +7,7 @@ object JobAudit {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q187_fully_served_rag")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(8)
     val q = graft.queries.Registry.byName(name)
     q.run(spark, sf).collect() // warm
     q.run(spark, sf).collect() // warm twice (indexes memoized)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-evidence dump for the optimization rounds: write
   * `.explain("formatted")` for the named registry queries to
   * `<outDir>/<qNN>_<tag>.txt` (the judge checks plan claims against
@@ -11,14 +9,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, tag, qlist) = args
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     qlist.split(",").map(_.trim).filter(_.nonEmpty).foreach { q =>
       val df = graft.queries.Registry.byName(q).run(spark, sf)

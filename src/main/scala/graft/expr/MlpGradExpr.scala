@@ -72,12 +72,8 @@ case class MlpGradExpr(children: Seq[Expression]) extends Expression {
   }
 
   def compute(xzA: ArrayData, wA: ArrayData, y: Double): ArrayData = {
-    val d = xzA.numElements()
-    val p = wA.numElements()
-    if (p != d * h + h + h * h + h + h + 1)
-      throw new IllegalArgumentException(
-        s"graft_mlp_grad: |w| = $p inconsistent with input dim $d, " +
-          s"hidden width $h (expect ${d * h + h + h * h + h + h + 1})")
+    MlpGradExpr.checkParams("graft_mlp_grad", wA.numElements(),
+      xzA.numElements(), h)
     val xz = xzA.toDoubleArray()
     val w = wA.toDoubleArray()
     new GenericArrayData(MlpGradExpr.grad(xz, w, y, h))
@@ -151,12 +147,8 @@ case class MlpLogitExpr(children: Seq[Expression]) extends Expression {
   }
 
   def compute(xzA: ArrayData, wA: ArrayData): Double = {
-    val d = xzA.numElements()
-    val p = wA.numElements()
-    if (p != d * h + h + h * h + h + h + 1)
-      throw new IllegalArgumentException(
-        s"graft_mlp_logit: |w| = $p inconsistent with input dim $d, " +
-          s"hidden width $h (expect ${d * h + h + h * h + h + h + 1})")
+    MlpGradExpr.checkParams("graft_mlp_logit", wA.numElements(),
+      xzA.numElements(), h)
     MlpGradExpr.logit(xzA.toDoubleArray(), wA.toDoubleArray(), h)
   }
 
@@ -183,6 +175,16 @@ case class MlpLogitExpr(children: Seq[Expression]) extends Expression {
 }
 
 object MlpGradExpr {
+  /** throws unless `p` is the flat parameter count at input dim `d`
+    * and hidden width `h`. */
+  def checkParams(fn: String, p: Int, d: Int, h: Int): Unit = {
+    val want = d * h + h + h * h + h + h + 1
+    if (p != want)
+      throw new IllegalArgumentException(
+        s"$fn: |w| = $p inconsistent with input dim $d, " +
+          s"hidden width $h (expect $want)")
+  }
+
   /** forward pass to the pre-sigmoid logit — the shared front half of
     * `grad` (same dot fold order, Math.max relu, bias-after-fold). */
   def logit(xz: Array[Double], w: Array[Double], h: Int): Double = {

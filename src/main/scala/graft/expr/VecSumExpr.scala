@@ -9,8 +9,8 @@ import org.apache.spark.sql.types._
 
 /** `graft_vec_sum(v ARRAY<DOUBLE>)` → ARRAY<DOUBLE> — elementwise sum
   * of equal-length double arrays: the partial-aggregable reduction
-  * under every dense-vector mean (embedding centroid numerators,
-  * per-epoch gradient averages in the declarative GD loops). One
+  * under a dense-vector mean, for SQL callers (the GD loops sum their
+  * gradients through IterativeState.reduce instead). One
   * fixed-size buffer per group however wide the vector — the
   * alternative spellings don't scale: P separate `avg(v[i])` columns
   * stop codegenning in the hundreds, and posexplode→groupBy(dim)
@@ -25,10 +25,6 @@ import org.apache.spark.sql.types._
   * arrays are skipped; a length mismatch within a group throws
   * (vector columns are fixed-width by schema contract). Empty group →
   * null (like sum).
-  *
-  * Ref behavior: the reference's per-batch `loss.backward()` gradient
-  * accumulation (unsupervised.py:220-228) — here the full-batch
-  * gradient is ONE distributed aggregation emitting one dense array.
   */
 final class VecSumBuf {
   var sums: Array[Double] = null

@@ -1,6 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Divide, Literal, Round,
+  Sqrt, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import graft.Tables._
@@ -392,12 +396,12 @@ object MlQueries {
   // before argmin (first-min tie-break = lowest cell id on both
   // engines); updated centroid means round to 6 dp. An empty cell
   // keeps its previous centroid (the standard Lloyd fallback).
-  // Scale posture: assignment is a row-local fold against ONE
-  // broadcast centroid row (no per-row shuffle); each update is one
-  // (cell, dim) partial aggregation — k·d groups, never a collect.
+  // Scale posture: each iteration is one IterativeState.reduce epoch —
+  // one scan whose tasks assign rows against the k×d centroids on the
+  // driver and return per-cell partial sums; never a collect.
   // ---------------------------------------------------------------
   private val KM_K = 4
-  private val KM_ITER = 2
+  private[graft] val KM_ITER = 2
   private val KM_DIM = 64
 
   /** init centroid component, integer-exact across engines:
@@ -415,57 +419,77 @@ object MlQueries {
        |        generate_series(0, ${KM_DIM - 1}) s2(dim))
        |  GROUP BY cell))""".stripMargin
 
-  /** nearest-centroid id against a runtime array-of-arrays column:
-    * squared distances (rounded to 9 dp), first-min tie-break. */
-  private def kmAssign(v: org.apache.spark.sql.Column,
-      cmat: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val dists = transform(cmat, c =>
-      round(aggregate(zip_with(v, c, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, t) => acc + t), 9))
-    (array_position(dists, array_min(dists)) - 1).cast("int")
-  }
-
   private val kmDistsSql: String =
     s"""list_transform(m, c ->
        | round(list_sum(list_transform(generate_series(1, $KM_DIM),
        |   i -> (v[i] - c[i]) * (v[i] - c[i]))), 9))""".stripMargin
 
-  private def q98(s: SparkSession, dir: String): DataFrame = {
+  /** q98's training vectors `v` and its k init centroids as (cell, w). */
+  private[graft] def kmInputs(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
     import s.implicits._
     val e = embeddings(s, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    val initRow = Seq(Tuple1(
-      (0 until KM_K).map(c => (0 until KM_DIM).map(d => kmInitW(c, d))))
-    ).toDF("m")
-    val grid = (for { c <- 0 until KM_K; d <- 0 until KM_DIM }
-      yield (c, d)).toDF("cell", "dim")
-    // quantize-then-cut epoch loop (graft.ops.IterativeState): the
-    // ONE-ROW centroid table is rebuilt per epoch by ordered gathers
-    // and eagerly checkpointed, so the next assignment (and the final
-    // norms branch) read a materialized k×d matrix
-    var assigned: DataFrame = null
-    val cmat = IterativeState.epochs(initRow, KM_ITER) { (cm, _) =>
-      assigned = e.crossJoin(broadcast(cm))
-        .withColumn("cell", kmAssign($"v", $"m"))
-        .select($"vec_id", $"v", $"cell")
-      val means = assigned
-        .select($"cell", posexplode($"v").as(Seq("dim", "x")))
-        .groupBy($"cell", $"dim").agg(round(avg($"x"), 6).as("mx"))
-      grid.join(broadcast(means), Seq("cell", "dim"), "left")
-        .crossJoin(broadcast(cm))
-        .withColumn("mx", coalesce($"mx",
-          element_at(element_at($"m", $"cell" + 1), $"dim" + 1)))
-        .groupBy($"cell")
-        .agg(IterativeState.gather($"dim", $"mx").as("r"))
-        .agg(IterativeState.gather($"cell", $"r").as("m"))
+      .select($"embedding".cast("array<double>").as("v"))
+    val init = (0 until KM_K)
+      .map(c => (c, (0 until KM_DIM).map(d => kmInitW(c, d)))).toDF("cell", "w")
+    (e, init)
+  }
+
+  /** Lloyd's iterations over `e`(v) from `init`(cell, w), one reduce
+    * epoch each: a row adds v to its nearest centroid's cell, and a
+    * cell's centroid becomes round(Σv/n, 6). Returns the centroids and
+    * the last iteration's cell sizes. */
+  private[graft] def kmTrain(e: DataFrame, init: DataFrame, iters: Int)
+      : (DataFrame, Map[Row, Long]) = {
+    val round6 = new IterativeState.SparkRound(6)
+    IterativeState.reduce(e.select(col("v")), init, iters)(new KmFold(_)) {
+      (_, sum, n) => sum.map(x => round6(x / n.toDouble)) }
+  }
+
+  /** q98's rows (v). The key is the nearest centroid as the SQL
+    * spelling computes it: per centroid an in-order fold of (x−c)²
+    * from 0.0, Spark's round to 9 dp, then the first minimum under
+    * Spark's double ordering. The contribution is v. */
+  private final class KmFold(ep: IterativeState.Epoch)
+      extends IterativeState.Fold {
+    private val round9 = new IterativeState.SparkRound(9)
+    def key(r: InternalRow): Int = if (r.isNullAt(0)) -1 else {
+      val v = r.getArray(0)
+      var best = -1
+      var bestD = 0.0
+      var k = 0
+      while (k < ep.w.length) {
+        val c = ep.w(k)
+        require(v.numElements() == c.length,
+          s"kmeans: ${v.numElements()}-dim row for ${c.length}-dim centroids")
+        var d = 0.0
+        var i = 0
+        while (i < c.length) { val t = v.getDouble(i) - c(i); d += t * t; i += 1 }
+        d = round9(d)
+        if (best < 0 || SQLOrderingUtil.compareDoubles(d, bestD) < 0) {
+          best = k; bestD = d
+        }
+        k += 1
+      }
+      best
     }
-    val sizes = assigned.groupBy($"cell").agg(count(lit(1)).as("n"))
-    val norms = cmat.select(posexplode($"m").as(Seq("cell0", "cv")))
-      .select(($"cell0").cast("int").as("cell"),
+    def add(r: InternalRow, k: Int, sum: Array[Double]): Unit = {
+      val v = r.getArray(0)
+      var i = 0
+      while (i < sum.length) { sum(i) += v.getDouble(i); i += 1 }
+    }
+  }
+
+  private def q98(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val (e, init) = kmInputs(s, dir)
+    val (cm, sizes) = kmTrain(e, init, KM_ITER)
+    cm.collect().toSeq
+      .map(r => (r.getInt(0), sizes(Row(r.getInt(0))), r.getSeq[Double](1)))
+      .toDF("cell", "n", "cv")
+      .select($"cell", $"n",
         round(sqrt(graft.ops.ArrayOps.dot($"cv", $"cv")), 5)
           .as("centroid_norm"))
-    norms.join(sizes, Seq("cell"), "left")
-      .select($"cell", coalesce($"n", lit(0L)).as("n"), $"centroid_norm")
       .orderBy($"cell")
   }
 
@@ -511,16 +535,15 @@ object MlQueries {
   // the FULL oracle — the TRAINING counterpart to q97's forward
   // scorer. Spark ML's LR fit (q63) is an iterative black box and
   // rows-only; plain full-batch GD with a fixed iteration count is a
-  // pure dataflow: each epoch is ONE distributed aggregation
-  // (grad_j = avg((sigmoid(w·x) − y) · x_j)) followed by a one-row
-  // weight update — exactly how a declarative training loop looks at
-  // 100 TB (the gradient is a partial-aggregable sum; the weight
-  // state is a broadcast one-row table, never a collect; lineage is
-  // cut per epoch by an eager localCheckpoint, as in q98).
-  // Cross-engine determinism: weights round to 9 dp after each
+  // pure dataflow: each epoch is ONE distributed reduction
+  // (grad_j = avg((sigmoid(w·x) − y) · x_j)) followed by a weight
+  // update — exactly how a declarative training loop looks at 100 TB
+  // (the gradient is a partial-aggregable sum; the weights ride the
+  // driver, training rows never do: IterativeState.logisticGd).
+  // Cross-engine determinism: weights round to 6 dp after each
   // update (quantized state absorbs sub-ulp exp/summation-order
-  // drift), outputs to 6 dp. The emitted table is the reference's
-  // loss-per-epoch training curve (`unsupervised.py:247-263` logs
+  // drift; see gdTrain), outputs to 6 dp. The emitted table is the
+  // reference's loss-per-epoch training curve (`unsupervised.py:247-263` logs
   // exactly this shape): iter × (weights, train/test BCE).
   // ---------------------------------------------------------------
   private[graft] val GD_ITER = 5
@@ -559,10 +582,10 @@ object MlQueries {
     * whose cross-engine summation-order noise (~1e-14) sits only ~4
     * orders below a 5e-10 half-step — the q133 rank-grid rationale;
     * 1e-6 is still ~3 orders below the ~1e-3 update scale, so the
-    * trajectory is unaffected. Row-local fixed-order sums (kmAssign,
-    * dist2, graft_pq_adc) keep the 9 dp convention — their fold order
-    * is pinned, so their noise is 0-to-1e-15. `onEpoch` sees each
-    * epoch's one-row weight frame. */
+    * trajectory is unaffected. Row-local fixed-order sums (q98's
+    * distances, dist2, graft_pq_adc) keep the 9 dp convention — their
+    * fold order is pinned, so their noise is 0-to-1e-15. `onEpoch`
+    * sees each epoch's one-row weight frame. */
   private def gdTrain(s: SparkSession, train: DataFrame)(
       onEpoch: (DataFrame, Int) => Unit): Unit = {
     import s.implicits._
@@ -711,15 +734,15 @@ object MlQueries {
   // counterpart to q100: Spark ML's PCA (q64) solves the Gramian
   // eigenproblem iteratively (rows-only); the power method with a
   // fixed iteration count and literal md5 init is a pure dataflow.
-  // One iteration = one distributed pass: s_i = xc_i · v (row-local),
-  // u_j = avg(s_i · xc_ij) (a (dim)-keyed partial aggregation — this
-  // IS X'ᵀX'v/n without ever materializing the covariance matrix,
-  // which is how PCA scales to 100 TB), then a one-row normalize +
-  // 9 dp quantize + checkpoint, as in q98/q100. Output is q64's
+  // One iteration = one IterativeState.reduce epoch: s_i = xc_i · v
+  // (row-local), u = Σ s_i · xc_i / n (per-task partial sums merged on
+  // the driver — this IS X'ᵀX'v/n without ever materializing the
+  // covariance matrix, which is how PCA scales to 100 TB), then the
+  // driver normalizes and rounds to 6 dp. Output is q64's
   // latent-separation shape: per-label mean/mean-square projection
   // on the converged first component.
   // ---------------------------------------------------------------
-  private val PI_ITER = 3
+  private[graft] val PI_ITER = 3
   private val PI_DIM = 64
 
   /** init component, integer-exact across engines (kmInitW formula,
@@ -727,13 +750,16 @@ object MlQueries {
   private def piInitW(d: Int): Double =
     graft.ops.HashKeys.gridUniform(s"pi:$d")
 
-  private def q101(s: SparkSession, dir: String): DataFrame = {
+  /** q101's centered rows (vec_id, label, xc) and its init component
+    * as a one-key state (w). */
+  private[graft] def piInputs(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
     import s.implicits._
     val e = embeddings(s, dir)
       .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
     // per-dim mean (6 dp — full-corpus avg, so the gdTrain coarse-grid
     // rationale applies) as a one-row broadcast array — the centering
-    // vector; same (dim)-keyed partial-agg shape as the update step
+    // vector
     val c = e.select(posexplode($"v").as(Seq("dim", "x")))
       .groupBy($"dim").agg(round(avg($"x"), 6).as("m"))
       .agg(IterativeState.gather($"dim", $"m").as("c"))
@@ -741,21 +767,44 @@ object MlQueries {
     val d = e.crossJoin(broadcast(c))
       .select($"vec_id", $"label",
         zip_with($"v", $"c", (x, m) => x - m).as("xc"))
-    val v0: DataFrame =
-      Seq(Tuple1((0 until PI_DIM).map(piInitW))).toDF("pv")
-    // quantize-then-cut epoch loop (graft.ops.IterativeState)
-    val v = IterativeState.epochs(v0, PI_ITER) { (pv, _) =>
-      val u = d.crossJoin(broadcast(pv))
-        .withColumn("s", graft.expr.GraftFunctions.dot(s, $"xc", $"pv"))
-        .select($"s", posexplode($"xc").as(Seq("dim", "xj")))
-        .groupBy($"dim").agg(avg($"s" * $"xj").as("u"))
-      u.agg(IterativeState.gather($"dim", $"u").as("uv"))
-        .select(transform($"uv", x =>
-          round(x / sqrt(graft.expr.GraftFunctions.dot(s, $"uv", $"uv")), 6))
-          .as("pv"))
+    (d, Seq(Tuple1((0 until PI_DIM).map(piInitW))).toDF("w"))
+  }
+
+  /** power iteration over `d`(xc) from `v0`(w), one reduce epoch per
+    * step: a row adds s·xc with s = graft_dot(xc, v); the driver sets
+    * u = Σ/n and v_j = round(u_j / sqrt(graft_dot(u, u)), 6), with
+    * Spark's own Divide, Sqrt and Round. */
+  private[graft] def piTrain(d: DataFrame, v0: DataFrame, iters: Int)
+      : DataFrame =
+    IterativeState.reduce(d.select(col("xc")), v0, iters)(new PiFold(_)) {
+      (_, sum, n) =>
+        val u = sum.map(_ / n.toDouble)
+        val ud = UnsafeArrayData.fromPrimitiveArray(u)
+        val norm = Sqrt(Literal(graft.expr.DotExpr.compute(ud, ud)))
+        u.map(x => Round(Divide(Literal(x), norm), Literal(6)).eval()
+          .asInstanceOf[Double])
+    }._1
+
+  /** q101's rows (xc): one key; the contribution is s·xc. */
+  private final class PiFold(ep: IterativeState.Epoch)
+      extends IterativeState.Fold {
+    private val v = UnsafeArrayData.fromPrimitiveArray(ep.w(0))
+    def key(r: InternalRow): Int = if (r.isNullAt(0)) -1 else 0
+    def add(r: InternalRow, k: Int, u: Array[Double]): Unit = {
+      val xc = r.getArray(0)
+      require(xc.numElements() == u.length,
+        s"power iteration: ${xc.numElements()}-dim row for ${u.length} dims")
+      val s = graft.expr.DotExpr.compute(xc, v)
+      var i = 0
+      while (i < u.length) { u(i) += s * xc.getDouble(i); i += 1 }
     }
-    d.crossJoin(broadcast(v))
-      .withColumn("s", graft.expr.GraftFunctions.dot(s, $"xc", $"pv"))
+  }
+
+  private def q101(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val (d, v0) = piInputs(s, dir)
+    d.crossJoin(broadcast(piTrain(d, v0, PI_ITER)))
+      .withColumn("s", graft.expr.GraftFunctions.dot(s, $"xc", $"w"))
       .groupBy($"label")
       .agg(count(lit(1)).as("n"),
         round(avg($"s"), 4).as("avg_pc1"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.functions.array_to_vector
 import graft.ops.{IterativeState, Metrics}
@@ -420,9 +421,10 @@ object TrajectoryQueries {
           .as("x"))
   }
 
-  /** q137's probe inputs: the standardized TRAIN rows as (n_Epochs,
-    * Model, x, y) for the trainer, the standardized TEST rows (raw `x`
-    * and standardized `xz`), and the 9-cell zero weight state. */
+  /** The probe grid's inputs (q137, q160): the standardized TRAIN rows
+    * as (n_Epochs, Model, x, y) for a trainer, the standardized TEST
+    * rows (raw `x` and standardized `xz`), and the 9 cells with a zero
+    * 7-dim weight state. */
   private[graft] def gridProbeInputs(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     import s.implicits._
@@ -593,35 +595,34 @@ object TrajectoryQueries {
   //  - hidden width 16, not the reference's 64: the reference feeds a
   //    64-dim CPC embedding, this probe feeds the 7-dim padded grid
   //    features — 64×64 on 7 inputs is ~4.7k parameters of pure
-  //    overparameterization, and a 4.7k-wide gradient breaks both
-  //    engines' single-aggregation epoch (Spark stops codegenning
-  //    ~hundreds of agg columns; the oracle's per-step SQL text goes
-  //    megabyte). Width is config, depth/activation/loss are the
+  //    overparameterization, and at that width the oracle's per-step
+  //    SQL text goes megabyte (the Spark trainer runs width 64 too:
+  //    EpochReducerSpec). Width is config, depth/activation/loss are the
   //    architecture. q88's ClassifierNN cells (true 64×64 Spark ML)
   //    stay the fidelity twin; TrajectorySpec brackets this grid
   //    against them.
   //
-  // The epoch is ONE aggregation (the q137 discipline): the full
-  // 417-dim backprop gradient is built per row as a compact HOF
-  // expression chain (transform/flatten lambdas — expression-tree size
-  // independent of width) and reduced with graft_vec_sum (one
-  // fixed-size buffer per cell, partial-aggregable, one shuffle of 9
-  // keys per epoch). Weight state: a 9-row broadcast table holding the
-  // flat parameter array; md5-derived init (the q97 formula, ±0.125)
+  // Each GD step is ONE IterativeState.reduce epoch (the q137
+  // discipline): a task computes each row's full 417-dim backprop
+  // gradient with the native kernel (MlpGradExpr.grad) and adds it to
+  // its cell's partial sum; the driver merges the nine cells' sums and
+  // sets w ← round(w − lr·Σ/n, 6). Weight state: nine flat parameter
+  // arrays on the driver; md5-derived init (the q97 formula, ±0.125)
   // breaks hidden-unit symmetry identically in both engines; weights
   // round to 6 dp per step so cross-engine float drift cannot compound
   // (IterativeState contract). ReLU gates stay deterministic: they
   // compare z-values computed row-locally from identical rounded
   // weights and identical xz on both sides.
   //
-  // Scale shape = q137's: grid cells multiply shuffle KEYS, never
-  // passes; each epoch scans the checkpointed rep table once; state is
-  // O(model). 100 TB: unchanged plan, the scan is the only data touch.
+  // Scale shape = q137's: grid cells multiply partial-sum KEYS, never
+  // passes; each epoch scans the checkpointed training table once;
+  // state is O(model). 100 TB: unchanged plan, the scan is the only
+  // data touch.
   // ---------------------------------------------------------------
-  private val MlpH = 16     // hidden width (see fidelity note above)
-  private val MlpIter = 16  // full-batch GD steps per cell
-  private val MlpLr = 2.0   // on TRAIN-z-scored features (q137's
-                            // conditioning argument)
+  private[graft] val MlpH = 16    // hidden width (see fidelity note above)
+  private[graft] val MlpIter = 16 // full-batch GD steps per cell
+  private[graft] val MlpLr = 2.0  // on TRAIN-z-scored features (q137's
+                                  // conditioning argument)
   private val MlpD = GridDim
   private val MlpW2Off = MlpD * MlpH + MlpH            // after W1, b1
   private val MlpB2Off = MlpW2Off + MlpH * MlpH        // after W2
@@ -632,148 +633,56 @@ object TrajectoryQueries {
   private def mdwInit(tag: String): Double =
     ((graft.ops.HashKeys.md5Prefix32(tag) % 1000).toDouble / 999.0 - 0.5) * 0.25
 
-  /** the flat init vector: [W1 (j,i)-major | b1 | W2 (j,i)-major | b2
-    * | w3 | b3], 0-based md5 tags re-derived identically in SQL. */
-  private lazy val mlpInit: Seq[Double] =
-    (for { j <- 0 until MlpH; i <- 0 until MlpD } yield
+  /** the flat init vector at hidden width `h`: [W1 (j,i)-major | b1 |
+    * W2 (j,i)-major | b2 | w3 | b3], 0-based md5 tags re-derived
+    * identically in SQL. */
+  private[graft] def mlpInit(h: Int): Seq[Double] =
+    (for { j <- 0 until h; i <- 0 until MlpD } yield
       mdwInit(s"mw1:$j:$i")) ++
-    (0 until MlpH).map(j => mdwInit(s"mb1:$j")) ++
-    (for { j <- 0 until MlpH; i <- 0 until MlpH } yield
+    (0 until h).map(j => mdwInit(s"mb1:$j")) ++
+    (for { j <- 0 until h; i <- 0 until h } yield
       mdwInit(s"mw2:$j:$i")) ++
-    (0 until MlpH).map(j => mdwInit(s"mb2:$j")) ++
-    (0 until MlpH).map(j => mdwInit(s"mw3:$j")) :+
+    (0 until h).map(j => mdwInit(s"mb2:$j")) ++
+    (0 until h).map(j => mdwInit(s"mw3:$j")) :+
     mdwInit("mb3")
 
-  /** forward pass to the logit: adds z1, a1, z2, a2, u to a frame with
-    * xz (z-scored features) and w (flat parameters). Every sum is an
-    * in-order left fold (graft_dot ≡ the oracle's list_sum) so both
-    * engines compute identical doubles. The production plan runs the
-    * NATIVE kernels (graft_mlp_grad / graft_mlp_logit, MlpGradExpr):
-    * the interpreted HOF chain measured ~37 s of the sf3 wall-clock
-    * for the 81k-row scoring pass alone, and MlpGradSpec pins the
-    * kernels bit-equal to the HOF spelling it retains as the
-    * specification twin — so the oracle hash is unchanged by
-    * construction (the q75/q97 discipline). */
+  /** the MLP head's full-batch GD at hidden width `h`: `iters` reduce
+    * epochs over `train`(n_Epochs, Model, x, y) from `w0`(n_Epochs,
+    * Model, w). The per-row gradient is MlpGradExpr's native kernel,
+    * which MlpGradSpec pins bit-equal to the HOF backprop spelling (so
+    * the oracle hash is unchanged by construction — the q75/q97
+    * discipline); q160 runs h = MlpH, and EpochReducerSpec the
+    * reference's true width 64 on one cell. */
+  private[graft] def mlpGd(train: DataFrame, w0: DataFrame, h: Int,
+      iters: Int): DataFrame =
+    IterativeState.reduce(train.select(col("n_Epochs"), col("Model"),
+        col("x"), col("y").cast("double")), w0, iters)(new MlpFold(h, _))(
+      IterativeState.gdStep(MlpLr))._1
 
-  /** WIDTH-64 FIDELITY PROBE (WidthProbeSpec): the q160 epoch at the
-    * reference's true hidden width (`unsupervised.py`'s 64×64 body).
-    * The ~4.7k-double gradient splits across `shards` graft_vec_sum
-    * buffers (slice → vecSum each → concat) instead of one giant
-    * buffer, so the one-aggregation-per-epoch discipline survives
-    * the width that motivated q160's width-16 gate (hundreds of agg
-    * columns break codegen; a 4.7k-wide SINGLE buffer is fine for
-    * the kernel but this pins the sharded path a 100 TB run would
-    * use to bound per-buffer copy sizes). Elementwise-sum slicing is
-    * exact — the spec pins shards=4 ≡ shards=1 bit-for-bit on the
-    * final weights. One (n_Epochs, Model) cell; returns the final
-    * flat weight vector. */
-  private[graft] def mlpGdWidthProbe(s: SparkSession, dir: String,
-      h: Int, iters: Int, shards: Int): Array[Double] = {
-    import s.implicits._
-    val u = gridData(s, dir)
-      .filter($"n_Epochs" === Epochs && $"Model" === "T_CPC")
-      .localCheckpoint(true)
-    val rawTrain = u.filter($"user_id" % 5 =!= 0)
-    val st = rawTrain
-      .select($"n_Epochs", $"Model", posexplode($"x").as(Seq("dim", "xj")))
-      .groupBy($"n_Epochs", $"Model", $"dim")
-      .agg(round(avg($"xj"), 6).as("mu"),
-        round(stddev_pop($"xj"), 6).as("sd"))
-      .groupBy($"n_Epochs", $"Model")
-      .agg(IterativeState.gather($"dim", $"mu").as("mu"),
-        IterativeState.gather($"dim", $"sd").as("sd"))
-    val train = rawTrain.join(broadcast(st), Seq("n_Epochs", "Model"))
-      .withColumn("xz", zip_with($"x", arrays_zip($"mu", $"sd"),
-        (v, ms) => when(ms("sd") > 1e-9, (v - ms("mu")) / ms("sd"))
-          .otherwise(v)))
-      .select($"n_Epochs", $"Model", $"y", $"xz")
-      .localCheckpoint(true)
-    val d = MlpD
-    val p = d * h + h + h * h + h + h + 1
-    val init: Seq[Double] =
-      (for { j <- 0 until h; i <- 0 until d } yield
-        mdwInit(s"mw1:$j:$i")) ++
-      (0 until h).map(j => mdwInit(s"mb1:$j")) ++
-      (for { j <- 0 until h; i <- 0 until h } yield
-        mdwInit(s"mw2:$j:$i")) ++
-      (0 until h).map(j => mdwInit(s"mb2:$j")) ++
-      (0 until h).map(j => mdwInit(s"mw3:$j")) :+
-      mdwInit("mb3")
-    require(init.size == p)
-    // shard bounds: `shards` contiguous slices covering 1..p
-    val cut = (0 to shards).map(i => (p.toLong * i / shards).toInt)
-    val bounds = cut.sliding(2).map { case Seq(a, b) => (a + 1, b - a) }.toSeq
-    val w0 = Seq((Epochs, "T_CPC")).toDF("n_Epochs", "Model")
-      .withColumn("w", array(init.map(lit(_)): _*))
-    val wN = IterativeState.epochs(w0, iters) { (w, _) =>
-      val fwd = train.join(broadcast(w), Seq("n_Epochs", "Model"))
-        .withColumn("g", graft.expr.GraftFunctions.mlpGrad(
-          s, $"xz", $"w", $"y".cast("double"), h))
-      val aggs = bounds.zipWithIndex.map { case ((off, len), i) =>
-        graft.expr.GraftFunctions.vecSum(s,
-          slice($"g", off, len)).as(s"gs$i")
-      } :+ count(lit(1)).as("nr")
-      val gsum = fwd.groupBy($"n_Epochs", $"Model")
-        .agg(aggs.head, aggs.tail: _*)
-        .withColumn("gs",
-          concat((0 until shards).map(i => col(s"gs$i")): _*))
-      w.join(gsum, Seq("n_Epochs", "Model"))
-        .select($"n_Epochs", $"Model",
-          zip_with($"w", $"gs",
-            (wk, gk) => round(wk - lit(MlpLr) * (gk / $"nr"), 6)).as("w"))
+  /** mlpGd's rows (n_Epochs, Model, x, y): keyed by cell; the
+    * contribution is the row's backprop gradient. */
+  private final class MlpFold(h: Int, ep: IterativeState.Epoch)
+      extends IterativeState.Fold {
+    def key(r: InternalRow): Int =
+      if (r.isNullAt(2) || r.isNullAt(3)) -1 else ep.keyOf(r)
+    def add(r: InternalRow, k: Int, sum: Array[Double]): Unit = {
+      val xz = r.getArray(2).toDoubleArray()
+      val w = ep.w(k)
+      graft.expr.MlpGradExpr.checkParams("mlpGd", w.length, xz.length, h)
+      val g = graft.expr.MlpGradExpr.grad(xz, w, r.getDouble(3), h)
+      var i = 0
+      while (i < sum.length) { sum(i) += g(i); i += 1 }
     }
-    wN.select($"w").head().getSeq[Double](0).toArray
   }
 
   private def q160(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val u = gridData(s, dir)
-      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
-      .localCheckpoint(true)
-    val rawTrain = u.filter($"user_id" % 5 =!= 0)
-    val st = rawTrain
-      .select($"n_Epochs", $"Model", posexplode($"x").as(Seq("dim", "xj")))
-      .groupBy($"n_Epochs", $"Model", $"dim")
-      .agg(round(avg($"xj"), 6).as("mu"),
-        round(stddev_pop($"xj"), 6).as("sd"))
-      .groupBy($"n_Epochs", $"Model")
-      .agg(IterativeState.gather($"dim", $"mu").as("mu"),
-        IterativeState.gather($"dim", $"sd").as("sd"))
-      .localCheckpoint(true)
-    def zscore(df: DataFrame): DataFrame =
-      df.join(broadcast(st), Seq("n_Epochs", "Model"))
-        .withColumn("xz", zip_with($"x", arrays_zip($"mu", $"sd"),
-          (v, ms) => when(ms("sd") > 1e-9, (v - ms("mu")) / ms("sd"))
-            .otherwise(v)))
-        .select($"n_Epochs", $"Model", $"user_id", $"y", $"xz")
-    // z-scored features are re-read 16 times (one scan per GD step):
-    // materialize them ONCE instead of re-running the zscore join +
-    // zip_with under every epoch's aggregation
-    val train = zscore(rawTrain).localCheckpoint(true)
-    val test = zscore(u.filter($"user_id" % 5 === 0))
-    val w0: DataFrame = Seq("T_CPC", "TS_CPC", "S_CPC")
-      .flatMap(m => (0 to Epochs by 2).map(e => (e, m)))
-      .toDF("n_Epochs", "Model")
-      .withColumn("w", array(mlpInit.map(lit): _*))
-    val wN = IterativeState.epochs(w0, MlpIter) { (w, _) =>
-      // per-row gradient via the native kernel (MlpGradSpec pins it
-      // bit-equal to the HOF backprop twin below, so the oracle hash
-      // is unchanged by construction — the q75/q97 discipline)
-      val fwd = train.join(broadcast(w), Seq("n_Epochs", "Model"))
-        .withColumn("g", graft.expr.GraftFunctions.mlpGrad(
-          s, $"xz", $"w", $"y".cast("double"), MlpH))
-      // aggregate on the CELL KEYS only — w is functionally dependent
-      // on them, and grouping by the 417-double array would hash and
-      // carry a 3.3 KB key per input row through the partial agg; the
-      // 9-row state re-attaches after the reduce instead
-      val gsum = fwd.groupBy($"n_Epochs", $"Model")
-        .agg(graft.expr.GraftFunctions.vecSum(s, $"g").as("gs"),
-          count(lit(1)).as("nr"))
-      w.join(gsum, Seq("n_Epochs", "Model"))
-        .select($"n_Epochs", $"Model",
-          zip_with($"w", $"gs",
-            (wk, gk) => round(wk - lit(MlpLr) * (gk / $"nr"), 6)).as("w"))
-    }
+    val (train, test, cells) = gridProbeInputs(s, dir)
+    // the z-scored features are re-read MlpIter times (one scan per GD
+    // step): materialize them ONCE instead of re-running the zscore
+    // join + zip_with under every epoch
+    val wN = mlpGd(train.localCheckpoint(true),
+      cells.withColumn("w", array(mlpInit(MlpH).map(lit): _*)), MlpH, MlpIter)
     val scored = test.join(broadcast(wN), Seq("n_Epochs", "Model"))
       .withColumn("u", graft.expr.GraftFunctions.mlpLogit(
         s, $"xz", $"w", MlpH))
@@ -885,7 +794,7 @@ object TrajectoryQueries {
     Q("q137_gd_probe_grid", q137, Some(q137Sql),
       "E1 probe grid GD-trained under the full oracle (keyed GD loop)"),
     Q("q160_gd_mlp_grid", q160, Some(q160Sql),
-      "E1 ClassifierNN grid GD-trained under the full oracle (backprop as one vec-sum aggregation per epoch)"),
+      "E1 ClassifierNN grid GD-trained under the full oracle (backprop summed in one job per epoch)"),
     Q("q89_sup_trajectory", q89, Some(q89Sql),
       "supervised trajectory: A6 mean + M4 BCE head (SUPERVISED.csv)"),
     Q("q90_unsup_comparison", q90, Some(q90Sql),

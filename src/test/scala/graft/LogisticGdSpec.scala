@@ -87,14 +87,14 @@ class LogisticGdSpec extends SparkSpec {
     fromTrainer.result().zip(fromSql).foreach { case (g, w) =>
       assertSame(g, w) }
     // and the keyed twin agrees with q100's posexplode spelling
-    assertSame(IterativeState.epochs(w0, it)(
+    assertSame(epochs(w0, it)(
       sqlEpoch(train, Nil, 5, MlQueries.GD_LR)), fromSql.last)
   }
 
   test("q137 grid: trainer weights equal the SQL epoch's for all 9 cells") {
     val (train, w0) = gridInputs
     val keys = Seq("n_Epochs", "Model")
-    val want = IterativeState.epochs(w0, TrajectoryQueries.GridIter)(
+    val want = epochs(w0, TrajectoryQueries.GridIter)(
       sqlEpoch(train, keys, 7, TrajectoryQueries.GridLr))
     val got = IterativeState.logisticGd(train, w0,
       TrajectoryQueries.GridLr, TrajectoryQueries.GridIter)

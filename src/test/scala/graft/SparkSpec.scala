@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared SparkSession for all suites (one JVM-wide session). A suite
@@ -11,15 +11,8 @@ object TestSpark {
 
   def spark: SparkSession = synchronized {
     if (current == null || current.sparkContext.isStopped) {
-      current = SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-test")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.warehouse.dir", Scratch.tempDirDeletedOnExit("graft_wh"))
-        .getOrCreate()
-      current.sparkContext.setLogLevel("WARN")
+      current = Session.local(4,
+        "spark.sql.warehouse.dir" -> Scratch.tempDirDeletedOnExit("graft_wh"))
     }
     current
   }
@@ -36,6 +29,16 @@ abstract class SparkSpec extends AnyFunSuite {
     * runs must not accumulate orphans under /tmp (same discipline as
     * graft.Scratch on the query side). */
   def tmpDir(prefix: String): String = Scratch.tempDirDeletedOnExit(prefix)
+
+  /** the SQL training loop the IterativeState trainers replaced, kept
+    * as their specs' reference twins' loop: `n` epochs of `step`, each
+    * result eagerly localCheckpointed before the next epoch reads it. */
+  def epochs(init: DataFrame, n: Int)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    var st = init
+    for (t <- 1 to n) st = step(st, t).localCheckpoint(true)
+    st
+  }
 
   /** the Spark jobs started while `body` runs, counted after a
     * deterministic drain of the listener bus (a fixed sleep could
