@@ -5,27 +5,21 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    // warm-up, untimed: EVERY registered query once at sf0.001 under
+    // SPARK_GRAFT_ONLY=q76,q44 (a local iteration aid) narrows both
+    // the warm-up and the timed sweep to the same list
+    val queries = SparkEntry.selected()
+    // warm-up, untimed: each query of the sweep once at sf0.001 under
     // the noop action the measurement uses. It warms class loading
     // (Spark ML's too), the JIT and each family's driver-side paths.
     // It does NOT take first-plan codegen out of the timed sweep: at
     // the default 100-entry codegen cache it compiled 10,697 classes
-    // and the timed pass after it 10,784 (sf0.01, 4 cores), and sf0.001
-    // plans generate other classes than the measured SF's. The sweep
-    // pays codegen; the JSON's per-query `codegen` field shows how
-    // much. Each query is guarded on its own, against NON-fatal
-    // failures only: an OOM or an interrupt must not leave a degraded
-    // JVM going on to measure.
+    // and the timed pass after it 10,784 (all queries, sf0.01, 4
+    // cores), and sf0.001 plans generate other classes than the
+    // measured SF's. The sweep pays codegen; the JSON's per-query
+    // `codegen` field shows how much.
     var untimedSec = 0.0
     try {
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        try fn(spark, "/root/testdata/sf0.001")
-          .write.mode("overwrite").format("noop").save()
-        catch { case NonFatal(t) =>
-          System.err.println(s"[bench] warm-all: $name failed " +
-            s"(${t.getClass.getName}) — its family stays cold")
-        }
-      }
+      warmAll(spark, queries)
       // …then build the measured sfDir's stored artifacts, the ones
       // whose gates assume they already exist (one build per corpus
       // snapshot, reported per artifact as its *_sec field)
@@ -49,10 +43,6 @@ object Bench {
       System.err.println("[bench] WARMUP FAILED — cold-codegen timings " +
         s"likely: ${t.getClass.getName}: ${t.getMessage}")
     }
-    // local iteration aid: SPARK_GRAFT_ONLY=q76,q44 times just those
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
     // SPARK_GRAFT_REPS=N: time each query N times and report the MIN —
     // the single cold sweep the driver runs records 1.5-5× host-
     // contention outliers (r12: q137 34.6 s vs 6.7 s solo; same class
@@ -60,13 +50,7 @@ object Bench {
     // host's weather. Default stays 1 (one honest cold pass).
     val reps = sys.env.get("SPARK_GRAFT_REPS")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
-    val (results, failed) = timeQueries(spark, sfDir,
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        // boundary-aware match: "q16" selects q16_string_funcs, not
-        // q160-q169 (a bare startsWith matched ten extra queries)
-        .filter { case (n, _) =>
-          only.forall(_.exists(o => n == o || n.startsWith(o + "_"))) },
-      reps)
+    val (results, failed) = timeQueries(spark, sfDir, queries, reps)
     val total = results.map(_._2.min).sum
     val failedIds = idList(failed)
     val line = detailLine(results, failed, reps,
@@ -97,6 +81,23 @@ object Bench {
     // parsed:null), and this one says where the per-query numbers live
     println(compact)
   }
+
+  /** Run each query once at sf0.001 with the noop sink, in order, and
+    * return the names run. Each query is guarded on its own, against
+    * NON-fatal failures only: an OOM or an interrupt must not leave a
+    * degraded JVM going on to measure. */
+  private[graft] def warmAll(spark: SparkSession,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : Seq[String] =
+    queries.map { case (name, fn) =>
+      try fn(spark, "/root/testdata/sf0.001")
+        .write.mode("overwrite").format("noop").save()
+      catch { case NonFatal(t) =>
+        System.err.println(s"[bench] warm-all: $name failed " +
+          s"(${t.getClass.getName}) — its family stays cold")
+      }
+      name
+    }
 
   /** The full JSON line: per query (by short id, "q01" for
     * "q01_pricing_summary", to keep the line short) its min seconds,

@@ -19,6 +19,19 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Registry.queries
 
+  /** The registered queries, sorted by name, that a comma-separated
+    * `SPARK_GRAFT_ONLY` list selects: an entry selects the query of that
+    * exact name or of that id ("q16" selects q16_string_funcs, not
+    * q160-q169). All of them when the list is unset or empty. Bench's
+    * warm-up and timed sweep and Verify's dump all run this list. */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val ids = only.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    queries.toSeq.sortBy(_._1).filter { case (n, _) =>
+      ids.isEmpty || ids.exists(o => n == o || n.startsWith(o + "_"))
+    }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Registry.oracleSql

@@ -75,7 +75,7 @@ object SimilarityQueries {
   /** the `k` vec_ids with the smallest md5("q50:" ++ vec_id) — a
     * constant-size, engine-agnostic sample (TakeOrdered, no shuffle of
     * the corpus; the hash order matches the oracle's md5). */
-  private def querySample(s: SparkSession, dir: String, k: Int): DataFrame = {
+  private[graft] def querySample(s: SparkSession, dir: String, k: Int): DataFrame = {
     import s.implicits._
     embeddings(s, dir).select($"vec_id")
       .withColumn("h", md5(concat(lit("q50:"), $"vec_id".cast("string"))))
@@ -298,7 +298,8 @@ object SimilarityQueries {
 
   /** append columns c2..c{nprobe} to a frame carrying (c1, s1) — the
     * shared argmax-masking probe-cell chain (each step masks the
-    * previous argmax to −∞ and re-argmaxes). Used by q54 and q118. */
+    * previous argmax to −∞ and re-argmaxes). Used by q54's ivfAnn and
+    * the IVFADC chain's probe (ivfProbe). */
   private def maskChain(q0: DataFrame, nprobe: Int): DataFrame = {
     var q = q0
     for (r <- 2 to nprobe) {
@@ -606,11 +607,6 @@ object SimilarityQueries {
       .select($"vec_id", $"codes")
   }
 
-  /** per-query nested ADC lookup table lut[m][j] = dist²(query
-    * sub-vector m, codeword j) — QK·M·K values, broadcast everywhere.
-    * Parameterized by the query-id frame (one column `q_id`) so the
-    * SAME chain serves q114/q118's ANN sample and q172's retrieval
-    * sample. */
   private type Rows =
     (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)
   private val codebook = graft.Artifacts[Rows]("codebook")
@@ -623,7 +619,7 @@ object SimilarityQueries {
     * q181/q196/q203 call — pure re-derivation of a frozen trained
     * state). Values identical by construction: the same pqCodebook
     * plan, collected. */
-  private def pqCodebookLocal(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def pqCodebookLocal(s: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/embeddings.parquet"
     val (rows, sch) = codebook(s, path, graft.Tables.fingerprint(path)) {
       val df = pqCodebook(s, dir)
@@ -632,19 +628,11 @@ object SimilarityQueries {
     s.createDataFrame(java.util.Arrays.asList(rows: _*), sch)
   }
 
-  private def pqLutFor(s: SparkSession, dir: String,
-      qsample: DataFrame): DataFrame = {
-    import s.implicits._
-    val e = unitVecs(s, dir)
-    pqLutOfQv(
-      e.join(qsample, e("vec_id") === qsample("q_id"))
-        .select($"q_id", $"v".as("qv")),
-      pqCodebook(s, dir))
-  }
-
-  /** the per-query ADC LUT over explicit (q_id, qv) query vectors and
-    * an explicit flat codebook — the ONE nesting/rounding spelling,
-    * shared with q217's per-variant codebooks. */
+  /** the per-query nested ADC lookup table lut[m][j] = dist²(query
+    * sub-vector m, codeword j) over (q_id, qv) query vectors and a flat
+    * codebook — QK·M·K values, broadcast everywhere; the ONE
+    * nesting/rounding spelling, for the frozen codebook and q217's
+    * per-variant ones. */
   private[graft] def pqLutOfQv(qv: DataFrame, cbFlat: DataFrame): DataFrame = {
     val s = qv.sparkSession
     import s.implicits._
@@ -661,41 +649,25 @@ object SimilarityQueries {
       .select($"q_id", transform($"ms", x => x("qds")).as("lut"))
   }
 
-  private def pqLut(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    pqLutFor(s, dir,
-      querySample(s, dir, ANN_QK).select(col("vec_id").as("q_id")))
-  }
-
-  /** ADC shortlist: per-query nested LUT(m, j) broadcast against the
-    * code table, approx dist² = Σ_m LUT[m][code_m], keep PQ_R per
-    * query. */
-  private[graft] def pqShortlist(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val lut = pqLut(s, dir)
-    val wa = Window.partitionBy($"q_id").orderBy($"adist2", $"vec_id")
-    pqEncode(s, dir).crossJoin(broadcast(lut))
-      .filter($"vec_id" =!= $"q_id")
-      .withColumn("adist2",
-        round(graft.expr.GraftFunctions.pqAdc(s, $"codes", $"lut"), 9))
-      .withColumn("ar", row_number().over(wa))
-      .filter($"ar" <= PQ_R)
-      .select($"q_id", $"vec_id")
-  }
-
+  /** q114: the code-table scan — every code ADC-scored against the
+    * query's LUT (no IVF routing), the PQ_R best per query re-ranked
+    * exactly. */
   private def q114(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = unitVecs(s, dir)
     val qv = e.join(querySample(s, dir, ANN_QK), "vec_id")
       .select($"vec_id".as("q_id"), $"v".as("qv"))
-    val w = Window.partitionBy($"q_id").orderBy($"sim".desc, $"vec_id")
-    broadcast(pqShortlist(s, dir)).join(e, "vec_id")
-      .join(broadcast(qv), "q_id")
-      .withColumn("sim",
-        round(graft.expr.GraftFunctions.dot(s, $"qv", $"v"), 5))
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 5)
-      .select($"q_id", $"rn", $"vec_id".as("neighbor_id"), $"sim")
+    val short = pqEncode(s, dir)
+      .crossJoin(broadcast(pqLutOfQv(qv, pqCodebook(s, dir))))
+      .filter($"vec_id" =!= $"q_id")
+      .withColumn("adist2",
+        round(graft.expr.GraftFunctions.pqAdc(s, $"codes", $"lut"), 9))
+      .withColumn("ar", row_number().over(
+        Window.partitionBy($"q_id").orderBy($"adist2", $"vec_id")))
+      .filter($"ar" <= PQ_R)
+      .select($"q_id", $"vec_id")
+    exactRerank(short, e, qv, 5)
+      .select($"q_id", $"rv".as("rn"), $"vec_id".as("neighbor_id"), $"sim")
       .orderBy($"q_id", $"rn")
   }
 
@@ -777,140 +749,184 @@ object SimilarityQueries {
   // 6/100 measures 0.86 while still scanning 6/16 inverted lists
   // (PqRecallSpec pins the floor at 0.8)
   private val IVFPQ_NPROBE = 6
-  private val IVFPQ_R = 100
+  private[graft] val IVFPQ_R = 100
 
-  /** q118: IVFADC — the production composition of q54's coarse
-    * quantizer and q114's PQ codes: each query probes its IVFPQ_NPROBE
-    * nearest cells (argmax-masking chain); ONLY vectors whose cell is
-    * probed get ADC-scored against the per-query LUT (≈ nprobe/CELLS
-    * of the corpus, vs q114's full code-table scan); the IVFPQ_R best
-    * re-rank exactly. At 100 TB this is the memory+compute story
-    * billion-scale ANN actually ships: inverted lists partition the
-    * code table, codes are PQ_M bytes/vector, raw vectors are touched
-    * only for the shortlist. Cells and codes are both assigned on UNIT
-    * vectors so the whole chain shares one metric space with q50's
-    * cosine ground truth (PqRecallSpec pins combined recall). */
-  /** the full IVFADC chain, parameterized by the query-id frame (one
-    * column `q_id`) and returning the EXACT-re-ranked shortlist as
-    * (q_id, vec_id, sim, rv) — rv ranks the whole IVFPQ_R shortlist,
-    * so q118 (top-5 neighbors) and q172 (rank list feeding RRF
-    * fusion) consume the same plan at different depths. */
   /** the persistable IVFADC index: one corpus pass assigning each
     * vector its coarse cell + PQ codes. AnnIndexSpec writes this
     * partitionBy("cell") and proves with real scan metrics that a
     * probe reads ONLY the probed partitions — the amortized
     * index-build story PERF.md's q172 note claims. */
-  private[graft] def ivfadcIndex(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def ivfadcIndex(s: SparkSession, dir: String): DataFrame =
+    ivfEncOf(unitVecs(s, dir), pqCodebook(s, dir))
+
+  /** (vec_id, cell, codes) encode of a unit corpus under a flat
+    * codebook — ONE spelling for the frozen index, q217's variants and
+    * q219's retrained v2 index artifact. */
+  private[graft] def ivfEncOf(u: DataFrame, cbFlat: DataFrame): DataFrame = {
+    val s = u.sparkSession
     import s.implicits._
-    unitVecs(s, dir).crossJoin(broadcast(pqCodebookNested(s, dir)))
-      .withColumn("codes", graft.expr.GraftFunctions.pqEncode(s, $"v", $"cb"))
+    u.crossJoin(broadcast(nestCodebook(cbFlat)))
+      .withColumn("codes",
+        graft.expr.GraftFunctions.pqEncode(s, $"v", $"cb"))
       .withColumn("cell", cellCol(s, $"v"))
       .select($"vec_id", $"cell", $"codes")
   }
 
-  private[graft] def ivfadcRanked(s: SparkSession, dir: String,
-      qsample: DataFrame, nprobe: Int = IVFPQ_NPROBE,
-      r: Int = IVFPQ_R, encPre: Option[DataFrame] = None): DataFrame = {
-    import s.implicits._
-    val e = unitVecs(s, dir)
-    // corpus pass: cell + PQ codes, row-local (native expressions) —
-    // the persistable index (one definition, shared with AnnIndexSpec);
-    // q196 passes a checkpointed build so its nprobe sweep encodes once
-    val enc = encPre.getOrElse(ivfadcIndex(s, dir))
-    // query vectors COLLECTED once (bounded by the query sample) and
-    // shared by the probe chain, LUT, and exact re-rank: as a plain
-    // subplan each broadcast use re-executed the corpus normalize
-    // pass (the re-execution class 295434a fixed for CPC, now fused
-    // to one job via the localized() pattern)
-    val (_, qv) = localized(
-      e.join(qsample, e("vec_id") === qsample("q_id"))
-        .select($"q_id", $"v".as("qv")))
-    // nprobe cells via the shared q54 argmax-masking chain
-    val q = maskChain(
-      qv.withColumn("c1", cellCol(s, $"qv"))
-        .withColumn("s1", cellScoresCol(s, $"qv")),
-      nprobe)
-    val probed = q.withColumn("cell",
-        explode(array((1 to nprobe).map(i => col(s"c$i")): _*)))
-      .select($"q_id", $"cell")
-    val wa = Window.partitionBy($"q_id").orderBy($"adist2", $"vec_id")
-    // probed cells and the per-query LUT are BOTH query-count-bounded
-    // frames keyed by q_id — pre-joined they ride ONE BroadcastExchange
-    // and the enc-sized stream passes ONE BroadcastHashJoin instead of
-    // two (guide §3.1; values identical: (q_id, cell) stays distinct,
-    // the LUT is 1 row per q_id). LUT from the already-built qv + the
-    // memoized local codebook — pqLutFor would re-scan the corpus for
-    // both per call.
-    val probedLut = probed
-      .join(pqLutOfQv(qv, pqCodebookLocal(s, dir)), Seq("q_id"))
-    val shortlist = enc.join(broadcast(probedLut), Seq("cell"))
-      .filter($"vec_id" =!= $"q_id")
-      .withColumn("adist2",
-        round(graft.expr.GraftFunctions.pqAdc(s, $"codes", $"lut"), 9))
-      .withColumn("ar", row_number().over(wa))
-      .filter($"ar" <= r)
-      .select($"q_id", $"vec_id")
-    val w = Window.partitionBy($"q_id").orderBy($"sim".desc, $"vec_id")
-    broadcast(shortlist).join(e, "vec_id").join(broadcast(qv), "q_id")
-      .withColumn("sim",
-        round(graft.expr.GraftFunctions.dot(s, $"qv", $"v"), 5))
-      .withColumn("rv", row_number().over(w))
-      .select($"q_id", $"vec_id", $"sim", $"rv")
-  }
+  // ---- the IVFADC chain ---------------------------------------------
+  // The one spelling of the algorithm q118, q172, q181, q196, q203,
+  // q212-q214, q217 and q219 run (the production composition of q54's
+  // coarse quantizer and q114's PQ codes): probe each query's nprobe
+  // nearest cells, ADC-score ONLY the codes in those cells (≈
+  // nprobe/CELLS of the corpus, vs q114's full code-table scan)
+  // against the per-query LUT, keep the R best, re-rank those by exact
+  // cosine. At 100 TB this is the memory+compute story billion-scale
+  // ANN ships: inverted lists partition the code table, codes are
+  // PQ_M bytes/vector, raw vectors are touched only for the shortlist.
+  // Cells and codes are both assigned on UNIT vectors, so the chain
+  // shares one metric space with q50's cosine ground truth.
+  //
+  // Each step is one function below; the caller picks the candidate
+  // codes (AdcCodes), the codebook, the nprobe (or a sweep's max), R
+  // and the re-rank depth. Scoring tags each candidate with the probe
+  // rank (crank) that admitted its cell, and the shortlist reads the
+  // crank ≤ np prefix: a sweep scores once at max(np) and reads every
+  // setting off that pass (Σ np → max np of the cell-volume scan + ADC
+  // work), and a one-shot serve is the same read with np = max. The
+  // prefix is exactly the rows a from-scratch np run scores (the mask
+  // chain's cells are distinct per query and a vector lives in one
+  // cell; IvfadcSpec pins it row for row).
 
-  /** the frontier sweeps' shared ADC pass: score the probed
-    * candidates ONCE at the sweep's max nprobe, tagging each candidate
-    * with the probe rank (`crank`) that admitted its cell. A setting
-    * np then reads the crank ≤ np PREFIX — exactly the rows it would
-    * have scored itself (the mask chain's cells are distinct per
-    * query and a vector lives in one cell), at max(np) instead of
-    * Σ np of the cell-volume scan+ADC work. At 100 TB the sweep's
-    * scoring cost drops from 13/64 to 6/64 of the corpus per query
-    * (TuneProbes = 1,2,4,6). */
-  private def adcScoredAll(s: SparkSession, chain: DataFrame,
-      enc: DataFrame, qv: DataFrame, maxNp: Int,
-      dir: String): DataFrame = {
+  /** where the chain's candidate codes (vec_id, cell, codes) come from. */
+  private[graft] sealed trait AdcCodes
+
+  /** codes in hand: an inline, checkpointed or per-variant encode. */
+  private[graft] final case class Encoded(enc: DataFrame) extends AdcCodes
+
+  /** the persisted cell-partitioned index at `path`, read only in the
+    * probed cells, minus the vec_ids in `tomb`. The probe is collected
+    * (one job, ≤ |Q|·nprobe rows) and its distinct cells enter the
+    * reader as literals — static partition pruning, so unprobed cells
+    * are never listed or read; the tombstone anti-join sits above the
+    * pruned scan. */
+  private[graft] final case class Indexed(path: String,
+      tomb: Option[DataFrame] = None) extends AdcCodes
+
+  /** (q_id, qv) vectors of the query ids `qs` (one column q_id) over a
+    * (vec_id, v) corpus, COLLECTED once (bounded by the query sample)
+    * and re-entered as a local relation: the probe, the LUT and the
+    * exact re-rank each broadcast qv, and as a plain subplan every use
+    * re-executed the corpus normalize pass. */
+  private[graft] def queryVecs(corpus: DataFrame, qs: DataFrame): DataFrame =
+    localized(corpus.join(qs, corpus("vec_id") === qs("q_id"))
+      .select(col("q_id"), col("v").as("qv")))._2
+
+  /** probe: (q_id, crank, cell) — each query vector's maxNp nearest
+    * cells by maskChain, crank the probe rank that admitted the
+    * cell. */
+  private[graft] def ivfProbe(qv: DataFrame, maxNp: Int): DataFrame = {
+    val s = qv.sparkSession
     import s.implicits._
-    val probedR = chain.select($"q_id",
+    maskChain(qv.withColumn("c1", cellCol(s, $"qv"))
+        .withColumn("s1", cellScoresCol(s, $"qv")), maxNp)
+      .select($"q_id",
         posexplode(array((1 to maxNp).map(i => col(s"c$i")): _*)))
       .select($"q_id", ($"pos" + 1).as("crank"), $"col".as("cell"))
-      // probed cells + per-query LUT pre-joined onto ONE broadcast
-      // frame — one BroadcastHashJoin over the enc-sized stream
-      // instead of two (guide §3.1, the ivfadcRanked spelling)
-      .join(pqLutOfQv(qv, pqCodebookLocal(s, dir)), Seq("q_id"))
-    enc.join(broadcast(probedR), Seq("cell"))
+  }
+
+  /** ADC scoring: (q_id, crank, vec_id, adist2) for every candidate
+    * code in a probed cell, under the flat codebook `cbFlat`. The
+    * probed cells and the per-query LUT are both query-count-bounded
+    * frames keyed by q_id — pre-joined they ride ONE BroadcastExchange
+    * and the code-sized stream passes ONE BroadcastHashJoin instead of
+    * two (guide §3.1; (q_id, cell) stays distinct, the LUT is one row
+    * per q_id). */
+  private[graft] def adcScored(probed: DataFrame, qv: DataFrame,
+      cbFlat: DataFrame, codes: AdcCodes): DataFrame = {
+    val s = qv.sparkSession
+    import s.implicits._
+    val (probedB, enc) = codes match {
+      case Encoded(enc) => (probed, enc)
+      case Indexed(path, tomb) =>
+        val (rows, local) = localized(probed)
+        val cells = rows.map(_.getAs[Int]("cell")).distinct.sorted
+        val idx = graft.Tables.parquetCached(s, path)
+          .filter($"cell".isin(cells.map(Integer.valueOf): _*))
+          .select($"vec_id", $"cell".cast("int").as("cell"), $"codes")
+        (local, tomb.fold(idx)(t =>
+          idx.join(broadcast(t), Seq("vec_id"), "left_anti")))
+    }
+    enc.join(broadcast(probedB.join(pqLutOfQv(qv, cbFlat), Seq("q_id"))),
+        Seq("cell"))
       .filter($"vec_id" =!= $"q_id")
       .withColumn("adist2",
         round(graft.expr.GraftFunctions.pqAdc(s, $"codes", $"lut"), 9))
       .select($"q_id", $"crank", $"vec_id", $"adist2")
   }
 
-  /** one sweep setting read off the shared scored pass: the crank
-    * prefix, the IVFPQ_R ADC shortlist, the exact re-rank — the same
-    * tail as ivfadcRanked, so the per-setting rows are identical to a
-    * from-scratch np run (the oracle recomputes each setting from
-    * scratch and holds). */
-  private def rankedFromScored(s: SparkSession, scored: DataFrame,
-      e: DataFrame, qv: DataFrame, np: Int, r: Int): DataFrame = {
-    import s.implicits._
-    val wa = Window.partitionBy($"q_id").orderBy($"adist2", $"vec_id")
-    val short = scored.filter($"crank" <= np)
-      .withColumn("ar", row_number().over(wa))
+  /** shortlist: the crank ≤ np prefix of a scored pass, then the r best
+    * per query by ADC distance — (q_id, vec_id). */
+  private[graft] def adcShortlist(scored: DataFrame, np: Int,
+      r: Int): DataFrame = {
+    import scored.sparkSession.implicits._
+    scored.filter($"crank" <= np)
+      .withColumn("ar", row_number().over(
+        Window.partitionBy($"q_id").orderBy($"adist2", $"vec_id")))
       .filter($"ar" <= r)
       .select($"q_id", $"vec_id")
-    val w = Window.partitionBy($"q_id").orderBy($"sim".desc, $"vec_id")
-    broadcast(short).join(e, "vec_id").join(broadcast(qv), "q_id")
-      .withColumn("sim",
-        round(graft.expr.GraftFunctions.dot(s, $"qv", $"v"), 5))
-      .withColumn("rv", row_number().over(w))
-      .select($"q_id", $"vec_id", $"sim", $"rv")
   }
 
+  /** the exact score of a (qv, v) pair: the unit-vector dot at 5 dp. */
+  private def exactSim(s: SparkSession): Column =
+    round(graft.expr.GraftFunctions.dot(s, col("qv"), col("v")), 5)
+
+  /** rank scored rows by (sim desc, vec_id) per query as rv, keep
+    * rv ≤ depth. */
+  private def topBySim(scored: DataFrame, depth: Int): DataFrame =
+    scored.withColumn("rv", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("sim").desc, col("vec_id"))))
+      .filter(col("rv") <= depth)
+
+  /** exact re-rank: a bounded shortlist (q_id, vec_id, extra…) ⋈ a
+    * (vec_id, v) corpus ⋈ (q_id, qv) query vectors, both small sides
+    * broadcast — the shortlist's columns plus sim and its rank
+    * rv ≤ depth. */
+  private[graft] def exactRerank(short: DataFrame, corpus: DataFrame,
+      qv: DataFrame, depth: Int): DataFrame =
+    topBySim(broadcast(short).join(corpus, "vec_id")
+        .join(broadcast(qv), "q_id")
+        .withColumn("sim", exactSim(qv.sparkSession)), depth)
+      .select((short.columns.map(col) :+ col("sim") :+ col("rv")): _*)
+
+  /** the brute-force ground truth: each query's exact top-5 (q_id,
+    * vec_id) over the whole corpus, itself excluded. */
+  private[graft] def bruteTop5(qv: DataFrame, corpus: DataFrame): DataFrame =
+    topBySim(broadcast(qv).join(corpus, col("vec_id") =!= col("q_id"))
+        .withColumn("sim", exactSim(qv.sparkSession)), 5)
+      .select("q_id", "vec_id")
+
+  /** the whole chain at one operating point — (q_id, vec_id, sim, rv),
+    * rv ≤ depth. */
+  private[graft] def ivfadc(qv: DataFrame, corpus: DataFrame,
+      cbFlat: DataFrame, codes: AdcCodes, np: Int, r: Int,
+      depth: Int): DataFrame =
+    exactRerank(adcShortlist(adcScored(ivfProbe(qv, np), qv, cbFlat, codes),
+      np, r), corpus, qv, depth)
+
+  /** the chain over dir's unit corpus and frozen codebook at the serving
+    * nprobe, for the query ids `qs` (one column q_id). */
+  private def servedIvfadc(s: SparkSession, dir: String, qs: DataFrame,
+      codes: AdcCodes, r: Int, depth: Int): DataFrame = {
+    val e = unitVecs(s, dir)
+    ivfadc(queryVecs(e, qs), e, pqCodebookLocal(s, dir), codes,
+      IVFPQ_NPROBE, r, depth)
+  }
+
+  /** q118: IVFADC top-5 over the ANN sample, codes encoded inline. */
   private def q118(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    ivfadcRanked(s, dir,
-      querySample(s, dir, ANN_QK).select($"vec_id".as("q_id")))
-      .filter($"rv" <= 5)
+    servedIvfadc(s, dir,
+        querySample(s, dir, ANN_QK).select($"vec_id".as("q_id")),
+        Encoded(ivfadcIndex(s, dir)), IVFPQ_R, 5)
       .select($"q_id", $"rv".as("rn"), $"vec_id".as("neighbor_id"), $"sim")
       .orderBy($"q_id", $"rn")
   }
@@ -1036,7 +1052,7 @@ object SimilarityQueries {
   /** sampled from EMBEDDINGS (vec_id ⊆ doc_id in the testdata), so
     * every query carries both modalities — a documents-side sample
     * silently dropped vector-less queries from the q163 fusion. */
-  private def retrQuerySample(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def retrQuerySample(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     embeddings(s, dir).select($"vec_id")
       .withColumn("h", md5(concat(lit("q162:"), $"vec_id".cast("string"))))
@@ -1582,14 +1598,18 @@ object SimilarityQueries {
       .select($"q_id", $"cand_id", $"rt")
   }
 
-  private def q172(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val qs = retrQuerySample(s, dir)
-    val rv = ivfadcRanked(s, dir, qs, IVFPQ_NPROBE, RetrR)
-      .filter($"rv" <= FuseD)
-      .select($"q_id", $"vec_id", $"rv")
-    fuseRanks(rv, bm25Ranks(s, dir))
-  }
+  /** the hybrid gates' vector rank list (q_id, vec_id, rv ≤ FuseD):
+    * the IVFADC chain at the serving operating point with a RetrR
+    * shortlist. q172 encodes the codes inline, q181 reads the persisted
+    * index, q213 the index minus the takedown set. */
+  private[graft] def annRanks(s: SparkSession, dir: String,
+      qs: DataFrame, codes: AdcCodes): DataFrame =
+    servedIvfadc(s, dir, qs, codes, RetrR, FuseD)
+      .select("q_id", "vec_id", "rv")
+
+  private def q172(s: SparkSession, dir: String): DataFrame =
+    fuseRanks(annRanks(s, dir, retrQuerySample(s, dir),
+      Encoded(ivfadcIndex(s, dir))), bm25Ranks(s, dir))
 
   /** spec yardstick (AnnRecallSpec): q172's fusion with the vector
     * branch swapped for EXACT brute cosine truncated at `depth` —
@@ -1614,24 +1634,7 @@ object SimilarityQueries {
         Window.partitionBy($"q_id").orderBy($"sim".desc, $"vec_id")))
       .filter($"rv" <= depth)
       .select($"q_id", $"vec_id", $"rv")
-    val rt = bm25Scores(s, dir)
-      .withColumn("rt", row_number().over(
-        Window.partitionBy($"q_id").orderBy($"bm6".desc, $"cand_id")))
-      .select($"q_id", $"cand_id", $"rt")
-    rv.join(rt,
-        rv("q_id") === rt("q_id") && rv("vec_id") === rt("cand_id"),
-        "full_outer")
-      .select(coalesce(rv("q_id"), rt("q_id")).as("q_id"),
-        coalesce($"vec_id", $"cand_id").as("doc_id"), $"rv", $"rt")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(RrfK) + $"rv"), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(RrfK) + $"rt"), lit(0.0)))
-      .withColumn("r6", floor($"rrf" * 1e6 + 0.5).cast("long"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"q_id").orderBy($"r6".desc, $"doc_id")))
-      .filter($"rn" <= 5)
-      .select($"q_id", $"rn", $"doc_id")
-      .orderBy($"q_id", $"rn")
+    fuseRanks(rv, bm25Ranks(s, dir)).select($"q_id", $"rn", $"doc_id")
   }
 
   /** the whole q172 chain as oracle CTE text (no leading WITH),
@@ -2157,61 +2160,15 @@ object SimilarityQueries {
   }
 
   private def q181(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val qs = retrQuerySample(s, dir)
     // the vector and lexical branches are independent until fuseRanks,
     // and each branch's CONSTRUCTION runs bounded driver-side collect
-    // jobs (qv + probed cells here; probe terms inside
-    // bm25RanksServed) — overlap the two chains (guide §2.6)
+    // jobs (query vectors + probed cells in the chain; probe terms
+    // inside bm25RanksServed) — overlap the two chains (guide §2.6)
     val Seq(rv, rt) = graft.Scratch.parMap(Seq[() => DataFrame](
-      () => {
-        val e = unitVecs(s, dir)
-        // query vectors COLLECTED once (≤ RetrQK rows): every
-        // downstream use (probe chain, LUT, exact re-rank) otherwise
-        // re-executes the corpus normalize scan inside its own
-        // broadcast job
-        val (_, qv) = localized(e.join(qs, e("vec_id") === qs("q_id"))
-          .select($"q_id", $"v".as("qv")))
-        // probe cells from the query vectors (the q54 argmax-mask
-        // chain); ONE job: the ≤ RetrQK·nprobe probe rows come back to
-        // the driver and re-enter as a local relation (literals +
-        // broadcast side)
-        val (probedRows, probed) = localized(maskChain(
-            qv.withColumn("c1", cellCol(s, $"qv"))
-              .withColumn("s1", cellScoresCol(s, $"qv")),
-            IVFPQ_NPROBE)
-          .withColumn("cell",
-            explode(array((1 to IVFPQ_NPROBE).map(i => col(s"c$i")): _*)))
-          .select($"q_id", $"cell"))
-        // the distinct probed cells are a BOUNDED set (≤ RetrQK·nprobe,
-        // corpus-size-independent) — literals make the filter static
-        // partition pruning at the index reader
-        val cells = probedRows.map(_.getInt(1)).distinct.sorted
-        val enc = graft.Tables.parquetCached(s, annIndexDir(s, dir))
-          .filter($"cell".isin(cells.map(Integer.valueOf): _*))
-          .select($"vec_id", $"cell".cast("int").as("cell"), $"codes")
-        val wa = Window.partitionBy($"q_id").orderBy($"adist2", $"vec_id")
-        // probed cells + per-query LUT pre-joined onto ONE broadcast
-        // frame (guide §3.1, the ivfadcRanked spelling); LUT from the
-        // already-built qv + the memoized local codebook
-        val probedLut = probed
-          .join(pqLutOfQv(qv, pqCodebookLocal(s, dir)), Seq("q_id"))
-        val shortlist = enc.join(broadcast(probedLut), Seq("cell"))
-          .filter($"vec_id" =!= $"q_id")
-          .withColumn("adist2",
-            round(graft.expr.GraftFunctions.pqAdc(s, $"codes", $"lut"), 9))
-          .withColumn("ar", row_number().over(wa))
-          .filter($"ar" <= RetrR)
-          .select($"q_id", $"vec_id")
-        val w = Window.partitionBy($"q_id").orderBy($"sim".desc, $"vec_id")
-        broadcast(shortlist).join(e, "vec_id")
-          .join(broadcast(qv), "q_id")
-          .withColumn("sim",
-            round(graft.expr.GraftFunctions.dot(s, $"qv", $"v"), 5))
-          .withColumn("rv", row_number().over(w))
-          .filter($"rv" <= FuseD)
-          .select($"q_id", $"vec_id", $"rv")
-      },
+      // vector branch SERVED from the persisted index, read only in
+      // the probed cells
+      () => annRanks(s, dir, qs, Indexed(annIndexDir(s, dir))),
       // lexical branch SERVED from the persisted doc-postings index —
       // no corpus tokenize at serve time (row-identical to bm25Ranks;
       // the q172-shared oracle pins it)
@@ -2460,11 +2417,7 @@ object SimilarityQueries {
     val stats = ctf.select($"doc_id", $"chunk_idx").distinct()
       .agg(count(lit(1)).as("n"))
       .crossJoin(cdl.agg(sum($"dl").as("toktot")))
-    val qids = embeddings(s, dir).select($"vec_id")
-      .filter(!StreamingQueries.Takedown.purged($"vec_id"))
-      .withColumn("h", md5(concat(lit("q162:"), $"vec_id".cast("string"))))
-      .orderBy($"h", $"vec_id").limit(RetrQK)
-      .select($"vec_id".as("q_id"))
+    val qids = purgedQuerySample(s, dir)
     // only the (non-purged) sample docs tokenize — q186's discipline
     val d = documents(s, dir).select($"doc_id", $"text")
     val qtf = d.join(broadcast(qids), d("doc_id") === qids("q_id"))
@@ -2529,25 +2482,23 @@ object SimilarityQueries {
   // takedown-filtered code table.
   //
   // Scale: the tombstone anti-join broadcasts |D| against the
-  // cell-partition-pruned index scan; everything downstream is the
-  // proven q118/q181 bounded posture.
+  // cell-partition-pruned index scan (the chain's Indexed codes);
+  // everything downstream is the proven q118/q181 bounded posture.
   private def q212(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tombV = embeddings(s, dir).select($"vec_id")
-      .filter(StreamingQueries.Takedown.purged($"vec_id"))
-    val enc = graft.Tables.parquetCached(s, annIndexDir(s, dir))
-      .select($"vec_id", $"cell".cast("int").as("cell"), $"codes")
-      .join(broadcast(tombV), Seq("vec_id"), "left_anti")
-    val qs = embeddings(s, dir).select($"vec_id")
-      .filter(!StreamingQueries.Takedown.purged($"vec_id"))
-      .withColumn("h", md5(concat(lit("q162:"), $"vec_id".cast("string"))))
-      .orderBy($"h", $"vec_id").limit(RetrQK)
-      .select($"vec_id".as("q_id"))
-    ivfadcRanked(s, dir, qs, IVFPQ_NPROBE, IVFPQ_R, Some(enc))
-      .filter($"rv" <= 5)
+    servedIvfadc(s, dir, purgedQuerySample(s, dir), purgedAnnIndex(s, dir),
+        IVFPQ_R, 5)
       .select($"q_id", $"rv".as("rn"), $"vec_id".as("neighbor_id"),
         $"sim")
       .orderBy($"q_id", $"rn")
+  }
+
+  /** the persisted IVFADC index minus the vec tombstones — the
+    * takedown-serving family's codes (q212, q213, q214). */
+  private def purgedAnnIndex(s: SparkSession, dir: String): AdcCodes = {
+    import s.implicits._
+    Indexed(annIndexDir(s, dir), Some(embeddings(s, dir).select($"vec_id")
+      .filter(StreamingQueries.Takedown.purged($"vec_id"))))
   }
 
   private lazy val q212Sql = {
@@ -2689,22 +2640,12 @@ object SimilarityQueries {
   /** q213's fused hybrid over purged artifacts — factored so q214's
     * fully-served RAG can take it as the doc-shortlist stage. */
   private[graft] def purgedHybrid(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val qs = purgedQuerySample(s, dir)
     // vector and lexical branches are independent until fuseRanks —
     // overlap their construction-time collect jobs (guide §2.6, the
     // q181 spelling)
     val Seq(rv, rt) = graft.Scratch.parMap(Seq[() => DataFrame](
-      () => {
-        val tombV = embeddings(s, dir).select($"vec_id")
-          .filter(StreamingQueries.Takedown.purged($"vec_id"))
-        val enc = graft.Tables.parquetCached(s, annIndexDir(s, dir))
-          .select($"vec_id", $"cell".cast("int").as("cell"), $"codes")
-          .join(broadcast(tombV), Seq("vec_id"), "left_anti")
-        ivfadcRanked(s, dir, qs, IVFPQ_NPROBE, RetrR, Some(enc))
-          .filter($"rv" <= FuseD)
-          .select($"q_id", $"vec_id", $"rv")
-      },
+      () => annRanks(s, dir, qs, purgedAnnIndex(s, dir)),
       () => bm25RanksPurged(s, dir, qs)), 2)(_())
     fuseRanks(rv, rt)
   }
@@ -3236,14 +3177,9 @@ object SimilarityQueries {
       .withColumn("ar", row_number().over(wa))
       .filter($"ar" <= SQ_R)
       .select($"q_id", $"vec_id", $"adot")
-    val w = Window.partitionBy($"q_id").orderBy($"sim".desc, $"vec_id")
-    broadcast(short).join(c.select($"vec_id", $"v"), "vec_id")
-      .join(broadcast(q.select($"q_id", $"qv")), "q_id")
-      .withColumn("sim",
-        round(graft.expr.GraftFunctions.dot(s, $"qv", $"v"), 5))
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 5)
-      .select($"q_id", $"rn", $"vec_id".as("neighbor_id"), $"sim", $"adot")
+    exactRerank(short, c.select($"vec_id", $"v"), q.select($"q_id", $"qv"), 5)
+      .select($"q_id", $"rv".as("rn"), $"vec_id".as("neighbor_id"), $"sim",
+        $"adot")
       .orderBy($"q_id", $"rn")
   }
 
@@ -3294,68 +3230,59 @@ object SimilarityQueries {
   // the sheet shows what 1/2/4 would have bought.
   //
   // Scale: the corpus is encoded ONCE (the checkpointed ivfadcIndex
-  // artifact is shared across the sweep via encPre); everything else
-  // is per-query bounded — the mask chain runs once to max(nprobe)
-  // and each setting just reads a wider prefix of its cells.
-  private val TuneProbes = Seq(1, 2, 4, 6)
+  // build is the chain's Encoded codes for the whole sweep) and
+  // ADC-scored once at max(nprobe); everything else is per-query
+  // bounded — each setting reads the crank ≤ np prefix of the one
+  // probe and the one scored pass.
+  private[graft] val TuneProbes = Seq(1, 2, 4, 6)
 
   private def q196(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val qs = querySample(s, dir, ANN_QK).select($"vec_id".as("q_id"))
       .localCheckpoint(true)
     val e = unitVecs(s, dir)
-    // query vectors COLLECTED once (≤ ANN_QK rows, the localized()
-    // serving pattern): the ground truth, mask chain, LUT and four
-    // per-setting re-ranks each broadcast qv — as a plain subplan
-    // every one of those re-executed the corpus normalize scan
-    val (_, qv) = localized(e.join(qs, e("vec_id") === qs("q_id"))
-      .select($"q_id", $"v".as("qv")))
+    val qv = queryVecs(e, qs)
     // the three sweep inputs — brute ground truth, the inline native
     // encode (checkpointed once for the sweep: measured FASTER than
     // reading the persisted cell-partitioned index back at every
     // decade tried — the tuning sheet touches ALL cells, so the
     // partitioned layout buys nothing here; the pruned-read serving
-    // story is q181's), and the max-nprobe mask chain — are
-    // independent: overlap their eager builds (guide §2.6)
-    val wb = Window.partitionBy($"q_id").orderBy($"sim".desc, $"vec_id")
-    val Seq(gt, enc, chain) = graft.Scratch.parMap(
+    // story is q181's), and the max-nprobe probe — are independent:
+    // overlap their eager builds (guide §2.6)
+    val Seq(gt, enc, probed) = graft.Scratch.parMap(
       Seq[() => DataFrame](
-        () => broadcast(qv).join(e, $"vec_id" =!= $"q_id")
-          .withColumn("sim",
-            round(graft.expr.GraftFunctions.dot(s, $"qv", $"v"), 5))
-          .withColumn("rn", row_number().over(wb)).filter($"rn" <= 5)
-          .select($"q_id", $"vec_id").localCheckpoint(true),
+        () => bruteTop5(qv, e).localCheckpoint(true),
         () => ivfadcIndex(s, dir).localCheckpoint(true),
-        () => maskChain(
-          qv.withColumn("c1", cellCol(s, $"qv"))
-            .withColumn("s1", cellScoresCol(s, $"qv")),
-          TuneProbes.max).localCheckpoint(true)), 3)(_())
+        () => ivfProbe(qv, TuneProbes.max).localCheckpoint(true)), 3)(_())
     val cellsz = enc.groupBy($"cell").agg(count(lit(1)).as("cn"))
       .localCheckpoint(true)
     // ADC-score ONCE at max(nprobe); every setting reads its crank
-    // prefix (Σ np → max np of the scoring work — the q203 SQ8
-    // prefix discipline applied to the ADC family)
-    val scoredAdc = adcScoredAll(s, chain, enc, qv, TuneProbes.max,
-      dir).localCheckpoint(true)
+    // prefix (the q203 SQ8 prefix discipline applied to the ADC family)
+    val scored = adcScored(probed, qv, pqCodebookLocal(s, dir), Encoded(enc))
+      .localCheckpoint(true)
     val sheets = TuneProbes.map { np =>
-      val top5 = rankedFromScored(s, scoredAdc, e, qv, np, IVFPQ_R)
-        .filter($"rv" <= 5).select($"q_id", $"vec_id")
+      val top5 = exactRerank(adcShortlist(scored, np, IVFPQ_R), e, qv, 5)
+        .select($"q_id", $"vec_id")
       val hits = top5.join(gt, Seq("q_id", "vec_id"))
         .agg(count(lit(1)).as("hits"))
-      val cand = chain
-        .withColumn("cell",
-          explode(array((1 to np).map(i => col(s"c$i")): _*)))
-        .select($"q_id", $"cell")
-        .join(cellsz, Seq("cell"))
-        .groupBy($"q_id").agg((sum($"cn") - 1).as("cq"))
-        .agg(sum($"cq").as("total_candidates"),
-          count(lit(1)).as("nq"))
+      val cand = candVolume(probed, cellsz, np)
+        .agg(sum($"cq").as("total_candidates"), count(lit(1)).as("nq"))
       cand.crossJoin(hits)
         .select(lit(np).as("nprobe"), $"nq".as("n_queries"),
           $"total_candidates", $"hits",
           expr("(hits * 1000000) div (5 * nq)").as("recall6"))
     }
     sheets.reduce(_.unionByName(_)).orderBy($"nprobe")
+  }
+
+  /** per query, the ADC candidate volume of its first np probed cells:
+    * Σ probed-cell sizes − the query's own vector (q_id, cq), from the
+    * (cell, cn) histogram — the work a serve at np pays. */
+  private def candVolume(probed: DataFrame, cellsz: DataFrame,
+      np: Int): DataFrame = {
+    import probed.sparkSession.implicits._
+    probed.filter($"crank" <= np).join(cellsz, Seq("cell"))
+      .groupBy($"q_id").agg((sum($"cn") - 1).as("cq"))
   }
 
   /** the per-nprobe IVFADC sweep CTEs (probed cells → ADC shortlist →
@@ -3467,13 +3394,8 @@ object SimilarityQueries {
     val qs = querySample(s, dir, ANN_QK).select($"vec_id".as("q_id"))
       .localCheckpoint(true)
     val e = unitVecs(s, dir).localCheckpoint(true)
-    // query vectors COLLECTED once (≤ ANN_QK rows, the localized()
-    // serving pattern): gt, chain and every per-setting re-rank
-    // broadcast qv
-    val (_, qv) = localized(e.join(qs, e("vec_id") === qs("q_id"))
-      .select($"q_id", $"v".as("qv")))
+    val qv = queryVecs(e, qs)
     val nqDf = qs.agg(count(lit(1)).as("nq"))
-    val wb = Window.partitionBy($"q_id").orderBy($"sim".desc, $"vec_id")
     def sheet(family: String, setting: Int, approx: DataFrame,
         exact: DataFrame, top5: DataFrame, gt: DataFrame): DataFrame = {
       val hits = top5.join(gt, Seq("q_id", "vec_id"))
@@ -3493,21 +3415,14 @@ object SimilarityQueries {
     // once for the sweep: measured FASTER than reading the persisted
     // cell-partitioned index back at every decade tried — the sheet
     // touches ALL cells, so the partitioned layout buys nothing here;
-    // the pruned-read serving story is q181's), the max-nprobe mask
-    // chain, the SQ8 full-scan scoring, and the LSH bucketed corpus.
-    // Overlap their eager builds (guide §2.6).
-    val Seq(gt, enc, chain, scored, lb) = graft.Scratch.parMap(
+    // the pruned-read serving story is q181's), the max-nprobe probe,
+    // the SQ8 full-scan scoring, and the LSH bucketed corpus. Overlap
+    // their eager builds (guide §2.6).
+    val Seq(gt, enc, probed, scored, lb) = graft.Scratch.parMap(
       Seq[() => DataFrame](
-        () => broadcast(qv).join(e, $"vec_id" =!= $"q_id")
-          .withColumn("sim",
-            round(graft.expr.GraftFunctions.dot(s, $"qv", $"v"), 5))
-          .withColumn("rn", row_number().over(wb)).filter($"rn" <= 5)
-          .select($"q_id", $"vec_id").localCheckpoint(true),
+        () => bruteTop5(qv, e).localCheckpoint(true),
         () => ivfadcIndex(s, dir).localCheckpoint(true),
-        () => maskChain(
-          qv.withColumn("c1", cellCol(s, $"qv"))
-            .withColumn("s1", cellScoresCol(s, $"qv")),
-          FrontierProbes.max).localCheckpoint(true),
+        () => ivfProbe(qv, FrontierProbes.max).localCheckpoint(true),
         // SQ8: one int8 scan scored + ranked once; settings read
         // prefixes
         () => broadcast(qc)
@@ -3531,28 +3446,22 @@ object SimilarityQueries {
     val maxHam = FrontierHams.max
     val Seq(scoredAdc, sqCellScored, lshCand) = graft.Scratch.parMap(
       Seq[() => DataFrame](
-        () => adcScoredAll(s, chain, enc, qv, FrontierProbes.max, dir)
+        () => adcScored(probed, qv, pqCodebookLocal(s, dir), Encoded(enc))
           .localCheckpoint(true),
         // SQ8-IN-CELL: the composed quantizer — the SAME probed cells
-        // as the ivfadc rows (shared chain/cellsz), int8 dots inside
+        // as the ivfadc rows (shared probe/cellsz), int8 dots inside
         // them, scored once at max(nprobe) with the admitting probe
         // rank
-        () => {
-          val probedR = chain.select($"q_id",
-              posexplode(array(
-                (1 to FrontierProbes.max).map(i => col(s"c$i")): _*)))
-            .select($"q_id", ($"pos" + 1).as("crank"), $"col".as("cell"))
-          c.select($"vec_id", $"c")
-            .join(enc.select($"vec_id", $"cell"), "vec_id")
-            .join(broadcast(probedR), Seq("cell"))
-            .filter($"vec_id" =!= $"q_id")
-            .join(broadcast(qc), Seq("q_id"))
-            .withColumn("adot", expr(
-              "aggregate(zip_with(qc, c, (a, b) -> a * b), " +
-                "CAST(0 AS BIGINT), (acc, x) -> acc + x)"))
-            .select($"q_id", $"crank", $"vec_id", $"adot")
-            .localCheckpoint(true)
-        },
+        () => c.select($"vec_id", $"c")
+          .join(enc.select($"vec_id", $"cell"), "vec_id")
+          .join(broadcast(probed), Seq("cell"))
+          .filter($"vec_id" =!= $"q_id")
+          .join(broadcast(qc), Seq("q_id"))
+          .withColumn("adot", expr(
+            "aggregate(zip_with(qc, c, (a, b) -> a * b), " +
+              "CAST(0 AS BIGINT), (acc, x) -> acc + x)"))
+          .select($"q_id", $"crank", $"vec_id", $"adot")
+          .localCheckpoint(true),
         // LSH: ONE bucket join at max(hamming), each candidate tagged
         // with the Hamming distance of the probe that admitted it (a
         // corpus vector lives in one bucket, so exactly one probe
@@ -3567,66 +3476,40 @@ object SimilarityQueries {
           broadcast(probes)
             .join(lb.select($"vec_id", $"v", $"bucket"), Seq("bucket"))
             .filter($"vec_id" =!= $"q_id")
-            .withColumn("sim",
-              round(graft.expr.GraftFunctions.dot(s, $"qv", $"v"), 5))
+            .withColumn("sim", exactSim(s))
             .select($"q_id", $"ham", $"vec_id", $"sim")
             .localCheckpoint(true)
         }), 3)(_())
-    val w5 = Window.partitionBy($"q_id").orderBy($"sim".desc, $"vec_id")
+    def approx(np: Int) = candVolume(probed, cellsz, np)
+      .agg(sum($"cq").as("approx_candidates"))
+    def top5(short: DataFrame) =
+      exactRerank(short, e, qv, 5).select($"q_id", $"vec_id")
     val ivfRows = FrontierProbes.map { np =>
-      val probed = chain
-        .withColumn("cell",
-          explode(array((1 to np).map(i => col(s"c$i")): _*)))
-        .select($"q_id", $"cell")
-      val approx = probed.join(cellsz, Seq("cell"))
-        .groupBy($"q_id").agg((sum($"cn") - 1).as("cq"))
-        .agg(sum($"cq").as("approx_candidates"))
-      val ranked = rankedFromScored(s, scoredAdc, e, qv, np, IVFPQ_R)
-      sheet("ivfadc", np, approx,
-        ranked.agg(count(lit(1)).as("exact_candidates")),
-        ranked.filter($"rv" <= 5).select($"q_id", $"vec_id"), gt)
+      val short = adcShortlist(scoredAdc, np, IVFPQ_R)
+      sheet("ivfadc", np, approx(np),
+        short.agg(count(lit(1)).as("exact_candidates")), top5(short), gt)
     }
     val sqRows = FrontierSqR.map { rr =>
       val short = scored.filter($"ar" <= rr).select($"q_id", $"vec_id")
-      val top5 = broadcast(short).join(e, "vec_id")
-        .join(broadcast(qv), "q_id")
-        .withColumn("sim",
-          round(graft.expr.GraftFunctions.dot(s, $"qv", $"v"), 5))
-        .withColumn("rn", row_number().over(w5)).filter($"rn" <= 5)
-        .select($"q_id", $"vec_id")
       sheet("sq8", rr,
         scored.agg(count(lit(1)).as("approx_candidates")),
-        short.agg(count(lit(1)).as("exact_candidates")), top5, gt)
+        short.agg(count(lit(1)).as("exact_candidates")), top5(short), gt)
     }
     val sqCellRows = FrontierProbes.map { np =>
-      val probed = chain
-        .withColumn("cell",
-          explode(array((1 to np).map(i => col(s"c$i")): _*)))
-        .select($"q_id", $"cell")
-      val approx = probed.join(cellsz, Seq("cell"))
-        .groupBy($"q_id").agg((sum($"cn") - 1).as("cq"))
-        .agg(sum($"cq").as("approx_candidates"))
       val short = sqCellScored.filter($"crank" <= np)
         .withColumn("ar", row_number().over(wa))
         .filter($"ar" <= SQ_R)
         .select($"q_id", $"vec_id")
-      val top5 = broadcast(short).join(e, "vec_id")
-        .join(broadcast(qv), "q_id")
-        .withColumn("sim",
-          round(graft.expr.GraftFunctions.dot(s, $"qv", $"v"), 5))
-        .withColumn("rn", row_number().over(w5)).filter($"rn" <= 5)
-        .select($"q_id", $"vec_id")
-      sheet("sq8cell", np, approx,
-        short.agg(count(lit(1)).as("exact_candidates")), top5, gt)
+      sheet("sq8cell", np, approx(np),
+        short.agg(count(lit(1)).as("exact_candidates")), top5(short), gt)
     }
     val lshRows = FrontierHams.map { h =>
       val cand = lshCand.filter($"ham" <= h)
         .select($"q_id", $"vec_id", $"sim")
-      val top5 = cand.withColumn("rn", row_number().over(w5))
-        .filter($"rn" <= 5).select($"q_id", $"vec_id")
       sheet("lsh", h,
         nqDf.select((lit(0L) * $"nq").as("approx_candidates")),
-        cand.agg(count(lit(1)).as("exact_candidates")), top5, gt)
+        cand.agg(count(lit(1)).as("exact_candidates")),
+        topBySim(cand, 5).select($"q_id", $"vec_id"), gt)
     }
     (ivfRows ++ sqRows ++ sqCellRows ++ lshRows)
       .reduce(_.unionByName(_))
@@ -3818,14 +3701,46 @@ object SimilarityQueries {
   // shortlists — q203's posture with a second codebook; nothing
   // all-pairs, the sheet is 4 rows.
   /** the shared quantizer-aging evaluation context (q217 + q219): the
-    * churned serving corpus C′ (unit vectors − takedown D), the
-    * pre-churn training pool, the non-purged query vectors, the brute
-    * cosine ground truth over C′, and the literal-quantizer probe
-    * cells — ONE construction so the aging sheet and the retrain
-    * decision cannot disagree about what they measure. */
-  private[graft] final case class AgingCtx(u: DataFrame,
-      basePool: DataFrame, qv: DataFrame, nq: Long, gt: DataFrame,
-      probed: DataFrame)
+    * churned serving corpus C′ `u` (unit vectors − takedown D), the
+    * pre-churn training pool, the non-purged query vectors, and —
+    * built eagerly here — their count, the brute cosine ground truth
+    * over C′ and the probed cells of the fixed literal quantizer
+    * (shared by every variant: what ages is the TRAINED state, not the
+    * cells). ONE construction so the aging sheet and the retrain
+    * decision cannot disagree about what they measure; AnnRecallSpec
+    * builds it over planted-drift corpora, so the decision bit is
+    * pinned on the same code path the gate runs. */
+  private[graft] final class AgingCtx(val u: DataFrame,
+      val basePool: DataFrame, val qv: DataFrame) {
+    val nq: Long = qv.count()
+    // the ground truth and the probe are independent; overlap their
+    // eager builds (guide §2.6). The probe is collected: a served
+    // variant's Indexed read then prunes on it with no further job
+    val Seq(gt, probed) = graft.Scratch.parMap(Seq[() => DataFrame](
+      () => bruteTop5(qv, u).localCheckpoint(true),
+      () => localized(ivfProbe(qv, IVFPQ_NPROBE))._2), 2)(_())
+
+    /** the IVFADC chain's shortlist over C′ at the gates' operating
+      * point, under a flat codebook and its codes. */
+    def shortlist(cbFlat: DataFrame, codes: AdcCodes): DataFrame =
+      adcShortlist(adcScored(probed, qv, cbFlat, codes), IVFPQ_NPROBE,
+        IVFPQ_R)
+
+    /** a shortlist's exact top-5 over C′: (q_id, vec_id, sim, rv). */
+    def top5(short: DataFrame): DataFrame = exactRerank(short, u, qv, 5)
+
+    /** one aged/fresh IVFADC variant: the codebook trained on `pool`,
+      * C′ encoded under it, the chain. */
+    def ivfVariant(pool: DataFrame): IvfAging = {
+      import pool.sparkSession.implicits._
+      val cbFlat = pqCodebookOfPool(pool).localCheckpoint(true)
+      val train6 = cbSampleIds(pool)
+        .agg(sum($"vec_id")).head().getLong(0)
+      val short = shortlist(cbFlat, Encoded(ivfEncOf(u, cbFlat)))
+        .localCheckpoint(true)
+      IvfAging(train6, short, top5(short))
+    }
+  }
 
   private[graft] def agingCtx(s: SparkSession, dir: String): AgingCtx = {
     import s.implicits._
@@ -3836,94 +3751,18 @@ object SimilarityQueries {
       DedupQueries.IngestSplit.NewMax)
     val qs = querySample(s, dir, ANN_QK).select($"vec_id".as("q_id"))
       .filter(!StreamingQueries.Takedown.purged($"q_id"))
-    val qv = u.join(qs, u("vec_id") === qs("q_id"))
-      .select($"q_id", $"v".as("qv")).localCheckpoint(true)
-    agingCtxOf(u, basePool, qv)
+    // qv is checkpointed, not collected like queryVecs: a checkpoint
+    // keeps the plan's constraints (here: no purged q_id), so every
+    // sheet row's ground-truth join plans alike and q217 reuses one
+    // broadcast of it — over a local relation it cost two more jobs
+    new AgingCtx(u, basePool, u.join(qs, u("vec_id") === qs("q_id"))
+      .select($"q_id", $"v".as("qv")).localCheckpoint(true))
   }
 
-  /** the same context over EXPLICIT (vec_id, v) / (q_id, qv) frames —
-    * AnnRecallSpec drives planted-drift corpora through the identical
-    * machinery, so the decision bit is pinned on the same code path
-    * the gate runs. */
-  private[graft] def agingCtxOf(u: DataFrame, basePool: DataFrame,
-      qv: DataFrame): AgingCtx = {
-    val s = u.sparkSession
-    import s.implicits._
-    val nq = qv.count()
-    val w5 = Window.partitionBy($"q_id").orderBy($"sim".desc, $"vec_id")
-    // the ground truth and the coarse probe chain (the fixed literal
-    // quantizer — shared by every variant: what ages is the TRAINED
-    // state, not the cells) are independent; overlap their eager
-    // builds (guide §2.6)
-    val Seq(gt, probed) = graft.Scratch.parMap(Seq[() => DataFrame](
-      () => broadcast(qv).join(u, $"vec_id" =!= $"q_id")
-        .withColumn("sim",
-          round(graft.expr.GraftFunctions.dot(s, $"qv", $"v"), 5))
-        .withColumn("rn", row_number().over(w5)).filter($"rn" <= 5)
-        .select($"q_id", $"vec_id").localCheckpoint(true),
-      () => maskChain(
-          qv.withColumn("c1", cellCol(s, $"qv"))
-            .withColumn("s1", cellScoresCol(s, $"qv")),
-          IVFPQ_NPROBE)
-        .withColumn("cell",
-          explode(array((1 to IVFPQ_NPROBE).map(i => col(s"c$i")): _*)))
-        .select($"q_id", $"cell").localCheckpoint(true)), 2)(_())
-    AgingCtx(u, basePool, qv, nq, gt, probed)
-  }
-
-  /** (vec_id, cell, codes) encode of a unit corpus under a flat
-    * codebook — ONE spelling for q217's variants and q219's
-    * retrained v2 index artifact. */
-  private[graft] def ivfEncOf(u: DataFrame, cbFlat: DataFrame): DataFrame = {
-    val s = u.sparkSession
-    import s.implicits._
-    u.crossJoin(broadcast(nestCodebook(cbFlat)))
-      .withColumn("codes",
-        graft.expr.GraftFunctions.pqEncode(s, $"v", $"cb"))
-      .withColumn("cell", cellCol(s, $"v"))
-      .select($"vec_id", $"cell", $"codes")
-  }
-
-  /** exact cosine re-rank of a bounded shortlist to top-5, keeping
-    * rank and rounded sim (q217 projects the (q_id, vec_id) pair;
-    * q219's swapped serve publishes all four columns). */
-  private[graft] def agingRerank5(ctx: AgingCtx, short: DataFrame)
-      : DataFrame = {
-    val s = ctx.u.sparkSession
-    import s.implicits._
-    val w5 = Window.partitionBy($"q_id").orderBy($"sim".desc, $"vec_id")
-    broadcast(short).join(ctx.u, "vec_id").join(broadcast(ctx.qv), "q_id")
-      .withColumn("sim",
-        round(graft.expr.GraftFunctions.dot(s, $"qv", $"v"), 5))
-      .withColumn("rn", row_number().over(w5)).filter($"rn" <= 5)
-      .select($"q_id", $"rn", $"vec_id", $"sim")
-  }
-
-  /** one IVFADC aged/fresh variant over the ctx corpus: the codebook
-    * trained on `pool`, its train6 provenance stamp, the encoded
-    * corpus, the ADC shortlist, and the exact top-5. */
-  private[graft] final case class IvfAging(cbFlat: DataFrame,
-      train6: Long, enc: DataFrame, shortlist: DataFrame, top5: DataFrame)
-
-  private[graft] def ivfAgingOf(ctx: AgingCtx, pool: DataFrame)
-      : IvfAging = {
-    val s = ctx.u.sparkSession
-    import s.implicits._
-    val cbFlat = pqCodebookOfPool(pool).localCheckpoint(true)
-    val train6 = cbSampleIds(pool)
-      .agg(sum($"vec_id")).head().getLong(0)
-    val enc = ivfEncOf(ctx.u, cbFlat)
-    val wa = Window.partitionBy($"q_id").orderBy($"adist2", $"vec_id")
-    val short = enc.join(broadcast(ctx.probed), Seq("cell"))
-      .filter($"vec_id" =!= $"q_id")
-      .join(broadcast(pqLutOfQv(ctx.qv, cbFlat)), Seq("q_id"))
-      .withColumn("adist2",
-        round(graft.expr.GraftFunctions.pqAdc(s, $"codes", $"lut"), 9))
-      .withColumn("ar", row_number().over(wa))
-      .filter($"ar" <= IVFPQ_R)
-      .select($"q_id", $"vec_id").localCheckpoint(true)
-    IvfAging(cbFlat, train6, enc, short, agingRerank5(ctx, short))
-  }
+  /** one IVFADC aged/fresh variant's train6 provenance stamp, ADC
+    * shortlist and exact top-5. */
+  private[graft] final case class IvfAging(train6: Long,
+      shortlist: DataFrame, top5: DataFrame)
 
   /** recall@5 in micro-units of a top-5 frame against the ctx ground
     * truth — the number both q217's sheet and q219's decision bit
@@ -3951,7 +3790,7 @@ object SimilarityQueries {
           lit(train6).as("train6"))
     }
     def ivfVariant(variant: String, pool: DataFrame): DataFrame = {
-      val v = ivfAgingOf(ctx, pool)
+      val v = ctx.ivfVariant(pool)
       sheet("ivfadc", variant, v.train6,
         v.shortlist.agg(count(lit(1)).as("exact_candidates")),
         v.top5.select($"q_id", $"vec_id"))
@@ -3979,7 +3818,7 @@ object SimilarityQueries {
         .select($"q_id", $"vec_id").localCheckpoint(true)
       sheet("sq8cell", variant, train6,
         short.agg(count(lit(1)).as("exact_candidates")),
-        agingRerank5(ctx, short).select($"q_id", $"vec_id"))
+        ctx.top5(short).select($"q_id", $"vec_id"))
     }
     // the four trained-state variants are independent given the
     // shared ctx (each trains/encodes its own state) — overlap their
@@ -4181,7 +4020,7 @@ object SimilarityQueries {
   // serving tier keeps its existing (aged) trained state — both
   // sides make the same conditional choice, so the gate also pins
   // the decision itself. AnnRecallSpec pins the bit's two directions
-  // on planted corpora through the identical agingCtxOf machinery.
+  // on planted corpora through the identical AgingCtx machinery.
   //
   // Scale: the decision is q217's ivfadc half (two corpus encodes —
   // the honest price of asking); the v2 build is once per retrain
@@ -4217,7 +4056,7 @@ object SimilarityQueries {
     * (pqCodebookLocal's discipline for the v2 trained state: the
     * swapped serve's LUT must not re-derive the frozen retrained
     * codebook from the corpus per serve). */
-  private def churnedCodebookLocal(s: SparkSession, dir: String)
+  private[graft] def churnedCodebookLocal(s: SparkSession, dir: String)
       : DataFrame = {
     import s.implicits._
     val path = s"$dir/embeddings.parquet"
@@ -4231,51 +4070,25 @@ object SimilarityQueries {
     s.createDataFrame(java.util.Arrays.asList(rows: _*), sch)
   }
 
-  /** the SWAPPED serve: top-5 from the persisted v2 artifact — probe
-    * cells as static partition-pruning literals, broadcast LUT from
-    * the collected retrained codebook, bounded shortlist (q181's
-    * serve shape). Factored so PlanShapeSpec can lock the swap plan:
-    * the oracle proves the VALUES equal a fresh inline build, only a
-    * plan lock proves the rows were READ from the artifact rather
-    * than re-encoded per serve. */
-  private[graft] def retrainedServe(s: SparkSession, dir: String,
-      ctx: AgingCtx): DataFrame = {
-    import s.implicits._
-    val (probedRows, probedL) = localized(ctx.probed)
-    val cells = probedRows.map(_.getInt(1)).distinct.sorted
-    val enc2 = graft.Tables
-      .parquetCached(s, retrainedIndexDir(s, dir))
-      .filter($"cell".isin(cells.map(Integer.valueOf): _*))
-      .select($"vec_id", $"cell".cast("int").as("cell"), $"codes")
-    val wa = Window.partitionBy($"q_id")
-      .orderBy($"adist2", $"vec_id")
-    val short = enc2.join(broadcast(probedL), Seq("cell"))
-      .filter($"vec_id" =!= $"q_id")
-      .join(
-        broadcast(pqLutOfQv(ctx.qv, churnedCodebookLocal(s, dir))),
-        Seq("q_id"))
-      .withColumn("adist2",
-        round(graft.expr.GraftFunctions.pqAdc(s, $"codes", $"lut"), 9))
-      .withColumn("ar", row_number().over(wa))
-      .filter($"ar" <= IVFPQ_R)
-      .select($"q_id", $"vec_id")
-    agingRerank5(ctx, short)
-  }
-
   private def q219(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ctx = agingCtx(s, dir)
-    val aged = ivfAgingOf(ctx, ctx.basePool)
-    val fresh = ivfAgingOf(ctx, ctx.u)
+    val aged = ctx.ivfVariant(ctx.basePool)
+    val fresh = ctx.ivfVariant(ctx.u)
     val aRec = agingRecall6(ctx, aged.top5)
     val fRec = agingRecall6(ctx, fresh.top5)
     val deficit6 = fRec - aRec
     val retrain = deficit6 > RetrainThresh6
+    // EXECUTE the decision: the swapped serve reads the persisted v2
+    // artifact in the probed cells, with the LUT from the collected
+    // retrained codebook (PlanShapeSpec locks that it reads rather
+    // than re-encodes); no retrain keeps serving the existing state
     val served =
-      if (retrain) retrainedServe(s, dir, ctx) // EXECUTE the decision
-      else aged.top5 // no retrain: keep serving the existing state
+      if (retrain) ctx.top5(ctx.shortlist(churnedCodebookLocal(s, dir),
+        Indexed(retrainedIndexDir(s, dir))))
+      else aged.top5
     served
-      .select($"q_id", $"rn", $"vec_id".as("neighbor_id"), $"sim")
+      .select($"q_id", $"rv".as("rn"), $"vec_id".as("neighbor_id"), $"sim")
       .withColumn("aged_recall6", lit(aRec))
       .withColumn("fresh_recall6", lit(fRec))
       .withColumn("deficit6", lit(deficit6))

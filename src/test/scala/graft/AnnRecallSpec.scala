@@ -224,7 +224,7 @@ class AnnRecallSpec extends SparkSpec {
   test("q219: the retrain decision bit fires on planted drift and stays off without drift") {
     import spark.implicits._
     // the decision, pinned on the IDENTICAL machinery the gate runs
-    // (agingCtxOf → ivfAgingOf → agingRecall6): a corpus drifted off
+    // (AgingCtx → ivfVariant → agingRecall6): a corpus drifted off
     // the aged codebook's training distribution must push the recall
     // deficit past RetrainThresh6; the no-drift control (aged pool =
     // the corpus itself) is the SAME chain twice and must sit at
@@ -234,20 +234,20 @@ class AnnRecallSpec extends SparkSpec {
       // large enough that the ADC shortlist truncates (recall < 1)
     val qv = drifted.filter($"vec_id" < 50008L)
       .select($"vec_id".as("q_id"), $"v".as("qv"))
-    val ctx = SimilarityQueries.agingCtxOf(drifted, pool, qv)
+    val ctx = new SimilarityQueries.AgingCtx(drifted, pool, qv)
     val aRec = SimilarityQueries.agingRecall6(ctx,
-      SimilarityQueries.ivfAgingOf(ctx, ctx.basePool).top5)
+      ctx.ivfVariant(ctx.basePool).top5)
     val fRec = SimilarityQueries.agingRecall6(ctx,
-      SimilarityQueries.ivfAgingOf(ctx, ctx.u).top5)
+      ctx.ivfVariant(ctx.u).top5)
     info(s"planted drift: aged=$aRec fresh=$fRec deficit=${fRec - aRec}")
     assert(fRec - aRec > SimilarityQueries.RetrainThresh6,
       s"decision bit should FIRE on planted drift: aged=$aRec fresh=$fRec")
     // control: no drift — identical trained state on both sides
-    val ctl = SimilarityQueries.agingCtxOf(drifted, drifted, qv)
+    val ctl = new SimilarityQueries.AgingCtx(drifted, drifted, qv)
     val aCtl = SimilarityQueries.agingRecall6(ctl,
-      SimilarityQueries.ivfAgingOf(ctl, ctl.basePool).top5)
+      ctl.ivfVariant(ctl.basePool).top5)
     val fCtl = SimilarityQueries.agingRecall6(ctl,
-      SimilarityQueries.ivfAgingOf(ctl, ctl.u).top5)
+      ctl.ivfVariant(ctl.u).top5)
     assert(fCtl - aCtl == 0L,
       s"no-drift control must have zero deficit: aged=$aCtl fresh=$fCtl")
     assert(!(fCtl - aCtl > SimilarityQueries.RetrainThresh6))

@@ -17,6 +17,27 @@ class BenchSpec extends SparkSpec {
     assert(timed.map(_._1) == Seq("q01_ok"))
   }
 
+  test("SPARK_GRAFT_ONLY selects on the id boundary; the warm-up runs the timed list") {
+    val sel = SparkEntry.selected(Some("q16")).map(_._1)
+    // the trap is real: q160-q169 share the "q16" prefix
+    assert(SparkEntry.queries.keys.exists(_.matches("q16[0-9]_.*")))
+    assert(sel.nonEmpty && sel.forall(_.startsWith("q16_")), sel)
+    assert(SparkEntry.selected(Some("q16_string_funcs, q16")).map(_._1) == sel)
+    // unset or empty: every query, sorted by name
+    val all = SparkEntry.queries.keys.toSeq.sorted
+    assert(SparkEntry.selected(None).map(_._1) == all)
+    assert(SparkEntry.selected(Some(" , ")).map(_._1) == all)
+    // the warm-all pass and the timed sweep run the same list
+    val stub: (SparkSession, String) => DataFrame = (s, _) => s.range(1).toDF()
+    val picked = SparkEntry.selected(Some("q54,q16")).map { case (n, _) => n -> stub }
+    assert(picked.map(_._1) == Seq("q16_string_funcs", "q54_ann_ivf"))
+    val warmed = Bench.warmAll(spark, picked)
+    val (timed, failed) = Bench.timeQueries(spark, sf, picked, reps = 1)
+    assert(failed.isEmpty)
+    assert(warmed == timed.map(_._1))
+    assert(warmed == picked.map(_._1))
+  }
+
   test("the JSON keeps every existing *_sec field and adds only the new ones") {
     val existing = Seq("fixture", "ann_index", "retrain_index",
       "chunk_index", "doc_index", "release_build", "release_v2",

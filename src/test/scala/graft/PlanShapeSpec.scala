@@ -433,15 +433,35 @@ class PlanShapeSpec extends SparkSpec {
       p.linesIterator.filter(_.contains("PushedFilters")).mkString("\n"))
   }
 
+  test("q212: the purged-index scan is partition-pruned to the probed cells") {
+    // the takedown serve reads the persisted index like q181 does: the
+    // probed cells enter the reader as PartitionFilters literals, below
+    // the tombstone anti-join — an unpruned scan reads every cell
+    val p = plan("q212_takedown_ann_serve")
+    val scan = p.linesIterator.find(l =>
+      l.contains("PartitionFilters") && l.contains("cell#"))
+    assert(scan.isDefined, p.linesIterator
+      .filter(_.contains("Scan")).mkString("\n"))
+    // Spark prints a literal list longer than
+    // spark.sql.optimizer.inSetConversionThreshold (10) as INSET
+    assert("cell#\\d+ (IN \\(|INSET )".r.findFirstIn(scan.get).isDefined,
+      scan.get)
+    assert("BroadcastHashJoin.*LeftAnti".r.findFirstIn(p).isDefined,
+      p.linesIterator.filter(_.contains("Join")).mkString("\n"))
+    assert(!p.contains("graft_pq_encode"), "serve path re-encodes")
+  }
+
   test("q219: the swapped serve reads the v2 artifact — pruned scan, no re-encode") {
     // the oracle proves the swapped serve's VALUES equal a fresh
     // inline build; only this plan lock proves the rows were READ
     // from the persisted v2 index (partition-pruned to the probed
     // cells) rather than re-encoded per serve — the difference
     // between "executed the retrain" and "re-derived it every query"
-    val ctx = graft.queries.SimilarityQueries.agingCtx(spark, sf)
-    val p = graft.queries.SimilarityQueries
-      .retrainedServe(spark, sf, ctx)
+    import graft.queries.SimilarityQueries._
+    val ctx = agingCtx(spark, sf)
+    // q219's swapped serve: the chain over the v2 artifact's codes
+    val p = ctx.top5(ctx.shortlist(churnedCodebookLocal(spark, sf),
+        Indexed(retrainedIndexDir(spark, sf))))
       .queryExecution.executedPlan.toString
     val scan = p.linesIterator.find(l =>
       l.contains("PartitionFilters") && l.contains("cell#"))
