@@ -104,5 +104,5 @@ object Artifacts {
     St.cdcFeed -> St.cdcFeedDir,
     St.mergeExt -> St.mergeExtensionDir,
     St.morExt -> St.morExtensionDir,
-    St.morCompact -> St.morCompactDir)
+    St.morCompactExt -> St.morCompactDir)
 }

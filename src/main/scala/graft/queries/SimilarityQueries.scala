@@ -746,8 +746,9 @@ object SimilarityQueries {
   // billion-scale ANN architecture -----------------------------------
   // nprobe=4/R=50 measured combined recall@5 = 0.66 (cell-miss and
   // shortlist truncation compound across the two approximations);
-  // 6/100 measures 0.86 while still scanning 6/16 inverted lists
-  // (PqRecallSpec pins the floor at 0.8)
+  // 6/100 measures 0.86 (PqRecallSpec pins the floor at 0.8). Of the
+  // 16 cells only 9 hold vectors at sf0.01 and sf0.1, so one query's
+  // 6 probed lists cover about 6 of those 9, not 6/16 of the corpus
   private val IVFPQ_NPROBE = 6
   private[graft] val IVFPQ_R = 100
 

@@ -3863,7 +3863,110 @@ object StreamingQueries {
   private[graft] final case class ManRow(artifact: String, version: Long,
     kind: String, action: String, fileKind: String, cause: String,
     path: String, nRows: Long, minKey: Option[Long] = None,
-    maxKey: Option[Long] = None)
+    maxKey: Option[Long] = None) {
+    /** this file's remove action in commit (v, kind). */
+    def removedAt(v: Long, kind: String, cause: String): ManRow =
+      ManRow(artifact, v, kind, "remove", fileKind, cause, path, 0L)
+  }
+
+  /** the marker row of commit (artifact, v, kind). */
+  private def commitOf(artifact: String, v: Long, kind: String): ManRow =
+    ManRow(artifact, v, kind, "commit", "", "", "", 0L)
+
+  /** the newest commit of `artifact` (of commit kind `kind` if given). */
+  private def headVersion(man: Seq[ManRow], artifact: String,
+      kind: String = ""): Long =
+    man.filter(m => m.artifact == artifact && m.action == "commit" &&
+      (kind.isEmpty || m.kind == kind)).map(_.version).max
+
+  /** one written file dir: its row count and its TRUE key zone map,
+    * read back after the write (None on an empty file). */
+  private final case class ManFile(path: String, nRows: Long,
+      minKey: Option[Long], maxKey: Option[Long]) {
+    def add(artifact: String, v: Long, kind: String, cause: String)
+        : ManRow =
+      ManRow(artifact, v, kind, "add", "data", cause, path, nRows,
+        minKey, maxKey)
+  }
+
+  /** write `df` under `p` — with `by`, one dir per value of that column
+    * (a partitionBy write, which makes NO dir for a value without rows)
+    * — and return each written dir's stats from one grouped read-back
+    * of the key column. */
+  private def writeFiles(s: SparkSession, df: DataFrame, p: String,
+      by: Option[String] = None): Seq[ManFile] = {
+    val w = df.write.mode("overwrite")
+    by.fold(w)(w.partitionBy(_)).parquet(p)
+    val dir = by.fold(lit(p))(c =>
+      concat(lit(s"$p/$c="), col(c).cast("string")))
+    val sch = by.fold(ManTombSchema)(c => ManTombSchema.add(df.schema(c)))
+    readMan(s, p, sch).groupBy(by.toSeq.map(col): _*)
+      .agg(count(lit(1)).as("n"), min(col("key")).as("mn"),
+        max(col("key")).as("mx"))
+      .select(dir, col("n"), col("mn"), col("mx"))
+      .collect().toSeq
+      .map { r =>
+        def key(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+        ManFile(r.getString(0), r.getLong(1), key(2), key(3))
+      }
+      .sortBy(_.path)
+  }
+
+  /** rewrite, in one pass, the files of `files` that hold a key of
+    * `hits`: each row is tagged with its file index `fi` and a `hit`
+    * flag, ONE aggregate finds the touched indices, and ONE write
+    * partitioned by `fi` lays down every touched file's `keep` rows
+    * projected to `cols`. Returns each touched file with its rewrite,
+    * in file order — a rewrite that keeps no rows included, as an
+    * empty dir (the partitioned write makes none). */
+  private def rewriteTouched(s: SparkSession, files: Seq[ManRow],
+      hits: DataFrame, p: String, keep: Column, cols: Seq[Column])
+      : Seq[(ManRow, ManFile)] = {
+    if (files.isEmpty) return Seq.empty
+    val tagged = files.zipWithIndex
+      .map { case (f, i) =>
+        readMan(s, f.path, ManDataSchema).withColumn("fi", lit(i)) }
+      .reduce(_ unionByName _)
+      .join(broadcast(hits.withColumn("hit", lit(1))), Seq("key"), "left")
+    val touched = tagged.filter(col("hit") === 1).select(col("fi"))
+      .distinct().collect().map(_.getInt(0)).sorted.toSeq
+    if (touched.isEmpty) return Seq.empty
+    val written = writeFiles(s,
+      tagged.filter(col("fi").isin(touched: _*) && keep)
+        .select(cols :+ col("fi"): _*),
+      p, Some("fi")).map(f => f.path -> f).toMap
+    touched.map { i =>
+      val d = s"$p/fi=$i"
+      files(i) -> written.getOrElse(d, {
+        new java.io.File(d).mkdirs()
+        ManFile(d, 0L, None, None)
+      })
+    }
+  }
+
+  /** the ONE manifest write: the log's rows as one parquet file under
+    * `out`/manifest, snake_case columns in ManRow's field order. */
+  private[graft] def writeManifest(s: SparkSession, out: String,
+      rows: Seq[ManRow]): Unit = {
+    import s.implicits._
+    rows.toDF("artifact", "version", "kind", "action", "file_kind",
+        "cause", "path", "n_rows", "min_key", "max_key")
+      .repartition(1).write.mode("overwrite")
+      .parquet(s"$out/manifest")
+  }
+
+  /** an extension log (once per upstream log): the log at `mdir`
+    * untouched, plus `extend(man, artifact, out)`'s commits for each
+    * artifact, in a SEPARATE manifest dir — old versions keep reading
+    * from their own file sets. */
+  private def extensionDir(s: SparkSession, mdir: String, prefix: String)(
+      extend: (Seq[ManRow], String, String) => Seq[ManRow]): String = {
+    val man = manifestRowsOf(s, mdir)
+    val out = graft.Scratch.tempDirDeletedOnExit(prefix)
+    writeManifest(s, out, man ++ man.map(_.artifact).distinct.sorted
+      .flatMap(a => extend(man, a, out)))
+    out
+  }
 
   private[graft] val manifest = graft.Artifacts[String]("manifest_build")
 
@@ -3901,27 +4004,18 @@ object StreamingQueries {
           .drop("artifact")
         val dCp = docDeltas.filter($"artifact" === "chunk_postings")
           .drop("artifact")
-        val entries =
+        writeManifest(s, out,
           buildOneManifest(s, "ann_codes", baseAc,
             ev(annDeltas, vecT, "vec_id"), "vec_id", out) ++
             buildOneManifest(s, "chunk_postings", baseCp,
               ev(dCp, docT, "doc_id"), "doc_id", out) ++
             buildOneManifest(s, "doc_postings", baseDp,
-              ev(dDp, docT, "doc_id"), "doc_id", out)
-        entries.toDF("artifact", "version", "kind", "action",
-            "file_kind", "cause", "path", "n_rows", "min_key",
-            "max_key")
-          .repartition(1).write.mode("overwrite")
-          .parquet(s"$out/manifest")
+              ev(dDp, docT, "doc_id"), "doc_id", out))
       } finally graft.Scratch.deleteRecursively(
         new java.io.File(feedScratch))
       out
     }
   }
-
-  private type ManEntry =
-    (String, Long, String, String, String, String, String, Long,
-      Option[Long], Option[Long])
 
   /** buckets per full-rewrite commit. A fired vacuum or OPTIMIZE
     * rewrites the whole snapshot anyway, so the rewrite CLUSTERS it:
@@ -3964,70 +4058,49 @@ object StreamingQueries {
     * the log rows that keep old versions readable. */
   private[graft] def buildOneManifest(s: SparkSession, artifact: String,
       base: DataFrame, events: Seq[(String, DataFrame)], key: String,
-      out: String): Vector[ManEntry] = {
-    val entries = Vector.newBuilder[ManEntry]
+      out: String): Vector[ManRow] = {
+    var entries = Vector.empty[ManRow]
     var v = 0L
     def slim(df: DataFrame) =
       df.select(col(key).cast("long").as("key"),
         col("k").cast("string").as("k"),
         col("c1").cast("long").as("c1"), col("c2").cast("long").as("c2"))
-    // (path, rows, zone map) — the zone map is the file's TRUE key
-    // min/max at write time, read back in the same pass as the count
-    def writeData(slimDf: DataFrame, cause: String)
-        : (String, Long, Option[Long], Option[Long]) = {
-      val p = s"$out/$artifact/v${v}_$cause"
-      slimDf.write.mode("overwrite").parquet(p)
-      val r = readMan(s, p, ManDataSchema)
-        .agg(count(lit(1)), min(col("key")), max(col("key"))).head()
-      (p, r.getLong(0),
-        if (r.isNullAt(1)) None else Some(r.getLong(1)),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)))
-    }
+    def at(cause: String) = s"$out/$artifact/v${v}_$cause"
     // a full-rewrite commit (fired vacuum / OPTIMIZE) clusters: range-
     // bucketed files over the rewrite's own key span, one manifest
     // entry per non-empty bucket with a tight, disjoint zone map
-    def writeClustered(slimDf: DataFrame, cause: String)
-        : Seq[(String, Long, Option[Long], Option[Long])] = {
-      val p = s"$out/$artifact/v${v}_$cause"
+    def writeClustered(slimDf: DataFrame, kind: String, cause: String)
+        : Vector[ManRow] = {
       val bounds = slimDf.agg(min(col("key")), max(col("key"))).head()
-      if (bounds.isNullAt(0)) { // empty rewrite: one empty file
-        val one = writeData(slimDf, cause)
-        return Seq(one)
-      }
-      val mn = bounds.getLong(0)
-      val span = bounds.getLong(1) - mn + 1L
-      val width = (span + ClusterBuckets - 1L) / ClusterBuckets
-      slimDf.withColumn("b",
-          expr(s"CAST((key - $mn) DIV $width AS INT)"))
-        .write.mode("overwrite").partitionBy("b").parquet(p)
-      s.read.parquet(p).groupBy(col("b"))
-        .agg(count(lit(1)), min(col("key")), max(col("key")))
-        .collect().toSeq
-        .map(r => (s"$p/b=${r.getInt(0)}", r.getLong(1),
-          Some(r.getLong(2)), Some(r.getLong(3))))
-        .sortBy(_._1)
+      val parts =
+        if (bounds.isNullAt(0)) // empty rewrite: one empty file
+          writeFiles(s, slimDf, at(cause))
+        else {
+          val mn = bounds.getLong(0)
+          val span = bounds.getLong(1) - mn + 1L
+          val width = (span + ClusterBuckets - 1L) / ClusterBuckets
+          writeFiles(s, slimDf.withColumn("b",
+            expr(s"CAST((key - $mn) DIV $width AS INT)")), at(cause),
+            Some("b"))
+        }
+      parts.map(_.add(artifact, v, kind, cause)).toVector
     }
-    def fileRows(paths: Seq[String]) =
-      readManAll(s, paths, ManDataSchema)
-    def tombRows(paths: Seq[String]) =
-      readManAll(s, paths, ManTombSchema)
+    def fileRows(files: Seq[ManRow]) =
+      readManAll(s, files.map(_.path), ManDataSchema)
+    def tombRows(files: Seq[ManRow]) =
+      readManAll(s, files.map(_.path), ManTombSchema)
 
-    var data = Vector.empty[(String, String, Long)] // (path, cause, n)
-    var tombs = Vector.empty[(String, Long)]
+    var data = Vector.empty[ManRow] // the visible files' add rows
+    var tombs = Vector.empty[ManRow]
     var history = Vector.empty[DataFrame]
-    val none: Option[Long] = None
 
-    val (bp, bn, bmn, bmx) = writeData(slim(base), "base")
-    entries += ((artifact, 0L, "base", "commit", "", "", "", 0L,
-      none, none))
-    entries += ((artifact, 0L, "base", "add", "data", "base", bp, bn,
-      bmn, bmx))
-    data :+= ((bp, "base", bn))
+    data :+= writeFiles(s, slim(base), at("base")).head
+      .add(artifact, 0L, "base", "base")
+    entries ++= Seq(commitOf(artifact, 0L, "base"), data.head)
 
     for ((kind, df) <- events) {
       v += 1
-      entries += ((artifact, v, kind, "commit", "", "", "", 0L,
-        none, none))
+      entries :+= commitOf(artifact, v, kind)
       kind match {
         case "append" =>
           val screened =
@@ -4035,69 +4108,53 @@ object StreamingQueries {
             else slim(df).join(
               broadcast(history.reduce(_ unionByName _)),
               Seq("key"), "left_anti")
-          val (p, n, mn, mx) = writeData(screened, "append")
-          entries += ((artifact, v, kind, "add", "data", "append", p,
-            n, mn, mx))
-          data :+= ((p, "append", n))
+          data :+= writeFiles(s, screened, at("append")).head
+            .add(artifact, v, kind, "append")
+          entries :+= data.last
         case "takedown" =>
-          val t = df.select(col(key).cast("long").as("key"))
-          val p = s"$out/$artifact/v${v}_tomb"
-          t.write.mode("overwrite").parquet(p)
-          val tn = readMan(s, p, ManTombSchema).count()
-          entries += ((artifact, v, kind, "add", "tomb", "takedown",
-            p, tn, none, none))
-          tombs :+= ((p, tn))
-          history :+= readMan(s, p, ManTombSchema)
+          val t = writeFiles(s, df.select(col(key).cast("long").as("key")),
+            at("tomb")).head
+          tombs :+= ManRow(artifact, v, kind, "add", "tomb", "takedown",
+            t.path, t.nRows)
+          entries :+= tombs.last
+          history :+= readMan(s, t.path, ManTombSchema)
           // the vacuum bit: manifest arithmetic for the total, ONE
           // semi-join scan against the broadcast outstanding store
           // for the dead count
-          val total = data.map(_._3).sum
-          val dead = fileRows(data.map(_._1))
-            .join(broadcast(tombRows(tombs.map(_._1))),
-              Seq("key"), "left_semi").count()
+          val total = data.map(_.nRows).sum
+          val dead = fileRows(data)
+            .join(broadcast(tombRows(tombs)), Seq("key"), "left_semi")
+            .count()
           val frac6 = if (total > 0) dead * 1000000L / total else 0L
           if (frac6 > VacuumThresh6) {
             // checkpoint: writeClustered makes two passes (bounds,
             // then the bucketed write) — don't re-run the anti-join
             // lineage per pass
-            val live = fileRows(data.map(_._1))
-              .join(broadcast(tombRows(tombs.map(_._1))),
-                Seq("key"), "left_anti")
+            val live = fileRows(data)
+              .join(broadcast(tombRows(tombs)), Seq("key"), "left_anti")
               .localCheckpoint(true)
-            val parts = writeClustered(live, "vacuum")
-            data.foreach { case (p0, _, _) =>
-              entries += ((artifact, v, kind, "remove", "data",
-                "vacuum", p0, 0L, none, none)) }
-            tombs.foreach { case (p0, _) =>
-              entries += ((artifact, v, kind, "remove", "tomb",
-                "vacuum", p0, 0L, none, none)) }
-            parts.foreach { case (vp, vn, vmn, vmx) =>
-              entries += ((artifact, v, kind, "add", "data", "vacuum",
-                vp, vn, vmn, vmx)) }
-            data = parts.map(e => (e._1, "vacuum", e._2)).toVector
+            val parts = writeClustered(live, kind, "vacuum")
+            entries ++= (data ++ tombs).map(_.removedAt(v, kind, "vacuum"))
+            entries ++= parts
+            data = parts
             tombs = Vector.empty
           }
         case "optimize" =>
           // small-file debt: pure manifest arithmetic, no scan
-          val total = data.map(_._3).sum
-          val debt = data.filter(_._2 == "append").map(_._3).sum
+          val total = data.map(_.nRows).sum
+          val debt = data.filter(_.cause == "append").map(_.nRows).sum
           val debt6 = if (total > 0) debt * 1000000L / total else 0L
           if (debt6 > OptimizeThresh6) {
-            val parts = writeClustered(fileRows(data.map(_._1)),
-              "optimize")
-            data.foreach { case (p0, _, _) =>
-              entries += ((artifact, v, kind, "remove", "data",
-                "optimize", p0, 0L, none, none)) }
-            parts.foreach { case (op, on, omn, omx) =>
-              entries += ((artifact, v, kind, "add", "data",
-                "optimize", op, on, omn, omx)) }
-            data = parts.map(e => (e._1, "optimize", e._2)).toVector
+            val parts = writeClustered(fileRows(data), kind, "optimize")
+            entries ++= data.map(_.removedAt(v, kind, "optimize"))
+            entries ++= parts
+            data = parts
           }
         case other =>
           throw new IllegalArgumentException(s"unknown commit: $other")
       }
     }
-    entries.result()
+    entries
   }
 
   /** the commit log, collected driver-side: bounded by files-ever-
@@ -4434,8 +4491,7 @@ object StreamingQueries {
         skipProbesOf(mn, mx)
       }
     } yield {
-      val head = man.filter(m => m.artifact == a &&
-        m.action == "commit").map(_.version).max
+      val head = headVersion(man, a)
       val vis = snapshotFiles(man, a, head, "data")
         .filter(_.nRows > 0L)
       // the prune: zone-map intersection against the LOG, no file
@@ -4859,74 +4915,41 @@ object StreamingQueries {
     * oracle. */
   private[graft] def mergeCommit(s: SparkSession, man: Seq[ManRow],
       artifact: String, out: String, pick: Column => Column)
-      : Vector[ManEntry] = {
-    val head = man.filter(m => m.artifact == artifact &&
-      m.action == "commit").map(_.version).max
+      : Seq[ManRow] = {
+    val head = headVersion(man, artifact)
     val v = head + 1L
-    val entries = Vector.newBuilder[ManEntry]
-    val none: Option[Long] = None
-    entries += ((artifact, v, "merge", "commit", "", "", "", 0L,
-      none, none))
     val u = snapshotAt(s, man, artifact, head)
       .filter(col("dd").isNull)
       .filter(pick(col("key")))
       .select(col("key")).distinct()
-      .withColumn("um", lit(1))
       .localCheckpoint(true)
     val vis = snapshotFiles(man, artifact, head, "data")
       .filter(_.nRows > 0L)
-    vis.zipWithIndex.foreach { case (f, i) =>
-      val marked = readMan(s, f.path, ManDataSchema)
-        .join(broadcast(u), Seq("key"), "left")
-      val matched = marked.filter(col("um") === 1).count()
-      if (matched > 0L) {
-        val p = s"$out/$artifact/v${v}_merge_$i"
-        // the rewrite also EVOLVES the schema: rewritten files carry a
-        // rev column (1 = this revision, 0 = copied verbatim); files
-        // never rewritten lack the column entirely and project as
-        // NULL under the evolved read schema — q229 gates the
-        // three-way distinction
-        marked.select(col("key"), col("k"),
-            when(col("um") === 1, col("c1") + col("key"))
-              .otherwise(col("c1")).as("c1"),
-            when(col("um") === 1, col("c2") + lit(1L))
-              .otherwise(col("c2")).as("c2"),
-            when(col("um") === 1, lit(1L)).otherwise(lit(0L))
-              .as("rev"))
-          .write.mode("overwrite").parquet(p)
-        val r = readMan(s, p, ManDataSchema)
-          .agg(count(lit(1)), min(col("key")), max(col("key"))).head()
-        entries += ((artifact, v, "merge", "remove", "data", "merge",
-          f.path, 0L, none, none))
-        entries += ((artifact, v, "merge", "add", "data", "merge", p,
-          r.getLong(0), Some(r.getLong(1)), Some(r.getLong(2))))
-      }
-    }
-    entries.result()
+    val hit = col("hit") === 1
+    // the rewrite also EVOLVES the schema: rewritten files carry a
+    // rev column (1 = this revision, 0 = copied verbatim); files
+    // never rewritten lack the column entirely and project as
+    // NULL under the evolved read schema — q229 gates the
+    // three-way distinction
+    commitOf(artifact, v, "merge") +: rewriteTouched(s, vis, u,
+        s"$out/$artifact/v${v}_merge", lit(true),
+        Seq(col("key"), col("k"),
+          when(hit, col("c1") + col("key")).otherwise(col("c1")).as("c1"),
+          when(hit, col("c2") + lit(1L)).otherwise(col("c2")).as("c2"),
+          when(hit, lit(1L)).otherwise(lit(0L)).as("rev")))
+      .flatMap { case (f, nf) => Seq(f.removedAt(v, "merge", "merge"),
+        nf.add(artifact, v, "merge", "merge")) }
   }
 
   /** the merge-extended manifest (once per corpus snapshot): the
-    * q221-226 log untouched on disk, plus one COW merge commit per
-    * artifact appended in a SEPARATE manifest dir — old versions keep
-    * reading from their own file sets (the spec pins v5 before/after
-    * identical). */
+    * q221-226 log plus one COW merge commit per artifact (the spec
+    * pins v5 before/after identical). */
   private[graft] def mergeExtensionDir(s: SparkSession, dir: String)
       : String = {
     val mdir = manifestLogDir(s, dir)
     mergeExt(s, dir, mdir) {
-      import s.implicits._
-      val man = manifestRowsOf(s, mdir)
-      val out = graft.Scratch.tempDirDeletedOnExit("graft_mergeext")
-      val arts = man.map(_.artifact).distinct.sorted
-      val ext = arts.flatMap(a =>
+      extensionDir(s, mdir, "graft_mergeext")((man, a, out) =>
         mergeCommit(s, man, a, out, upsertPick))
-      val orig = man.map(m => (m.artifact, m.version, m.kind, m.action,
-        m.fileKind, m.cause, m.path, m.nRows, m.minKey, m.maxKey))
-      (orig ++ ext).toDF("artifact", "version", "kind", "action",
-          "file_kind", "cause", "path", "n_rows", "min_key", "max_key")
-        .repartition(1).write.mode("overwrite")
-        .parquet(s"$out/manifest")
-      out
     }
   }
 
@@ -4937,8 +4960,7 @@ object StreamingQueries {
     val man = manifestRowsOf(s, ext)
     val arts = man.map(_.artifact).distinct.sorted
     val rows = arts.map { a =>
-      val mv = man.filter(m => m.artifact == a &&
-        m.action == "commit").map(_.version).max
+      val mv = headVersion(man, a)
       val prevVis = snapshotFiles(baseMan, a, mv - 1L, "data")
         .filter(_.nRows > 0L)
       val rewritten = man.filter(m => m.artifact == a &&
@@ -5085,11 +5107,8 @@ object StreamingQueries {
     * supersede key file (file_kind 'morsup') — base files untouched. */
   private[graft] def morCommit(s: SparkSession, man: Seq[ManRow],
       a: String, out: String, pick: Column => Column)
-      : Vector[ManEntry] = {
-    val none: Option[Long] = None
-    val entries = Vector.newBuilder[ManEntry]
-    val head = man.filter(m => m.artifact == a &&
-      m.action == "commit").map(_.version).max
+      : Seq[ManRow] = {
+    val head = headVersion(man, a)
     val v = head + 1L
     val delta = snapshotAt(s, man, a, head)
       .filter(col("dd").isNull).filter(pick(col("key")))
@@ -5097,22 +5116,12 @@ object StreamingQueries {
         (col("c1") + col("key")).as("c1"),
         (col("c2") + lit(1L)).as("c2"))
       .localCheckpoint(true)
-    val dp = s"$out/$a/v${v}_mor_delta"
-    delta.write.mode("overwrite").parquet(dp)
-    val r = readMan(s, dp, ManDataSchema)
-      .agg(count(lit(1)), min(col("key")), max(col("key"))).head()
-    val sp = s"$out/$a/v${v}_mor_sup"
-    delta.select(col("key")).distinct()
-      .write.mode("overwrite").parquet(sp)
-    val sn = readMan(s, sp, ManTombSchema).count()
-    entries += ((a, v, "merge", "commit", "", "", "", 0L, none, none))
-    entries += ((a, v, "merge", "add", "data", "mor_delta", dp,
-      r.getLong(0),
-      if (r.isNullAt(1)) none else Some(r.getLong(1)),
-      if (r.isNullAt(2)) none else Some(r.getLong(2))))
-    entries += ((a, v, "merge", "add", "morsup", "merge", sp, sn,
-      none, none))
-    entries.result()
+    val d = writeFiles(s, delta, s"$out/$a/v${v}_mor_delta").head
+    val sup = writeFiles(s, delta.select(col("key")).distinct(),
+      s"$out/$a/v${v}_mor_sup").head
+    Seq(commitOf(a, v, "merge"), d.add(a, v, "merge", "mor_delta"),
+      ManRow(a, v, "merge", "add", "morsup", "merge", sup.path,
+        sup.nRows))
   }
 
   /** the MoR merge extension (once per corpus snapshot): per
@@ -5122,20 +5131,8 @@ object StreamingQueries {
       : String = {
     val mdir = manifestLogDir(s, dir)
     morExt(s, dir, mdir) {
-      import s.implicits._
-      val man = manifestRowsOf(s, mdir)
-      val out = graft.Scratch.tempDirDeletedOnExit("graft_morext")
-      val ext = man.map(_.artifact).distinct.sorted
-        .flatMap(a => morCommit(s, man, a, out, upsertPick))
-      val orig = man.map(m => (m.artifact, m.version, m.kind,
-        m.action, m.fileKind, m.cause, m.path, m.nRows, m.minKey,
-        m.maxKey))
-      (orig ++ ext)
-        .toDF("artifact", "version", "kind", "action", "file_kind",
-          "cause", "path", "n_rows", "min_key", "max_key")
-        .repartition(1).write.mode("overwrite")
-        .parquet(s"$out/manifest")
-      out
+      extensionDir(s, mdir, "graft_morext")((man, a, out) =>
+        morCommit(s, man, a, out, upsertPick))
     }
   }
 
@@ -5145,8 +5142,7 @@ object StreamingQueries {
     * ordinary merge-on-read takedown tombstones on top. */
   private[graft] def morSnapshotHead(s: SparkSession, man: Seq[ManRow],
       artifact: String): DataFrame = {
-    val morV = man.filter(m => m.artifact == artifact &&
-      m.kind == "merge" && m.action == "commit").map(_.version).max
+    val morV = headVersion(man, artifact, "merge")
     val preF = snapshotFiles(man, artifact, morV - 1L, "data")
     val deltaF = man.filter(m => m.artifact == artifact &&
       m.version == morV && m.action == "add" && m.fileKind == "data")
@@ -5173,15 +5169,13 @@ object StreamingQueries {
     val cowMan = manifestRowsOf(s, mergeExtensionDir(s, dir))
     val arts = morMan.map(_.artifact).distinct.sorted
     val rows = arts.map { a =>
-      val morV = morMan.filter(m => m.artifact == a &&
-        m.kind == "merge" && m.action == "commit").map(_.version).max
+      val morV = headVersion(morMan, a, "merge")
       val deltaRows = morMan.filter(m => m.artifact == a &&
         m.version == morV && m.fileKind == "data" &&
         m.action == "add").map(_.nRows).sum
       val supKeys = morMan.filter(m => m.artifact == a &&
         m.version == morV && m.fileKind == "morsup").map(_.nRows).sum
-      val cowV = cowMan.filter(m => m.artifact == a &&
-        m.action == "commit").map(_.version).max
+      val cowV = headVersion(cowMan, a)
       val cowRewritten = cowMan.filter(m => m.artifact == a &&
         m.version == cowV && m.action == "add" &&
         m.cause == "merge").map(_.nRows).sum
@@ -5265,51 +5259,30 @@ object StreamingQueries {
   // COW, amortized across the reads in between: the lifecycle a real
   // Iceberg table runs.
 
-  private[graft] val morCompact = graft.Artifacts[String]("mor_compact")
+  private[graft] val morCompactExt =
+    graft.Artifacts[String]("mor_compact")
 
   /** compact one artifact's MoR merge: v7 rewrites every pre-merge
     * data file holding a superseded key (rows minus the supersede
     * set, payload verbatim), removes the supersede file, keeps the
     * delta. Returns the extension entries. */
   private[graft] def morCompact(s: SparkSession, man: Seq[ManRow],
-      a: String, out: String): Vector[ManEntry] = {
-    val none: Option[Long] = None
-    val entries = Vector.newBuilder[ManEntry]
-    val morV = man.filter(m => m.artifact == a &&
-      m.kind == "merge" && m.action == "commit").map(_.version).max
+      a: String, out: String): Seq[ManRow] = {
+    val morV = headVersion(man, a, "merge")
     val v = morV + 1L
     val supF = man.filter(m => m.artifact == a && m.version == morV &&
       m.action == "add" && m.fileKind == "morsup")
     val sup = readManAll(s, supF.map(_.path), ManTombSchema)
       .select(col("key")).distinct().localCheckpoint(true)
-    entries += ((a, v, "compact", "commit", "", "", "", 0L, none,
-      none))
     val preF = snapshotFiles(man, a, morV - 1L, "data")
       .filter(_.nRows > 0L)
-    preF.zipWithIndex.foreach { case (f, i) =>
-      val marked = readMan(s, f.path, ManDataSchema)
-        .join(broadcast(sup.withColumn("ss", lit(1))), Seq("key"),
-          "left")
-      val hit = marked.filter(col("ss") === 1).count()
-      if (hit > 0L) {
-        val p = s"$out/$a/v${v}_compact_$i"
-        marked.filter(col("ss").isNull)
-          .select(col("key"), col("k"), col("c1"), col("c2"))
-          .write.mode("overwrite").parquet(p)
-        val r = readMan(s, p, ManDataSchema)
-          .agg(count(lit(1)), min(col("key")), max(col("key"))).head()
-        entries += ((a, v, "compact", "remove", "data", "compact",
-          f.path, 0L, none, none))
-        entries += ((a, v, "compact", "add", "data", "compact", p,
-          r.getLong(0),
-          if (r.isNullAt(1)) none else Some(r.getLong(1)),
-          if (r.isNullAt(2)) none else Some(r.getLong(2))))
-      }
-    }
-    // retire the supersede file: the read tax ends here
-    supF.foreach(f => entries += ((a, v, "compact", "remove",
-      "morsup", "compact", f.path, 0L, none, none)))
-    entries.result()
+    (commitOf(a, v, "compact") +: rewriteTouched(s, preF, sup,
+        s"$out/$a/v${v}_compact", col("hit").isNull,
+        Seq(col("key"), col("k"), col("c1"), col("c2")))
+      .flatMap { case (f, nf) => Seq(f.removedAt(v, "compact", "compact"),
+        nf.add(a, v, "compact", "compact")) }) ++
+      // retire the supersede file: the read tax ends here
+      supF.map(_.removedAt(v, "compact", "compact"))
   }
 
   /** the compacted-MoR manifest (once per corpus snapshot): the MoR
@@ -5317,21 +5290,9 @@ object StreamingQueries {
   private[graft] def morCompactDir(s: SparkSession, dir: String)
       : String = {
     val mor = morExtensionDir(s, dir)
-    morCompact(s, dir, mor) {
-      import s.implicits._
-      val morMan = manifestRowsOf(s, mor)
-      val out = graft.Scratch.tempDirDeletedOnExit("graft_morcmp")
-      val ext = morMan.map(_.artifact).distinct.sorted
-        .flatMap(a => morCompact(s, morMan, a, out))
-      val orig = morMan.map(m => (m.artifact, m.version, m.kind,
-        m.action, m.fileKind, m.cause, m.path, m.nRows, m.minKey,
-        m.maxKey))
-      (orig ++ ext).toDF("artifact", "version", "kind", "action",
-          "file_kind", "cause", "path", "n_rows", "min_key",
-          "max_key")
-        .repartition(1).write.mode("overwrite")
-        .parquet(s"$out/manifest")
-      out
+    morCompactExt(s, dir, mor) {
+      extensionDir(s, mor, "graft_morcmp")((man, a, out) =>
+        morCompact(s, man, a, out))
     }
   }
 
@@ -5341,9 +5302,7 @@ object StreamingQueries {
     val morMan = manifestRowsOf(s, morExtensionDir(s, dir))
     val arts = man.map(_.artifact).distinct.sorted
     val rows = arts.map { a =>
-      val cv = man.filter(m => m.artifact == a &&
-        m.kind == "compact" && m.action == "commit").map(_.version)
-        .max
+      val cv = headVersion(man, a, "compact")
       val written = man.filter(m => m.artifact == a &&
         m.version == cv && m.action == "add").map(_.nRows).sum
       val filesRewritten = man.filter(m => m.artifact == a &&
@@ -5422,8 +5381,7 @@ object StreamingQueries {
     val man = manifestRowsOf(s, ext)
     val arts = man.map(_.artifact).distinct.sorted
     val rows = arts.map { a =>
-      val v = man.filter(m => m.artifact == a && m.action == "commit")
-        .map(_.version).max
+      val v = headVersion(man, a)
       val rem = man.filter(m => m.artifact == a && m.version == v &&
         m.action == "remove" && m.cause == "merge").map(_.path)
       val add = man.filter(m => m.artifact == a && m.version == v &&
@@ -5516,8 +5474,7 @@ object StreamingQueries {
     val man = manifestRowsOf(s, ext)
     val arts = man.map(_.artifact).distinct.sorted
     val rows = arts.map { a =>
-      val v = man.filter(m => m.artifact == a && m.action == "commit")
-        .map(_.version).max
+      val v = headVersion(man, a)
       val dataF = snapshotFiles(man, a, v, "data").filter(_.nRows > 0L)
       val tombF = snapshotFiles(man, a, v, "tomb")
       val d = readManAll(s, dataF.map(_.path), ManDataSchemaV2)
@@ -5904,7 +5861,7 @@ object StreamingQueries {
         .filterNot(referenced.contains).sorted
       val or = readManAll(s, orphans, ManDataSchema)
         .agg(count(lit(1)), coalesce(sum($"c1"), lit(0L))).head()
-      val headV = man.filter(_.artifact == a).map(_.version).max
+      val headV = headVersion(man, a)
       def headStat(): (Long, Long) = {
         val h = snapshotAt(s, man, a, headV).filter($"dd".isNull)
           .agg(count(lit(1)), coalesce(sum($"c1"), lit(0L))).head()
@@ -5981,49 +5938,26 @@ object StreamingQueries {
     * and adds their bin-packed union. Returns the extension rows. */
   private[graft] def packCommits(s: SparkSession, man: Seq[ManRow],
       artifact: String, out: String, waves: Seq[DataFrame])
-      : Vector[ManEntry] = {
-    val entries = Vector.newBuilder[ManEntry]
-    val none: Option[Long] = None
-    var v = man.filter(m => m.artifact == artifact &&
-      m.action == "commit").map(_.version).max
+      : Seq[ManRow] = {
+    var v = headVersion(man, artifact)
     var ext = Vector.empty[ManRow]
-    def manNow = man ++ ext
-    def addData(df: DataFrame, kind: String, cause: String)
-        : Unit = {
-      val p = s"$out/$artifact/v${v}_$cause"
-      df.write.mode("overwrite").parquet(p)
-      val r = readMan(s, p, ManDataSchema)
-        .agg(count(lit(1)), min(col("key")), max(col("key"))).head()
-      val (mn, mx) =
-        (if (r.isNullAt(1)) none else Some(r.getLong(1)),
-          if (r.isNullAt(2)) none else Some(r.getLong(2)))
-      entries += ((artifact, v, kind, "commit", "", "", "", 0L,
-        none, none))
-      entries += ((artifact, v, kind, "add", "data", cause, p,
-        r.getLong(0), mn, mx))
-      ext :+= ManRow(artifact, v, kind, "add", "data", cause, p,
-        r.getLong(0), mn, mx)
+    for (w <- waves) {
+      v += 1
+      ext ++= Seq(commitOf(artifact, v, "append"),
+        writeFiles(s, w, s"$out/$artifact/v${v}_append").head
+          .add(artifact, v, "append", "append"))
     }
-    for (w <- waves) { v += 1; addData(w, "append", "append") }
     // the pack commit: visible append-tier files swap for their union
     v += 1
-    val tier = snapshotFiles(manNow, artifact, v - 1, "data")
+    val tier = snapshotFiles(man ++ ext, artifact, v - 1, "data")
       .filter(_.cause == "append")
     require(tier.nonEmpty, s"no append tier to pack for $artifact")
-    val packed = readManAll(s, tier.map(_.path), ManDataSchema)
-    val p = s"$out/$artifact/v${v}_pack"
-    packed.repartition(1).write.mode("overwrite").parquet(p)
-    val r = readMan(s, p, ManDataSchema)
-      .agg(count(lit(1)), min(col("key")), max(col("key"))).head()
-    entries += ((artifact, v, "pack", "commit", "", "", "", 0L,
-      none, none))
-    tier.foreach(f => entries += ((artifact, v, "pack", "remove",
-      "data", "pack", f.path, 0L, none, none)))
-    entries += ((artifact, v, "pack", "add", "data", "pack", p,
-      r.getLong(0),
-      if (r.isNullAt(1)) none else Some(r.getLong(1)),
-      if (r.isNullAt(2)) none else Some(r.getLong(2))))
-    entries.result()
+    val packed = writeFiles(s,
+      readManAll(s, tier.map(_.path), ManDataSchema).repartition(1),
+      s"$out/$artifact/v${v}_pack").head
+    ext ++ (commitOf(artifact, v, "pack") +:
+      tier.map(_.removedAt(v, "pack", "pack"))) :+
+      packed.add(artifact, v, "pack", "pack")
   }
 
   /** deterministic fresh-key shard wave from the artifact's base
@@ -6044,21 +5978,9 @@ object StreamingQueries {
       : String = {
     val mdir = manifestLogDir(s, dir)
     packExt(s, dir, mdir) {
-      import s.implicits._
-      val man = manifestRowsOf(s, mdir)
-      val out = graft.Scratch.tempDirDeletedOnExit("graft_packext")
-      val arts = man.map(_.artifact).distinct.sorted
-      val ext = arts.flatMap(a => packCommits(s, man, a, out, Seq(
-        packWave(s, man, a, "0"), packWave(s, man, a, "1"))))
-      val orig = man.map(m => (m.artifact, m.version, m.kind,
-        m.action, m.fileKind, m.cause, m.path, m.nRows, m.minKey,
-        m.maxKey))
-      (orig ++ ext).toDF("artifact", "version", "kind", "action",
-          "file_kind", "cause", "path", "n_rows", "min_key",
-          "max_key")
-        .repartition(1).write.mode("overwrite")
-        .parquet(s"$out/manifest")
-      out
+      extensionDir(s, mdir, "graft_packext")((man, a, out) =>
+        packCommits(s, man, a, out, Seq(
+          packWave(s, man, a, "0"), packWave(s, man, a, "1"))))
     }
   }
 
@@ -6068,8 +5990,7 @@ object StreamingQueries {
     val man = manifestRowsOf(s, pdir)
     val arts = man.map(_.artifact).distinct.sorted
     val rows = arts.map { a =>
-      val packV = man.filter(m => m.artifact == a &&
-        m.kind == "pack" && m.action == "commit").map(_.version).max
+      val packV = headVersion(man, a, "pack")
       val removed = man.filter(m => m.artifact == a &&
         m.version == packV && m.action == "remove")
       val packedAdd = man.filter(m => m.artifact == a &&
@@ -6159,8 +6080,9 @@ object StreamingQueries {
   // q232 orphan, never a torn snapshot). q234 runs that loop for
   // real: the doc-postings rows sharded 16 ways by key hash, drained
   // by a throttled AvailableNow file stream whose foreachBatch
-  // commits one append per shard — idempotently (shard-keyed paths +
-  // a committed-set guard make a retried batch a no-op, and a shard
+  // writes its shards in one partitioned write and commits one append
+  // per shard — idempotently (batch- and shard-keyed paths + a
+  // committed-set guard make a retried batch a no-op, and a shard
   // file is atomic within one micro-batch by file-stream
   // granularity). Streaming ingest is exactly what CREATES the
   // small-file problem (one file per commit), so the gate then runs
@@ -6192,16 +6114,13 @@ object StreamingQueries {
         .repartition(col("shard"))
         .write.mode("overwrite").partitionBy("shard")
         .parquet(s"$out/feed")
-      val entries = Vector.newBuilder[ManEntry]
-      val none: Option[Long] = None
       val a = "doc_stream"
       // v0: an empty base — the table exists before the stream starts
       rows.limit(0).write.mode("overwrite")
         .parquet(s"$out/$a/v0_base")
-      entries += ((a, 0L, "base", "commit", "", "", "", 0L, none,
-        none))
-      entries += ((a, 0L, "base", "add", "data", "base",
-        s"$out/$a/v0_base", 0L, none, none))
+      val entries = scala.collection.mutable.ArrayBuffer(
+        commitOf(a, 0L, "base"), ManRow(a, 0L, "base", "add", "data",
+          "base", s"$out/$a/v0_base", 0L))
       val committed =
         scala.collection.mutable.LinkedHashSet.empty[String]
       val batchLog =
@@ -6216,25 +6135,19 @@ object StreamingQueries {
         .option("checkpointLocation", s"$out/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val withShard = df.localCheckpoint(true)
-          val shards = withShard.select(col("shard")).distinct()
-            .collect().map(_.getString(0)).sorted
-          for (sh <- shards if !committed.contains(sh)) {
-            val p = s"$out/$a/shard_$sh"
-            withShard.filter(col("shard") === sh)
-              .select(col("key"), col("k"), col("c1"), col("c2"))
-              .write.mode("overwrite").parquet(p)
-            val r = readMan(s, p, ManDataSchema)
-              .agg(count(lit(1)), min(col("key")), max(col("key")))
-              .head()
+          val fresh = df.select(col("shard")).distinct().collect()
+            .map(_.getString(0)).filterNot(committed.contains)
+          // the batch's uncommitted shards in ONE write, a dir per shard
+          val files =
+            if (fresh.isEmpty) Seq.empty
+            else writeFiles(s, df.filter(col("shard").isin(fresh: _*)),
+              s"$out/$a/batch_$batchId", Some("shard"))
+          for (f <- files) {
+            val sh = f.path.substring(f.path.lastIndexOf('=') + 1)
             val v = committed.size + 1L
             entries.synchronized {
-              entries += ((a, v, "append", "commit", "", "", "", 0L,
-                none, none))
-              entries += ((a, v, "append", "add", "data", "append",
-                p, r.getLong(0),
-                if (r.isNullAt(1)) none else Some(r.getLong(1)),
-                if (r.isNullAt(2)) none else Some(r.getLong(2))))
+              entries ++= Seq(commitOf(a, v, "append"),
+                f.add(a, v, "append", "append"))
             }
             committed += sh
             batchLog += ((batchId, sh))
@@ -6243,16 +6156,9 @@ object StreamingQueries {
         }
         .start()
       awaitOrStop(q)
-      val ingested = entries.result().map(e => ManRow(e._1, e._2,
-        e._3, e._4, e._5, e._6, e._7, e._8, e._9, e._10))
-      val packExt = packCommits(s, ingested, a, out, Seq.empty)
-      (ingested.map(m => (m.artifact, m.version, m.kind, m.action,
-          m.fileKind, m.cause, m.path, m.nRows, m.minKey, m.maxKey))
-        ++ packExt)
-        .toDF("artifact", "version", "kind", "action", "file_kind",
-          "cause", "path", "n_rows", "min_key", "max_key")
-        .repartition(1).write.mode("overwrite")
-        .parquet(s"$out/manifest")
+      val ingested = entries.toSeq
+      writeManifest(s, out,
+        ingested ++ packCommits(s, ingested, a, out, Seq.empty))
       batchLog.toSeq.toDF("batch", "shard").repartition(1)
         .write.mode("overwrite").parquet(s"$out/batchlog")
       out
@@ -6263,8 +6169,7 @@ object StreamingQueries {
     val sdir = streamIngestLogDir(s, dir)
     val man = manifestRowsOf(s, sdir)
     val a = "doc_stream"
-    val packV = man.filter(m => m.artifact == a && m.kind == "pack" &&
-      m.action == "commit").map(_.version).max
+    val packV = headVersion(man, a, "pack")
     def stat(v: Long): (Long, Long, Long, Long, Long) = {
       val files = snapshotFiles(man, a, v, "data").size.toLong
       val h = snapshotAt(s, man, a, v).filter($"dd".isNull)

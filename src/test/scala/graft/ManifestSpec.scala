@@ -39,10 +39,7 @@ class ManifestSpec extends SparkSpec {
       "takedown" -> tombDf(Seq(2L, 3L)))
     val entries = buildOneManifest(spark, "t", rowsDf(1L to 10L),
       events, "key", out)
-    import spark.implicits._
-    entries.toDF("artifact", "version", "kind", "action", "file_kind",
-        "cause", "path", "n_rows", "min_key", "max_key")
-      .repartition(1).write.mode("overwrite").parquet(s"$out/manifest")
+    StreamingQueries.writeManifest(spark, out, entries)
     (out, StreamingQueries.manifestRowsOf(spark, out))
   }
 
@@ -146,10 +143,7 @@ class ManifestSpec extends SparkSpec {
       "append" -> rowsDf(Seq(1L))) // only a re-add of the dead key
     val entries = buildOneManifest(spark, "t", rowsDf(1L to 4L),
       events, "key", out)
-    import spark.implicits._
-    entries.toDF("artifact", "version", "kind", "action", "file_kind",
-        "cause", "path", "n_rows", "min_key", "max_key")
-      .repartition(1).write.mode("overwrite").parquet(s"$out/manifest")
+    StreamingQueries.writeManifest(spark, out, entries)
     val man = StreamingQueries.manifestRowsOf(spark, out)
     val add = man.find(m => m.version == 2 && m.action == "add")
     assert(add.exists(_.nRows == 0L), s"screened append should be empty: $add")
@@ -167,13 +161,13 @@ class ManifestSpec extends SparkSpec {
       "optimize" -> (null: DataFrame))
     val entries = buildOneManifest(spark, "t", rowsDf(1L to 100L),
       events, "key", out)
-    assert(!entries.exists(e => e._6 == "vacuum"),
+    assert(!entries.exists(e => e.cause == "vacuum"),
       "vacuum fired below threshold")
-    assert(!entries.exists(e => e._6 == "optimize"),
+    assert(!entries.exists(e => e.cause == "optimize"),
       "OPTIMIZE fired below threshold")
     // the unfired OPTIMIZE still records its commit marker
-    assert(entries.exists(e => e._2 == 3L && e._4 == "commit" &&
-      e._3 == "optimize"))
+    assert(entries.exists(e => e.version == 3L && e.action == "commit" &&
+      e.kind == "optimize"))
   }
 
   test("expireSnapshots deletes below the horizon, keeps the rest, and expired reads fail loudly") {
@@ -306,10 +300,7 @@ class ManifestSpec extends SparkSpec {
       "takedown" -> tombDf(Seq(1L, 2L)))
     val entries = buildOneManifest(spark, "t", rowsDf(1L to 16L),
       events, "key", out)
-    import spark.implicits._
-    entries.toDF("artifact", "version", "kind", "action", "file_kind",
-        "cause", "path", "n_rows", "min_key", "max_key")
-      .repartition(1).write.mode("overwrite").parquet(s"$out/manifest")
+    StreamingQueries.writeManifest(spark, out, entries)
     val man = StreamingQueries.manifestRowsOf(spark, out)
     val races = StreamingQueries.occRaces(spark, man, "t", out)
     val meta = races.map(_._1)
@@ -359,10 +350,8 @@ class ManifestSpec extends SparkSpec {
     // head v5: four clustered buckets [4,7][8,11][12,15][16,16], live
     // keys 4..16. Updating {5, 13} touches exactly two buckets; the
     // other two files are KEPT (no rewrite, no manifest action).
-    val ext = StreamingQueries.mergeCommit(spark, man, "t", out,
+    val extRows = StreamingQueries.mergeCommit(spark, man, "t", out,
       c => c.isin(5L, 13L))
-    val extRows = ext.map(e => StreamingQueries.ManRow(e._1, e._2,
-      e._3, e._4, e._5, e._6, e._7, e._8, e._9, e._10))
     assert(extRows.count(r => r.action == "remove") == 2)
     assert(extRows.count(r => r.action == "add") == 2)
     val man2 = man ++ extRows
@@ -413,10 +402,8 @@ class ManifestSpec extends SparkSpec {
   test("update CDC from the planted merge swap: exceptAll yields exactly the changed rows, and replay closes v5 -> v6") {
     val out = tmpDir("graft_mcdc")
     val (_, man0) = plantTimeline()
-    val ext = StreamingQueries.mergeCommit(spark, man0, "t", out,
+    val extRows = StreamingQueries.mergeCommit(spark, man0, "t", out,
       c => c.isin(5L, 13L))
-    val extRows = ext.map(e => StreamingQueries.ManRow(e._1, e._2,
-      e._3, e._4, e._5, e._6, e._7, e._8, e._9, e._10))
     val man = man0 ++ extRows
     val rem = extRows.filter(_.action == "remove").map(_.path)
     val add = extRows.filter(_.action == "add").map(_.path)
@@ -466,8 +453,7 @@ class ManifestSpec extends SparkSpec {
     val (_, man0) = plantTimeline()
     val ext = StreamingQueries.mergeCommit(spark, man0, "t", out,
       c => c.isin(5L, 13L))
-    val man = man0 ++ ext.map(e => StreamingQueries.ManRow(e._1, e._2,
-      e._3, e._4, e._5, e._6, e._7, e._8, e._9, e._10))
+    val man = man0 ++ ext
     // head v6: buckets [4,7] and [12,15] rewritten (carry rev),
     // [8,11] and [16,16] kept (no rev column at all)
     val files = StreamingQueries.snapshotFiles(man, "t", 6, "data")
@@ -627,8 +613,7 @@ class ManifestSpec extends SparkSpec {
     // plant two shard waves then pack them
     val ext = StreamingQueries.packCommits(spark, man0, "t", out,
       Seq(rowsDf(Seq(101L, 102L)), rowsDf(Seq(103L))))
-    val man = man0 ++ ext.map(e => StreamingQueries.ManRow(e._1, e._2,
-      e._3, e._4, e._5, e._6, e._7, e._8, e._9, e._10))
+    val man = man0 ++ ext
     // the pack commit removed exactly the two wave files and added
     // one packed file of 3 rows; the 4 vacuum buckets never moved
     val packAdds = man.filter(m => m.version == 8L &&
@@ -716,11 +701,10 @@ class ManifestSpec extends SparkSpec {
     val (cowOut, man0) = plantTimeline()
     val morExt = StreamingQueries.morCommit(spark, man0, "t", out,
       c => c.isin(5L, 13L))
-    val morMan = man0 ++ morExt.map(e => StreamingQueries.ManRow(e._1,
-      e._2, e._3, e._4, e._5, e._6, e._7, e._8, e._9, e._10))
+    val morMan = man0 ++ morExt
     // the commit added exactly two files and removed NOTHING
-    assert(morExt.count(_._4 == "add") == 2)
-    assert(morExt.count(_._4 == "remove") == 0)
+    assert(morExt.count(_.action == "add") == 2)
+    assert(morExt.count(_.action == "remove") == 0)
     val head = StreamingQueries.morSnapshotHead(spark, morMan, "t")
       .filter(col("dd").isNull)
       .select("key", "k", "c1", "c2").localCheckpoint(true)
@@ -734,8 +718,7 @@ class ManifestSpec extends SparkSpec {
     // row-identity with the COW merge head on the same pick
     val cowExt = StreamingQueries.mergeCommit(spark, man0, "t",
       cowOut, c => c.isin(5L, 13L))
-    val cowMan = man0 ++ cowExt.map(e => StreamingQueries.ManRow(e._1,
-      e._2, e._3, e._4, e._5, e._6, e._7, e._8, e._9, e._10))
+    val cowMan = man0 ++ cowExt
     val cowHead = snapshotAt(spark, cowMan, "t", 6L)
       .filter(col("dd").isNull).select("key", "k", "c1", "c2")
     assert(head.exceptAll(cowHead).count() == 0)
@@ -770,15 +753,13 @@ class ManifestSpec extends SparkSpec {
     val (_, man0) = plantTimeline()
     val morExt = StreamingQueries.morCommit(spark, man0, "t", out,
       c => c.isin(5L, 13L))
-    val morMan = man0 ++ morExt.map(e => StreamingQueries.ManRow(e._1,
-      e._2, e._3, e._4, e._5, e._6, e._7, e._8, e._9, e._10))
+    val morMan = man0 ++ morExt
     val cmpExt = StreamingQueries.morCompact(spark, morMan, "t", out)
-    val man = morMan ++ cmpExt.map(e => StreamingQueries.ManRow(e._1,
-      e._2, e._3, e._4, e._5, e._6, e._7, e._8, e._9, e._10))
+    val man = morMan ++ cmpExt
     // keys 5 and 13 live in two of the four vacuum buckets: exactly
     // those rewrite, each dropping its superseded row (4 - 1 = 3)
-    val adds = cmpExt.filter(e => e._4 == "add")
-    assert(adds.size == 2 && adds.forall(_._8 == 3L))
+    val adds = cmpExt.filter(e => e.action == "add")
+    assert(adds.size == 2 && adds.forall(_.nRows == 3L))
     // the supersede file is retired at v7
     assert(snapshotFiles(man, "t", 7L, "morsup").isEmpty)
     // the PLAIN snapshot read now serves the merged state
@@ -793,6 +774,62 @@ class ManifestSpec extends SparkSpec {
       .filter(col("dd").isNull).select("key", "k", "c1", "c2")
     assert(live.exceptAll(mor).count() == 0)
     assert(mor.exceptAll(live).count() == 0)
+  }
+
+  test("MoR compaction that supersedes a whole bucket: its rewrite lands as an empty file, and every snapshot still reads") {
+    val out = tmpDir("graft_morcmpempty")
+    val (_, man0) = plantTimeline()
+    // every live key of bucket [4,7] is superseded, plus 13 of [12,15]
+    val morMan = man0 ++ StreamingQueries.morCommit(spark, man0, "t",
+      out, c => c.isin(4L, 5L, 6L, 7L, 13L))
+    val cmpExt = StreamingQueries.morCompact(spark, morMan, "t", out)
+    val man = morMan ++ cmpExt
+    val buckets = snapshotFiles(man0, "t", 5L, "data")
+      .filter(_.nRows > 0).sortBy(_.minKey)
+    val sup = morMan.filter(m => m.version == 6L && m.fileKind == "morsup")
+    // the entries the per-file rewrite made: commit, then per touched
+    // bucket its remove and its add (the emptied one with no zone
+    // map), then the supersede file's retirement
+    assert(cmpExt.map(e => (e.action, e.fileKind, e.nRows, e.minKey,
+      e.maxKey)) == Seq(
+      ("commit", "", 0L, None, None),
+      ("remove", "data", 0L, None, None),
+      ("add", "data", 0L, None, None),
+      ("remove", "data", 0L, None, None),
+      ("add", "data", 3L, Some(12L), Some(15L)),
+      ("remove", "morsup", 0L, None, None)))
+    assert(cmpExt.filter(_.action == "remove").map(_.path) ==
+      Seq(buckets(0).path, buckets(2).path, sup.head.path))
+    assert(cmpExt.forall(e => e.version == 7L && e.kind == "compact"))
+    // every snapshot reads; the compacted head is the MoR head
+    for (v <- 0L to 7L) snapshotAt(spark, man, "t", v).count()
+    val live = snapshotAt(spark, man, "t", 7L).filter(col("dd").isNull)
+      .select("key", "k", "c1", "c2").localCheckpoint(true)
+    val mor = StreamingQueries.morSnapshotHead(spark, morMan, "t")
+      .filter(col("dd").isNull).select("key", "k", "c1", "c2")
+    assert(live.count() == 13L)
+    assert(live.exceptAll(mor).count() == 0)
+    assert(mor.exceptAll(live).count() == 0)
+  }
+
+  test("mergeCommit and morCompact run a fixed number of Spark jobs, however many files the pick touches") {
+    // head v5 buckets [4,7][8,11][12,15][16,16]: picks touching 1, 2, 4
+    val picks = Seq(Seq(5L), Seq(5L, 13L), Seq(5L, 9L, 13L, 16L))
+    val (_, man) = plantTimeline()
+    val merge = picks.map { p =>
+      val out = tmpDir("graft_mergejobs")
+      jobsDuring(StreamingQueries.mergeCommit(spark, man, "t", out,
+        c => c.isin(p: _*)))
+    }
+    assert(merge.distinct.size == 1, s"mergeCommit jobs per pick: $merge")
+    val compact = picks.map { p =>
+      val out = tmpDir("graft_cmpjobs")
+      val morMan = man ++ StreamingQueries.morCommit(spark, man, "t", out,
+        c => c.isin(p: _*))
+      jobsDuring(StreamingQueries.morCompact(spark, morMan, "t", out))
+    }
+    assert(compact.distinct.size == 1,
+      s"morCompact jobs per pick: $compact")
   }
 
   test("q236 registry gate: the compaction bill is the COW bill minus the superseded rows, and the plain head is MoR-identical") {

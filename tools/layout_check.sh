@@ -27,10 +27,7 @@ export SPARK_GRAFT_ONLY=${SPARK_GRAFT_ONLY:-q54,q114,q118,q172,q181,q187,q196,q2
 export SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-3g}
 
 mkdir -p "$out"
-# oracle_check.py filters by substring: "q54" becomes "q54_", so that
-# "q21" does not also pick q210-q219
-filters=$(echo "$SPARK_GRAFT_ONLY" | tr ',' '\n' | sed -e 's/ //g' -e '/^$/d' \
-  -e '/_/!s/$/_/' | tr '\n' ' ')
+filters=$(echo "$SPARK_GRAFT_ONLY" | tr ',' ' ')
 status=0
 for c in 1 4; do
   rm -rf "$out/c$c"

@@ -19,6 +19,13 @@ def canon(cols, rows):
     return sorted(tuple(norm(r[i]) for i in order) for r in rows)
 
 
+def selected(name, filters):
+    """SparkEntry.selected's rule: an id picks itself and its `<id>_*`
+    queries, so "q21" picks q21_* but not q210-q219."""
+    return not filters or any(name == f or name.startswith(f + "_")
+                              for f in filters)
+
+
 def main():
     SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
@@ -39,9 +46,9 @@ def main():
 
     fails = 0
     for name in sorted(failed):
-        if not FILTER or any(f in name for f in FILTER):
+        if selected(name, FILTER):
             print(f"FAIL {name}: threw in Verify (failed.json)"); fails += 1
-    names = [n for n in sorted(oracle) if not FILTER or any(f in n for f in FILTER)]
+    names = [n for n in sorted(oracle) if selected(n, FILTER)]
     for name in names:
         if name in failed: continue
         pq = glob.glob(f"{OUT}/{name}/*.parquet")
@@ -79,7 +86,7 @@ def main():
     # rows-only queries (no oracle)
     for d in sorted(glob.glob(f"{OUT}/q*")):
         name = os.path.basename(d)
-        if name in oracle or name in failed or (FILTER and not any(f in name for f in FILTER)): continue
+        if name in oracle or name in failed or not selected(name, FILTER): continue
         pq = glob.glob(f"{d}/*.parquet")
         n = con.execute(f"SELECT count(*) FROM '{pq[0]}'").fetchone()[0] if pq else 0
         print(f"{'PASS' if n > 0 else 'FAIL'} {name} (rows-only, {n} rows)")
