@@ -28,60 +28,22 @@ import graft.streaming.Streaming
   * key/window, partial aggregation before the shuffle, O(active
   * windows) in the state store; the file source at 100 TB becomes a
   * log/bucket listing, nothing in the query shape changes.
+  *
+  * Sessions: every stream source here reads from `Session.stream(s)`,
+  * a child session of `s` made once with its own settings, and one
+  * runner (`runStream`) starts, awaits and re-reads every stream. The
+  * stream session's shuffle width is its STATE width:
+  * `min(width of s, Session.StateWidth)`, a deployment knob that
+  * tracks state volume (hundreds of spillable partitions at 100 TB),
+  * not the batch width. Results do not depend on it: every gate is a
+  * deterministic per-key fold or a watermark-emitted aggregation
+  * (StreamSessionSpec pins the width and that `s`'s conf never moves,
+  * so a `Scratch.parMap` batch sibling beside a stream plans at the
+  * width of `s`).
   */
 object StreamingQueries {
 
   private val GapMs = 30L * 60 * 1000
-
-  /** State-store partition count for the gate queries. A stateful
-    * streaming operator creates `spark.sql.shuffle.partitions` state
-    * store instances (×4 for a stream-stream join: two sides ×
-    * two index stores), and EACH instance pays a per-micro-batch
-    * maintenance/commit cost that is independent of the state it
-    * holds — so the partition count is a deployment knob that must
-    * track STATE VOLUME, not the session's batch shuffle width.
-    * Measured at sf0.1 `local[32]`: the stream-stream joins drop
-    * 7.2 s → 2.8 s (q116) and 6.8 s → 3.0 s (q123) going 32 → 8
-    * partitions, pure fixed overhead. At 100 TB the same knob goes the
-    * other way (hundreds of partitions sized so each holds a
-    * spillable state share); results are partition-count-independent
-    * either way (all gates are deterministic per-key folds or
-    * watermark-emitted aggregations), which is why the conf swap is
-    * safe. The session value is restored after each gate. A real
-    * deployment overrides the default via
-    * `spark.graft.streaming.statePartitions` (set it to the
-    * state-volume-sized count; it is used as given, no clamp). */
-  private val StatePartitions = 8
-
-  // withStatePartitions mutates the SESSION conf, and gates that run
-  // several independent AvailableNow feeds now overlap them from a
-  // bounded driver pool (Scratch.parMap, guide §2.6) — so the swap is
-  // depth-counted: only the OUTERMOST entry saves/sets and only the
-  // last exit restores, making concurrent feed runs share one reduced
-  // setting instead of racing the save/restore (a lost race would
-  // permanently shrink the session's batch shuffle width).
-  private val statePartLock = new Object
-  private var statePartDepth = 0
-  private var statePartPrev: String = null
-
-  private def withStatePartitions[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    statePartLock.synchronized {
-      if (statePartDepth == 0) {
-        statePartPrev = s.conf.get(key)
-        val target = s.conf
-          .getOption("spark.graft.streaming.statePartitions")
-          .map(_.toInt)
-          .getOrElse(math.min(statePartPrev.toInt, StatePartitions))
-        s.conf.set(key, target.toString)
-      }
-      statePartDepth += 1
-    }
-    try body finally statePartLock.synchronized {
-      statePartDepth -= 1
-      if (statePartDepth == 0) s.conf.set(key, statePartPrev)
-    }
-  }
 
   /** streaming read of a single-file testdata table. The testdata
     * table is one FILE; FileStreamSource force-sets basePath to the
@@ -91,9 +53,10 @@ object StreamingQueries {
     * read). */
   private def tableStream(s: SparkSession, dir: String,
       name: String): DataFrame = {
-    val sch = s.read.parquet(s"$dir/$name.parquet").schema
-    s.readStream.schema(sch).option("basePath", dir)
-      .parquet(s"$dir/{$name}.parquet")
+    val ss = graft.Session.stream(s)
+    val sch = ss.read.parquet(s"$dir/$name.parquet").schema
+    ss.readStream.schema(sch)
+      .option("basePath", dir).parquet(s"$dir/{$name}.parquet")
   }
 
   /** FileStreamSource parallelism tracks SOURCE FILE COUNT: the
@@ -131,20 +94,27 @@ object StreamingQueries {
   private[graft] def multiFileStream(s: SparkSession, dir: String,
       name: String, filesPerTrigger: Int = 0): DataFrame = {
     val tableDir = streamFixtureDir(s, dir, name)
-    val sch = s.read.parquet(tableDir).schema
-    val r = s.readStream.schema(sch)
+    dirStream(s, tableDir,
+      graft.Session.stream(s).read.parquet(tableDir).schema, filesPerTrigger)
+  }
+
+  /** the parquet files under `path`, schema `sch`, as a file stream of
+    * the stream session; `filesPerTrigger` > 0 caps each micro-batch
+    * at that many files (per source of a union). */
+  private def dirStream(s: SparkSession, path: String,
+      sch: org.apache.spark.sql.types.StructType,
+      filesPerTrigger: Int = 0): DataFrame = {
+    val r = graft.Session.stream(s).readStream.schema(sch)
     (if (filesPerTrigger > 0)
        r.option("maxFilesPerTrigger", filesPerTrigger)
-     else r).parquet(tableDir)
+     else r).parquet(path)
   }
 
   /** events through the file stream source — same ts-layout handling
     * as Tables.events (nanos-as-long or TIMESTAMP_NTZ micros, per
     * testdata generation; Tables.normalizeTs picks by schema). */
-  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private[graft] def eventsStream(s: SparkSession, dir: String): DataFrame =
     graft.Tables.normalizeTs(tableStream(s, dir, "events"))
-  }
 
   /** wait for `q` to finish; if the wait ends early (a parMap sibling
     * interrupted after another sibling failed), stop the stream before
@@ -153,41 +123,41 @@ object StreamingQueries {
   private[graft] def awaitOrStop(q: StreamingQuery): Unit =
     try q.awaitTermination() finally if (q.isActive) q.stop()
 
-  /** run `agg` as an AvailableNow streaming job into a parquet sink
-    * under `scratch`, wait for completion, re-read the sink. */
-  private def runToSink(s: SparkSession, agg: DataFrame,
-      scratch: String): DataFrame = {
-    val out = scratch + "/sink"
-    withStatePartitions(s) {
-      val q = agg.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", scratch + "/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitOrStop(q)
-    }
-    s.read.parquet(out)
-  }
+  /** where `runStream` lands a stream's rows: its sink dir, `out`. */
+  private[graft] sealed trait Sink
+  /** Spark's parquet file sink (exactly-once through its own log). */
+  private[graft] case object FileSink extends Sink
+  /** one `batch=<id>` dir per micro-batch, idempotent on a retry
+    * (Streaming.appendBatchIdempotent): the re-read carries each
+    * row's micro-batch as a `batch` column — q218's lag audit reads
+    * which ingest batch carried each tombstone. */
+  private[graft] case object BatchSink extends Sink
+  /** each micro-batch handed to `f(out, batch, id)` to write its own
+    * way (q234's per-shard manifest commits). */
+  private[graft] final case class EachBatch(
+      f: (String, DataFrame, Long) => Unit) extends Sink
 
-  /** run `agg` AvailableNow into an idempotent batch-stamped parquet
-    * sink (one dir per micro-batch → a `batch` partition column):
-    * q218's SLA audit reads WHICH ingest batch carried each tombstone
-    * — the provenance behind its lag_batches column. */
-  private[graft] def runToSinkBatched(s: SparkSession, agg: DataFrame,
-      scratch: String): DataFrame = {
+  /** The one stream runner: run `df` (built on the stream sources, so
+    * it runs in `Session.stream(s)`) AvailableNow in output `mode` into
+    * `sink` at `scratch/sink`, checkpointed at `scratch/ckpt`; wait for
+    * it (awaitOrStop), show `done` the finished query, and re-read the
+    * sink on `s`. */
+  private[graft] def runStream(s: SparkSession, df: DataFrame,
+      scratch: String, mode: String = "append", sink: Sink = FileSink,
+      done: StreamingQuery => Unit = _ => ()): DataFrame = {
     val out = scratch + "/sink"
-    withStatePartitions(s) {
-      val q = agg.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          Streaming.appendBatchIdempotent(out)(batch, id)
-        }
-        .option("checkpointLocation", scratch + "/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitOrStop(q)
-    }
+    val w = df.writeStream.outputMode(mode)
+      .option("checkpointLocation", scratch + "/ckpt")
+      .trigger(Trigger.AvailableNow())
+    val q = (sink match {
+      case FileSink => w.format("parquet").option("path", out)
+      case BatchSink => w.foreachBatch { (b: DataFrame, id: Long) =>
+        Streaming.appendBatchIdempotent(out)(b, id) }
+      case EachBatch(f) => w.foreachBatch { (b: DataFrame, id: Long) =>
+        f(out, b, id) }
+    }).start()
+    awaitOrStop(q)
+    done(q)
     s.read.parquet(out)
   }
 
@@ -198,7 +168,7 @@ object StreamingQueries {
   private def q103(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.Scratch.withScratchDir("graft_q103") { scratch =>
-      runToSink(s, Streaming.tumblingAgg(eventsStream(s, dir)), scratch)
+      runStream(s, Streaming.tumblingAgg(eventsStream(s, dir)), scratch)
         .select($"bucket", $"event_type", $"n",
           round($"sum_value", 4).as("sum_value"),
           round($"avg_value", 6).as("avg_value"))
@@ -228,7 +198,7 @@ object StreamingQueries {
   private def q110(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.Scratch.withScratchDir("graft_q110") { scratch =>
-      runToSink(s, Streaming.slidingAgg(eventsStream(s, dir)), scratch)
+      runStream(s, Streaming.slidingAgg(eventsStream(s, dir)), scratch)
         .select($"w_start", $"w_end", $"event_type", $"n",
           round($"sum_value", 4).as("sum_value"))
         .orderBy($"w_start", $"event_type")
@@ -275,7 +245,7 @@ object StreamingQueries {
         .agg(count(lit(1)).as("n"), sum($"value").as("sum_value"))
         .select($"win.start".as("bucket"), $"n_name", $"n",
           $"sum_value")
-      runToSink(s, agg, scratch)
+      runStream(s, agg, scratch)
         .select($"bucket", $"n_name", $"n",
           round($"sum_value", 4).as("sum_value"))
         .orderBy($"bucket", $"n_name")
@@ -303,7 +273,7 @@ object StreamingQueries {
   private def q104(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.Scratch.withScratchDir("graft_q104") { scratch =>
-      runToSink(s, Streaming.sessionAgg(eventsStream(s, dir)), scratch)
+      runStream(s, Streaming.sessionAgg(eventsStream(s, dir)), scratch)
         .select($"user_id", $"session_start", $"session_end",
           $"session_events",
           round($"session_value", 4).as("session_value"))
@@ -354,7 +324,7 @@ object StreamingQueries {
     graft.Scratch.withScratchDir("graft_q105") { scratch =>
       val ev = eventsStream(s, dir)
         .select($"user_id", $"ts", $"value").as[Streaming.Event]
-      runToSink(s, Streaming.sessionizeStateful(ev, GapMs).toDF(), scratch)
+      runStream(s, Streaming.sessionizeStateful(ev, GapMs).toDF(), scratch)
         .select($"user_id", $"session_start", $"session_end", $"n",
           round($"sum", 4).as("session_value"))
         .orderBy($"user_id", $"session_start")
@@ -403,7 +373,7 @@ object StreamingQueries {
       val docs = eventsStream(s, dir).select($"ts",
         md5(concat($"user_id".cast("string"), lit(":"), $"event_type"))
           .as("fp"))
-      runToSink(s, Streaming.dedupStream(docs, watermark = "90 days")
+      runStream(s, Streaming.dedupStream(docs, watermark = "90 days")
           .select($"fp"), scratch)
         .orderBy($"fp")
     }
@@ -429,22 +399,10 @@ object StreamingQueries {
   private def q108(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.Scratch.withScratchDir("graft_q108") { scratch =>
-      val out = scratch + "/sink"
       val ev = eventsStream(s, dir)
         .select($"user_id", $"ts", $"value").as[Streaming.Event]
-      withStatePartitions(s) {
-        val q = Streaming.emaPerKey(ev, alpha = 0.3).toDF()
-          .writeStream
-          .outputMode("update")
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            Streaming.appendBatchIdempotent(out)(batch, id)
-          }
-          .option("checkpointLocation", scratch + "/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        awaitOrStop(q)
-      }
-      val sunk = s.read.parquet(out)
+      val sunk = runStream(s, Streaming.emaPerKey(ev, alpha = 0.3).toDF(),
+        scratch, "update", BatchSink)
       val w = Window.partitionBy($"user_id").orderBy($"total_events".desc)
       sunk.withColumn("rn", row_number().over(w))
         .filter($"rn" === 1)
@@ -474,7 +432,7 @@ object StreamingQueries {
     graft.Scratch.withScratchDir("graft_q109") { scratch =>
       val ev = eventsStream(s, dir)
         .select($"user_id", $"ts", $"value").as[Streaming.Event]
-      runToSink(s,
+      runStream(s,
         Streaming.sessionizeWithTimeout(ev, GapMs, "0 seconds").toDF(),
         scratch)
         .select($"user_id", $"session_start", $"session_end", $"n",
@@ -542,7 +500,7 @@ object StreamingQueries {
         $"user_id" === $"p_user_id" &&
           $"purch_ts" >= $"click_ts" &&
           $"purch_ts" <= $"click_ts" + expr("INTERVAL 6 HOURS"))
-      runToSink(s, joined, scratch)
+      runStream(s, joined, scratch)
         .select($"user_id", $"click_id", $"purch_id",
           floor((unix_micros($"purch_ts") - unix_micros($"click_ts"))
             / lit(60000000.0)).cast("long").as("lag_min"),
@@ -605,7 +563,7 @@ object StreamingQueries {
           $"purch_ts" >= $"click_ts" &&
           $"purch_ts" <= $"click_ts" + expr("INTERVAL 6 HOURS"),
         "leftOuter")
-      runToSink(s, joined, scratch)
+      runStream(s, joined, scratch)
         .select($"user_id", $"click_id", $"purch_id",
           floor((unix_micros($"purch_ts") - unix_micros($"click_ts"))
             / lit(60000000.0)).cast("long").as("lag_min"),
@@ -675,7 +633,7 @@ object StreamingQueries {
         .filter(!graft.expr.GraftFunctions
           .bloomAny(s, lit(blob), screen.tokens($"text")))
         .select($"doc_id", $"source")
-      runToSink(s, cleaned, scratch)
+      runStream(s, cleaned, scratch)
         .groupBy($"source")
         .agg(count(lit(1)).as("n_kept"),
           sum($"doc_id").as("kept_checksum"))
@@ -732,48 +690,64 @@ object StreamingQueries {
     * Ref behavior: reference near-dup semantics per q42
     * (minhash/verify); ingest topology per q130's multi-file source. */
   private def q140(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val split = DedupQueries.IngestSplit
-    val nBands = DedupQueries.BANDS
-    def bandStructs(
-        c: String => org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      explode(array((0 until nBands).map(b =>
-        struct(lit(b).as("band_idx"), c(s"band$b").as("band_key"))): _*))
+    // batch side: the indexed corpus — slim band index + shingle
+    // lookup, computed once and frozen
+    val sigs = corpusSigs(s, dir).localCheckpoint(true)
     graft.Scratch.withScratchDir("graft_q140") { scratch =>
-      // batch side: the indexed corpus — slim band index + shingle
-      // lookup, computed once and frozen. Split filter BELOW the
-      // signature pipeline: the md5-per-shingle work runs only on the
-      // corpus two-thirds
-      val corpusSigs = DedupQueries.signaturesOf(
-          split.withIx(graft.Tables.documents(s, dir))
-            .filter($"ix" >= split.NewMax))
-        .select(($"doc_id".as("corpus_id") +: $"sh".as("sh_b") +:
-          (0 until nBands).map(b => col(s"band$b"))): _*)
-        .localCheckpoint(true)
-      val corpusBands = corpusSigs
-        .select($"corpus_id", bandStructs(col).as("band"))
-        .select($"corpus_id", $"band.band_idx", $"band.band_key")
-      val corpusSh = corpusSigs.select($"corpus_id", $"sh_b")
-      // stream side: new docs through the same signature pipeline
-      // (split filter first — only the new third pays the hashing)
-      val newBands = DedupQueries.signaturesOf(
-          split.withIx(multiFileStream(s, dir, "documents"))
-            .filter($"ix" < split.NewMax))
-        .select($"doc_id", $"sh", bandStructs(col).as("band"))
-        .select($"doc_id", $"sh", $"band.band_idx", $"band.band_key")
-      val scored = newBands
-        .join(corpusBands, Seq("band_idx", "band_key"))
-        .join(corpusSh, "corpus_id")
-        .withColumn("inter",
-          size(array_intersect($"sh", $"sh_b")).cast("double"))
-        .withColumn("jaccard", round(
-          $"inter" / (size($"sh") + size($"sh_b") - $"inter"), 6))
-        .filter($"jaccard" >= 0.7)
-        .select($"doc_id", $"corpus_id", $"jaccard")
-      runToSink(s, scored, scratch)
-        .distinct()
-        .orderBy($"doc_id", $"corpus_id")
+      ingestDedup(s, s, dir, corpusBands(sigs),
+        sigs.select(col("corpus_id"), col("sh_b")), scratch)
     }
+  }
+
+  /** a signature frame's bands as rows: (band_idx, band_key) structs. */
+  private def bandStructs: Column =
+    explode(array((0 until DedupQueries.BANDS).map(b =>
+      struct(lit(b).as("band_idx"), col(s"band$b").as("band_key"))): _*))
+
+  /** the indexed corpus's signatures (corpus_id, sh_b, band0..):
+    * split filter BELOW the signature pipeline, so the md5-per-shingle
+    * work runs only on the corpus two-thirds. */
+  private def corpusSigs(s: SparkSession, dir: String): DataFrame = {
+    val split = DedupQueries.IngestSplit
+    DedupQueries.signaturesOf(
+        split.withIx(graft.Tables.documents(s, dir))
+          .filter(col("ix") >= split.NewMax))
+      .select((col("doc_id").as("corpus_id") +: col("sh").as("sh_b") +:
+        (0 until DedupQueries.BANDS).map(b => col(s"band$b"))): _*)
+  }
+
+  /** the corpus band index (corpus_id, band_idx, band_key). */
+  private def corpusBands(sigs: DataFrame): DataFrame =
+    sigs.select(col("corpus_id"), bandStructs.as("band"))
+      .select(col("corpus_id"), col("band.band_idx"), col("band.band_key"))
+
+  /** q140's matches: the new third streamed (on `ss`'s stream session)
+    * through the same signature pipeline (split filter first — only
+    * the new third pays the hashing), band-joined to `bands`
+    * (corpus_id, band_idx, band_key), Jaccard-verified against `sh`
+    * (corpus_id, sh_b), run into a sink under `scratch` and compacted
+    * (distinct) on `s`. `done` sees the finished stream. */
+  private def ingestDedup(s: SparkSession, ss: SparkSession, dir: String,
+      bands: DataFrame, sh: DataFrame, scratch: String,
+      done: StreamingQuery => Unit = _ => ()): DataFrame = {
+    val split = DedupQueries.IngestSplit
+    val scored = DedupQueries.signaturesOf(
+        split.withIx(multiFileStream(ss, dir, "documents"))
+          .filter(col("ix") < split.NewMax))
+      .select(col("doc_id"), col("sh"), bandStructs.as("band"))
+      .select(col("doc_id"), col("sh"), col("band.band_idx"),
+        col("band.band_key"))
+      .join(bands, Seq("band_idx", "band_key"))
+      .join(sh, "corpus_id")
+      .withColumn("inter",
+        size(array_intersect(col("sh"), col("sh_b"))).cast("double"))
+      .withColumn("jaccard", round(col("inter") /
+        (size(col("sh")) + size(col("sh_b")) - col("inter")), 6))
+      .filter(col("jaccard") >= 0.7)
+      .select(col("doc_id"), col("corpus_id"), col("jaccard"))
+    runStream(s, scored, scratch, done = done)
+      .distinct()
+      .orderBy(col("doc_id"), col("corpus_id"))
   }
 
   /** Spec-facing build of q140 with the 100 TB co-location move made
@@ -781,74 +755,38 @@ object StreamingQueries {
     * band join keys and the shingle lookup BUCKETED on corpus_id, so
     * each micro-batch's stream-static joins shuffle ONLY the batch —
     * the static sides read pre-partitioned, no Exchange above either
-    * bucketed scan. Broadcast is disabled so the shape under test is
-    * the at-scale one (a 100 TB corpus index does not broadcast).
-    * Returns (matches identical to q140's, last micro-batch physical
-    * plan) for StreamIngestDedupSpec to lock. */
+    * bucketed scan. The stream runs in its own stream session made
+    * with broadcast joins off, so the shape under test is the at-scale
+    * one (a 100 TB corpus index does not broadcast). Returns (matches
+    * identical to q140's, last micro-batch physical plan) for
+    * StreamIngestDedupSpec to lock. */
   private[graft] def q140BucketedDemo(
       s: SparkSession, dir: String): (DataFrame, String) = {
-    import s.implicits._
-    val split = DedupQueries.IngestSplit
-    val nBands = DedupQueries.BANDS
-    def bandStructs(
-        c: String => org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      explode(array((0 until nBands).map(b =>
-        struct(lit(b).as("band_idx"), c(s"band$b").as("band_key"))): _*))
-    val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val sigs = corpusSigs(s, dir)
     try {
-      val corpusSigs = DedupQueries.signaturesOf(
-          split.withIx(graft.Tables.documents(s, dir))
-            .filter($"ix" >= split.NewMax))
-        .select(($"doc_id".as("corpus_id") +: $"sh".as("sh_b") +:
-          (0 until nBands).map(b => col(s"band$b"))): _*)
-      corpusSigs
-        .select($"corpus_id", bandStructs(col).as("band"))
-        .select($"corpus_id", $"band.band_idx", $"band.band_key")
-        .write.mode("overwrite")
+      corpusBands(sigs).write.mode("overwrite")
         .bucketBy(8, "band_idx", "band_key").sortBy("band_idx", "band_key")
         .saveAsTable("graft_q140_bandidx")
-      corpusSigs.select($"corpus_id", $"sh_b")
+      sigs.select(col("corpus_id"), col("sh_b"))
         .write.mode("overwrite")
         .bucketBy(8, "corpus_id").sortBy("corpus_id")
         .saveAsTable("graft_q140_shidx")
+      val ss = graft.Session.streamOf(s,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
       var plan = ""
       val matches = graft.Scratch.withScratchDir("graft_q140b") { scratch =>
-        val newBands = DedupQueries.signaturesOf(
-            split.withIx(multiFileStream(s, dir, "documents"))
-              .filter($"ix" < split.NewMax))
-          .select($"doc_id", $"sh", bandStructs(col).as("band"))
-          .select($"doc_id", $"sh", $"band.band_idx", $"band.band_key")
-        val scored = newBands
-          .join(s.table("graft_q140_bandidx"), Seq("band_idx", "band_key"))
-          .join(s.table("graft_q140_shidx"), "corpus_id")
-          .withColumn("inter",
-            size(array_intersect($"sh", $"sh_b")).cast("double"))
-          .withColumn("jaccard", round(
-            $"inter" / (size($"sh") + size($"sh_b") - $"inter"), 6))
-          .filter($"jaccard" >= 0.7)
-          .select($"doc_id", $"corpus_id", $"jaccard")
-        val out = scratch + "/sink"
-        withStatePartitions(s) {
-          val q = scored.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", scratch + "/ckpt")
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          awaitOrStop(q)
-          // q.explain prints the LAST micro-batch's physical plan
-          val baos = new java.io.ByteArrayOutputStream
-          Console.withOut(new java.io.PrintStream(baos, true, "UTF-8")) {
-            q.explain()
-          }
-          plan = baos.toString("UTF-8")
-        }
-        s.read.parquet(out).distinct().orderBy($"doc_id", $"corpus_id")
+        ingestDedup(s, ss, dir, s.table("graft_q140_bandidx"),
+          s.table("graft_q140_shidx"), scratch, done = { q =>
+            // q.explain prints the LAST micro-batch's physical plan
+            val baos = new java.io.ByteArrayOutputStream
+            Console.withOut(new java.io.PrintStream(baos, true, "UTF-8")) {
+              q.explain()
+            }
+            plan = baos.toString("UTF-8")
+          })
       }
       (matches, plan)
     } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
       s.sql("DROP TABLE IF EXISTS graft_q140_bandidx")
       s.sql("DROP TABLE IF EXISTS graft_q140_shidx")
     }
@@ -913,7 +851,7 @@ object StreamingQueries {
           count(lit(1)).as("n"))
         .select($"win.start".as("bucket"), $"event_type",
           $"dau_bucket", $"n")
-      runToSink(s, agg, scratch).orderBy($"bucket", $"event_type")
+      runStream(s, agg, scratch).orderBy($"bucket", $"event_type")
     }
   }
 
@@ -964,7 +902,7 @@ object StreamingQueries {
             regexp_extract($"props", "\"k\": (\\d+)", 1), 256).as("hh"),
           count(lit(1)).as("n"))
         .select($"win.start".as("bucket"), $"hh", $"n")
-      runToSink(s, agg, scratch)
+      runStream(s, agg, scratch)
         .select($"bucket", $"n", posexplode($"hh").as(Seq("pos", "e")))
         .filter($"pos" < 5)
         .select($"bucket", ($"pos" + 1).cast("int").as("rank"),
@@ -1027,7 +965,7 @@ object StreamingQueries {
         .select($"win.start".as("bucket"), $"event_type",
           round(element_at($"qs", 1), 6).as("p50"),
           round(element_at($"qs", 2), 6).as("p90"), $"n")
-      runToSink(s, agg, scratch).orderBy($"bucket", $"event_type")
+      runStream(s, agg, scratch).orderBy($"bucket", $"event_type")
     }
   }
 
@@ -1089,7 +1027,7 @@ object StreamingQueries {
           round(max($"az"), 4).as("max_abs_z"))
         .select($"win.start".as("bucket"), $"event_type",
           $"n", $"n_anomalies", $"max_abs_z")
-      runToSink(s, agg, scratch).orderBy($"bucket", $"event_type")
+      runStream(s, agg, scratch).orderBy($"bucket", $"event_type")
     }
   }
 
@@ -1149,7 +1087,6 @@ object StreamingQueries {
   private def q166(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.Scratch.withScratchDir("graft_q166") { scratch =>
-      val out = scratch + "/sink"
       val base = graft.Tables.events(s, dir)
         .select($"event_type", $"ts",
           round($"value" * 1e6, 0).cast("long").as("x6"))
@@ -1162,19 +1099,8 @@ object StreamingQueries {
         .join(broadcast(prof), "event_type")
         .select($"event_type", $"ts", $"value", $"event_id", $"mu6")
         .as[Streaming.DriftEvent]
-      withStatePartitions(s) {
-        val q = Streaming.cusumPerKey(ev, DriftH6).toDF()
-          .writeStream
-          .outputMode("update")
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            Streaming.appendBatchIdempotent(out)(batch, id)
-          }
-          .option("checkpointLocation", scratch + "/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        awaitOrStop(q)
-      }
-      val sunk = s.read.parquet(out)
+      val sunk = runStream(s, Streaming.cusumPerKey(ev, DriftH6).toDF(),
+        scratch, "update", BatchSink)
       val w = Window.partitionBy($"event_type").orderBy($"n".desc)
       sunk.withColumn("rn", row_number().over(w)).filter($"rn" === 1)
         .select($"event_type", $"n",
@@ -1253,7 +1179,7 @@ object StreamingQueries {
     import s.implicits._
     graft.Scratch.withScratchDir("graft_q177") { scratch =>
       val postings = docPostingsOf(multiFileStream(s, dir, "documents"))
-      runToSink(s, postings, scratch)
+      runStream(s, postings, scratch)
         .groupBy($"term")
         .agg(count(lit(1)).as("df"), sum($"tf").as("cf"),
           sum($"doc_id" * $"tf").as("postings_checksum"))
@@ -1292,26 +1218,14 @@ object StreamingQueries {
   private def q178(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.Scratch.withScratchDir("graft_q178") { scratch =>
-      val out = scratch + "/sink"
       val ev = eventsStream(s, dir)
         .select($"user_id", $"ts", $"value", $"event_id",
           when(substring(md5(concat(lit("cdc:"),
             $"event_id".cast("string"))), 1, 1) < "2", "D")
             .otherwise("U").as("op"))
         .as[Streaming.CdcEvent]
-      withStatePartitions(s) {
-        val q = Streaming.lwwPerKey(ev).toDF()
-          .writeStream
-          .outputMode("update")
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            Streaming.appendBatchIdempotent(out)(batch, id)
-          }
-          .option("checkpointLocation", scratch + "/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        awaitOrStop(q)
-      }
-      val sunk = s.read.parquet(out)
+      val sunk = runStream(s, Streaming.lwwPerKey(ev).toDF(), scratch,
+        "update", BatchSink)
       val w = Window.partitionBy($"user_id").orderBy($"n_ops".desc)
       sunk.withColumn("rn", row_number().over(w)).filter($"rn" === 1)
         .groupBy(($"user_id" % 10).as("bucket"))
@@ -1401,7 +1315,7 @@ object StreamingQueries {
   private def q183(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.Scratch.withScratchDir("graft_q183") { scratch =>
-      runToSink(s, annIndexDeltas(s, dir), scratch)
+      runStream(s, annIndexDeltas(s, dir), scratch)
         .withColumn("cchk", expr(
           "aggregate(zip_with(codes, sequence(1, size(codes)), " +
             "(c, i) -> CAST(c AS BIGINT) * i), CAST(0 AS BIGINT), " +
@@ -1479,7 +1393,7 @@ object StreamingQueries {
   private def q188(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.Scratch.withScratchDir("graft_q188") { scratch =>
-      runToSink(s, chunkIndexDeltas(s, dir), scratch)
+      runStream(s, chunkIndexDeltas(s, dir), scratch)
         .groupBy($"term")
         .agg(count(lit(1)).as("df"), sum($"tf").as("cf"),
           sum($"doc_id" * $"tf").as("doc_checksum"),
@@ -1736,7 +1650,7 @@ object StreamingQueries {
           .filter($"ix" < split.NewMax)
           .select($"doc_id", $"lang", $"text"),
         blob, relFps)
-      tailManifest(runToSink(s, accepted, scratch), langTot, benchNg)
+      tailManifest(runStream(s, accepted, scratch), langTot, benchNg)
     }
   }
 
@@ -2361,7 +2275,7 @@ object StreamingQueries {
       // discipline): one startup + commit cycle instead of two, and
       // the sink rows per key space are identical (same filters,
       // same projections — the oracle recomputes D per space).
-      val tombAll = runToSink(s,
+      val tombAll = runStream(s,
         multiFileStream(s, dir, "documents")
           .filter(Takedown.purged($"doc_id"))
           .select($"doc_id", lit(null).cast("long").as("vec_id"))
@@ -2636,11 +2550,7 @@ object StreamingQueries {
       // the pre-existing artifact (base vectors encoded at the frozen
       // scale — one batch pass per release, like ivfadcIndex) and the
       // streamed delta feed are independent — overlap them (guide
-      // §2.6). NOTE (ADVICE r17): while the sibling feed runs,
-      // withStatePartitions holds the session's shuffle width reduced
-      // — the batch branch here must stay SHUFFLE-FREE (it is: encode
-      // is row-local, the write has no exchange), or move to its own
-      // session
+      // §2.6)
       val Seq(_, deltas) = graft.Scratch.parMap(Seq[() => DataFrame](
         () => {
           sq8CodesAt(u.filter(vecIxOf($"vec_id") >= split.NewMax),
@@ -2648,7 +2558,7 @@ object StreamingQueries {
             .write.parquet(scratch + "/codes_base")
           s.emptyDataFrame
         },
-        () => runToSink(s, sq8Deltas(s, dir), scratch)), 2)(_())
+        () => runStream(s, sq8Deltas(s, dir), scratch)), 2)(_())
       val compacted = s.read.parquet(scratch + "/codes_base")
         .unionByName(deltas)
       // re-scale audit: full-corpus scale, every vector re-encoded
@@ -2948,7 +2858,7 @@ object StreamingQueries {
       // two overlapped per-key-space streams; one stream is one
       // startup + commit cycle total. Sink rows per key space are
       // identical (same filters/projections — the oracle holds).
-      val sunkAll = runToSink(s,
+      val sunkAll = runStream(s,
         multiFileStream(s, dir, "documents")
           .filter(Takedown.waveHex($"doc_id").isin(Takedown.Waves: _*))
           .select($"doc_id", lit(null).cast("long").as("vec_id"),
@@ -3305,7 +3215,7 @@ object StreamingQueries {
       // batch DIMENSION the lag needs, at half the per-micro-batch
       // planning+commit cost of a finer split), stamped into the
       // sink's batch column. The two key spaces ride ONE multiplexed
-      // AvailableNow stream (the q220 interleaveFeeds discipline — a
+      // AvailableNow stream (the q220 interleaveTimelines discipline — a
       // production ingest bus multiplexes record kinds on one topic):
       // maxFilesPerTrigger is a PER-SOURCE read limit, so each
       // source still admits 8 of its 16 replica files per
@@ -3316,10 +3226,7 @@ object StreamingQueries {
       // single-source feeds). One stream startup + commit cycle and
       // 2 micro-batches replace two startups and 4. The feed and the
       // two expectation checkpoints are independent — overlap all
-      // three (guide §2.6). NOTE (ADVICE r17): the checkpoint
-      // branches run while withStatePartitions holds the session's
-      // shuffle width reduced — they must stay SHUFFLE-FREE (they
-      // are: filter+select scans, no exchange).
+      // three (guide §2.6).
       val Seq(docD, vecD, tombAll) =
         graft.Scratch.parMap(Seq[() => DataFrame](
           () => graft.Tables.documents(s, dir)
@@ -3329,14 +3236,15 @@ object StreamingQueries {
             .parquetCached(s, s"$dir/embeddings.parquet")
             .filter(Takedown.purged($"vec_id")).select($"vec_id")
             .localCheckpoint(true),
-          () => runToSinkBatched(s,
+          () => runStream(s,
             multiFileStream(s, dir, "documents", 8)
               .filter(Takedown.purged($"doc_id"))
               .select($"doc_id", lit(null).cast("long").as("vec_id"))
               .unionByName(multiFileStream(s, dir, "embeddings", 8)
                 .filter(Takedown.purged($"vec_id"))
                 .select(lit(null).cast("long").as("doc_id"), $"vec_id")),
-            scratch + "/t").localCheckpoint(true)), 3)(_())
+            scratch + "/t", sink = BatchSink).localCheckpoint(true)),
+          3)(_())
       val docTombB = tombAll.filter($"doc_id".isNotNull)
         .select($"doc_id", $"batch")
       val vecTombB = tombAll.filter($"vec_id".isNotNull)
@@ -3503,159 +3411,80 @@ object StreamingQueries {
   // the q177/q188/q183 stateless extractors in-stream; per event one
   // artifact scan vs the broadcast outstanding store; the only
   // full-artifact writes are the fired vacuums.
-  /** the interleave BASE states: the memoized purge artifacts
-    * restricted to the base ingest split (rows are key-local, so the
-    * restriction IS the base-built artifact) — shared by q220's fold
-    * and the manifest-log builder (q221/q222). */
-  private def interleaveBases(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    import s.implicits._
-    val split = DedupQueries.IngestSplit
-    val (dpAll, cpAll, acAll) = purgeArtifactRows(s, dir)
-    (dpAll.drop("bucket").filter(vecIxOf($"doc_id") >= split.NewMax),
-      cpAll.drop("bucket").filter(vecIxOf($"doc_id") >= split.NewMax),
-      acAll.drop("bucket").filter(vecIxOf($"vec_id") >= split.NewMax))
-  }
-
-  /** the interleave FEEDS, streamed once into sinks under `scratch`
-    * and lineage-freed: ONE stream per source table carrying BOTH the
-    * tagged slim append deltas (doc- and chunk-postings deltas ride
-    * the documents stream under an artifact tag) AND the tagged
-    * takedown tombstones (artifact = 'tomb') — q215's fused-feed
-    * discipline taken one step further: a production ingest bus
-    * multiplexes record kinds on one topic, and each extra
-    * AvailableNow startup + commit cycle measured ~2 s against the
-    * 4-stream first form. Returns (docDeltas, annDeltas, docTombs,
-    * vecTombs) as sink partitions; shared by q220's fold and the
-    * manifest-log builder. */
-  private def interleaveFeeds(s: SparkSession, dir: String,
-      scratch: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import s.implicits._
+  /** the interleave timelines, one per served artifact in name order:
+    * (artifact, base, events, key) with events append A1, takedown D1,
+    * append A2, takedown D2 — shared by q220's fold and the
+    * manifest-log builder (q221/q222). The base is the memoized purge
+    * artifact restricted to the base ingest split (rows are key-local,
+    * so the restriction IS the base-built artifact). The feeds are
+    * streamed once into sinks under `scratch` and lineage-freed: ONE
+    * stream per source table carrying BOTH the tagged slim append
+    * deltas (doc- and chunk-postings deltas ride the documents stream
+    * under an artifact tag) AND the tagged takedown tombstones
+    * (artifact = 'tomb') — q215's fused-feed discipline taken one step
+    * further: a production ingest bus multiplexes record kinds on one
+    * topic, and each extra AvailableNow startup + commit cycle
+    * measured ~2 s against the 4-stream first form. */
+  private def interleaveTimelines(s: SparkSession, dir: String,
+      scratch: String)
+      : Seq[(String, DataFrame, Seq[(String, DataFrame)], String)] = {
     val split = DedupQueries.IngestSplit
     val dWaves = Takedown.Waves.take(2)
+    // one source table's feed: its wave-tagged append deltas and its
+    // D1/D2 tombstones, one stream into a sink under scratch/sub
+    def feed(table: String, key: String, deltas: DataFrame, sub: String) =
+      () => runStream(s,
+        deltas.withColumn("awave", Takedown.appendWave(col(key)))
+          .unionByName(multiFileStream(s, dir, table)
+            .filter(Takedown.waveHex(col(key)).isin(dWaves: _*))
+            .select(col(key), lit("tomb").as("artifact"),
+              Takedown.waveHex(col(key)).as("wave")),
+            allowMissingColumns = true),
+        s"$scratch/$sub").localCheckpoint(true)
     val newDocs = split.withIx(multiFileStream(s, dir, "documents"))
-      .filter($"ix" < split.NewMax).select($"doc_id", $"text")
+      .filter(col("ix") < split.NewMax).select(col("doc_id"), col("text"))
     // the two source-table feeds are independent — overlap their
     // AvailableNow runs (guide §2.6; startup+commit is fixed driver
-    // latency, and withStatePartitions is depth-counted for exactly
-    // this overlap)
-    val Seq(docAll, annAll) = graft.Scratch.parMap(
-      Seq[() => DataFrame](
-        () => runToSink(s,
-          slimDocPostings(docPostingsOf(newDocs))
-            .withColumn("artifact", lit("doc_postings"))
-            .unionByName(
-              slimChunkPostings(chunkIndexDeltasOf(newDocs))
-                .withColumn("artifact", lit("chunk_postings")))
-            .withColumn("awave", Takedown.appendWave($"doc_id"))
-            .withColumn("wave", lit(null).cast("string"))
-            .unionByName(multiFileStream(s, dir, "documents")
-              .filter(Takedown.waveHex($"doc_id").isin(dWaves: _*))
-              .select($"doc_id", lit(null).cast("string").as("k"),
-                lit(null).cast("long").as("c1"),
-                lit(null).cast("long").as("c2"),
-                lit("tomb").as("artifact"),
-                lit(null).cast("int").as("awave"),
-                Takedown.waveHex($"doc_id").as("wave"))),
-          s"$scratch/ad").localCheckpoint(true),
-        () => runToSink(s,
-          slimAnnCodes(annIndexDeltasOf(s, dir,
-              multiFileStream(s, dir, "embeddings")
-                .filter(vecIxOf($"vec_id") < split.NewMax)))
-            .drop("cell")
-            .withColumn("artifact", lit("ann_codes"))
-            .withColumn("awave", Takedown.appendWave($"vec_id"))
-            .withColumn("wave", lit(null).cast("string"))
-            .unionByName(multiFileStream(s, dir, "embeddings")
-              .filter(Takedown.waveHex($"vec_id").isin(dWaves: _*))
-              .select($"vec_id", lit(null).cast("long").as("k"),
-                lit(null).cast("long").as("c1"),
-                lit(null).cast("long").as("c2"),
-                lit("tomb").as("artifact"),
-                lit(null).cast("int").as("awave"),
-                Takedown.waveHex($"vec_id").as("wave"))),
-          s"$scratch/av").localCheckpoint(true)), 2)(_())
-    val docDeltas = docAll.filter($"artifact" =!= "tomb").drop("wave")
-    val annDeltas = annAll.filter($"artifact" =!= "tomb")
-      .drop("wave", "artifact")
-    val docT = docAll.filter($"artifact" === "tomb")
-      .select($"doc_id", $"wave")
-    val vecT = annAll.filter($"artifact" === "tomb")
-      .select($"vec_id", $"wave")
-    (docDeltas, annDeltas, docT, vecT)
-  }
-
-  /** temp perf probe for Q220Probe: phase timings of q220's pieces. */
-  private[graft] def probeInterleave(s: SparkSession, dir: String)
-      : Unit = {
-    import s.implicits._
-    def t[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[probe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
+    // latency)
+    val Seq(docAll, annAll) = graft.Scratch.parMap(Seq(
+      feed("documents", "doc_id",
+        slimDocPostings(docPostingsOf(newDocs))
+          .withColumn("artifact", lit("doc_postings"))
+          .unionByName(slimChunkPostings(chunkIndexDeltasOf(newDocs))
+            .withColumn("artifact", lit("chunk_postings"))), "ad"),
+      feed("embeddings", "vec_id",
+        slimAnnCodes(annIndexDeltasOf(s, dir,
+            multiFileStream(s, dir, "embeddings")
+              .filter(vecIxOf(col("vec_id")) < split.NewMax)))
+          .drop("cell").withColumn("artifact", lit("ann_codes")), "av")),
+      2)(_())
+    val (dpAll, cpAll, acAll) = purgeArtifactRows(s, dir)
+    def timeline(name: String, all: DataFrame, baseAll: DataFrame,
+        key: String) = {
+      val deltas = all.filter(col("artifact") === name)
+        .drop("artifact", "wave")
+      def appends(w: Int) = deltas.filter(col("awave") === w).drop("awave")
+      def tombs(w: String) = all
+        .filter(col("artifact") === "tomb" && col("wave") === w)
+        .select(col(key))
+      (name, baseAll.drop("bucket").filter(vecIxOf(col(key)) >= split.NewMax),
+        Seq("append" -> appends(1), "takedown" -> tombs(dWaves(0)),
+          "append" -> appends(2), "takedown" -> tombs(dWaves(1))), key)
     }
-    val scratch =
-      java.nio.file.Files.createTempDirectory("graft_probe220").toString
-    try {
-      val (baseDp, baseCp, baseAc) = t("bases")(interleaveBases(s, dir))
-      t("base counts")((baseDp.count(), baseCp.count(), baseAc.count()))
-      val (docDeltas, annDeltas, docT, vecT) =
-        t("feeds (4 streams)")(interleaveFeeds(s, dir, scratch))
-      t("delta counts")(
-        (docDeltas.count(), annDeltas.count(), docT.count(), vecT.count()))
-      val dWaves = Takedown.Waves.take(2)
-      def events(deltas: org.apache.spark.sql.DataFrame,
-          tombs: org.apache.spark.sql.DataFrame, key: String) = Seq(
-        "append" -> deltas.filter($"awave" === 1).drop("awave"),
-        "takedown" ->
-          tombs.filter($"wave" === dWaves(0)).select(col(key)),
-        "append" -> deltas.filter($"awave" === 2).drop("awave"),
-        "takedown" ->
-          tombs.filter($"wave" === dWaves(1)).select(col(key)))
-      val dDp = docDeltas.filter($"artifact" === "doc_postings")
-        .drop("artifact")
-      val dCp = docDeltas.filter($"artifact" === "chunk_postings")
-        .drop("artifact")
-      t("fold ann")(interleavedWaveAudit("ann_codes", baseAc,
-        events(annDeltas, vecT, "vec_id"), "vec_id", scratch).collect())
-      t("fold chunk")(interleavedWaveAudit("chunk_postings", baseCp,
-        events(dCp, docT, "doc_id"), "doc_id", scratch).collect())
-      t("fold doc")(interleavedWaveAudit("doc_postings", baseDp,
-        events(dDp, docT, "doc_id"), "doc_id", scratch).collect())
-    } finally graft.Scratch.deleteRecursively(
-      new java.io.File(scratch))
+    Seq(timeline("ann_codes", annAll, acAll, "vec_id"),
+      timeline("chunk_postings", docAll, cpAll, "doc_id"),
+      timeline("doc_postings", docAll, dpAll, "doc_id"))
   }
 
   private def q220(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.Scratch.withScratchDir("graft_q220") { scratch =>
-      val dWaves = Takedown.Waves.take(2)
-      val (baseDp, baseCp, baseAc) = interleaveBases(s, dir)
-      val (docDeltas, annDeltas, docT, vecT) =
-        interleaveFeeds(s, dir, scratch)
-      def events(deltas: DataFrame, tombs: DataFrame, key: String) =
-        Seq(
-          "append" -> deltas.filter($"awave" === 1).drop("awave"),
-          "takedown" ->
-            tombs.filter($"wave" === dWaves(0)).select(col(key)),
-          "append" -> deltas.filter($"awave" === 2).drop("awave"),
-          "takedown" ->
-            tombs.filter($"wave" === dWaves(1)).select(col(key)))
-      val dDp = docDeltas.filter($"artifact" === "doc_postings")
-        .drop("artifact")
-      val dCp = docDeltas.filter($"artifact" === "chunk_postings")
-        .drop("artifact")
       // the three artifact folds are ordered WITHIN an artifact but
       // independent across them — overlap (guide §2.6, the q215
       // pattern)
-      graft.Scratch.parMap(Seq(
-          ("ann_codes", baseAc, annDeltas, vecT, "vec_id"),
-          ("chunk_postings", baseCp, dCp, docT, "doc_id"),
-          ("doc_postings", baseDp, dDp, docT, "doc_id")), 3) {
-          case (name, base, deltas, tombs, key) =>
-            interleavedWaveAudit(name, base,
-              events(deltas, tombs, key), key, scratch)
+      graft.Scratch.parMap(interleaveTimelines(s, dir, scratch), 3) {
+          case (name, base, events, key) =>
+            interleavedWaveAudit(name, base, events, key, scratch)
         }
         .reduce(_ unionByName _)
         .orderBy($"artifact", $"wave")
@@ -3980,42 +3809,26 @@ object StreamingQueries {
     * fraction, so they cannot newly fire it); the OPTIMIZE commit
     * evaluates the small-file debt bit. */
   private[graft] def manifestLogDir(s: SparkSession, dir: String)
-      : String = {
-    import s.implicits._
+      : String =
     manifest(s, dir, graft.Tables.fingerprint(s"$dir/documents.parquet"),
         graft.Tables.fingerprint(s"$dir/embeddings.parquet")) {
       val out = graft.Scratch.tempDirDeletedOnExit("graft_manifest")
       val feedScratch =
         java.nio.file.Files.createTempDirectory("graft_manfeed").toString
       try {
-        val (docDeltas, annDeltas, docT, vecT) =
-          interleaveFeeds(s, dir, feedScratch)
-        val (baseDp, baseCp, baseAc) = interleaveBases(s, dir)
-        val dWaves = Takedown.Waves.take(2)
-        def ev(deltas: DataFrame, tombs: DataFrame, key: String) = Seq(
-          "append" -> deltas.filter($"awave" === 1).drop("awave"),
-          "takedown" ->
-            tombs.filter($"wave" === dWaves(0)).select(col(key)),
-          "append" -> deltas.filter($"awave" === 2).drop("awave"),
-          "optimize" -> null,
-          "takedown" ->
-            tombs.filter($"wave" === dWaves(1)).select(col(key)))
-        val dDp = docDeltas.filter($"artifact" === "doc_postings")
-          .drop("artifact")
-        val dCp = docDeltas.filter($"artifact" === "chunk_postings")
-          .drop("artifact")
-        writeManifest(s, out,
-          buildOneManifest(s, "ann_codes", baseAc,
-            ev(annDeltas, vecT, "vec_id"), "vec_id", out) ++
-            buildOneManifest(s, "chunk_postings", baseCp,
-              ev(dCp, docT, "doc_id"), "doc_id", out) ++
-            buildOneManifest(s, "doc_postings", baseDp,
-              ev(dDp, docT, "doc_id"), "doc_id", out))
+        // the folds share no state and each writes under out/<artifact>
+        // — overlap them (the q220 pattern); rows keep artifact order
+        writeManifest(s, out, graft.Scratch.parMap(
+            interleaveTimelines(s, dir, feedScratch), 3) {
+            case (name, base, events, key) =>
+              buildOneManifest(s, name, base,
+                events.patch(3, Seq("optimize" -> (null: DataFrame)), 0),
+                key, out)
+          }.flatten)
       } finally graft.Scratch.deleteRecursively(
         new java.io.File(feedScratch))
       out
     }
-  }
 
   /** buckets per full-rewrite commit. A fired vacuum or OPTIMIZE
     * rewrites the whole snapshot anyway, so the rewrite CLUSTERS it:
@@ -6123,25 +5936,18 @@ object StreamingQueries {
           "base", s"$out/$a/v0_base", 0L))
       val committed =
         scala.collection.mutable.LinkedHashSet.empty[String]
-      val batchLog =
-        scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
       val feedSchema = org.apache.spark.sql.types.StructType
         .fromDDL("key BIGINT, k STRING, c1 BIGINT, c2 BIGINT, " +
           "shard STRING")
-      val q = s.readStream.schema(feedSchema)
-        .option("maxFilesPerTrigger", 3)
-        .parquet(s"$out/feed")
-        .writeStream
-        .option("checkpointLocation", s"$out/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
+      val sunk = runStream(s, dirStream(s, s"$out/feed", feedSchema, 3), out,
+        sink = EachBatch { (sink, df, batchId) =>
           val fresh = df.select(col("shard")).distinct().collect()
             .map(_.getString(0)).filterNot(committed.contains)
           // the batch's uncommitted shards in ONE write, a dir per shard
           val files =
             if (fresh.isEmpty) Seq.empty
             else writeFiles(s, df.filter(col("shard").isin(fresh: _*)),
-              s"$out/$a/batch_$batchId", Some("shard"))
+              s"$sink/batch=$batchId", Some("shard"))
           for (f <- files) {
             val sh = f.path.substring(f.path.lastIndexOf('=') + 1)
             val v = committed.size + 1L
@@ -6150,16 +5956,14 @@ object StreamingQueries {
                 f.add(a, v, "append", "append"))
             }
             committed += sh
-            batchLog += ((batchId, sh))
           }
-          ()
-        }
-        .start()
-      awaitOrStop(q)
+        })
       val ingested = entries.toSeq
       writeManifest(s, out,
         ingested ++ packCommits(s, ingested, a, out, Seq.empty))
-      batchLog.toSeq.toDF("batch", "shard").repartition(1)
+      // which micro-batch committed each shard, from the sink's dirs
+      sunk.select($"batch".cast("long"), $"shard".cast("string"))
+        .distinct().repartition(1)
         .write.mode("overwrite").parquet(s"$out/batchlog")
       out
     }
@@ -6271,10 +6075,8 @@ object StreamingQueries {
     * on the same rows the gate folds. */
   private[graft] def cdcConsumerSink(s: SparkSession, dir: String,
       scratch: String): DataFrame =
-    runToSinkBatched(s,
-      s.readStream.schema(CdcFeedSchema).option("maxFilesPerTrigger", 4)
-        .parquet(s"${cdcFeedDir(s, dir)}/*"),
-      scratch)
+    runStream(s, dirStream(s, s"${cdcFeedDir(s, dir)}/*", CdcFeedSchema, 4),
+      scratch, sink = BatchSink)
 
   private def q225(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -290,11 +290,12 @@ class StreamingSpec extends SparkSpec {
     // sink's batch partition — if maxFilesPerTrigger silently stopped
     // throttling, head would collapse to 0 and the SLA lag would be
     // vacuously zero-dimensional.
-    val sunk = graft.queries.StreamingQueries.runToSinkBatched(spark,
+    val sunk = graft.queries.StreamingQueries.runStream(spark,
       graft.queries.StreamingQueries
         .multiFileStream(spark, sf, "documents", 8)
         .select($"doc_id"),
-      tmpDir("graft_batchfeed"))
+      tmpDir("graft_batchfeed"),
+      sink = graft.queries.StreamingQueries.BatchSink)
     val ids = sunk.select($"batch".cast("long")).distinct()
       .collect().map(_.getLong(0)).sorted
     assert(ids.length >= 2, s"expected >= 2 micro-batches, got $ids")
@@ -317,22 +318,25 @@ class StreamingSpec extends SparkSpec {
       df.filter(col(key).isNotNull)
         .select(col(key), col("batch").cast("long").as("b"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val muxed = graft.queries.StreamingQueries.runToSinkBatched(spark,
+    val muxed = graft.queries.StreamingQueries.runStream(spark,
       graft.queries.StreamingQueries
         .multiFileStream(spark, sf, "documents", 8)
         .select($"doc_id", lit(null).cast("long").as("vec_id"))
         .unionByName(graft.queries.StreamingQueries
           .multiFileStream(spark, sf, "embeddings", 8)
           .select(lit(null).cast("long").as("doc_id"), $"vec_id")),
-      tmpDir("graft_muxfeed"))
-    val docSolo = graft.queries.StreamingQueries.runToSinkBatched(spark,
+      tmpDir("graft_muxfeed"),
+      sink = graft.queries.StreamingQueries.BatchSink)
+    val docSolo = graft.queries.StreamingQueries.runStream(spark,
       graft.queries.StreamingQueries
         .multiFileStream(spark, sf, "documents", 8).select($"doc_id"),
-      tmpDir("graft_muxdoc"))
-    val vecSolo = graft.queries.StreamingQueries.runToSinkBatched(spark,
+      tmpDir("graft_muxdoc"),
+      sink = graft.queries.StreamingQueries.BatchSink)
+    val vecSolo = graft.queries.StreamingQueries.runStream(spark,
       graft.queries.StreamingQueries
         .multiFileStream(spark, sf, "embeddings", 8).select($"vec_id"),
-      tmpDir("graft_muxvec"))
+      tmpDir("graft_muxvec"),
+      sink = graft.queries.StreamingQueries.BatchSink)
     assert(stamps(muxed, "doc_id") == stamps(docSolo, "doc_id"))
     assert(stamps(muxed, "vec_id") == stamps(vecSolo, "vec_id"))
     // and the union still drains in >= 2 batches (the lag dimension)
