@@ -6,7 +6,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // SPARK_GRAFT_ONLY=q76,q44 (a local iteration aid) narrows both
-    // the warm-up and the timed sweep to the same list
+    // the warm-up and the timed sweep to the same list. A narrower
+    // warm-up leaves the timed queries less warm than the full one
+    // does, so a subset timing compares only with a timing under the
+    // same selection
     val queries = SparkEntry.selected()
     // warm-up, untimed: each query of the sweep once at sf0.001 under
     // the noop action the measurement uses. It warms class loading

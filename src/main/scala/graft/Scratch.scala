@@ -110,7 +110,7 @@ object Scratch {
     * LiveListenerBus.waitUntilEmpty is private[spark] — public at the
     * bytecode level, so reflection reaches it without a package
     * cheat; falls back to a short settle if the private API moves.
-    * ONE spelling shared by JobAudit and the plan-shape specs, so a
+    * ONE spelling shared by TimeAudit and the plan-shape specs, so a
     * Spark upgrade can't silently degrade one copy to the sleep. */
   private val drainFallbackWarned =
     new java.util.concurrent.atomic.AtomicBoolean(false)

@@ -1875,6 +1875,37 @@ object TextQueries {
   // the paper's worked example.
   private val BpeK = 10
 
+  /** the corpus's non-empty space-separated words, beside `keys`. */
+  private def corpusWords(docs: DataFrame, keys: Column*): DataFrame =
+    docs.select(keys :+ explode(split(col("text"), " ")).as("word"): _*)
+      .filter(length(col("word")) > 0)
+
+  /** the distinct-word table (word, wc) both tokenizer families train
+    * on (the Spark spelling of wordSqlCte). */
+  private def distinctWords(docs: DataFrame): DataFrame =
+    corpusWords(docs).groupBy(col("word")).agg(count(lit(1)).as("wc"))
+
+  /** per-language fertility of one or more trained tokenizers: the
+    * corpus's (lang, word) counts n, inner-joined to each (word, name)
+    * table of per-word token counts, summed per language into n_words,
+    * n_chars and, per tokenizer, name = Σ n · tokens. */
+  private def fertility(docs: DataFrame, toks: (String, DataFrame)*)
+      : DataFrame = {
+    val s = docs.sparkSession
+    import s.implicits._
+    val wl = corpusWords(docs, $"lang")
+      .groupBy($"lang", $"word").agg(count(lit(1)).as("n"))
+    toks.foldLeft(wl) { case (df, (_, t)) => df.join(t, "word") }
+      .groupBy($"lang")
+      .agg(sum($"n").as("n_words"),
+        (sum($"n" * length($"word")).as("n_chars") +:
+          toks.map { case (name, _) => sum($"n" * col(name)).as(name) }): _*)
+  }
+
+  /** chars per token, rounded to 6 dp half up. */
+  private def charsPerToken(chars: Column, tokens: Column): Column =
+    floor(chars / tokens.cast("double") * 1e6 + 0.5) / lit(1e6)
+
   /** greedy left-to-right application of merge (a, b) to a symbol
     * array (row-local fold; exact Sennrich apply — see q173 note). */
   private def bpeApply(seg: Column, a: Column, b: Column): Column =
@@ -1885,21 +1916,6 @@ object TextQueries {
         when(element_at(acc, -1) === a && x === b,
           concat(slice(acc, lit(1), size(acc) - 1), array(concat(a, b))))
           .otherwise(concat(acc, array(x))))
-
-  /** the initial character segmentation (word, wc, seg) — shared by
-    * the full-recount and delta chains. */
-  private def bpeSeg0(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    docs.select(explode(split($"text", " ")).as("word"))
-      .filter(length($"word") > 0)
-      .groupBy($"word").agg(count(lit(1)).as("wc"))
-      .withColumn("seg", concat(
-        expr("transform(sequence(1, char_length(word)), " +
-          "i -> substring(word, i, 1))"),
-        array(lit("</w>"))))
-      .localCheckpoint(true)
-  }
 
   /** occurrence-weighted adjacent-pair counts of a segmentation. */
   private def bpePairs(seg: DataFrame): DataFrame = {
@@ -1915,16 +1931,26 @@ object TextQueries {
       .agg(sum($"wc").as("cnt"))
   }
 
-  /** FULL-RECOUNT K-step merge loop — every step re-counts pairs over
-    * the whole word table. Kept as the equivalence yardstick for the
-    * delta chain (BpeSpec pins them merge-for-merge) and as the
-    * spelling the DuckDB oracle mirrors. */
-  private[graft] def bpeChainFull(docs: DataFrame,
+  /** the K-step merge loop → (final segmentation (word, wc, seg), merge
+    * table): every step re-counts the pairs over the whole word table,
+    * the spelling the DuckDB oracle mirrors. A full recount measured
+    * 2.9 s against 8.0 s for delta-maintained pair counts (sf0.1,
+    * K=10, PERF.md round 13): the distinct-word table is a few
+    * thousand rows, so a recount is one cheap job while the delta
+    * bookkeeping pays several materializations per step. */
+  private[graft] def bpeChain(docs: DataFrame,
       k: Int): (DataFrame, DataFrame) = {
     val s = docs.sparkSession
     import s.implicits._
+    // the initial character segmentation (word, wc, seg)
+    val seg0 = distinctWords(docs)
+      .withColumn("seg", concat(
+        expr("transform(sequence(1, char_length(word)), " +
+          "i -> substring(word, i, 1))"),
+        array(lit("</w>"))))
+      .localCheckpoint(true)
     val (segK, merges) = (1 to k).foldLeft(
-      (bpeSeg0(docs), Option.empty[DataFrame])) {
+      (seg0, Option.empty[DataFrame])) {
       case ((seg, ms), step) =>
         val top = bpePairs(seg).orderBy($"cnt".desc, $"a", $"b").limit(1)
           .localCheckpoint(true)
@@ -1939,92 +1965,6 @@ object TextQueries {
     }
     (segK, merges.get.orderBy($"step"))
   }
-
-  /** DELTA-MAINTAINED K-step merge loop — the shipped training path
-    * (q173/q176): the pair table is built ONCE from the initial
-    * segmentation and then maintained by add/subtract deltas (q177's
-    * merge-on-read discipline applied to tokenizer training). Each
-    * step touches only the words whose segmentation the merge
-    * CHANGES — a row-local adjacency filter finds them (no explode),
-    * their pre-apply pair counts retract, their post-apply counts
-    * add, and everything else is untouched. At a real vocabulary run
-    * (30k merges over a Heaps-law word table) the affected-word
-    * fraction per merge collapses as training proceeds, so the
-    * per-merge cost is driven by the (tiny) affected set + one
-    * bounded keyed agg on (a, b) — not K full re-counts of the word
-    * table. Exhaustion semantics are identical to the full chain: an
-    * empty argmax crossJoin empties the segmentation and no further
-    * merge rows appear (BpeSpec's exhaustion case runs the shipped
-    * path). Equivalence argument: words without an adjacent (a, b)
-    * are fixed points of bpeApply, so
-    * pairs(seg') = pairs(seg) − pairs(affected) + pairs(applied) —
-    * the induction BpeSpec pins merge-for-merge at two K values. */
-  private[graft] def bpeChainDelta(docs: DataFrame,
-      k: Int): (DataFrame, DataFrame) = {
-    val s = docs.sparkSession
-    import s.implicits._
-    var seg = bpeSeg0(docs)
-    var pt = bpePairs(seg).localCheckpoint(true)
-    var merges = Option.empty[DataFrame]
-    // row-local adjacency probe: does seg contain the (a, b) of the
-    // broadcast argmax row anywhere adjacent? (zip of seg with its
-    // own shift — empty for single-symbol words)
-    val hasPair = array_contains(
-      zip_with(slice($"seg", lit(1), size($"seg") - 1),
-        slice($"seg", lit(2), size($"seg") - 1),
-        (x, y) => x === $"a" && y === $"b"), true)
-    for (step <- 1 to k) {
-      val top = pt.orderBy($"cnt".desc, $"a", $"b").limit(1)
-        .localCheckpoint(true)
-      val tagged = seg.crossJoin(broadcast(top))
-      val affected = tagged.filter(hasPair)
-        .select($"word", $"wc", $"seg", $"a", $"b")
-        .localCheckpoint(true)
-      val applied = affected
-        .withColumn("seg", bpeApply($"seg", $"a", $"b"))
-        .select($"word", $"wc", $"seg")
-        .localCheckpoint(true)
-      val deltas = bpePairs(affected.select($"word", $"wc", $"seg"))
-        .withColumn("cnt", -$"cnt")
-        .unionByName(bpePairs(applied))
-      pt = pt.unionByName(deltas)
-        .groupBy($"a", $"b").agg(sum($"cnt").as("cnt"))
-        .filter($"cnt" > 0)
-        .localCheckpoint(true)
-      // the union's partition count must stay CONSTANT across steps:
-      // unionByName concatenates partition lists (untouched's + the
-      // applied side's), so without the repartition the checkpointed
-      // frame gains partitions every merge and a 30k-merge run
-      // schedules quadratically growing task waves (measured: K=40
-      // ground to a halt at sf0.1). The repartition shuffles only the
-      // slim (word, wc, seg) rows.
-      seg = tagged.filter(!hasPair).select($"word", $"wc", $"seg")
-        .unionByName(applied)
-        .repartition(s.sparkContext.defaultParallelism)
-        .localCheckpoint(true)
-      val mrow = top.select(lit(step).as("step"), $"a".as("left_sym"),
-        $"b".as("right_sym"), concat($"a", $"b").as("merged"),
-        $"cnt".as("pair_count"))
-      merges = Some(merges.map(_.unionByName(mrow)).getOrElse(mrow))
-    }
-    (seg, merges.get.orderBy($"step"))
-  }
-
-  /** the gate chain. MEASURED CHOICE (PERF.md round 13): at sf0.1 /
-    * K=10 the full recount is 2.9 s vs the delta chain's 8.0 s — the
-    * distinct-word table is a few thousand rows, so a full recount
-    * per merge is one cheap job while the delta bookkeeping pays ~4
-    * materializations of fixed scheduler overhead per step. The
-    * crossover belongs to scale: at a production vocabulary run (30k
-    * merges over a Heaps-law word table of millions of rows) the
-    * full recount explodes the ENTIRE table per merge (30k corpus-
-    * shaped jobs) while the delta step's work is bounded by the
-    * affected-word set, which collapses as training proceeds — so
-    * the engine ships BOTH: the full chain as the test-SF gate path,
-    * the delta chain as the documented large-K path, pinned
-    * equivalent merge-for-merge at two K values by BpeSpec. */
-  private[graft] def bpeChain(docs: DataFrame,
-      k: Int): (DataFrame, DataFrame) = bpeChainFull(docs, k)
 
   private[graft] def bpeMerges(docs: DataFrame, k: Int): DataFrame =
     bpeChain(docs, k)._2
@@ -2099,23 +2039,15 @@ object TextQueries {
     * explode (bounded by initial chars + K merges). */
   private def q176(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (seg, _) = bpeChain(documents(s, dir), BpeK)
-    val wl = documents(s, dir)
-      .select($"lang", explode(split($"text", " ")).as("word"))
-      .filter(length($"word") > 0)
-      .groupBy($"lang", $"word").agg(count(lit(1)).as("n"))
+    val docs = documents(s, dir)
+    val (seg, _) = bpeChain(docs, BpeK)
     val vocab = seg.select(explode($"seg").as("sym")).distinct()
       .agg(count(lit(1)).as("vocab_size"))
-    wl.join(seg.select($"word", size($"seg").cast("long").as("n_sub")),
-        "word")
-      .groupBy($"lang")
-      .agg(sum($"n").as("n_words"),
-        sum($"n" * $"n_sub").as("bpe_tokens"),
-        sum($"n" * length($"word")).as("n_chars"))
+    fertility(docs, "bpe_tokens" ->
+        seg.select($"word", size($"seg").cast("long").as("bpe_tokens")))
       .crossJoin(broadcast(vocab))
       .withColumn("chars_per_token",
-        floor($"n_chars" / $"bpe_tokens".cast("double") * 1e6 + 0.5) /
-          lit(1e6))
+        charsPerToken($"n_chars", $"bpe_tokens"))
       .select($"lang", $"n_words", $"bpe_tokens", $"n_chars",
         $"chars_per_token", $"vocab_size")
       .orderBy($"lang")
@@ -2341,70 +2273,96 @@ object TextQueries {
        | THEN $uniBestEnumExpr
        | ELSE $uniBestFoldExpr END""".stripMargin
 
-  /** (words, vocab, best) of the unigram chain: words = (word, wc);
-    * vocab = (piece, f0, cost6); best = (word, wc, m, seg) — the
-    * occurrence-weighted optimal segmentations. Shared by q191
-    * (training gate), q192 (rollout) and UnigramSpec. */
-  /** (words, vocab0 = (piece, f0), tot = 1-row t0) — the unigram seed
+  /** (words = (word, wc), vocab0 = (piece, f0)) — the unigram seed
     * statistics shared by the hard chain (q191) and the soft-EM
     * chain (q209): one corpus scan for (word, wc), the substring
     * counts, and the singles + top-UniV-multi seed vocabulary. */
-  private[graft] def uniSeed(docs: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
+  private[graft] def uniSeed(docs: DataFrame): (DataFrame, DataFrame) = {
     val s = docs.sparkSession
     import s.implicits._
-    val words = docs.select(explode(split($"text", " ")).as("word"))
-      .filter(length($"word") > 0)
-      .groupBy($"word").agg(count(lit(1)).as("wc"))
-      .localCheckpoint(true)
+    val words = distinctWords(docs).localCheckpoint(true)
     val subs = words
       // _outer: dodge InferFiltersFromGenerate; words are non-empty
       .select($"wc", explode_outer(expr(uniSubsExpr)).as("piece"))
       .groupBy($"piece").agg(sum($"wc").as("f0"))
       .localCheckpoint(true)
-    val multi = subs.filter(length($"piece") > 1)
-      .orderBy($"f0".desc, $"piece").limit(UniV)
-    val vocab0 = subs.filter(length($"piece") === 1).unionByName(multi)
-    val tot = vocab0.agg(sum($"f0").as("t0"))
-    (words, vocab0, tot)
+    (words, uniPrune(subs, "f0", Some(UniV)))
   }
 
+  /** the prune rule: every single-char piece (the segmentability
+    * floor) plus the multi-char pieces with count `f` > 0 — the top
+    * `cap` of them by (f desc, piece) when capped. */
+  private def uniPrune(c: DataFrame, f: String, cap: Option[Int])
+      : DataFrame = {
+    val multi = c.filter(length(col("piece")) > 1 && col(f) > 0)
+    c.filter(length(col("piece")) === 1).unionByName(cap.fold(multi)(k =>
+      multi.orderBy(col(f).desc, col("piece")).limit(k)))
+  }
+
+  /** `v` with cost6 = −ln(f/T) in integer micro-units, T = Σ f over
+    * `v`; a piece with f = 0 costs the UniBig sentinel. */
+  private def uniCosts(v: DataFrame, f: String): DataFrame =
+    v.crossJoin(broadcast(v.agg(sum(col(f)).as("t"))))
+      .withColumn("cost6",
+        when(col(f) > 0,
+          floor(log(col("t").cast("double") / col(f)) * 1e6 + 0.5)
+            .cast("long"))
+          .otherwise(lit(UniBig)))
+
+  /** per-word piece map pm over the word's own substrings ∩ vocab
+    * (bounded: ≤ len·UniMaxPiece entries — the lookup the row-local
+    * E-steps fold over; the vocab side broadcasts), the value column
+    * `v` of vocab (cost6 for the Viterbi, p for the soft E-step). */
+  private def uniPieceMap(words: DataFrame, vocab: DataFrame, v: String)
+      : DataFrame =
+    words.select(col("word"), explode_outer(expr(uniSubsExpr)).as("piece"))
+      .distinct()
+      .join(broadcast(vocab.select(col("piece"), col(v))), "piece")
+      .groupBy(col("word"))
+      .agg(map_from_entries(collect_set(struct(col("piece"), col(v))))
+        .as("pm"))
+
+  /** the exact Viterbi E-step under vocab's (piece, cost6) →
+    * (word, wc, m, seg): the optimal segmentation of every word. */
+  private def uniBest(words: DataFrame, vocab: DataFrame): DataFrame =
+    words.join(uniPieceMap(words, vocab, "cost6"), "word")
+      .withColumn("b", expr(uniBestExpr))
+      .select(col("word"), col("wc"), col("b.m").as("m"),
+        col("b.seg").as("seg"))
+
+  /** the M-step recount: vocab's rows with `f` = Σ wc of each piece
+    * over best's segmentations (0 for a piece no segmentation uses). */
+  private def uniRecount(vocab: DataFrame, best: DataFrame, f: String)
+      : DataFrame =
+    vocab.join(uniCounts(best, f), Seq("piece"), "left")
+      .withColumn(f, coalesce(col(f), lit(0L)))
+
+  /** (piece, f = Σ wc) over the pieces of the segmentations in seg. */
+  private def uniCounts(seg: DataFrame, f: String): DataFrame =
+    seg.select(col("wc"), explode(split(col("seg"), "\\|")).as("piece"))
+      .groupBy(col("piece")).agg(sum(col("wc")).as(f))
+
+  /** (words, vocab, best) of the unigram chain: words = (word, wc);
+    * vocab = (piece, f0, cost6); best = (word, wc, m, seg) — the
+    * occurrence-weighted optimal segmentations. Shared by q191
+    * (training gate), q192 (rollout) and UnigramSpec. */
   private[graft] def unigramChain(docs: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     val s = docs.sparkSession
     import s.implicits._
-    val (words, vocab0, tot) = uniSeed(docs)
-    val vocab = vocab0.crossJoin(broadcast(tot))
-      .withColumn("cost6",
-        floor(log($"t0".cast("double") / $"f0") * 1e6 + 0.5).cast("long"))
+    val (words, vocab0) = uniSeed(docs)
+    val vocab = uniCosts(vocab0, "f0")
       .select($"piece", $"f0", $"cost6")
       .localCheckpoint(true)
-    // per-word piece→cost map over the word's own substrings ∩ vocab
-    // (bounded: ≤ len·UniMaxPiece entries — the lookup the row-local
-    // enumeration folds over; the vocab side broadcasts)
-    val pm = words
-      .select($"word", explode_outer(expr(uniSubsExpr)).as("piece"))
-      .distinct()
-      .join(broadcast(vocab.select($"piece", $"cost6")), "piece")
-      .groupBy($"word")
-      .agg(map_from_entries(collect_set(struct($"piece", $"cost6")))
-        .as("pm"))
-    val best = words.join(pm, "word")
-      .withColumn("b", expr(uniBestExpr))
-      .select($"word", $"wc", $"b.m".as("m"), $"b.seg".as("seg"))
-      .localCheckpoint(true)
+    val best = uniBest(words, vocab).localCheckpoint(true)
     (words, vocab, best)
   }
 
   private def q191(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (_, vocab, best) = unigramChain(documents(s, dir))
-    val f1 = best
-      .select($"wc", explode(split($"seg", "\\|")).as("piece"))
-      .groupBy($"piece").agg(sum($"wc").as("f1"))
-    vocab.join(f1, Seq("piece"), "left")
-      .select($"piece", $"f0", $"cost6",
-        coalesce($"f1", lit(0L)).as("f1"))
+    uniRecount(vocab, best, "f1")
+      .select($"piece", $"f0", $"cost6", $"f1")
       .orderBy($"piece")
   }
 
@@ -2429,37 +2387,14 @@ object TextQueries {
     val s = docs.sparkSession
     import s.implicits._
     val (words, vocab, best) = unigramChain(docs)
-    val f1 = best
-      .select($"wc", explode(split($"seg", "\\|")).as("piece"))
-      .groupBy($"piece").agg(sum($"wc").as("f1"))
-    val v1 = vocab.join(f1, Seq("piece"), "left")
-      .select($"piece", coalesce($"f1", lit(0L)).as("f1"))
-      .filter(length($"piece") === 1 || $"f1" > 0)
+    val v1 = uniPrune(uniRecount(vocab.select($"piece"), best, "f1"),
+        "f1", None)
       .localCheckpoint(true)
-    val t1 = v1.agg(sum($"f1").as("t1"))
-    val v2 = v1.crossJoin(broadcast(t1))
-      .withColumn("cost6",
-        when($"f1" > 0,
-          floor(log($"t1".cast("double") / $"f1") * 1e6 + 0.5).cast("long"))
-          .otherwise(lit(UniBig)))
+    val v2 = uniCosts(v1, "f1")
       .select($"piece", $"f1", $"cost6")
       .localCheckpoint(true)
-    val pm2 = words
-      .select($"word", explode_outer(expr(uniSubsExpr)).as("piece"))
-      .distinct()
-      .join(broadcast(v2.select($"piece", $"cost6")), "piece")
-      .groupBy($"word")
-      .agg(map_from_entries(collect_set(struct($"piece", $"cost6")))
-        .as("pm"))
-    val best2 = words.join(pm2, "word")
-      .withColumn("b", expr(uniBestExpr))
-      .select($"wc", $"b.seg".as("seg"))
-    val f2 = best2
-      .select($"wc", explode(split($"seg", "\\|")).as("piece"))
-      .groupBy($"piece").agg(sum($"wc").as("f2"))
-    v2.join(f2, Seq("piece"), "left")
-      .select($"piece", $"f1", $"cost6".as("cost2_6"),
-        coalesce($"f2", lit(0L)).as("f2"))
+    uniRecount(v2, uniBest(words, v2), "f2")
+      .select($"piece", $"f1", $"cost6".as("cost2_6"), $"f2")
       .orderBy($"piece")
   }
 
@@ -2536,24 +2471,6 @@ object TextQueries {
   private[graft] def uniKeepK(target: Int, r: Int): Int =
     math.max(target, math.ceil(UniV / math.pow(2.0, r)).toInt)
 
-  /** one exact E-step + recount under an explicit (piece, cost6)
-    * vocabulary → (piece, f) Viterbi counts. */
-  private def uniEStep(words: DataFrame, vocab: DataFrame): DataFrame = {
-    val s = words.sparkSession
-    import s.implicits._
-    val pm = words
-      .select($"word", explode_outer(expr(uniSubsExpr)).as("piece"))
-      .distinct()
-      .join(broadcast(vocab), "piece")
-      .groupBy($"word")
-      .agg(map_from_entries(collect_set(struct($"piece", $"cost6")))
-        .as("pm"))
-    words.join(pm, "word")
-      .withColumn("b", expr(uniBestExpr))
-      .select($"wc", explode(split($"b.seg", "\\|")).as("piece"))
-      .groupBy($"piece").agg(sum($"wc").as("f"))
-  }
-
   /** q202's core, parameterized by target so UnigramSpec can pin a
     * hand-computable deep-prune run (target = 1 → 6 rounds). */
   private[graft] def unigramToTarget(docs: DataFrame, target: Int)
@@ -2561,26 +2478,13 @@ object TextQueries {
     val s = docs.sparkSession
     import s.implicits._
     val (words, vocab0, best0) = unigramChain(docs)
-    val rounds = uniPruneRounds(target)
-    var fCur = best0
-      .select($"wc", explode(split($"seg", "\\|")).as("piece"))
-      .groupBy($"piece").agg(sum($"wc").as("f"))
     var vocab = vocab0.select($"piece", $"cost6")
     val sheets = Seq.newBuilder[DataFrame]
-    for (r <- 1 to rounds) {
-      if (r > 1) fCur = uniEStep(words, vocab)
-      val c = vocab.select($"piece").join(fCur, Seq("piece"), "left")
-        .select($"piece", coalesce($"f", lit(0L)).as("f"))
-      val keep = c.filter(length($"piece") === 1)
-        .unionByName(c.filter(length($"piece") > 1 && $"f" > 0)
-          .orderBy($"f".desc, $"piece").limit(uniKeepK(target, r)))
-      val t = keep.agg(sum($"f").as("t"))
-      val v = keep.crossJoin(broadcast(t))
-        .withColumn("cost6",
-          when($"f" > 0,
-            floor(log($"t".cast("double") / $"f") * 1e6 + 0.5)
-              .cast("long"))
-            .otherwise(lit(UniBig)))
+    for (r <- 1 to uniPruneRounds(target)) {
+      val best = if (r == 1) best0 else uniBest(words, vocab)
+      val keep = uniPrune(uniRecount(vocab.select($"piece"), best, "f"),
+        "f", Some(uniKeepK(target, r)))
+      val v = uniCosts(keep, "f")
         .select($"piece", $"f", $"cost6")
         .localCheckpoint(true)
       sheets += v.select(lit(r.toLong).as("round"), $"piece", $"f",
@@ -2791,23 +2695,13 @@ object TextQueries {
   // segmentation table.
   private def q192(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (_, _, best) = unigramChain(documents(s, dir))
-    val wl = documents(s, dir)
-      .select($"lang", explode(split($"text", " ")).as("word"))
-      .filter(length($"word") > 0)
-      .groupBy($"lang", $"word").agg(count(lit(1)).as("n"))
-    val used = best
-      .select(explode(split($"seg", "\\|")).as("piece")).distinct()
-      .agg(count(lit(1)).as("vocab_used"))
-    wl.join(best.select($"word", $"m"), "word")
-      .groupBy($"lang")
-      .agg(sum($"n").as("n_words"),
-        sum($"n" * $"m").as("uni_tokens"),
-        sum($"n" * length($"word")).as("n_chars"))
+    val docs = documents(s, dir)
+    val (_, _, best) = unigramChain(docs)
+    val used = uniCounts(best, "f").agg(count(lit(1)).as("vocab_used"))
+    fertility(docs, "uni_tokens" -> best.select($"word", $"m".as("uni_tokens")))
       .crossJoin(broadcast(used))
       .withColumn("chars_per_token",
-        floor($"n_chars" / $"uni_tokens".cast("double") * 1e6 + 0.5) /
-          lit(1e6))
+        charsPerToken($"n_chars", $"uni_tokens"))
       .select($"lang", $"n_words", $"uni_tokens", $"n_chars",
         $"chars_per_token", $"vocab_used")
       .orderBy($"lang")
@@ -2835,9 +2729,10 @@ object TextQueries {
 
   // q193: TOKENIZER A/B COMPARISON — the readout a tokenizer swap
   // actually decides on: BOTH families trained on the same corpus
-  // (q173's BPE chain, q191's unigram chain — each over the ONE
-  // shared distinct-word table), their encodings joined per
-  // language into the fertility sheet: word/char volumes, tokens
+  // (q173's BPE chain, q191's unigram chain — each builds its own
+  // distinct-word table; only the oracle shares one `w` CTE), their
+  // encodings joined per language into the fertility sheet (the
+  // `fertility` helper q176 and q192 use): word/char volumes, tokens
   // under each family, chars-per-token, and the per-language
   // winner. Accounting conventions carried verbatim from each
   // family's own rollout gate: BPE token count = symbol count of
@@ -2857,32 +2752,19 @@ object TextQueries {
   private[graft] def tokenizerAb(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    // the two tokenizer trainings are independent chains over the
-    // same distinct-word table — overlap them (guide §2.6; each is
-    // internally an ordered merge/EM recursion and stays so)
-    val Seq(bsegA, ubestA) = graft.Scratch.parMap(
+    // the two tokenizer trainings are independent chains — overlap
+    // them (guide §2.6; each is internally an ordered merge/EM
+    // recursion and stays so)
+    val Seq(bseg, ubest) = graft.Scratch.parMap(
       Seq[() => DataFrame](
         () => bpeChain(docs, BpeK)._1,
         () => unigramChain(docs)._3), 2)(_())
-    val (bseg, ubest) = (bsegA, ubestA)
-    val wl = docs
-      .select($"lang", explode(split($"text", " ")).as("word"))
-      .filter(length($"word") > 0)
-      .groupBy($"lang", $"word").agg(count(lit(1)).as("n"))
-    wl.join(bseg.select($"word", size($"seg").cast("long").as("nb")),
-        "word")
-      .join(ubest.select($"word", $"m".as("nu")), "word")
-      .groupBy($"lang")
-      .agg(sum($"n").as("n_words"),
-        sum($"n" * length($"word")).as("n_chars"),
-        sum($"n" * $"nb").as("bpe_tokens"),
-        sum($"n" * $"nu").as("uni_tokens"))
-      .withColumn("bpe_cpt",
-        floor($"n_chars" / $"bpe_tokens".cast("double") * 1e6 + 0.5) /
-          lit(1e6))
-      .withColumn("uni_cpt",
-        floor($"n_chars" / $"uni_tokens".cast("double") * 1e6 + 0.5) /
-          lit(1e6))
+    fertility(docs,
+        "bpe_tokens" -> bseg.select($"word",
+          size($"seg").cast("long").as("bpe_tokens")),
+        "uni_tokens" -> ubest.select($"word", $"m".as("uni_tokens")))
+      .withColumn("bpe_cpt", charsPerToken($"n_chars", $"bpe_tokens"))
+      .withColumn("uni_cpt", charsPerToken($"n_chars", $"uni_tokens"))
       .withColumn("winner",
         when($"uni_tokens" < $"bpe_tokens", lit("unigram"))
           .when($"bpe_tokens" < $"uni_tokens", lit("bpe"))
@@ -3418,12 +3300,7 @@ object TextQueries {
       : DataFrame = {
     val s = words.sparkSession
     import s.implicits._
-    val pm = words
-      .select($"word", explode_outer(expr(uniSubsExpr)).as("piece"))
-      .distinct()
-      .join(broadcast(vocabP), "piece")
-      .groupBy($"word")
-      .agg(map_from_entries(collect_set(struct($"piece", $"p"))).as("pm"))
+    val pm = uniPieceMap(words, vocabP, "p")
     // LEFT join + empty-map fallback: a word sharing NO substring with
     // the vocab still has a lattice (all edges at the unk weight) —
     // unreachable in the gates (vocab always ⊇ all singles) but the
@@ -3453,21 +3330,27 @@ object TextQueries {
       .groupBy($"piece").agg(sum($"e6raw").as("e6"))
   }
 
+  /** the soft seed: vocab0's (piece, p = f0 / Σ f0). */
+  private def uniSoftSeed(vocab0: DataFrame): DataFrame =
+    vocab0.crossJoin(broadcast(vocab0.agg(sum(col("f0")).as("t0"))))
+      .select(col("piece"), (col("f0").cast("double") / col("t0")).as("p"))
+
+  /** the Laplace step: g's (piece, e6) → (piece, p = (e6 + 1) /
+    * (Σ e6 + |g|)). */
+  private def uniLaplace(g: DataFrame): DataFrame =
+    g.crossJoin(broadcast(
+        g.agg(sum(col("e6")).as("t"), count(lit(1)).as("nv"))))
+      .select(col("piece"),
+        ((col("e6") + 1).cast("double") / (col("t") + col("nv"))).as("p"))
+
   /** the two gated soft-EM rounds over an explicit corpus (UnigramSpec
     * plants corpora where soft and hard EM provably diverge). */
   private[graft] def uniSoftRounds(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val (words, vocab0, tot) = uniSeed(docs)
-    val vp1 = vocab0.crossJoin(broadcast(tot))
-      .select($"piece", ($"f0".cast("double") / $"t0").as("p"))
-    val g1 = uniSoftEStep(words, vp1).localCheckpoint(true)
-    val t6 = g1.filter($"piece" =!= "<unk>")
-      .agg(sum($"e6").as("t"), count(lit(1)).as("nv"))
-    val vp2 = g1.filter($"piece" =!= "<unk>").crossJoin(broadcast(t6))
-      .select($"piece",
-        (($"e6" + 1).cast("double") / ($"t" + $"nv")).as("p"))
-    val g2 = uniSoftEStep(words, vp2)
+    val (words, vocab0) = uniSeed(docs)
+    val g1 = uniSoftEStep(words, uniSoftSeed(vocab0)).localCheckpoint(true)
+    val g2 = uniSoftEStep(words, uniLaplace(g1.filter($"piece" =!= "<unk>")))
     g1.select(lit(1L).as("round"), $"piece", $"e6")
       .unionByName(g2.select(lit(2L).as("round"), $"piece", $"e6"))
       .orderBy($"round", $"piece")
@@ -3569,22 +3452,15 @@ object TextQueries {
       : DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val (words, vocab0, tot) = uniSeed(docs)
-    val rounds = uniPruneRounds(target)
-    var vp = vocab0.crossJoin(broadcast(tot))
-      .select($"piece", ($"f0".cast("double") / $"t0").as("p"))
+    val (words, vocab0) = uniSeed(docs)
+    var vp = uniSoftSeed(vocab0)
     val sheets = Seq.newBuilder[DataFrame]
-    for (r <- 1 to rounds) {
+    for (r <- 1 to uniPruneRounds(target)) {
       val g = uniSoftEStep(words, vp).filter($"piece" =!= "<unk>")
-      val keep = g.filter(length($"piece") === 1)
-        .unionByName(g.filter(length($"piece") > 1 && $"e6" > 0)
-          .orderBy($"e6".desc, $"piece").limit(uniKeepK(target, r)))
+      val keep = uniPrune(g, "e6", Some(uniKeepK(target, r)))
         .localCheckpoint(true)
       sheets += keep.select(lit(r.toLong).as("round"), $"piece", $"e6")
-      val t6 = keep.agg(sum($"e6").as("t"), count(lit(1)).as("nv"))
-      vp = keep.crossJoin(broadcast(t6))
-        .select($"piece",
-          (($"e6" + 1).cast("double") / ($"t" + $"nv")).as("p"))
+      vp = uniLaplace(keep)
     }
     sheets.result().reduce(_.unionByName(_)).orderBy($"round", $"piece")
   }

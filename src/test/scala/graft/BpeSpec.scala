@@ -65,29 +65,6 @@ class BpeSpec extends SparkSpec {
     assert(got.toSeq == Seq((1, "ab", 3L), (2, "ab</w>", 3L)), got.toSeq)
   }
 
-  test("delta-maintained pair counts ≡ full recount, merge-for-merge, two K values") {
-    import spark.implicits._
-    // real corpus (sf0.001 documents) at two training depths: the
-    // delta chain must reproduce the full recount's merge TABLE
-    // (symbols, counts, order) and the final SEGMENTATION exactly —
-    // the induction pairs(seg') = pairs(seg) − pairs(affected) +
-    // pairs(applied), pinned end-to-end
-    val docs = graft.Tables.documents(spark, sf).select($"text")
-    for (k <- Seq(4, 10)) {
-      val (segF, mF) = TextQueries.bpeChainFull(docs, k)
-      val (segD, mD) = TextQueries.bpeChainDelta(docs, k)
-      val fm = mF.collect().map(_.toString).toSeq
-      val dm = mD.collect().map(_.toString).toSeq
-      assert(fm == dm, s"k=$k merges diverged:\n${fm.zip(dm)
-        .filter(p => p._1 != p._2).mkString("\n")}")
-      val fs = segF.select($"word", $"wc", $"seg").collect()
-        .map(_.toString).sorted.toSeq
-      val ds = segD.select($"word", $"wc", $"seg").collect()
-        .map(_.toString).sorted.toSeq
-      assert(fs == ds, s"k=$k segmentation diverged")
-    }
-  }
-
   test("q184: encode∘decode is the identity on every sampled doc") {
     // the round-trip gate's flag is a MEASURED column; this pins that
     // on the real corpus it actually measures true — a segmentation

@@ -544,7 +544,7 @@ class PlanShapeSpec extends SparkSpec {
     // lexical branch re-tokenizing the corpus), 64 after localized()
     // fusion + the served doc-postings branch, 41 after round 16's
     // schema-cached index reads + stats-as-literals + fused query
-    // vectors / local codebook (graft.JobAudit measures the
+    // vectors / local codebook (graft.TimeAudit measures the
     // breakdown). The bound leaves modest slack; a regression
     // re-splitting the collects, re-adding the corpus tokenize, or
     // re-broadcasting the stats frames lands above it. The ABSOLUTE

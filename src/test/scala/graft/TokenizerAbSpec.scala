@@ -51,4 +51,25 @@ class TokenizerAbSpec extends SparkSpec {
       assert(r.getString(7) == expect, r)
     }
   }
+
+  test("real corpus: the A/B sheet agrees with each family's own rollout sheet") {
+    // q193 trains both families again and sums its own fertility; per
+    // language its volumes and BPE tokens must equal q176's, and its
+    // unigram tokens q192's
+    def sheet(name: String, cols: String*): Map[String, Seq[Long]] =
+      Registry.byName(name).run(spark, sf).select("lang", cols: _*)
+        .collect().map(r => r.getString(0) ->
+          (1 to cols.size).map(r.getLong)).toMap
+    val ab = sheet("q193_tokenizer_ab",
+      "n_words", "n_chars", "bpe_tokens", "uni_tokens")
+    val bpe = sheet("q176_bpe_encode", "n_words", "n_chars", "bpe_tokens")
+    val uni = sheet("q192_unigram_encode", "uni_tokens")
+    assert(ab.nonEmpty)
+    assert(ab.keySet == bpe.keySet && ab.keySet == uni.keySet,
+      (ab.keySet, bpe.keySet, uni.keySet))
+    ab.foreach { case (lang, v) =>
+      assert(v.take(3) == bpe(lang), s"$lang: q193 $v vs q176 ${bpe(lang)}")
+      assert(v.drop(3) == uni(lang), s"$lang: q193 $v vs q192 ${uni(lang)}")
+    }
+  }
 }
