@@ -18,11 +18,12 @@ import graft.queries.{DedupQueries, SimilarityQueries => Sim,
   *    again, so keeping it would only grow the store (and pin dead
   *    checkpoint blocks) in a session that regenerates its inputs.
   *  - Session-bound entries. An entry whose value holds checkpointed
-  *    DataFrames is defined with `sessionBound`: its blocks live in the
-  *    building SparkContext, so every session-bound lookup first drops
-  *    the entries whose context has stopped, and a later session builds
-  *    its own. Other entries hold on-disk paths or driver values that
-  *    any session can read, and outlive sessions.
+  *    DataFrames or broadcast variables is defined with `sessionBound`:
+  *    its blocks live in the building SparkContext, so every
+  *    session-bound lookup first drops the entries whose context has
+  *    stopped, and a later session builds its own. Other entries hold
+  *    on-disk paths or driver values that any session can read, and
+  *    outlive sessions.
   *  - One build per key. Concurrent callers (`Scratch.parMap` siblings)
   *    wait on the key's own cell, never on a map operation, so a build
   *    may look up other entries (merge → manifest, MoR compaction →

@@ -147,8 +147,11 @@ case class BloomContainsExpr(left: Expression, right: Expression)
 }
 
 /** `graft_bloom_any(bloom BINARY, tokens ARRAY<STRING>)` → BOOLEAN —
-  * true iff ANY 3-token shingle of `tokens` probes positive against a
-  * `graft_bloom_agg` blob. Semantically identical to
+  * true iff ANY `BloomExpr.ShingleWidth`-token shingle of `tokens`
+  * probes positive against a `graft_bloom_agg` blob. The blob is any
+  * BINARY child: a literal, or (the engine's screens) a
+  * `BroadcastBinary` that keeps the multi-MB blob out of the plan.
+  * Semantically identical to
   * `exists(shingles(tokens), sh -> graft_bloom_contains(bloom, sh))`
   * with `concat_ws(' ', …)` shingling (BloomSpec pins the
   * equivalence), but one primitive loop per document: the HOF
@@ -159,7 +162,7 @@ case class BloomContainsExpr(left: Expression, right: Expression)
   * and build can never disagree on the key encoding. Null token
   * elements throw (the corpus tokenizer never produces them; silently
   * skipping would change the screened shingle set). Short docs
-  * (< 3 tokens) have no shingles → false. */
+  * (< ShingleWidth tokens) have no shingles → false. */
 case class BloomAnyExpr(left: Expression, right: Expression)
   extends BinaryExpression {
 

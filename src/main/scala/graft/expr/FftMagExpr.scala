@@ -235,8 +235,8 @@ object GraftFunctions {
     call_function("graft_bloom_contains", bloom, key)
   }
 
-  /** any-3-token-shingle bloom probe over a token array (native; one
-    * primitive loop per doc — the screen's hot path). */
+  /** any-ShingleWidth-token-shingle bloom probe over a token array
+    * (native; one primitive loop per doc — the screen's hot path). */
   def bloomAny(spark: SparkSession, bloom: Column, toks: Column): Column = {
     register(spark)
     call_function("graft_bloom_any", bloom, toks)

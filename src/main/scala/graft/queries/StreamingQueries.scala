@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -607,10 +608,10 @@ object StreamingQueries {
     * the shape a production pipeline actually runs it: the benchmark
     * filter is built ONCE in batch (small side), then newly-arriving
     * corpus documents stream through a stateless
-    * `graft_bloom_contains` filter into the cleaned-corpus sink. The
+    * `graft_bloom_any` filter into the cleaned-corpus sink. The
     * one §2.10 operator class the other ten gates don't cover: a
     * stateless transform (no watermark, no state store — per-batch
-    * filtering with a plan-literal filter blob), and the first gate
+    * filtering against the broadcast filter blob), and the first gate
     * composing a native graft expression inside a StreamingQuery.
     * Scale: the stream side never shuffles (filter + project only)
     * and reads a MULTI-FILE source (streamFixtureDir), so the
@@ -618,7 +619,7 @@ object StreamingQueries {
     * production topology, and the fix for the single-file 35.2 s sf1
     * measurement (one task however wide the session);
     * re-pointing the filter at a refreshed benchmark is a stream
-    * restart with a new literal, state-free by construction. The
+    * restart with a new broadcast, state-free by construction. The
     * sink-side rollup (per-source kept count + checksum) matches the
     * exact batch screen's kept set — FP margin per q128. */
   private def q130(s: SparkSession, dir: String): DataFrame = {
@@ -626,12 +627,11 @@ object StreamingQueries {
     val screen = DedupQueries.BloomScreen
     // batch-side build — ONE definition of the screen, shared with
     // q128 (split predicate, shingles, geometry all from BloomScreen)
-    val blob: Array[Byte] = screen.benchBlob(s, dir)
+    val blob = screen.benchBlob(s, dir)
     graft.Scratch.withScratchDir("graft_q130") { scratch =>
       val cleaned = screen.withBenchSplit(multiFileStream(s, dir, "documents"))
         .filter($"hx" >= screen.BenchMax)
-        .filter(!graft.expr.GraftFunctions
-          .bloomAny(s, lit(blob), screen.tokens($"text")))
+        .filter(!screen.probe(s, blob, screen.tokens($"text")))
         .select($"doc_id", $"source")
       runStream(s, cleaned, scratch)
         .groupBy($"source")
@@ -1418,7 +1418,7 @@ object StreamingQueries {
   // streaming continuation of q197's corpus release: a FROZEN release
   // (the q197 chain over the already-indexed IngestSplit two-thirds)
   // publishes its sidecar state once — the benchmark 8-gram bloom
-  // blob (a plan literal, q130's pattern at the attribution width:
+  // blob (one broadcast, q130's pattern at the attribution width:
   // BloomScreen.ShingleW == AttrW == 8), the released-fingerprint
   // set, and per-language released token totals. Newly-crawled docs
   // then stream through the SAME three screens state-free: bench
@@ -1459,17 +1459,11 @@ object StreamingQueries {
     * released fingerprints, per-lang released token totals, released
     * docs, the exact bench 8-gram set). */
   private[graft] def releaseFrozenState(base: DataFrame)
-      : (Array[Byte], DataFrame, DataFrame, DataFrame, DataFrame) = {
+      : (Broadcast[Array[Byte]], DataFrame, DataFrame, DataFrame,
+        DataFrame) = {
     val s = base.sparkSession
     import s.implicits._
     val screen = DedupQueries.BloomScreen
-    val blob = screen.withShingles(
-        screen.withBenchSplit(base).filter($"hx" < screen.BenchMax))
-      .select(explode_outer($"shs").as("sh")).filter($"sh".isNotNull)
-      .coalesce(8)
-      .agg(graft.expr.GraftFunctions
-        .bloomAgg(s, $"sh", screen.NBits, screen.K).as("bloom"))
-      .head().getAs[Array[Byte]](0)
     // the exact bench n-gram set (ShingleW == AttrW == 8 — one
     // width for the bloom build, the probe, and the exact verify):
     // compaction's ground truth for bloom-flagged candidates
@@ -1481,6 +1475,11 @@ object StreamingQueries {
       .withColumn("ngs", array_distinct(expr(DedupQueries.ngramExpr(w))))
       .select(explode_outer($"ngs").as("ng"))
       .distinct().localCheckpoint(true)
+    // the bloom blob over the same 8-grams: ngramExpr(AttrW) spells
+    // BloomScreen's shingles and a bloom OR is idempotent, so the
+    // distinct set gives the blob the per-doc shingle lists gave,
+    // byte for byte, without tokenizing the bench split again
+    val blob = screen.broadcastBlob(benchNg, "ng")
     val rel = TextQueries.releaseDocs(base).localCheckpoint(true)
     // fingerprint at the scan, THEN join the released ids — the build
     // joins (doc_id, fp) digests, not text (the q175 discipline,
@@ -1501,7 +1500,7 @@ object StreamingQueries {
     * the final call, so the screen chain has exact-8-gram semantics
     * even when the bloom false-positives. */
   private[graft] def releaseTailScreen(newDocs: DataFrame,
-      blob: Array[Byte], relFps: DataFrame): DataFrame = {
+      blob: Broadcast[Array[Byte]], relFps: DataFrame): DataFrame = {
     val s = newDocs.sparkSession
     import s.implicits._
     val screen = DedupQueries.BloomScreen
@@ -1509,8 +1508,7 @@ object StreamingQueries {
       .filter($"hx" >= screen.BenchMax)
       .withColumn("fp", md5($"text"))
       .join(broadcast(relFps), Seq("fp"), "left_anti")
-      .withColumn("bloom_hit", graft.expr.GraftFunctions
-        .bloomAny(s, lit(blob), screen.tokens($"text")))
+      .withColumn("bloom_hit", screen.probe(s, blob, screen.tokens($"text")))
       .select($"doc_id", $"lang", $"text", $"bloom_hit")
   }
 
@@ -1585,10 +1583,12 @@ object StreamingQueries {
     * release, every ingest micro-batch reuses its sidecars (blob,
     * fingerprints, totals). */
   private[graft] val release = graft.Artifacts.sessionBound[
-    (Array[Byte], DataFrame, DataFrame, DataFrame, DataFrame)]("release_build")
+    (Broadcast[Array[Byte]], DataFrame, DataFrame, DataFrame, DataFrame)](
+    "release_build")
 
   private[graft] def frozenReleaseFor(s: SparkSession, dir: String)
-      : (Array[Byte], DataFrame, DataFrame, DataFrame, DataFrame) =
+      : (Broadcast[Array[Byte]], DataFrame, DataFrame, DataFrame,
+        DataFrame) =
     release(s, dir, graft.Tables.fingerprint(s"$dir/documents.parquet")) {
       val split = DedupQueries.IngestSplit
       val base = split.withIx(graft.Tables.documents(s, dir))

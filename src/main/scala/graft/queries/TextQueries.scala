@@ -1142,7 +1142,7 @@ object TextQueries {
   // definition — screen geometry, thresholds, LM, regexes, rank keys):
   //   1 ingest           bench-split corpus side, q135 PII plant at
   //                      the door (so redaction is measurably real)
-  //   2 decontaminated   q128/q130 bloom screen (plan-literal blob;
+  //   2 decontaminated   q128/q130 bloom screen (the broadcast blob;
   //                      oracle = exact shingle anti-join)
   //   3 repetition_filtered  q126 Gopher screens
   //   4 ppl_tail_dropped q129 LM FIT ON THE SURVIVORS + q133 tercile
@@ -1206,8 +1206,8 @@ object TextQueries {
       .withColumn("n_tok", size($"t").cast("long"))
       .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt),
       spine = true)
-    val (d2, s2) = built(d1.filter(!graft.expr.GraftFunctions
-      .bloomAny(s, lit(blob), $"t")), spine = true)
+    val (d2, s2) = built(d1.filter(!screen.probe(s, blob, $"t")),
+      spine = true)
     val (d3, s3) = built(d2
       .withColumn("bgs", when(size($"t") >= 2, expr(
         "transform(sequence(1, size(t) - 1), " +

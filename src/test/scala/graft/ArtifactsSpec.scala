@@ -81,7 +81,7 @@ class ArtifactsSpec extends SparkSpec {
     assert(screen.benchBlob(spark, dir) eq first)
     write("q r s t u v w x y z")
     val second = screen.benchBlob(spark, dir)
-    assert(!java.util.Arrays.equals(first, second),
+    assert(!java.util.Arrays.equals(first.value, second.value),
       "a rewritten documents.parquet served the old blob")
   }
 

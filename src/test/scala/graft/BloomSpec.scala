@@ -129,6 +129,77 @@ class BloomSpec extends SparkSpec {
     assert(r.isNullAt(0))
   }
 
+  /** `body` under whole-stage codegen (`codegen = true`) or with every
+    * expression interpreted, the shared session's settings restored. */
+  private def underCodegen[T](codegen: Boolean)(body: => T): T = {
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), codegen.toString)
+    spark.conf.set(keys(1), if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("a broadcast blob probes as its literal does, codegen and interpreted") {
+    import org.apache.spark.sql.GraftColumn
+    import graft.expr.BroadcastBinary
+    val w = graft.expr.BloomExpr.ShingleWidth
+    val m1 = (1 to w).map(i => s"alpha$i").mkString(" ")
+    val blob = buildBlob(m1 +: keys.take(500), 1L << 14, 5, 4)
+    val bc = spark.sparkContext.broadcast(blob)
+    val viaBc = GraftColumn(BroadcastBinary(bc))
+    assert(BroadcastBinary(bc).toString == s"broadcast#${bc.id}")
+    var nxt = 777
+    def tok(): String = { nxt = nxt * 1103515245 + 12345; s"w${(nxt >>> 16) % 40}" }
+    // keys probe graft_bloom_contains (members and absent keys); docs
+    // probe graft_bloom_any (planted shingles, short docs, random text)
+    val rows = (keys.take(300) ++ Seq.tabulate(300)(i => s"absent-$i"))
+      .zipWithIndex.map { case (k, i) =>
+        val doc = if (i % 5 == 0) s"${tok()} $m1 ${tok()}"
+          else Seq.fill(i % (2 * w))(tok()).mkString(" ")
+        (i, k, doc)
+      }
+    // repartitioned, so the probes run in tasks, not folded into a
+    // local relation on the driver
+    val df = rows.toDF("i", "k", "text").repartition(3)
+      .withColumn("t", split($"text", " "))
+      .select($"i",
+        GraftFunctions.bloomContains(spark, lit(blob), $"k").as("c_lit"),
+        GraftFunctions.bloomContains(spark, viaBc, $"k").as("c_bc"),
+        GraftFunctions.bloomAny(spark, lit(blob), $"t").as("a_lit"),
+        GraftFunctions.bloomAny(spark, viaBc, $"t").as("a_bc"))
+    for (codegen <- Seq(true, false)) underCodegen(codegen) {
+      // a new Dataset, so its physical plan is made under this mode
+      val q = df.select($"*")
+      val got = q.collect()
+      got.foreach { r =>
+        assert(r.getBoolean(1) == r.getBoolean(2) &&
+          r.getBoolean(3) == r.getBoolean(4),
+          s"codegen=$codegen row ${r.getInt(0)}: $r")
+      }
+      // neither probe is vacuous
+      assert(got.count(_.getBoolean(2)) >= 300 && got.count(_.getBoolean(4)) >= 60,
+        s"codegen=$codegen")
+      val code = org.apache.spark.sql.execution.debug
+        .codegenString(q.queryExecution.executedPlan)
+      assert(code.contains("BloomExpr.anyShingle") == codegen,
+        s"codegen=$codegen: generated code ${code.take(300)}")
+      // a null token inside a probe window still throws
+      val toks = (lit("a") +: lit(null).cast("string") +:
+        (1 to w).map(i => lit(s"t$i"))): Seq[_root_.org.apache.spark.sql.Column]
+      intercept[Exception] {
+        Seq(1).toDF("x").repartition(2)
+          .withColumn("hit", GraftFunctions.bloomAny(spark, viaBc,
+            array(toks: _*)))
+          .collect()
+      }
+    }
+    bc.destroy()
+  }
+
   test("malformed blob and bad literals fail loudly") {
     intercept[Exception] {
       Seq("x").toDF("s")

@@ -263,14 +263,21 @@ class PlanShapeSpec extends SparkSpec {
       p.take(800))
   }
 
-  test("q128: the corpus probe plan is join-free (blob is a literal)") {
-    // the regression this locks: attaching the one-row bloom blob via
+  test("q128: the corpus probe plan is join-free (blob is a broadcast)") {
+    // the regressions this locks: attaching the one-row bloom blob via
     // crossJoin copies the multi-MB binary into every joined UnsafeRow
-    // — measured 14.1 s vs 2.6 s at sf0.1. The blob must enter the
-    // probe plan as a LITERAL; the only exchange is the source rollup
+    // — measured 14.1 s vs 2.6 s at sf0.1 — and a plan literal makes
+    // every execution print and hash the 8 MiB blob. The blob must
+    // enter the probe plan as a broadcast handle; the only exchange is
+    // the source rollup
     val p = plan("q128_bloom_decontaminate")
     assert(!p.contains("Join"), p.take(1500))
     assert(p.contains("graft_bloom_any"), p.take(1500))
+    // a literal blob printed as a 16.7 M-character hex dump here
+    assert(p.length < 64 * 1024, s"${p.length} chars")
+    val df = Registry.byName("q128_bloom_decontaminate").run(spark, sf)
+    assert(bigBinaryLiterals(df).isEmpty,
+      "a BINARY literal of 1 KB or more is back in the optimized plan")
   }
 
   test("q126: single-scan rollup, no join, repetition fold row-local") {

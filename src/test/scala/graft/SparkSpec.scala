@@ -40,6 +40,17 @@ abstract class SparkSpec extends AnyFunSuite {
     st
   }
 
+  /** the BINARY literals of 1 KB or more in `df`'s optimized plan: a
+    * large constant belongs in a broadcast (`graft.expr.BroadcastBinary`),
+    * and ConstantFolding must not have turned one back into a literal. */
+  def bigBinaryLiterals(df: DataFrame): Seq[Int] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.BinaryType
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case Literal(v: Array[Byte], BinaryType) if v.length >= 1024 => v.length
+    }))
+  }
+
   /** the Spark jobs started while `body` runs, counted after a
     * deterministic drain of the listener bus (a fixed sleep could
     * flake the count low on a loaded host). */

@@ -115,6 +115,35 @@ class StreamReleaseSpec extends SparkSpec {
     assert(t0.collect()(0).getAs[Long]("shard") == 0L)
   }
 
+  test("the release blob built from benchNg equals the withShingles spelling, byte for byte") {
+    import spark.implicits._
+    val (base, _) = baseAndNew()
+    val (blob, _, _, _, _) = StreamingQueries.releaseFrozenState(base)
+    // the spelling the blob had before it was built from the exact
+    // 8-gram set: every bench doc's shingle list, exploded
+    val screen = DedupQueries.BloomScreen
+    val old = screen.withShingles(
+        screen.withBenchSplit(base).filter($"hx" < screen.BenchMax))
+      .select(explode_outer($"shs").as("sh")).filter($"sh".isNotNull)
+      .coalesce(8)
+      .agg(graft.expr.GraftFunctions
+        .bloomAgg(spark, $"sh", screen.NBits, screen.K).as("bloom"))
+      .head().getAs[Array[Byte]](0)
+    assert(old.exists(_ != 0), "an empty bench split makes the check vacuous")
+    assert(java.util.Arrays.equals(blob.value, old))
+  }
+
+  test("releaseTailScreen's plan carries the blob as a broadcast, not bytes") {
+    val (base, newDocs) = baseAndNew()
+    val (blob, relFps, _, _, _) = StreamingQueries.releaseFrozenState(base)
+    val screened = StreamingQueries.releaseTailScreen(newDocs, blob, relFps)
+    val p = screened.queryExecution.executedPlan.toString
+    assert(p.contains(s"broadcast#${blob.id}"), p.take(1500))
+    assert(p.length < 64 * 1024, s"${p.length} chars")
+    assert(bigBinaryLiterals(screened).isEmpty,
+      "a BINARY literal of 1 KB or more is back in the optimized plan")
+  }
+
   test("q201 roll-forward: lineage rows are SCD2-consistent, and v2 sidecars re-ingest the crawl to zero released-doc drift") {
     import spark.implicits._
     val (base, newDocs) = baseAndNew()

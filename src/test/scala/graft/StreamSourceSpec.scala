@@ -36,8 +36,7 @@ class StreamSourceSpec extends SparkSpec {
     val expected = screen
       .withBenchSplit(spark.read.parquet(s"$dir/documents.parquet"))
       .filter($"hx" >= screen.BenchMax)
-      .filter(!graft.expr.GraftFunctions
-        .bloomAny(spark, lit(blob), screen.tokens($"text")))
+      .filter(!screen.probe(spark, blob, screen.tokens($"text")))
       .groupBy($"source")
       .agg(count(lit(1)).as("n_kept"), sum($"doc_id").as("kept_checksum"))
       .collect()
